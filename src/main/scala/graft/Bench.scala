@@ -116,241 +116,31 @@ object Bench {
       case _ => 0.0
     }
 
-  /** Load observed around ONE chunk: 1-min loadavg at chunk start, steal%
-    * across the chunk, and the chunk's EXTERNAL cpu draw in cores — host
-    * busy jiffies minus the cpu the bench itself (parent + forked child)
-    * consumed, over the chunk's wall time. External cores are the signal
-    * that actually detects a concurrent Verify/sbt/stress run: a loadavg
-    * threshold alone is both laggy (1-min EMA) and polluted by the bench's
-    * own work.
+  /** Load observed around ONE chunk: steal% across the chunk, and the
+    * chunk's EXTERNAL cpu draw in cores — host busy jiffies minus the cpu
+    * the bench itself (parent + forked child) consumed, over the chunk's
+    * wall time. External cores see a competitor inside the same VM (a
+    * concurrent Verify/sbt/stress run), which steal cannot; steal sees the
+    * hypervisor, which busy jiffies cannot.
     */
-  private[graft] final case class ChunkLoad(
-      startLoad: Double, stealPct: Double, externalCores: Double,
-      ioSomePct: Double = 0.0, ioFullPct: Double = 0.0,
-      cpuSomePct: Double = 0.0, throttledPct: Double = 0.0,
-      calibSec: Double = 0.0, calibParSec: Double = 0.0)
+  private[graft] final case class ChunkLoad(stealPct: Double, externalCores: Double)
 
-  /** Hot-chunk predicate (VERDICT r9 next-step #1). A chunk is hot when a
-    * competing workload plausibly distorted its timings: external busy CPU
-    * above a quarter of the machine, OR — for the FIRST chunk only — start
-    * loadavg above 1.5× cores/4 (the run started into an already-saturated
-    * box), OR hypervisor steal above 2%, OR (VERDICT r10 next-step #2) IO
-    * pressure past a coarse floor — full-stall above 10% of the chunk's
-    * wall (every non-idle task blocked on IO simultaneously: a CPU-bound
-    * bench chunk cannot do that to itself) or some-stall above 40% (an
-    * idle-box chunk here measures ~0; sustained heavy io_some is a
-    * concurrent IO workload even when its CPU draw is invisible to
-    * ext_cores), OR (VERDICT r14 next-step #1 — the r14 capture ran 2.6×
-    * its clean band with every one of the above quiet) cpu-PSI some-stall
-    * past [[CpuPsiHotPct]] ("runnable but not running" sees queueing
-    * regardless of who the contender is; the floor sits well above the
-    * bench's own local[N] oversubscription, measured single-digit on an
-    * idle box), OR cgroup throttling past [[ThrottleHotPct]] of the
-    * chunk's wall (a quota'd cgroup being throttled measures the quota,
-    * not the plan), OR either of the chunk's fixed-work calibration probes
-    * — single-thread ([[ChunkLoad.calibSec]] vs `calibRef`) or parallel
-    * memory-streaming ([[ChunkLoad.calibParSec]] vs `calibParRef`,
-    * VERDICT r16 next-step #3: the r16 driver run was ~2× inflated while
-    * the single-thread probe read clean, because an ALU spin loop is blind
-    * to the memory-bandwidth/LLC contention that hits 32-way parallel
-    * execution; the parallel probe streams 1 GB over min(8,cores) threads
-    * and measured 1.4–1.7× under 24 competing bandwidth threads on this
-    * box, ±5 % idle) — past [[CalibHotRatio]]× its clean-history baseline.
-    * The probes are the attribution-free sensors that catch whatever the
-    * rest cannot name.
+  /** Hot-chunk predicate, shared by the retry site and the verdict site: a
+    * competing workload plausibly distorted the chunk's timings when
+    * external busy CPU exceeds a quarter of the machine or hypervisor steal
+    * exceeds 2%. Thresholds are deliberately coarse — the flag exists so a
+    * history consumer can FILTER contaminated runs, not to rank load.
     *
-    * VERDICT-ONLY triggers (`includeNonRetryable = false` at the retry
-    * site): the IO pair — PSI is system-wide with no per-process
-    * attribution, so on a slow-disk/cold-cache box the bench's OWN
-    * first-chunk dataset read could trip them, and a retry cannot outwait
-    * a slow disk — and cgroup throttling, which a static quota makes
-    * permanent (retrying into the same quota burns the budget for
-    * nothing). CPU-shaped signals (ext_cores, steal, loadavg, cpu-PSI,
-    * calib) keep retrying: a transient competitor can vanish. The loadavg
-    * trigger is first-chunk-only because from chunk 2 onward the 1-min
-    * EMA is dominated by the bench's OWN prior-chunk work (≈ `cpus` cores
-    * for minutes), so on hosts where cpus ≳ 1.5·cores/4 every later chunk
-    * would self-flag hot on an idle machine; external cores already
-    * subtract own CPU and carry the signal for those chunks. Thresholds
-    * are deliberately coarse — the flag exists so a history consumer can
-    * FILTER contaminated runs, not to rank load.
+    * Two sensors, not the seven earlier rounds carried: replaying all 66
+    * entries of the r1–r18 `BENCH_HISTORY.jsonl` (406 chunk loads,
+    * `BenchReplaySpec`) shows every hot chunk was flagged by steal and the
+    * first-chunk loadavg, io/cpu PSI, cgroup-throttle and both calibration
+    * probes never decided a verdict — and r18 saw all of them read clean
+    * through a 2–5× slowdown that only the per-query history comparison
+    * (suspect tiers, retime, `env_ratio`) caught.
     */
-  private[graft] def isHot(cl: ChunkLoad, cores: Int,
-      firstChunk: Boolean = false, includeNonRetryable: Boolean = true,
-      calibRef: Option[Double] = None,
-      calibParRef: Option[Double] = None): Boolean =
-    cl.externalCores > cores / 4.0 ||
-      (firstChunk && cl.startLoad > 1.5 * cores / 4.0) ||
-      cl.stealPct > 2.0 ||
-      cl.cpuSomePct > CpuPsiHotPct ||
-      calibRef.exists(r =>
-        cl.calibSec > CalibHotRatio * r && cl.calibSec - r > CalibMinDeltaSec) ||
-      calibParRef.exists(r =>
-        cl.calibParSec > CalibHotRatio * r &&
-          cl.calibParSec - r > CalibMinDeltaSec) ||
-      (includeNonRetryable &&
-        (cl.ioFullPct > 10.0 || cl.ioSomePct > 40.0 ||
-          cl.throttledPct > ThrottleHotPct))
-
-  /** cpu-PSI some-stall floor, % of the chunk's wall. An idle-box bench
-    * chunk measures single digits (the bench's own local[N] session
-    * briefly oversubscribes during shuffles and GC); a box whose runqueue
-    * is systematically deeper than its cores — an invisible competitor, an
-    * overcommitted hypervisor — sustains far more. Sits at 25% so the
-    * bench's own bursts can never flag an idle box, while r14-grade
-    * whole-window contention (everything 2.6× slow) clears it easily when
-    * the contention is queueing-shaped at all.
-    */
-  private[graft] val CpuPsiHotPct = 25.0
-
-  /** cgroup-throttle floor, % of the chunk's wall spent throttled. ANY
-    * sustained throttling distorts timings (the chunk measures the quota,
-    * not the plan), but sub-5% transients — a burst quota refilling — are
-    * within the noise the median-of-3 repeats already absorb.
-    */
-  private[graft] val ThrottleHotPct = 5.0
-
-  /** Calibration-probe inflation bar: a chunk (or run) whose fixed-work
-    * probe reads past this ratio × the clean-history probe baseline is
-    * hot. 1.5, not tier-1's 2.0: the probe is single-threaded fixed work
-    * with no plan variance, so its clean spread is a few percent — 1.5×
-    * is far outside noise while still catching moderate whole-window
-    * contention (r14's 2.6× inflation would read ~2.6× here).
-    */
-  private[graft] val CalibHotRatio = 1.5
-  /** …with an absolute floor so sub-50 ms jitter on a ~0.2 s probe can
-    * never flag (same rationale as [[SuspectMinDeltaSec]]).
-    */
-  private[graft] val CalibMinDeltaSec = 0.05
-
-  private def loadAvg1(): Option[Double] =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try Some(src.getLines().next().split("\\s+")(0).toDouble)
-      finally src.close()
-    } catch { case _: Exception => None }
-
-  /** Cumulative cgroup CPU-throttle time in µs, across the v2 and v1
-    * layouts (VERDICT r14 next-step #1): a quota'd cgroup being throttled
-    * slows every timed query while busy jiffies, steal, loadavg and PSI-io
-    * all read idle — exactly the invisible-contention signature of the r14
-    * capture. v2 publishes `throttled_usec` in `cpu.stat`; hybrid hosts
-    * mount v2 under `unified/`; v1 publishes `throttled_time` in
-    * NANOseconds. None where no layout carries the counter (no cpu
-    * controller, or no quota ever set — v1 files then read 0, which is a
-    * valid Some(0): deltas stay 0 and the trigger never fires).
-    */
-  private def throttledUsec(): Option[Long] = {
-    def read(path: String, key: String, perUsec: Long): Option[Long] =
-      try {
-        val p = java.nio.file.Paths.get(path)
-        if (!java.nio.file.Files.isRegularFile(p)) None
-        else java.nio.file.Files.readString(p).linesIterator
-          .map(_.trim.split("\\s+"))
-          .collectFirst { case Array(k, v) if k == key => v.toLong / perUsec }
-      } catch { case _: Exception => None }
-    read("/sys/fs/cgroup/cpu.stat", "throttled_usec", 1L)
-      .orElse(read("/sys/fs/cgroup/unified/cpu.stat", "throttled_usec", 1L))
-      .orElse(read("/sys/fs/cgroup/cpu/cpu.stat", "throttled_time", 1000L))
-  }
-
-  /** Fixed-work single-thread CPU probe: ~67M integer mix rounds, timed.
-    * The one sensor that needs NO attribution model (VERDICT r14 next-step
-    * #2): whatever steals cycles — an invisible-to-steal hypervisor cap,
-    * cgroup throttling, frequency scaling, an unaccounted competitor —
-    * slows this loop in the same proportion it slows the timed queries,
-    * so comparing the probe to its own clean-history baseline adjudicates
-    * contention even when every attribution-based sensor (ext_cores,
-    * steal, PSI) reads idle, which is byte-for-byte the r14 capture. The
-    * result feeds [[ChunkLoad.calibSec]]; the loop's value is folded into
-    * a volatile sink so JIT cannot dead-code it. Callers warm it once
-    * (see main) so chunk 0 never pays the C2-compile of the loop itself.
-    */
-  @volatile private var calibSink = 0L
-  private[graft] def calibProbe(): Double = {
-    val t0 = System.nanoTime()
-    var h = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < (1 << 26)) {
-      h = java.lang.Long.rotateLeft(h * 0x100000001B3L, 31) ^ (h >>> 17)
-      i += 1
-    }
-    calibSink = h
-    math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-  }
-
-  /** Fixed-work PARALLEL memory-streaming probe (VERDICT r16 next-step
-    * #3): min(8, cores) threads each xor-fold 16 sequential passes over a
-    * shared read-only 64 MB long array (1 GB of reads total), timed by
-    * wall clock. The single-thread [[calibProbe]] is an ALU spin loop —
-    * structurally blind to memory-bandwidth/LLC contention, which is
-    * exactly how the r16 driver capture ran ~2× slow with
-    * `calib_inflated:false` and every attribution sensor quiet. This probe
-    * contends for the same shared resources 32-way query execution does:
-    * measured on this box, ±5 % spread idle (steady 0.077–0.085 s) and
-    * 1.4–1.7× under 24 competing bandwidth threads, so [[CalibHotRatio]] ×
-    * a clean-history median separates cleanly. The array is allocated and
-    * filled once (deterministic LCG content — the values only have to
-    * defeat zero-page mapping) and each thread starts at its own offset so
-    * threads do not ride one cache line train. Same volatile-sink rule as
-    * the scalar probe; callers warm it once so chunk 0 never pays the
-    * allocation + first-touch + C2 compile.
-    */
-  private val CalibParWords = 1 << 23 // 8M longs = 64 MB shared
-  private lazy val calibParArr: Array[Long] = {
-    val a = new Array[Long](CalibParWords)
-    var h = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < a.length) { h = h * 0x100000001B3L ^ (h >>> 17); a(i) = h; i += 1 }
-    a
-  }
-  private[graft] def calibProbePar(): Double = {
-    val arr = calibParArr
-    val threads = math.min(8, Runtime.getRuntime.availableProcessors)
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { t =>
-      val off = (arr.length / threads) * t
-      val th = new Thread(() => {
-        var s = 0L
-        var pass = 0
-        while (pass < 16) {
-          var i = 0
-          while (i < arr.length) {
-            s ^= arr((i + off) & (arr.length - 1))
-            i += 1
-          }
-          pass += 1
-        }
-        calibSink = s
-      })
-      th.setDaemon(true); th.start(); th
-    }
-    ts.foreach(_.join())
-    math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
-  }
-
-  /** Cumulative PSI stall totals in µs for one resource from
-    * `/proc/pressure/<res>` — (someTotal, fullTotal). PSI sees what
-    * loadavg/ext_cores structurally cannot (VERDICT r10 next-step #2, the
-    * exact r10 failure mode): D-state and IO-wait contention never shows
-    * in busy jiffies, and the loadavg EMA is both laggy and polluted by
-    * the bench's own work. None where the kernel lacks PSI (pre-4.20 or
-    * psi=0) — the io fields then read 0.0, never an error.
-    */
-  private def psiTotals(res: String): Option[(Long, Long)] =
-    try {
-      val src = scala.io.Source.fromFile(s"/proc/pressure/$res")
-      try {
-        val totals = src.getLines().flatMap { l =>
-          val cols = l.trim.split("\\s+")
-          for {
-            kind <- cols.headOption
-            t    <- cols.find(_.startsWith("total="))
-          } yield kind -> t.substring(6).toLong
-        }.toMap
-        totals.get("some").map(s => (s, totals.getOrElse("full", 0L)))
-      } finally src.close()
-    } catch { case _: Exception => None }
+  private[graft] def isHot(cl: ChunkLoad, cores: Int): Boolean =
+    cl.externalCores > cores / 4.0 || cl.stealPct > 2.0
 
   /** Minimal JSON string escape for builder-controlled content (query
     * names, whitespace-collapsed error text). Shared with the streaming
@@ -842,9 +632,9 @@ object Bench {
     }
 
   /** Time one chunk (forked when possible, in-process otherwise) and
-    * measure the load around it: loadavg at start, steal% across it, and
-    * external CPU cores (host busy minus the bench's own parent+child CPU,
-    * per wall second). USER_HZ is 100 on every Linux this runs on.
+    * measure the load around it: steal% across it, and external CPU cores
+    * (host busy minus the bench's own parent+child CPU, per wall second).
+    * USER_HZ is 100 on every Linux this runs on.
     */
   private def timeChunk(names: Seq[String], sfDir: String,
       cpus: String, repeats: Int = 3, quick: Map[String, Double] = Map.empty,
@@ -854,18 +644,7 @@ object Bench {
     // window with childCpu unreported (the GRAFT_CPU line never printed),
     // mis-attributing the dead child's own work to external load
     def measured[A](work: => (A, Double)): (A, ChunkLoad) = {
-      // the calibration probes run BEFORE the measurement window: they
-      // sample the box's effective single-thread speed and parallel
-      // memory bandwidth at chunk start (attribution-free — see
-      // calibProbe/calibProbePar), and keeping their ~0.3 s out of the
-      // window keeps ext_cores/PSI attribution about the chunk itself
-      val calib = calibProbe()
-      val calibPar = calibProbePar()
-      val load0   = loadAvg1().getOrElse(0.0)
       val j0      = cpuJiffies()
-      val psiIo0  = psiTotals("io")
-      val psiCpu0 = psiTotals("cpu")
-      val thr0    = throttledUsec()
       val own0    = ownCpuSec()
       val t0      = System.nanoTime()
       val (res, childCpu) = work
@@ -877,22 +656,8 @@ object Bench {
           val busySec = math.max(0L, b1 - b0) / 100.0
           (steal, math.max(0.0, busySec - ownSec) / elapsed)
         }).getOrElse((0.0, 0.0))
-      // PSI totals are cumulative stall µs: delta/1e6 = stalled seconds
-      // over the chunk, /elapsed·100 = percent of the chunk's wall → /1e4
-      def psiPct(before: Option[(Long, Long)], res: String): (Double, Double) =
-        (for ((s0, f0) <- before; (s1, f1) <- psiTotals(res)) yield
-          (math.max(0L, s1 - s0) / 1e4 / elapsed,
-            math.max(0L, f1 - f0) / 1e4 / elapsed)).getOrElse((0.0, 0.0))
-      val (ioSome, ioFull) = psiPct(psiIo0, "io")
-      // cpu-PSI full is 0 at system scope by kernel design; some carries
-      // the runnable-but-not-running signal (VERDICT r14 next-step #1)
-      val (cpuSome, _) = psiPct(psiCpu0, "cpu")
-      val throttled =
-        (for (a <- thr0; b <- throttledUsec()) yield
-          math.max(0L, b - a) / 1e4 / elapsed).getOrElse(0.0)
       def r2(x: Double) = math.round(x * 100) / 100.0
-      (res, ChunkLoad(load0, r2(stealPct), r2(extCores), r2(ioSome),
-        r2(ioFull), r2(cpuSome), r2(throttled), calib, calibPar))
+      (res, ChunkLoad(r2(stealPct), r2(extCores)))
     }
     val (forkRes, forkLoad) = measured {
       forkChunk(names, repeats, quick, phasesEnabled) match {
@@ -909,44 +674,32 @@ object Bench {
     }
   }
 
+  /** One chunk load as its JSON fields (no braces). */
+  private def chunkLoadFields(c: ChunkLoad): String =
+    s""""steal_pct":${c.stealPct},"ext_cores":${c.externalCores}"""
+
   /** The per-chunk load block + run-level degraded flag for the emitted
     * line — split out so a spec can feed synthetic loads and parse the
     * result (the r9 failure mode was an artifact READER trusting a number
     * the bench knew was contaminated; the contract under test is the JSON
-    * itself). The verdict applies the SAME first-chunk loadavg trigger the
-    * retry decision uses — without it, IO-heavy competing load (high
-    * loadavg from D-state work that never shows in busy jiffies, so
-    * ext_cores stays low) could distort chunk 0 twice yet publish as
-    * clean. After a chunk-0 retry the emitted load is the accepted
-    * attempt's, whose loadavg includes the bench's own first-attempt work
-    * (~`cpus` child cores — far under 1.5·cores/4 here), so the residual
-    * bias is toward flagging: the cheap direction for a filter flag.
+    * itself). `chunk_load` holds each chunk's KEPT attempt; `retried`
+    * holds every attempt a retry threw away, keyed by its chunk's index in
+    * `chunk_load`, so a reader can replay which sensor decided each retry.
     */
   private[graft] def loadFieldsJson(chunkLoads: Seq[ChunkLoad], cores: Int,
-      runSteal: Option[Double], runLoad: Option[Double],
-      calibRef: Option[Double] = None,
-      calibParRef: Option[Double] = None): (String, Boolean) = {
-    val hot = chunkLoads.zipWithIndex.map { case (c, i) =>
-      isHot(c, cores, firstChunk = i == 0, calibRef = calibRef,
-        calibParRef = calibParRef)
-    }
-    val degraded = hot.contains(true)
+      runSteal: Option[Double],
+      retried: Seq[(Int, ChunkLoad)] = Nil): (String, Boolean) = {
+    val hot = chunkLoads.map(isHot(_, cores))
     val perChunk = chunkLoads.zip(hot).map { case (c, h) =>
-      s"""{"load":${c.startLoad},"steal_pct":${c.stealPct},""" +
-        s""""ext_cores":${c.externalCores},"io_some_pct":${c.ioSomePct},""" +
-        s""""io_full_pct":${c.ioFullPct},"cpu_some_pct":${c.cpuSomePct},""" +
-        s""""throttled_pct":${c.throttledPct},"calib_sec":${c.calibSec},""" +
-        s""""calib_par_sec":${c.calibParSec},"hot":$h}"""
+      s"""{${chunkLoadFields(c)},"hot":$h}"""
     }.mkString("[", ",", "]")
-    val run = runSteal.map(s => s""""steal_pct":$s""").toSeq ++
-      runLoad.map(l => s""""loadavg1":$l""").toSeq ++
-      // the clean-history probe baselines the calib triggers judged
-      // against (absent on a first run / thin history) — published so an
-      // artifact reader can recompute every chunk's calib verdict
-      calibRef.map(r => s""""calib_ref":$r""").toSeq ++
-      calibParRef.map(r => s""""calib_par_ref":$r""").toSeq :+
-      s""""cores":$cores""" :+ s""""chunk_load":$perChunk"""
-    (run.mkString("{", ",", "}"), degraded)
+    val thrownAway = retried.map { case (i, c) =>
+      s"""{"chunk":$i,${chunkLoadFields(c)}}"""
+    }.mkString("[", ",", "]")
+    val run = runSteal.map(s => s""""steal_pct":$s""").toSeq :+
+      s""""cores":$cores""" :+ s""""chunk_load":$perChunk""" :+
+      s""""retried":$thrownAway"""
+    (run.mkString("{", ",", "}"), hot.contains(true))
   }
 
   // ---- history-aware per-query plausibility (VERDICT r10 next-step #1) --
@@ -1002,6 +755,25 @@ object Bench {
     median >= ModerateMedianSec && secs > ModerateRatio * median &&
       secs - median > SuspectMinDeltaSec
 
+  /** Core-count eligibility for one history entry (r18): scaling runs of
+    * the SAME tree at a LOW core count land in the same trail with zero
+    * flags — the r17_c8 run's 119.6 s total and ~2× per-query readings
+    * fed the medians, the quick-key accept bands, AND stretched the clean
+    * band to [86.0, 119.6].
+    * An entry's core count is its `cpus` stamp, or — for the entries that
+    * predate the stamp — its `load.cores`, the host width every pre-stamp
+    * capture recorded; a run is then never judged against another width's
+    * medians. Only an entry carrying NEITHER matches any requested cpus
+    * (the oldest trail lines, which age out of the recency windows).
+    */
+  private[graft] def entryCpus(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+    Option(n.get("cpus")).map(_.asText()).orElse(
+      Option(n.get("load")).flatMap(l => Option(l.get("cores")))
+        .filter(_.isNumber).map(_.asInt.toString))
+  private[graft] def cpusMatches(stamp: Option[String],
+      want: Option[String]): Boolean =
+    want.forall(w => stamp.forall(_ == w))
+
   /** Per-query medians over the last `window` CLEAN history entries —
     * entries that parse, carry a queries map, match this run's scale
     * factor (`sf`, when given: a dev run appended at sf0.01 must never
@@ -1038,26 +810,6 @@ object Bench {
     * the persistent signature — `window` consecutive suspect runs —
     * re-converges the baseline to the measured new normal.
     */
-  /** Core-count eligibility for one history entry (r18): the driver now
-    * benches the SAME tree at a LOW core count every round to measure
-    * scaling, and those runs land in the same trail with zero flags — the
-    * r17_c8 run's 119.6 s total and ~2× per-query readings fed the medians,
-    * the quick-key accept bands, AND stretched the clean band to
-    * [86.0, 119.6], silently blunting every per-query suspect verdict for
-    * the main-config captures. Entries now stamp `cpus` and a consumer
-    * filters on it. LENIENT grandfathering, deliberately weaker than the
-    * sf era clause: an UNSTAMPED entry matches any requested cpus — the
-    * legacy pool is almost entirely main-config and ages out of the
-    * recency windows on its own, while sf-style era semantics would
-    * orphan the whole trail at the first stamped entry (no medians ⇒ no
-    * quick keys ⇒ every key back to median-of-3 for several runs — wall
-    * the capture budget cannot spare). A STAMPED entry must match exactly,
-    * so every future low-core run is excluded the moment it lands.
-    */
-  private[graft] def cpusMatches(stamp: Option[String],
-      want: Option[String]): Boolean =
-    want.forall(w => stamp.forall(_ == w))
-
   private[graft] def historyMedians(lines: Seq[String],
       window: Int = SuspectHistoryWindow,
       minSamples: Int = SuspectMinSamples,
@@ -1077,7 +829,7 @@ object Bench {
           }
           b.result()
         }
-        if (!cpusMatches(Option(n.get("cpus")).map(_.asText()), cpus)) None
+        if (!cpusMatches(entryCpus(n), cpus)) None
         else Some((Option(n.get("sf")).map(_.asText()),
           flagged("degraded"), flagged("suspect"), qs))
       } catch { case _: Exception => None }
@@ -1109,83 +861,15 @@ object Bench {
     }
   }
 
-  /** Clean-history calibration baseline (VERDICT r14 next-step #1/#2): the
-    * median of every per-chunk `load.chunk_load[*].<field>` over the
-    * last [[SuspectHistoryWindow]] baseline-eligible entries (`field`
-    * selects the probe — `calib_sec` for the single-thread loop,
-    * `calib_par_sec` for the r17 parallel memory probe; entries predating
-    * a probe carry no values for it and simply never feed its baseline,
-    * so each new sensor self-arms after one clean probe-carrying run) —
-    * same
-    * eligibility as [[historyMedians]] (parses, sf-matched, neither
-    * degraded nor suspect), so a contaminated run's inflated probes never
-    * feed the yardstick that judges the next run. None below
-    * [[SuspectMinSamples]] probe values (a first run has no baseline —
-    * the calib verdicts then read null, never a guess).
-    *
-    * DELIBERATELY not filtered on the entries' own calib/env verdicts: a
-    * genuinely slower new normal (hardware change, permanent quota) stamps
-    * `env_inflated` runs only until a window of non-suspect entries at the
-    * new speed re-converges this median — the same self-healing direction
-    * as historyMedians' escape hatch (the median absorbs ≤2 contaminated
-    * entries per window on its own).
-    *
-    * NEW-NORMAL ESCAPE (r15, the probe twin of historyMedians'): when the
-    * `window` most recent probe-carrying, sf-matched entries are ALL
-    * contaminated (degraded or suspect), THEIR probes become the baseline.
-    * Without it, a box that becomes permanently ≳1.5× slower (hardware
-    * class change) flags every chunk hot on the calib trigger, every run
-    * stamps degraded, degraded entries never feed this baseline, and the
-    * stale fast-era reference judges forever — the exact lock-in the
-    * all-suspect escape was built against, one sensor over. A transient
-    * contamination cannot trip it (its clean neighbors keep the clean
-    * pool); only `window` consecutive contaminated probe-carrying entries
-    * re-converge the reference to the measured new speed.
-    */
-  private[graft] def calibBaseline(lines: Seq[String],
-      sf: Option[String] = None,
-      window: Int = SuspectHistoryWindow,
-      field: String = "calib_sec"): Option[Double] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    // most-recent-first (contaminated?, probes) for probe-carrying entries
-    val parsed = lines.reverseIterator.flatMap { l =>
-      try {
-        val n = mapper.readTree(l)
-        def flagged(f: String) = Option(n.get(f)).exists(_.asBoolean)
-        val sfOk = sf.forall(want =>
-          Option(n.get("sf")).map(_.asText()).contains(want))
-        if (!sfOk) None
-        else
-          Option(n.get("load")).flatMap(ld => Option(ld.get("chunk_load")))
-            .filter(_.isArray).map { arr =>
-              val b = Seq.newBuilder[Double]
-              arr.forEach { c =>
-                Option(c.get(field)).filter(_.isNumber)
-                  .map(_.asDouble).filter(_ > 0).foreach(b += _)
-              }
-              b.result()
-            }.filter(_.nonEmpty)
-            .map(probes => (flagged("degraded") || flagged("suspect"), probes))
-      } catch { case _: Exception => None }
-    }.toSeq
-    val recent = parsed.take(window)
-    val pool =
-      if (recent.size >= window && recent.forall(_._1)) recent.map(_._2)
-      else parsed.filterNot(_._1).take(window).map(_._2)
-    val vals = pool.flatten
-    if (vals.size < SuspectMinSamples) None
-    else Some(vals.sorted.apply(vals.size / 2))
-  }
-
   /** The windowed clean-band totals (VERDICT r14 next-step #3): the last
     * `window` baseline-eligible entries' run totals, oldest first — the
     * "97–107 s" a round review re-derived from history by hand. Shared
     * between the bench's emitted `band` field and
     * [[graft.tools.HistoryReport]]'s header so the two can never disagree.
     * Eligibility mirrors the baseline rules (non-degraded, non-suspect,
-    * sf-matched, numeric value) plus the r15 env verdicts: an entry that
-    * stamped itself `env_inflated` or `calib_inflated` is contaminated by
-    * its own admission and must not stretch the band it exists to anchor.
+    * sf-matched, cpus-matched, numeric value) plus the r15 env verdict: an
+    * entry that stamped itself `env_inflated` is contaminated by its own
+    * admission and must not stretch the band it exists to anchor.
     *
     * `sf` matching is EXACT, including absence (ADVICE r15 #3): an entry
     * matches when its own stamp equals the Option — `None` matches only
@@ -1202,12 +886,11 @@ object Bench {
         val n = mapper.readTree(l)
         def flagged(f: String) = Option(n.get(f)).exists(_.asBoolean)
         val sfOk = Option(n.get("sf")).map(_.asText()) == sf
-        // cpus: lenient grandfather (see cpusMatches) — a low-core total in
-        // the band is the same class of contamination as a wrong-sf one
-        val cpusOk = cpusMatches(Option(n.get("cpus")).map(_.asText()), cpus)
+        // a low-core total in the band is the same class of contamination
+        // as a wrong-sf one (see cpusMatches)
+        val cpusOk = cpusMatches(entryCpus(n), cpus)
         if (flagged("degraded") || flagged("suspect") ||
-            flagged("env_inflated") || flagged("calib_inflated") || !sfOk ||
-            !cpusOk) None
+            flagged("env_inflated") || !sfOk || !cpusOk) None
         else Option(n.get("value")).filter(_.isNumber).map(_.asDouble)
       } catch { case _: Exception => None }
     }.takeRight(window)
@@ -1257,15 +940,14 @@ object Bench {
   // ---- plan-independent environment adjudication (VERDICT r14 #2) -------
   //
   // The r14 capture proved a whole-window contention mode no per-chunk
-  // sensor saw: every query inflated ~2.6×, ext_cores/steal/io-PSI all
-  // idle, and the artifact bottomed out at "suspect, retime not clean,
-  // retime not hot" — byte-for-byte what a real multi-query regression
-  // prints. Two FIXED workloads adjudicate that case without any
-  // attribution model: the per-chunk calibration probe (calibProbe) and
-  // the streaming smoke, whose 21-assertion suite is identical every run
-  // (it read 105.16 s in r14 vs a 26–29 s history — a 3.8× scream nothing
-  // consumed). Each is compared to its own clean-history median; the
-  // combined `env_inflated` tri-state rides the closing line.
+  // sensor saw: every query inflated ~2.6×, ext_cores/steal all idle, and
+  // the artifact bottomed out at "suspect, retime not clean, retime not
+  // hot" — byte-for-byte what a real multi-query regression prints. The
+  // streaming smoke adjudicates that case without any attribution model:
+  // its 21-assertion suite is identical every run (it read 105.16 s in r14
+  // vs a 26–29 s history — a 3.8× scream nothing consumed), so its
+  // duration against its own clean-history median is the `env_inflated`
+  // tri-state on the closing line.
 
   /** Smoke-duration inflation bar (and its absolute floor): the smoke is
     * a fixed ~27 s workload whose clean spread is a couple of seconds, so
@@ -1303,38 +985,18 @@ object Bench {
     else Some(vals.sorted.apply(vals.size / 2))
   }
 
-  /** The calib side of the environment verdict: this run's MEDIAN chunk
-    * probe against the clean-history baseline. Median, not max — one hot
-    * chunk is the per-chunk flags' job; THIS verdict asks whether the
-    * whole window ran slow. None without both sides.
+  /** The plan-independent verdict, tri-state like the retime fields: true
+    * when the smoke read inflated against its own clean history, false
+    * when it was judged and was not, null when the smoke was skipped or has
+    * no baseline yet (a first run must read unknown, never clean). An
+    * r14-style capture — all queries inflated, every load sensor quiet —
+    * stamps true here, which is exactly the evidence the r14 artifact
+    * could not carry.
     */
-  private[graft] def calibVerdict(chunkCalibs: Seq[Double],
-      ref: Option[Double]): Option[Boolean] = {
-    val probes = chunkCalibs.filter(_ > 0)
-    for (r <- ref; if probes.nonEmpty) yield {
-      val med = probes.sorted.apply(probes.size / 2)
-      med > CalibHotRatio * r && med - r > CalibMinDeltaSec
-    }
-  }
-
-  /** The combined plan-independent verdict, tri-state like the retime
-    * fields: true when EITHER fixed workload (chunk probes, smoke) read
-    * inflated against its own clean history; false when at least one
-    * could be judged and none was; null when neither had a baseline (a
-    * first run must read unknown, never clean). An r14-style capture —
-    * all queries inflated, every attribution sensor quiet — stamps true
-    * here via the smoke alone, which is exactly the evidence the r14
-    * artifact could not carry.
-    */
-  private[graft] def envInflatedVerdict(calib: Option[Boolean],
-      smokeSec: Option[Double], smokeBase: Option[Double]): Option[Boolean] = {
-    val smoke = for (cur <- smokeSec; base <- smokeBase)
+  private[graft] def envInflatedVerdict(smokeSec: Option[Double],
+      smokeBase: Option[Double]): Option[Boolean] =
+    for (cur <- smokeSec; base <- smokeBase)
       yield cur > EnvSmokeRatio * base && cur - base > EnvSmokeMinDeltaSec
-    (calib, smoke) match {
-      case (None, None) => None
-      case _ => Some(calib.getOrElse(false) || smoke.getOrElse(false))
-    }
-  }
 
   /** Run-level environment-normalization ratio (VERDICT r17 next-step #2):
     * the MEDIAN over every judged query of (this run's seconds ÷ the
@@ -1521,8 +1183,8 @@ object Bench {
 
   /** Snapshot-only overwrite (ADVICE r15 #1): the pre-smoke provisional
     * artifact — if the JVM dies inside the smoke window, BENCH_FULL.json
-    * still holds this run's complete timings (stamped `partial:true`, env
-    * fields calib-side only). NO history append: the final line owns the
+    * still holds this run's complete timings (stamped `partial:true`,
+    * `env_inflated` still null). NO history append: the final line owns the
     * trail entry, so one run can never appear twice in the medians window.
     */
   private def writeSnapshotOnly(path: String, line: String): Unit =
@@ -1883,14 +1545,8 @@ object Bench {
     val subsetRun = names.size < SparkEntry.queries.size
     // history is read ONCE, before anything appends (the discipline every
     // history consumer here shares): it feeds the per-query medians, the
-    // calibration-probe baseline the chunk loop's hot checks use, the
     // quick-key set, and the clean band the closing lines publish
     val histLines = fileLines(historyPath)
-    val calibRef = calibBaseline(histLines, sf = Some(sfDir))
-    // the parallel-probe baseline (VERDICT r16 next-step #3) — None until
-    // one clean probe-carrying run has landed, so the new sensor self-arms
-    val calibParRef =
-      calibBaseline(histLines, sf = Some(sfDir), field = "calib_par_sec")
     // history plausibility (VERDICT r10 next-step #1): each query judged
     // against its own median over the last clean history entries — also
     // the source of the quick-key (repeats=1) set, and of the cumulative
@@ -1908,11 +1564,6 @@ object Bench {
     // own — also pre-read so provisional closing lines can carry the
     // null-sided streaming fields without touching a mid-append file
     val prevSmoke = fileLines(s"$repoDir/STREAMING_HISTORY.jsonl")
-    // JIT-warm both probes so chunk 0's readings measure the box, not the
-    // C2 compile of the loops (the parallel probe's first call also pays
-    // its 64 MB allocation + first-touch here, outside any window)
-    calibProbe(); calibProbe()
-    calibProbePar(); calibProbePar()
     val chunkSize = chunkSizeFromEnv(sys.env.get("GRAFT_BENCH_CHUNK_SIZE"))
     // rotate the chunk ORDER by the history length (VERDICT r16 next-step
     // #1): a deadline trip skips whatever is still un-run, and sorted
@@ -1921,7 +1572,6 @@ object Bench {
     // each individual run stays deterministic
     val chunks = rotatedChunks(names.grouped(chunkSize).toSeq, histLines.size)
     var forked = 0
-    var retried = 0
     // a persistently-loaded box must not double the run: at most 3 chunk
     // retries per run — past that the run is degraded and says so
     var retryBudget = 3
@@ -1932,6 +1582,8 @@ object Bench {
     var deadlineHit = false
     val timedBuf   = scala.collection.mutable.ArrayBuffer.empty[Timed]
     val loadBuf    = scala.collection.mutable.ArrayBuffer.empty[ChunkLoad]
+    // each thrown-away attempt's load, keyed by its chunk's loadBuf index
+    val retriedBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, ChunkLoad)]
     val skippedBuf = scala.collection.mutable.ArrayBuffer.empty[String]
     // streaming-smoke state (VERDICT r16 next-step #2): the smoke may now
     // run MID-LOOP — the moment the remaining budget first drops inside
@@ -1958,9 +1610,7 @@ object Bench {
     def printProvisional(): Unit = {
       val sofar = timedBuf.toSeq
       val totalSoFar = sofar.collect { case Timed(_, v, None, _, _) => v }.sum
-      val hotSoFar = loadBuf.zipWithIndex.exists { case (c, i) =>
-        isHot(c, cores, firstChunk = i == 0, calibRef = calibRef,
-          calibParRef = calibParRef) }
+      val hotSoFar = loadBuf.exists(isHot(_, cores))
       val (_, susSoFar) =
         suspectVerdict(sofar.map(t => t.name -> t.secs), medians)
       printAtomic(closingTotalLine(totalSoFar,
@@ -2005,20 +1655,15 @@ object Bench {
         }
         val reps = if (ladder) 1 else 3
         var (t, fk, cl) = timeChunk(chunk, sfDir, cpus, reps, quick, !ladder)
-        // retry on CPU-shaped signals only (includeNonRetryable = false —
-        // see isHot): the io/throttle triggers still reach the published
-        // verdict via loadFieldsJson. Never with the deadline spent: a
-        // retry that overshoots the budget trades one contaminated chunk
-        // for the whole run's epilogue.
-        if (isHot(cl, cores, firstChunk = ci == 0, includeNonRetryable = false,
-            calibRef = calibRef, calibParRef = calibParRef) &&
-            retryBudget > 0 && remainingSec > 0) {
-          retryBudget -= 1; retried += 1
+        // retry a hot chunk once — never with the deadline spent: a retry
+        // that overshoots the budget trades one contaminated chunk for the
+        // whole run's epilogue. The thrown-away attempt's load is kept
+        // (load.retried) so the retry decision stays replayable.
+        if (isHot(cl, cores) && retryBudget > 0 && remainingSec > 0) {
+          retryBudget -= 1
+          retriedBuf += loadBuf.size -> cl
           System.err.println(s"[bench] chunk '${chunk.head}…' ran hot " +
-            s"(load=${cl.startLoad} ext_cores=${cl.externalCores} " +
-            s"steal=${cl.stealPct}% io_some=${cl.ioSomePct}% " +
-            s"io_full=${cl.ioFullPct}% cpu_some=${cl.cpuSomePct}% " +
-            s"calib=${cl.calibSec}s calib_par=${cl.calibParSec}s) — retrying once")
+            s"(ext_cores=${cl.externalCores} steal=${cl.stealPct}%) — retrying once")
           val again = timeChunk(chunk, sfDir, cpus, reps, quick, !ladder)
           t = again._1; fk = again._2; cl = again._3
         }
@@ -2064,14 +1709,14 @@ object Bench {
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     val total = timed.collect { case Timed(_, v, None, _, _) => v }.sum
-    // machine-load context: run-level steal% + end loadavg, per-chunk
-    // load/steal/external-cores, and the run's degraded verdict (any chunk
-    // still hot after its retry) — VERDICT r9 next-step #1
+    // machine-load context: run-level steal%, per-chunk steal/external
+    // cores (plus every thrown-away retry attempt's), and the run's
+    // degraded verdict (any chunk still hot after its retry) — VERDICT r9
+    // next-step #1
     val runSteal = for ((s0, _, t0) <- jiffies0; (s1, _, t1) <- cpuJiffies()
         if t1 > t0) yield math.round((s1 - s0) * 10000.0 / (t1 - t0)) / 100.0
     val (loadJson, loadDegraded) =
-      loadFieldsJson(chunkLoads, cores, runSteal, loadAvg1(), calibRef,
-        calibParRef)
+      loadFieldsJson(chunkLoads, cores, runSteal, retriedBuf.toSeq)
     // a deadline-tripped or ladder-degraded run is degraded by definition
     // (VERDICT r15 next-step #1: partial/reduced-protocol totals must
     // never feed the clean band or the history medians). A def, not a val:
@@ -2127,26 +1772,10 @@ object Bench {
       elapsedSec - wallAfterChunks - (smokeWallSec - smokeWallAtChunksEnd)
     val retimed = retimeRuns.flatMap(_._1.map(t => t.name -> t.secs))
     val retimedJson = retimedFieldJson(retimed)
-    // no firstChunk trigger: the retime runs after minutes of the bench's
-    // own work, so loadavg is self-polluted there (same rule as chunk 2+);
-    // the retime chunks' own calib probes are judged against the same
-    // clean-history reference as the timed chunks'
     val retimeHot: Option[Boolean] =
       if (retimeRuns.isEmpty) None
-      else Some(retimeRuns.exists(r => isHot(r._3, cores, calibRef = calibRef,
-        calibParRef = calibParRef)))
+      else Some(retimeRuns.exists(r => isHot(r._3, cores)))
     val retimeClean = retimeCleanVerdict(suspectQs, retimed, medians)
-    // the calib side of the env verdict is smoke-independent — computed
-    // BEFORE the final smoke position so the pre-smoke provisional records
-    // can carry it. Tri-state OR of BOTH probes (r17): either fixed
-    // workload reading inflated against its own clean history stamps the
-    // run; null only when neither has a baseline yet.
-    val calibInfSt  = calibVerdict(chunkLoads.map(_.calibSec), calibRef)
-    val calibInfPar = calibVerdict(chunkLoads.map(_.calibParSec), calibParRef)
-    val calibInf: Option[Boolean] = (calibInfSt, calibInfPar) match {
-      case (None, None) => None
-      case (a, b)       => Some(a.getOrElse(false) || b.getOrElse(false))
-    }
     val smokeBase = smokeBaseline(prevSmoke)
     // deadline/ladder instrumentation + the skip records (r16): `skipped`
     // names every key the internal deadline left un-run — a reader sees
@@ -2168,10 +1797,10 @@ object Bench {
         s""""ladder":$ladder,"quick_n":${timed.count(t => quick.contains(t.name))},""" +
         s""""skipped":$skippedJson"""
     val isolation =
-      s""""chunks":${chunks.length},"chunks_forked":$forked,"chunk_size":$chunkSize,"chunks_retried":$retried"""
+      s""""chunks":${chunks.length},"chunks_forked":$forked,"chunk_size":$chunkSize,"chunks_retried":${retriedBuf.size}"""
     // ONE full-line builder so the pre-smoke provisional artifact and the
-    // final line cannot drift in shape — they differ only in the env
-    // fields (calib-only vs smoke-adjudicated) and the partial stamp
+    // final line cannot drift in shape — they differ only in
+    // `env_inflated` (null until the smoke adjudicates) and the partial stamp
     // the run-level env-normalization yardstick (VERDICT r17 next-step #2)
     // — computed once, rides the full line and both headline shapes
     val envRatioJson =
@@ -2180,7 +1809,7 @@ object Bench {
     def fullLineJson(envInfJ: Option[Boolean], partial: Boolean): String = {
       val adjudication =
         s""""retime_clean":${triState(retimeClean)},"retime_hot":${triState(retimeHot)},""" +
-          s""""env_inflated":${triState(envInfJ)},"calib_inflated":${triState(calibInf)},""" +
+          s""""env_inflated":${triState(envInfJ)},""" +
           s"""$envRatioJson,"band":$band"""
       s"""{"metric":"total","value":$total,"unit":"sec","repeats":${if (ladder) 1 else 3},""" +
         (if (partial) """"partial":true,""" else "") +
@@ -2193,18 +1822,16 @@ object Bench {
     // one more partial-stamped closing line land first; the final records
     // supersede both the moment the smoke returns.
     if (!subsetRun)
-      writeSnapshotOnly(artifactPath, fullLineJson(
-        envInflatedVerdict(calibInf, None, smokeBase), partial = true))
+      writeSnapshotOnly(artifactPath, fullLineJson(None, partial = true))
     printAtomic(closingTotalLine(total, degraded, suspect, retimeClean,
-      retimeHot, envInflatedVerdict(calibInf, None, smokeBase), band,
+      retimeHot, None, band,
       timed.size, timed.count(_.err.isDefined), sfDir,
       streamingRegression(None, prevSmoke), wallSec = elapsedSec,
       skipped = skippedBuf.size, repeats = if (ladder) 1 else 3,
       partial = true))
     // the streaming smoke completes BEFORE the final artifact lines are
-    // built (r15): its duration doubles as the second fixed-workload
-    // sensor of the env verdict, so the full line and the closing line can
-    // carry ONE consistent `env_inflated` instead of a calib-only preview.
+    // built (r15): its duration is the env verdict's fixed workload, so the
+    // full line and the closing line carry ONE consistent `env_inflated`.
     // The smoke's own stdout lines still print last, via emitClosing.
     // If the reserve trigger already ran it mid-loop (r17), this is a
     // no-op; otherwise it runs here with the remaining budget as its wait
@@ -2223,13 +1850,10 @@ object Bench {
     }
     val (smokeLines, health) = smokeResult
     // plan-independent environment adjudication (VERDICT r14 next-step
-    // #2): both fixed workloads against their own clean history — the
-    // chunk probes (calib_inflated) and the smoke duration — combined as
-    // env_inflated. This is what the r14 capture was missing: 276 s with
-    // every sensor quiet now stamps env_inflated:true off the 3.8×
-    // smoke + inflated probes, readable from the tail alone.
-    val envInf = envInflatedVerdict(calibInf,
-      health.flatMap(smokeValueOf), smokeBase)
+    // #2): the fixed-workload smoke against its own clean history. This is
+    // what the r14 capture was missing: 276 s with every sensor quiet now
+    // stamps env_inflated:true off the 3.8× smoke, readable from the tail.
+    val envInf = envInflatedVerdict(health.flatMap(smokeValueOf), smokeBase)
     val fullLine = fullLineJson(envInf, partial = false)
     println(fullLine)
     // The full line above grows with the query count and the driver keeps
@@ -2255,7 +1879,7 @@ object Bench {
     val failed = timed.count(_.err.isDefined)
     val adjudication =
       s""""retime_clean":${triState(retimeClean)},"retime_hot":${triState(retimeHot)},""" +
-        s""""env_inflated":${triState(envInf)},"calib_inflated":${triState(calibInf)},""" +
+        s""""env_inflated":${triState(envInf)},""" +
         s"""$envRatioJson,"band":$band"""
     val shortBody =
       s""""value":$total,"unit":"sec","repeats":${if (ladder) 1 else 3},$budgetFields,"degraded":$degraded,"suspect":$suspect,"suspect_queries":$suspectJson,"suspect_ratios":$ratiosJson,"retimed":$retimedJson,$adjudication,$isolation,"queries_run":${timed.size},"queries_failed":$failed,"queries_skipped":${skippedBuf.size},"load":$loadJson,"sf":"$sfDir""""

@@ -92,29 +92,12 @@ object HistoryReport {
       // but the run's own retime pass proved the flags ambient";
       // retime_hot=true beside a false retime_clean reads "the second
       // opinion was also hot"; env_inflated=true reads "the fixed-workload
-      // sensors saw the whole window slow" (the r14 blind spot)
+      // smoke saw the whole window slow" (the r14 blind spot)
       val adjudicated =
-        Seq("retime_clean", "retime_hot", "env_inflated", "calib_inflated")
+        Seq("retime_clean", "retime_hot", "env_inflated")
           .flatMap { f =>
             Option(n.get(f)).filterNot(_.isNull).map(b => s"  $f=${b.asBoolean}")
           }.mkString
-      // the run-median calibration probe (r15): a fixed-work number
-      // comparable straight down the column — contention reads as the
-      // probe column inflating with the total, a regression as the total
-      // moving alone
-      def probeCol(field: String, label: String) = Option(n.get("load"))
-        .flatMap(l => Option(l.get("chunk_load"))).filter(_.isArray).map { arr =>
-          val b = Seq.newBuilder[Double]
-          arr.forEach(c => Option(c.get(field)).filter(_.isNumber)
-            .map(_.asDouble).filter(_ > 0).foreach(b += _))
-          b.result()
-        }.filter(_.nonEmpty)
-        .map(v => s"  $label=" + fnum("%.2f", v.sorted.apply(v.size / 2)))
-        .getOrElse("")
-      val calib = probeCol("calib_sec", "calib") +
-        // the parallel memory probe (r17) — the sensor for bandwidth/LLC
-        // contention the single-thread column is structurally blind to
-        probeCol("calib_par_sec", "calib_par")
       // r16 columns, printed only when the entry carries them: the
       // capture's own wall clock (a wall regression reads straight down
       // the column even when the metric holds), and the deadline's skip
@@ -129,7 +112,7 @@ object HistoryReport {
       val skip = Option(n.get("queries_skipped")).filter(_.isNumber)
         .map(_.asInt).filter(_ > 0).map(k => s"  SKIPPED=$k").getOrElse("")
       sb ++= s"$v s  degraded=${flag(n, "degraded")}  suspect=${flag(n, "suspect")}" +
-        s"$adjudicated$calib$envR$wall$skip  sf=${Option(n.get("sf")).map(_.asText()).getOrElse("-")}\n"
+        s"$adjudicated$envR$wall$skip  sf=${Option(n.get("sf")).map(_.asText()).getOrElse("-")}\n"
     }
     // the latest entry's flagged set and each query's own steal window —
     // parsed BEFORE the decision table so the burst qualifier below and
@@ -172,8 +155,8 @@ object HistoryReport {
           case (Some(false), _, Some(true)) =>
             "environmental-leaning -- the retime window itself ran hot"
           case (Some(false), Some(false), _) =>
-            // the r16 contended capture's exact shape: env sensors at speed
-            // (bursts land BETWEEN the ~0.1 s probes), retimes cap-dropped
+            // the r16 contended capture's exact shape: the smoke at speed
+            // (bursts land outside its window), retimes cap-dropped
             // or re-hit by the next burst — but the flagged rows' own
             // steal windows carry the evidence. Report-level qualifier
             // only: the emitted tri-states deliberately never consume

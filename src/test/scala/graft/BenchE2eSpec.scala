@@ -80,17 +80,11 @@ class BenchE2eSpec extends AnyFunSuite {
       // 5 clean sf-stamped entries at 0.02 s per subset query: enough
       // samples (>= SuspectMinSamples) for every key, medians trivial
       // (< TrivialMedianSec) so >= 3 flags also stamp the run suspect.
-      // Each entry also carries an absurdly tiny calibration probe
-      // (0.001 s vs the real ~0.1 s loop) — the r15 twin of the tiny
-      // medians: the REAL probes must read >= 1.5x that baseline, so the
-      // live run must stamp the full invisible-contention verdict chain
-      // (hot chunks -> degraded, retime window hot, calib_inflated ->
-      // env_inflated) exactly as an r14-style contended capture would
+      // Stamped cpus "4" to match the run's SPARK_GRAFT_CPUS below.
       val qjson = subset.map(q => s""""$q":0.02""").mkString("{", ",", "}")
       val hist = Seq.fill(5)(
         s"""{"metric":"total","value":1.0,"unit":"sec","degraded":false,""" +
-          s""""suspect":false,"queries":$qjson,""" +
-          s""""load":{"cores":32,"chunk_load":[{"load":0.1,"calib_sec":0.001,"hot":false}]},""" +
+          s""""suspect":false,"queries":$qjson,"cpus":"4",""" +
           s""""sf":"$sfDir"}""").mkString("", "\n", "\n")
       java.nio.file.Files.writeString(dir.resolve("BENCH_HISTORY.jsonl"), hist)
 
@@ -141,16 +135,9 @@ class BenchE2eSpec extends AnyFunSuite {
         s"retimes stay far above the fake 0.02 s medians -> explicit false: $last")
       assert(n.get("retime_hot").isBoolean,
         s"a fired retime pass must report its own load verdict: $last")
-      // the r15 invisible-contention chain, driven live by the tiny
-      // synthetic probe baseline (VERDICT r14 next-step #1's gate: the
-      // r14-style signature must yield degraded/retime_hot, and the
-      // plan-independent verdict must stamp env_inflated true)
-      assert(n.get("degraded").asBoolean,
-        s"real probes vs the 0.001 s baseline must run every chunk hot: $last")
-      assert(n.get("retime_hot").asBoolean,
-        s"the retime window's own probe must read hot too: $last")
-      assert(n.get("env_inflated").isBoolean && n.get("env_inflated").asBoolean,
-        s"the run-median probe vs the tiny baseline is the env evidence: $last")
+      // env_inflated is smoke-only, and this run skips the smoke
+      assert(n.get("env_inflated").isNull,
+        s"a skipped smoke leaves the env verdict unknown: $last")
       assert(n.get("band").isArray && n.get("band").get(0).asDouble === 1.0,
         s"the clean-history band must ride the closing line: $last")
       assert(last.length < 600, s"closing line over budget: ${last.length}")

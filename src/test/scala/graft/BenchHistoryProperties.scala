@@ -4,8 +4,8 @@ import org.scalacheck.{Gen, Prop, Properties}
 
 /** ScalaCheck properties for the bench's history readers — the functions
   * that parse `BENCH_HISTORY.jsonl` / `STREAMING_HISTORY.jsonl` back into
-  * baselines ([[Bench.historyMedians]], [[Bench.calibBaseline]],
-  * [[Bench.cleanBandTotals]], [[Bench.smokeBaseline]]). These files are
+  * baselines ([[Bench.historyMedians]], [[Bench.cleanBandTotals]],
+  * [[Bench.smokeBaseline]]). These files are
   * append-only across rounds and JVM kills, so the readers WILL meet
   * truncated lines, pre-flag-era entries, and outright garbage; the
   * example-based specs pin the happy-path semantics, these pin the
@@ -25,10 +25,10 @@ object BenchHistoryProperties extends Properties("benchHistory") {
       value    <- Gen.chooseNum(50.0, 500.0)
       degraded <- Gen.oneOf(true, false)
       suspect  <- Gen.oneOf(true, false)
-      probes   <- Gen.listOfN(3, Gen.chooseNum(0.05, 0.5))
+      steals   <- Gen.listOfN(3, Gen.chooseNum(0.0, 5.0))
       qSecs    <- Gen.chooseNum(0.01, 9.0)
     } yield {
-      val chunks = probes.map(p => s"""{"load":0.1,"calib_sec":$p,"hot":false}""")
+      val chunks = steals.map(p => s"""{"steal_pct":$p,"ext_cores":0.1,"hot":${p > 2.0}}""")
         .mkString(",")
       s"""{"metric":"total","value":$value,"degraded":$degraded,""" +
         s""""suspect":$suspect,"queries":{"q_x":$qSecs},""" +
@@ -54,7 +54,6 @@ object BenchHistoryProperties extends Properties("benchHistory") {
 
   property("readers are total over hostile trails") = Prop.forAll(trailGen) { lines =>
     Bench.historyMedians(lines, sf = Some(sf))
-    Bench.calibBaseline(lines, sf = Some(sf))
     Bench.cleanBandTotals(lines, sf = Some(sf))
     Bench.smokeBaseline(lines)
     true
@@ -66,12 +65,6 @@ object BenchHistoryProperties extends Properties("benchHistory") {
     Prop.forAll(trailGen) { lines =>
       val totals = Bench.cleanBandTotals(lines, sf = Some(sf))
       totals.isEmpty || (totals.size <= 10 && totals.min <= totals.max)
-    }
-
-  property("calibBaseline lands inside the fed probe range") =
-    Prop.forAll(Gen.listOfN(6, entryGen)) { lines =>
-      Bench.calibBaseline(lines, sf = Some(sf)).forall(b =>
-        b >= 0.05 - 1e-9 && b <= 0.5 + 1e-9)
     }
 
   property("bandJson is always valid JSON (array or null)") =
@@ -90,8 +83,6 @@ object BenchHistoryProperties extends Properties("benchHistory") {
       val mixed = entries.zip(junk).flatMap { case (e, j) => Seq(e, j) }
       Bench.historyMedians(mixed, sf = Some(sf)) ==
         Bench.historyMedians(entries, sf = Some(sf)) &&
-      Bench.calibBaseline(mixed, sf = Some(sf)) ==
-        Bench.calibBaseline(entries, sf = Some(sf)) &&
       Bench.cleanBandTotals(mixed, sf = Some(sf)) ==
         Bench.cleanBandTotals(entries, sf = Some(sf))
     }
@@ -99,15 +90,13 @@ object BenchHistoryProperties extends Properties("benchHistory") {
   // ---- verdict coherence --------------------------------------------------
 
   property("envInflatedVerdict is null iff no evidence, and monotone in smoke") =
-    Prop.forAll(Gen.option(Gen.oneOf(true, false)),
-      Gen.option(Gen.chooseNum(1.0, 500.0)),
-      Gen.option(Gen.chooseNum(1.0, 100.0))) { (calib, smoke, base) =>
-      val v = Bench.envInflatedVerdict(calib, smoke, base)
+    Prop.forAll(Gen.option(Gen.chooseNum(1.0, 500.0)),
+      Gen.option(Gen.chooseNum(1.0, 100.0))) { (smoke, base) =>
+      val v = Bench.envInflatedVerdict(smoke, base)
       val haveSmoke = smoke.isDefined && base.isDefined
-      val expectNull = calib.isEmpty && !haveSmoke
-      (v.isEmpty == expectNull) &&
-        // calib=true forces true whenever a verdict exists at all
-        (!calib.contains(true) || v.contains(true)) &&
+      (v.isEmpty == !haveSmoke) &&
+        // a smoke at or under its base never reads inflated
+        (!(haveSmoke && smoke.get <= base.get) || v.contains(false)) &&
         // a smoke reading 10x past its base forces true
         (!(haveSmoke && smoke.get > 10 * base.get && smoke.get - base.get > 3.0) ||
           v.contains(true))

@@ -18,28 +18,22 @@ class BenchLoadSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private val cores = 32
 
-  private def idle = Bench.ChunkLoad(startLoad = 0.4, stealPct = 0.1, externalCores = 0.2)
+  private def idle = Bench.ChunkLoad(stealPct = 0.1, externalCores = 0.2)
 
   test("an idle box is not hot; each contention signal alone flips it") {
     assert(!Bench.isHot(idle, cores))
     // a concurrent stress -c 16 / Verify run: ~16 external cores >> cores/4
     assert(Bench.isHot(idle.copy(externalCores = 16.0), cores))
-    // started into an already-saturated box: loadavg past 1.5 * cores/4 —
-    // a FIRST-chunk-only trigger (later chunks' loadavg is dominated by
-    // the bench's own prior work; ext_cores carries the signal there)
-    assert(Bench.isHot(idle.copy(startLoad = 13.0), cores, firstChunk = true))
-    assert(!Bench.isHot(idle.copy(startLoad = 13.0), cores),
-      "bench-self loadavg must not flag later chunks hot")
     // hypervisor steal
     assert(Bench.isHot(idle.copy(stealPct = 3.5), cores))
     // boundary: exactly at the thresholds is NOT hot (strict >)
     assert(!Bench.isHot(idle.copy(externalCores = cores / 4.0), cores))
-    assert(!Bench.isHot(idle.copy(startLoad = 1.5 * cores / 4.0), cores, firstChunk = true))
+    assert(!Bench.isHot(idle.copy(stealPct = 2.0), cores))
   }
 
   test("idle chunks emit degraded=false; one hot chunk degrades the run") {
     val (okJson, okDeg) =
-      Bench.loadFieldsJson(Seq(idle, idle, idle), cores, Some(0.1), Some(0.5))
+      Bench.loadFieldsJson(Seq(idle, idle, idle), cores, Some(0.1))
     assert(!okDeg)
     val ok = mapper.readTree(okJson)
     assert(!ok.get("chunk_load").get(0).get("hot").asBoolean)
@@ -47,7 +41,7 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(ok.get("steal_pct").asDouble === 0.1)
 
     val (hotJson, hotDeg) = Bench.loadFieldsJson(
-      Seq(idle, idle.copy(externalCores = 16.0), idle), cores, Some(0.1), Some(9.8))
+      Seq(idle, idle.copy(externalCores = 16.0), idle), cores, Some(0.1))
     assert(hotDeg, "a chunk with 16 external cores busy must degrade the run")
     val hot = mapper.readTree(hotJson)
     assert(hot.get("chunk_load").size === 3)
@@ -56,45 +50,33 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(hot.get("chunk_load").get(1).get("ext_cores").asDouble === 16.0)
   }
 
-  test("the emitted verdict applies the first-chunk loadavg trigger") {
-    // IO-heavy competing load: loadavg-visible (D-state) but invisible to
-    // busy-jiffy ext_cores and to steal — the verdict must flag it when the
-    // run STARTED into it (chunk 0), same rule as the retry decision
-    val ioHot = idle.copy(startLoad = 13.0)
-    val (json0, deg0) = Bench.loadFieldsJson(Seq(ioHot, idle), cores, None, None)
-    assert(deg0, "chunk-0 loadavg past 1.5*cores/4 must degrade the run")
-    assert(mapper.readTree(json0).get("chunk_load").get(0).get("hot").asBoolean)
-    // the same loadavg on a LATER chunk is dominated by the bench's own
-    // prior-chunk work and must NOT flag (the 4038aae false-positive fix)
-    val (json1, deg1) = Bench.loadFieldsJson(Seq(idle, ioHot), cores, None, None)
-    assert(!deg1, "bench-self loadavg on later chunks must not degrade the run")
-    assert(!mapper.readTree(json1).get("chunk_load").get(1).get("hot").asBoolean)
-  }
-
-  test("IO pressure flags a chunk the CPU signals cannot see") {
-    // the r10 blind spot (VERDICT r10 next-step #2): D-state/IO contention
-    // shows in PSI stall time, never in busy jiffies or steal
-    assert(Bench.isHot(idle.copy(ioFullPct = 12.0), cores),
-      ">10% full-stall must flag — a CPU-bound chunk cannot self-inflict it")
-    assert(Bench.isHot(idle.copy(ioSomePct = 45.0), cores))
-    // boundary: exactly at the thresholds is NOT hot (strict >)
-    assert(!Bench.isHot(idle.copy(ioFullPct = 10.0), cores))
-    assert(!Bench.isHot(idle.copy(ioSomePct = 40.0), cores))
-    // the io triggers are verdict-only: the RETRY site passes
-    // includeNonRetryable = false (PSI has no per-process attribution, so
-    // the bench's own cold-cache reads must not burn the retry budget),
-    // while CPU-shaped signals keep retrying either way
-    assert(!Bench.isHot(idle.copy(ioFullPct = 50.0), cores, includeNonRetryable = false))
-    assert(Bench.isHot(idle.copy(externalCores = 16.0), cores, includeNonRetryable = false))
-    // the fields ride the emitted chunk objects (graceful-absence default 0)
-    val (json, deg) = Bench.loadFieldsJson(
-      Seq(idle, idle.copy(ioFullPct = 12.0, ioSomePct = 30.0)), cores, None, None)
-    assert(deg)
-    val chunks = mapper.readTree(json).get("chunk_load")
-    assert(chunks.get(0).get("io_full_pct").asDouble === 0.0)
-    assert(chunks.get(1).get("io_full_pct").asDouble === 12.0)
-    assert(chunks.get(1).get("io_some_pct").asDouble === 30.0)
-    assert(chunks.get(1).get("hot").asBoolean)
+  test("load.retried keeps each thrown-away attempt's two sensors") {
+    // a retried chunk publishes its KEPT attempt in chunk_load; the attempt
+    // the retry threw away rides load.retried, keyed by its chunk's index,
+    // so a reader can replay which sensor decided the retry
+    val kept = Seq(idle, idle.copy(stealPct = 0.4), idle)
+    val thrown = Seq(1 -> idle.copy(stealPct = 3.7, externalCores = 0.3))
+    val (json, deg) = Bench.loadFieldsJson(kept, cores, Some(0.5), thrown)
+    assert(!deg, "the verdict reads the kept attempts only")
+    val n = mapper.readTree(json)
+    def fields(o: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
+      val b = Seq.newBuilder[String]; o.fieldNames().forEachRemaining(b += _); b.result()
+    }
+    assert(fields(n) === Seq("steal_pct", "cores", "chunk_load", "retried"))
+    assert(fields(n.get("chunk_load").get(0)) === Seq("steal_pct", "ext_cores", "hot"))
+    val r = n.get("retried")
+    assert(r.isArray && r.size === 1)
+    assert(fields(r.get(0)) === Seq("chunk", "steal_pct", "ext_cores"))
+    assert(r.get(0).get("chunk").asInt === 1)
+    assert(r.get(0).get("steal_pct").asDouble === 3.7)
+    assert(r.get(0).get("ext_cores").asDouble === 0.3)
+    val replayed = Bench.ChunkLoad(r.get(0).get("steal_pct").asDouble,
+      r.get(0).get("ext_cores").asDouble)
+    assert(Bench.isHot(replayed, n.get("cores").asInt),
+      "the recorded attempt must replay as hot under the predicate that retried it")
+    // a run with no retry publishes an empty list, never an absent field
+    val (none, _) = Bench.loadFieldsJson(kept, cores, None)
+    assert(mapper.readTree(none).get("retried").size === 0)
   }
 
   // ---- history-aware per-query plausibility (VERDICT r10 next-step #1) --
@@ -302,9 +284,9 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(Bench.cleanBandTotals(trail, sf = Some("/tmp/sf"),
       cpus = Some("32")) === Seq.fill(4)(0.5))
     // lenient grandfather (deliberately weaker than the sf era clause —
-    // see cpusMatches): an UNSTAMPED legacy entry keeps matching, so the
-    // trail's medians and quick keys survive the stamp's introduction and
-    // the legacy pool ages out by recency instead of orphaning the trail
+    // see cpusMatches): an entry with neither a cpus stamp nor load.cores
+    // keeps matching, and the legacy pool ages out by recency instead of
+    // orphaning the trail
     val mixed = Seq.fill(3)(cpusLine(0.5, None)) ++
       Seq.fill(2)(cpusLine(0.7, Some("32"))) ++
       Seq(cpusLine(1.2, Some("8")))
@@ -317,6 +299,36 @@ class BenchLoadSpec extends AnyFunSuite {
       cpus = Some("8"))("q_a") === 0.5)
     assert(Bench.cleanBandTotals(mixed, sf = Some("/tmp/sf"),
       cpus = Some("8")) === Seq(0.5, 0.5, 0.5, 1.2))
+  }
+
+  test("an unstamped entry's load.cores stands in for its cpus stamp") {
+    // 65 of the 66 r1-r18 entries predate the cpus stamp; treating them as
+    // matching any core count judged a 4-core run against 32-core medians
+    def line(v: Double, cpus: Option[String], cores: Option[Int]): String = {
+      val stamp = cpus.fold("")(c => s""""cpus":"$c",""")
+      val load = cores.fold("")(c => s""""load":{"cores":$c,"chunk_load":[]},""")
+      s"""{"metric":"total","value":$v,"degraded":false,"suspect":false,""" +
+        s""""queries":{"q_a":$v},$load$stamp"sf":"/tmp/sf"}"""
+    }
+    def node(l: String) = mapper.readTree(l)
+    assert(Bench.entryCpus(node(line(1.0, Some("8"), Some(32)))) === Some("8"),
+      "the stamp wins over the host width")
+    assert(Bench.entryCpus(node(line(1.0, None, Some(32)))) === Some("32"))
+    assert(Bench.entryCpus(node(line(1.0, None, None))) === None)
+    val trail = Seq.fill(3)(line(0.5, None, Some(32))) ++
+      Seq.fill(3)(line(1.5, None, Some(4)))
+    assert(Bench.historyMedians(trail, sf = Some("/tmp/sf"),
+      cpus = Some("4"))("q_a") === 1.5)
+    assert(Bench.historyMedians(trail, sf = Some("/tmp/sf"),
+      cpus = Some("32"))("q_a") === 0.5)
+    assert(Bench.cleanBandTotals(trail, sf = Some("/tmp/sf"),
+      cpus = Some("4")) === Seq.fill(3)(1.5))
+    // an entry carrying neither keeps the lenient match
+    val legacy = Seq.fill(3)(line(0.7, None, None))
+    assert(Bench.historyMedians(legacy, sf = Some("/tmp/sf"),
+      cpus = Some("4"))("q_a") === 0.7)
+    assert(Bench.cleanBandTotals(legacy, sf = Some("/tmp/sf"),
+      cpus = Some("32")) === Seq.fill(3)(0.7))
   }
 
   test("a persistent shift escapes the suspect lock-in as the new normal") {
@@ -747,136 +759,15 @@ class BenchLoadSpec extends AnyFunSuite {
 
   // ---- invisible-contention sensors + env adjudication (VERDICT r14) ----
 
-  test("cpu-PSI, cgroup throttle, and the calib probe flag what r14's sensors missed") {
-    // the r14 capture: 2.6x the clean band with ext_cores 0, steal 0.26%,
-    // io-PSI ~0 — every trigger quiet. The three r15 sensors each catch a
-    // mode of that signature.
-    assert(!Bench.isHot(idle, cores), "baseline: idle stays not hot")
-    // cpu-PSI some-stall: runnable-but-not-running sees queueing no matter
-    // who the contender is; the floor sits above bench-self oversubscription
-    assert(Bench.isHot(idle.copy(cpuSomePct = 30.0), cores))
-    assert(!Bench.isHot(idle.copy(cpuSomePct = Bench.CpuPsiHotPct), cores),
-      "exactly at the floor is NOT hot (strict >)")
-    // cpu pressure is a retryable (CPU-shaped) signal — a competitor can go
-    assert(Bench.isHot(idle.copy(cpuSomePct = 30.0), cores,
-      includeNonRetryable = false))
-    // cgroup throttling: measures the quota, not the plan — verdict-only
-    // (a retry cannot outwait a static quota)
-    assert(Bench.isHot(idle.copy(throttledPct = 6.0), cores))
-    assert(!Bench.isHot(idle.copy(throttledPct = 6.0), cores,
-      includeNonRetryable = false))
-    assert(!Bench.isHot(idle.copy(throttledPct = Bench.ThrottleHotPct), cores))
-    // the calibration probe judges against the clean-history reference:
-    // no reference, no verdict — a first run can never self-flag on it
-    val slowProbe = idle.copy(calibSec = 0.35)
-    assert(!Bench.isHot(slowProbe, cores), "no calibRef -> calib never triggers")
-    assert(Bench.isHot(slowProbe, cores, calibRef = Some(0.2)),
-      "0.35 s probe vs 0.2 s baseline is 1.75x — hot")
-    assert(!Bench.isHot(idle.copy(calibSec = 0.25), cores, calibRef = Some(0.2)),
-      "1.25x is inside the probe's noise band")
-    assert(!Bench.isHot(idle.copy(calibSec = 0.3), cores, calibRef = Some(0.2)),
-      "exactly 1.5x is NOT hot (strict >)")
-    assert(!Bench.isHot(idle.copy(calibSec = 0.06), cores, calibRef = Some(0.02)),
-      "a 40 ms delta is jitter even at 3x — the absolute floor holds")
-    assert(Bench.isHot(slowProbe, cores, calibRef = Some(0.2),
-      includeNonRetryable = false), "the calib trigger is retryable")
-  }
-
-  test("loadFieldsJson publishes the new sensors and the calib reference") {
-    val c = idle.copy(cpuSomePct = 3.2, throttledPct = 0.0, calibSec = 0.21)
-    val (json, deg) = Bench.loadFieldsJson(Seq(c), cores, None, None,
-      calibRef = Some(0.2))
-    assert(!deg)
-    val n = mapper.readTree(json)
-    assert(n.get("calib_ref").asDouble === 0.2,
-      "the baseline the chunk verdicts used must ride the line")
-    val chunk = n.get("chunk_load").get(0)
-    assert(chunk.get("cpu_some_pct").asDouble === 3.2)
-    assert(chunk.get("throttled_pct").asDouble === 0.0)
-    assert(chunk.get("calib_sec").asDouble === 0.21)
-    assert(!chunk.get("hot").asBoolean)
-    // an inflated probe degrades the run through the same plumbing
-    val (hotJson, hotDeg) = Bench.loadFieldsJson(
-      Seq(c.copy(calibSec = 0.5)), cores, None, None, calibRef = Some(0.2))
-    assert(hotDeg, "2.5x probe inflation must degrade the run")
-    assert(mapper.readTree(hotJson).get("chunk_load").get(0).get("hot").asBoolean)
-    // without a reference the same chunk publishes no calib_ref and stays
-    // unjudged on the probe
-    val (noRef, noRefDeg) = Bench.loadFieldsJson(
-      Seq(c.copy(calibSec = 0.5)), cores, None, None)
-    assert(!noRefDeg && mapper.readTree(noRef).get("calib_ref") === null)
-  }
-
-  /** A history line with per-chunk calib probes in the r15 load shape. */
-  private def calLine(calibs: Seq[Double], degraded: Boolean = false,
-      suspect: Boolean = false, sf: String = "/tmp/sf"): String =
-    s"""{"metric":"total","value":100.0,"degraded":$degraded,""" +
-      s""""suspect":$suspect,"queries":{"q_x":0.1},""" +
-      s""""load":{"cores":32,"chunk_load":[""" +
-      calibs.map(c => s"""{"load":0.1,"calib_sec":$c,"hot":false}""")
-        .mkString(",") + s"""]},"sf":"$sf"}"""
-
-  test("calibBaseline pools clean same-sf probes and refuses thin history") {
-    val hist = Seq(calLine(Seq(0.2, 0.22)), calLine(Seq(0.21, 0.2)))
-    assert(Bench.calibBaseline(hist, sf = Some("/tmp/sf")) === Some(0.21),
-      "median of the pooled chunk probes")
-    // contaminated entries never feed the yardstick that judges the next run
-    val dirty = hist ++ Seq(calLine(Seq(0.9, 0.95), suspect = true),
-      calLine(Seq(0.8), degraded = true))
-    assert(Bench.calibBaseline(dirty, sf = Some("/tmp/sf")) === Some(0.21))
-    // other-sf entries are not baseline material
-    assert(Bench.calibBaseline(hist, sf = Some("/other")) === None)
-    // below SuspectMinSamples probe values: no baseline, no verdict
-    assert(Bench.calibBaseline(Seq(calLine(Seq(0.2, 0.21))),
-      sf = Some("/tmp/sf")) === None)
-    // pre-r15 entries (no load.chunk_load.calib_sec) contribute nothing
-    assert(Bench.calibBaseline(Seq.fill(5)(histLine(idleRun)),
-      sf = Some("/tmp/sf")) === None)
-    // zero/absent probes are filtered, not counted as 0-second samples
-    assert(Bench.calibBaseline(Seq(calLine(Seq(0.0, 0.0, 0.0))),
-      sf = Some("/tmp/sf")) === None)
-  }
-
-  test("a permanently slower box escapes the calib-baseline lock-in") {
-    // the probe twin of the all-suspect escape: a hardware-class slowdown
-    // past 1.5x flags every chunk hot -> every run degraded -> degraded
-    // entries never feed the baseline -> the stale fast-era reference
-    // judges forever. Five consecutive contaminated probe-carrying entries
-    // must BECOME the baseline instead.
-    val fastEra = Seq.fill(3)(calLine(Seq(0.1, 0.1)))
-    val slowRuns = Seq.fill(5)(calLine(Seq(0.2, 0.2), degraded = true))
-    assert(Bench.calibBaseline(fastEra ++ slowRuns, sf = Some("/tmp/sf")) ===
-      Some(0.2), "5 consecutive degraded probe entries are the new normal")
-    // a TRANSIENT contamination cannot trip the escape: one clean entry
-    // inside the recent window keeps the clean-era reference
-    val transient = fastEra ++ Seq.fill(3)(calLine(Seq(0.9), suspect = true)) ++
-      Seq(calLine(Seq(0.1))) ++ Seq(calLine(Seq(0.9), degraded = true))
-    assert(Bench.calibBaseline(transient, sf = Some("/tmp/sf")) === Some(0.1))
-    // pre-r15 entries with no probes are invisible to the escape count —
-    // they can neither trip it nor block it
-    val withLegacy = fastEra ++ Seq.fill(3)(histLine(idleRun)) ++ slowRuns
-    assert(Bench.calibBaseline(withLegacy, sf = Some("/tmp/sf")) === Some(0.2))
-  }
-
-  test("calibVerdict judges the run median, tri-state") {
-    assert(Bench.calibVerdict(Seq(0.2, 0.21, 0.22), Some(0.2)) === Some(false))
-    assert(Bench.calibVerdict(Seq(0.5, 0.55, 0.6), Some(0.2)) === Some(true))
-    // one hot chunk is the per-chunk flags' job — the run median holds
-    assert(Bench.calibVerdict(Seq(0.2, 0.21, 0.9), Some(0.2)) === Some(false))
-    assert(Bench.calibVerdict(Seq(0.5), None) === None, "no baseline -> unknown")
-    assert(Bench.calibVerdict(Nil, Some(0.2)) === None, "no probes -> unknown")
-  }
-
   test("the clean band is shared, windowed, and excludes self-stamped entries") {
     def line(v: Double, extra: String = "") =
       s"""{"metric":"total","value":$v,"degraded":false,"suspect":false$extra,""" +
         s""""queries":{"q_x":0.1},"sf":"/tmp/sf"}"""
     val totals = Bench.cleanBandTotals(Seq(line(97.2), line(105.9),
       line(276.3, extra = ""","env_inflated":true"""),
-      line(150.0, extra = ""","calib_inflated":true"""),
       line(100.0)), sf = Some("/tmp/sf"))
     assert(totals === Seq(97.2, 105.9, 100.0),
-      "env/calib-stamped entries must not stretch the band they anchor")
+      "env-stamped entries must not stretch the band they anchor")
     assert(Bench.bandJson(totals) === "[97.2,105.9]")
     assert(Bench.bandJson(Nil) === "null")
     // the 10-entry window drops ancient outliers
@@ -903,29 +794,29 @@ class BenchLoadSpec extends AnyFunSuite {
 
   test("envInflatedVerdict stamps the r14 capture true from the tail alone") {
     // THE r14 replay (VERDICT r14 next-step #2): smoke history 26-29 s,
-    // this capture's smoke 105.16 s, no calib baseline yet (pre-r15
-    // history carries no probes) — the artifact must stamp env_inflated
-    // true even though every attribution sensor read idle
+    // this capture's smoke 105.16 s — the artifact must stamp env_inflated
+    // true even though every load sensor read idle
     val smokeHist = Seq(27.46, 26.4, 29.0).map(v =>
       s"""{"metric":"streaming_smoke","value":$v,"suites":7,"failed":0}""")
     val verdict = Bench.envInflatedVerdict(
-      calib = Bench.calibVerdict(Nil, None),
       smokeSec = Bench.smokeValueOf(
         """{"metric":"streaming_smoke","value":105.16,"suites":7,"failed":0}"""),
       smokeBase = Bench.smokeBaseline(smokeHist))
     assert(verdict === Some(true),
       "the 3.8x fixed-workload smoke IS the contention evidence r14 lacked")
-    // a clean capture with both sides judged reads explicit false
-    assert(Bench.envInflatedVerdict(Some(false), Some(27.9),
+    // a clean capture reads explicit false
+    assert(Bench.envInflatedVerdict(Some(27.9),
       Bench.smokeBaseline(smokeHist)) === Some(false))
-    // either side alone can stamp true
-    assert(Bench.envInflatedVerdict(Some(true), None, None) === Some(true))
     // under the ratio or under the absolute floor: not inflated
-    assert(Bench.envInflatedVerdict(None, Some(38.0),
+    assert(Bench.envInflatedVerdict(Some(38.0),
       Bench.smokeBaseline(smokeHist)) === Some(false), "1.38x is under 1.5x")
+    assert(Bench.envInflatedVerdict(Some(31.0), Some(29.0)) === Some(false),
+      "a 2 s delta is under the 3 s floor")
     // no evidence at all: unknown, never a fake clean
-    assert(Bench.envInflatedVerdict(None, None, None) === None)
-    assert(Bench.envInflatedVerdict(None, Some(105.16), None) === None,
+    assert(Bench.envInflatedVerdict(None, None) === None)
+    assert(Bench.envInflatedVerdict(None, Bench.smokeBaseline(smokeHist)) === None,
+      "a skipped smoke is not evidence")
+    assert(Bench.envInflatedVerdict(Some(105.16), None) === None,
       "a smoke value with no baseline is not evidence")
   }
 
@@ -1002,13 +893,6 @@ class BenchLoadSpec extends AnyFunSuite {
     // thin per-query medians, rich probe/smoke baselines) must warn
     assert(verdictOf(entry(""""suspect":false,"env_inflated":true,"""))
       .contains("treat the total with caution"))
-    // the trail column: run-median probe beside each entry that carries one
-    val withCalib = entry(""""suspect":false,""").replace(""""queries"""",
-      """"load":{"cores":32,"chunk_load":[{"calib_sec":0.11,"hot":false},""" +
-        """{"calib_sec":0.13,"hot":false}]},"queries"""")
-    assert(graft.tools.HistoryReport.report(idleHistory :+ withCalib)
-      .contains("calib=0.13"),
-      "upper-median of [0.11,0.13]; pre-r15 entries print no calib column")
   }
 
   // ---- internal deadline + degrade ladder + quick keys (VERDICT r15) ----
@@ -1148,68 +1032,6 @@ class BenchLoadSpec extends AnyFunSuite {
       "already under the floor — unrunnable regardless of projection")
     assert(!Bench.smokeDueNow(1000.0),
       "no pace measured yet (projection 0) — static window only")
-  }
-
-  test("the parallel memory probe feeds isHot/loadFieldsJson beside the scalar probe (r17)") {
-    // VERDICT r16 next-step #3: the r16 driver run was ~2x inflated while
-    // the single-thread ALU probe read clean — it is structurally blind to
-    // memory-bandwidth/LLC contention that hits 32-way execution. The
-    // parallel probe is judged against ITS OWN baseline, same thresholds.
-    val slowPar = idle.copy(calibParSec = 0.35)
-    assert(!Bench.isHot(slowPar, cores), "no calibParRef -> never triggers")
-    assert(Bench.isHot(slowPar, cores, calibParRef = Some(0.2)),
-      "0.35 s parallel probe vs 0.2 s baseline is 1.75x — hot")
-    assert(!Bench.isHot(idle.copy(calibParSec = 0.25), cores,
-      calibParRef = Some(0.2)), "1.25x is inside the noise band")
-    assert(!Bench.isHot(idle.copy(calibParSec = 0.11), cores,
-      calibParRef = Some(0.08)),
-      "a 30 ms delta is jitter even past the ratio — the absolute floor holds")
-    assert(Bench.isHot(slowPar, cores, calibParRef = Some(0.2),
-      includeNonRetryable = false), "the parallel-probe trigger is retryable")
-    // an idle scalar probe never masks a hot parallel one (and vice versa)
-    assert(Bench.isHot(idle.copy(calibSec = 0.1, calibParSec = 0.35), cores,
-      calibRef = Some(0.1), calibParRef = Some(0.2)),
-      "the r16 blind spot: ALU probe clean, bandwidth probe screaming")
-    // the chunk json carries the probe and the run block its reference
-    val (json, deg) = Bench.loadFieldsJson(
-      Seq(idle.copy(calibSec = 0.21, calibParSec = 0.08)), cores, None, None,
-      calibRef = Some(0.2), calibParRef = Some(0.08))
-    assert(!deg)
-    val n = mapper.readTree(json)
-    assert(n.get("calib_par_ref").asDouble === 0.08)
-    assert(n.get("chunk_load").get(0).get("calib_par_sec").asDouble === 0.08)
-    val (hotJson, hotDeg) = Bench.loadFieldsJson(
-      Seq(idle.copy(calibParSec = 0.5)), cores, None, None,
-      calibParRef = Some(0.2))
-    assert(hotDeg, "parallel-probe inflation degrades through the same plumbing")
-    assert(mapper.readTree(hotJson).get("chunk_load").get(0).get("hot").asBoolean)
-    // without a reference the field publishes (for the NEXT run's baseline)
-    // but never judges — the sensor self-arms after one clean run
-    val (noRef, noRefDeg) = Bench.loadFieldsJson(
-      Seq(idle.copy(calibParSec = 0.5)), cores, None, None)
-    assert(!noRefDeg && mapper.readTree(noRef).get("calib_par_ref") === null)
-    assert(mapper.readTree(noRef).get("chunk_load").get(0)
-      .get("calib_par_sec").asDouble === 0.5)
-  }
-
-  test("calibBaseline pools the parallel probe through the field selector (r17)") {
-    def parLine(vals: Seq[Double], degraded: Boolean = false): String =
-      s"""{"metric":"total","value":100.0,"degraded":$degraded,""" +
-        s""""suspect":false,"queries":{"q_x":0.1},""" +
-        s""""load":{"cores":32,"chunk_load":[""" +
-        vals.map(v => s"""{"load":0.1,"calib_sec":0.2,"calib_par_sec":$v,"hot":false}""")
-          .mkString(",") + s"""]},"sf":"/tmp/sf"}"""
-    val hist = Seq(parLine(Seq(0.08, 0.09)), parLine(Seq(0.08, 0.1)))
-    assert(Bench.calibBaseline(hist, sf = Some("/tmp/sf"),
-      field = "calib_par_sec") === Some(0.09))
-    // the scalar baseline from the same lines is untouched by the new field
-    assert(Bench.calibBaseline(hist, sf = Some("/tmp/sf")) === Some(0.2))
-    // pre-r17 entries (calib_sec only) carry nothing for the parallel
-    // probe: its baseline stays None — null verdicts, never a guess
-    val legacy = Seq(calLine(Seq(0.2, 0.21)), calLine(Seq(0.2, 0.22)))
-    assert(Bench.calibBaseline(legacy, sf = Some("/tmp/sf"),
-      field = "calib_par_sec") === None)
-    assert(Bench.calibBaseline(legacy, sf = Some("/tmp/sf")) === Some(0.21))
   }
 
   test("a provisional closing line is stamped partial and parses as the same shape") {
@@ -1388,7 +1210,7 @@ class BenchLoadSpec extends AnyFunSuite {
     // plumbing around loadFieldsJson, where a misplaced quote would turn
     // the whole artifact line unreadable
     val (loadJson, degraded) =
-      Bench.loadFieldsJson(Seq(idle.copy(stealPct = 4.0)), cores, None, None)
+      Bench.loadFieldsJson(Seq(idle.copy(stealPct = 4.0)), cores, None)
     val line =
       s"""{"metric":"total","value":12.5,"unit":"sec","repeats":3,""" +
         s""""degraded":$degraded,"chunks":1,"chunks_forked":1,"chunk_size":20,""" +
