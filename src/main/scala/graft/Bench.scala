@@ -78,7 +78,7 @@ object Bench {
     * those leaks compound (~100 orphaned block sets by the tail) and were
     * measured inflating EVERY query ~2.4× through block-manager/memory
     * pressure — so the runner sweeps `getPersistentRDDs` too. Shared by
-    * Bench/Verify/ScaleSmoke/TimeQ so no runner can drift back.
+    * Bench/Verify/ScaleSmoke/Dev so no runner can drift back.
     * blocking = true (ADVICE r8): an async eviction can still be running
     * when the next timed evaluation starts — the exact cross-query
     * interference the sweep exists to remove.

@@ -3,7 +3,7 @@ package graft
 /** Opt-in per-query phase sub-timings (VERDICT r10 next-step #5): the
   * composite ANN queries (`q_ann_ivfpq`, `q_pq_adc`) spend their budget in
   * a build→train→encode→search cycle whose split was only visible by
-  * running `tools/IvfPqProfile` by hand — so a build-side regression and a
+  * running a dev profiler by hand — so a build-side regression and a
   * search-side regression were indistinguishable in the round artifact.
   * The eager stages of those queries wrap themselves in [[timed]]; when a
   * capture is active on the calling thread (Bench's dedicated untimed

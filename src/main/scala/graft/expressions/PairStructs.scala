@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** The capped-bucket pair expansion (`pairExpansionSql`) as ONE native
-  * expression: for a sorted member array `ids`, every ordered pair
-  * (ids[i], ids[j]) with i < j as an array of 2-field structs — exactly
+/** The capped-bucket pair expansion (`ReferenceForms.pairExpansionSql` in
+  * test sources) as ONE native expression: for a sorted member array `ids`,
+  * every ordered pair (ids[i], ids[j]) with i < j as an array of 2-field
+  * structs — exactly
   * `flatten(transform(ids, (x, i) -> transform(slice(ids, i + 2,
   * size(ids)), y -> named_struct(f1, x, f2, y))))`, in the same row order.
   *

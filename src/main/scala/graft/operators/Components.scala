@@ -159,12 +159,6 @@ object Components {
     // persist the raw edges across the seeding pass: smallStar references
     // its input twice (the keyed min and the join), and without a persist
     // each reference would re-run the caller's whole edge pipeline
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    def tdbg[A](n: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[cc] $n ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      }
     // Phase attribution (VERDICT r13 next-step #5): the contraction is
     // driver-EAGER (each round's convergence test is an action), so under
     // a [[graft.Phases]] capture the split costs nothing extra — no
@@ -184,9 +178,6 @@ object Components {
       if (phased) graft.Phases.timed(name)(f) else f
     val (e1, eRdd1, done1) = stage("cc_seed") {
       val ep = e0.persist()
-      // debug-only phase breakdown: materialize each cache layer as its own
-      // timed job (changes job boundaries, not results — profiling aid)
-      if (dbg) tdbg("e0 pipeline")(ep.count())
       // seeding pass: one small-star, then one pointer-jump composition —
       // every edge (a → b) whose parent b is itself a child is re-pointed at
       // b's MINIMUM parent (a → minparent(b)). The jump is one keyed min +
@@ -199,14 +190,13 @@ object Components {
       // induction down to the roots (edges always point at smaller ids, so
       // parent chains are finite and acyclic).
       val seeded = smallStar(ep).persist()
-      if (dbg) tdbg("seeded smallStar")(seeded.count())
       val gp = seeded.groupBy("a").agg(min("b").as("g"))
         .select(col("a").as("b"), col("g"))
       val (e, eRdd) = Lineage.materializeLazy(
         seeded.join(gp, Seq("b"), "left")
           .select(col("a"), coalesce(col("g"), col("b")).as("b"))
           .filter(col("a") =!= col("b")).distinct())
-      val done = tdbg("seed test")(converged(e)) // materializes the seed RDD
+      val done = converged(e) // materializes the seed RDD
       seeded.unpersist()
       ep.unpersist()
       (e, eRdd, done)
@@ -219,7 +209,7 @@ object Components {
         require(rounds <= maxRounds,
           s"alternating contraction did not converge in $maxRounds rounds")
         val (next, nextRdd) = Lineage.materializeLazy(smallStar(largeStar(e)))
-        done = tdbg(s"round $rounds test")(converged(next))
+        done = converged(next)
         eRdd.unpersist() // next is computed (the test above); nothing reads e now
         e = next
         eRdd = nextRdd

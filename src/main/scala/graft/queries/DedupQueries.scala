@@ -87,22 +87,6 @@ object DedupQueries {
     */
   private val Rotations = Seq(0, 11, 22)
 
-  /** In-bucket pair expansion over a sorted collected member list: all i < j
-    * element pairs of `listCol`, each built by `mk(x, y)` (x before y in
-    * sort order, so derived ids satisfy a < b). Single-sourced because the
-    * 1-based `slice(l, i + 2, size(l))` arithmetic is subtle and four pair
-    * generators depend on it staying identical.
-    *
-    * r18: the graded pipelines now expand through the native
-    * [[graft.expressions.PairStructs]] (same pairs, same order, one tight
-    * loop instead of interpreted transform/slice/flatten lambdas — guide
-    * §4.1); this spelling stays as the executable parity reference
-    * (PairStructsSpec / PairExpansionSpec / ScaleGateSpec).
-    */
-  private[graft] def pairExpansionSql(listCol: String)(mk: (String, String) => String): String =
-    s"flatten(transform($listCol, (x, i) -> " +
-      s"transform(slice($listCol, i + 2, size($listCol)), y -> ${mk("x", "y")})))"
-
   /** DuckDB CTE chain shared by the minhash oracles: shingle sets → hashes →
     * signatures → bands → capped buckets → deduped candidate pairs (`cand`).
     */
@@ -138,8 +122,8 @@ object DedupQueries {
     * are built as a row-local transform over the words array and exploded —
     * the posexplode + lead-window form this replaced paid a full-corpus
     * sort+shuffle just to look one word ahead (r8 profile; value parity
-    * pinned in DedupInternalsSpec against the window form). Mirrors
-    * [[Dialect.duckGramsSql]].
+    * pinned in DedupInternalsSpec against the test-source
+    * `ReferenceForms.gramRowsViaWindow`). Mirrors [[Dialect.duckGramsSql]].
     */
   private[queries] def gramRows(docs: DataFrame, carry: Seq[String]): DataFrame = {
     val keep = col("doc_id") +: carry.map(col)
@@ -172,7 +156,7 @@ object DedupQueries {
     // the eager stage branches are gated on the QUERY IDENTITY as well as
     // the capture (ADVICE r13 #3): q_ngram_jaccard shares this lineage but
     // is not a PhasedQueries member, and before the `phased` flag a TOOL
-    // capture (TimeQ with GRAFT_TIMEQ_CAPTURE=1) of q_ngram_jaccard also
+    // capture (a dev timing run under Phases.capture) of q_ngram_jaccard also
     // fired the counts — paying two extra evaluations and emitting stage
     // names the bench never tracks for that key. Now only the containment
     // caller opts in; jaccard stays lazy under every capture.
@@ -233,19 +217,6 @@ object DedupQueries {
        |                   AND l.doc_id < r.doc_id
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** The lead-window form [[gramRows]] replaced — kept as the parity
-    * reference for DedupInternalsSpec only.
-    */
-  private[graft] def gramRowsViaWindow(docs: DataFrame, carry: Seq[String]): DataFrame = {
-    val w    = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val keep = col("doc_id") +: carry.map(col)
-    docs
-      .select(keep :+ posexplode(expr(wordsSql)).as(Seq("pos", "w")): _*)
-      .withColumn("w1", lead(col("w"), 1).over(w))
-      .filter(col("w1").isNotNull)
-      .select(keep :+ concat_ws(" ", col("w"), col("w1")).as("gram"): _*)
-  }
-
   /** Distinct (doc_id, shingle, h) rows — the 3-gram shingle pipeline shared
     * by the MinHash signature, candidate generation, and exact verification.
     * ARRAY-NATIVE (see [[gramRows]]): the shingle strings are a row-local
@@ -278,22 +249,6 @@ object DedupQueries {
       .withColumn("h", expr(hash60Sql("shingle")))
   }
 
-  /** The double-lead window form [[shingleRows]] replaced — parity
-    * reference for DedupInternalsSpec only.
-    */
-  private[graft] def shingleRowsViaWindow(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs
-      .select(col("doc_id"), posexplode(expr(wordsSql)).as(Seq("pos", "w")))
-      .withColumn("w1", lead(col("w"), 1).over(w))
-      .withColumn("w2", lead(col("w"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"),
-        concat_ws(" ", col("w"), col("w1"), col("w2")).as("shingle"))
-      .distinct()
-      .withColumn("h", expr(hash60Sql("shingle")))
-  }
-
   /** Positional 3-gram rows (doc_id, carry..., pos, shingle) — every
     * occurrence with its token position kept: the span-merge twin of
     * [[shingleRows]] (which dedups and drops positions). One source for the
@@ -312,21 +267,6 @@ object DedupQueries {
         "transform(sequence(1, size(words) - 2), " +
           "i -> concat_ws(' ', words[i - 1], words[i], words[i + 1]))"))
         .as(Seq("pos", "shingle")): _*)
-  }
-
-  /** Window form of [[positionalShingles]] — parity reference for
-    * DedupInternalsSpec only.
-    */
-  private[graft] def positionalShinglesViaWindow(docs: DataFrame, carry: Seq[String]): DataFrame = {
-    val w    = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val keep = col("doc_id") +: carry.map(col)
-    docs
-      .select(keep :+ posexplode(expr(wordsSql)).as(Seq("pos", "w")): _*)
-      .withColumn("w1", lead(col("w"), 1).over(w))
-      .withColumn("w2", lead(col("w"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .select(keep ++ Seq(col("pos"),
-        concat_ws(" ", col("w"), col("w1"), col("w2")).as("shingle")): _*)
   }
 
   /** Matched (doc_id, pos) rows labeled with their island group `g`:

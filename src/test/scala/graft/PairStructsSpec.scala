@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.expressions.PairStructs.pairStructs
-import graft.queries.DedupQueries
+import graft.queries.{DedupQueries, ReferenceForms}
 
 /** Pins the native [[graft.expressions.PairStructs]] expression to the
-  * composed lambda spelling it replaced ([[DedupQueries.pairExpansionSql]])
+  * composed lambda spelling it replaced ([[ReferenceForms.pairExpansionSql]])
   * — the subtle 1-based `slice(l, i + 2, size(l))` construction that is
   * itself the documented oracle contract for in-bucket pair expansion. The
   * optimization is only legal because the exploded ROWS are identical
@@ -16,7 +16,7 @@ import graft.queries.DedupQueries
 class PairStructsSpec extends SparkTestBase {
 
   private def composed(listCol: String): org.apache.spark.sql.Column =
-    expr(DedupQueries.pairExpansionSql(listCol)(
+    expr(ReferenceForms.pairExpansionSql(listCol)(
       (x, y) => s"named_struct('a', $x, 'b', $y)"))
 
   test("long arrays: same pairs, same order, sizes 0..12") {
@@ -39,7 +39,7 @@ class PairStructsSpec extends SparkTestBase {
       Seq("web", "books", "code", "wiki", "news")).toDF("ids")
     val rows = df.select(
       pairStructs(col("ids"), "s1", "s2").as("n"),
-      expr(DedupQueries.pairExpansionSql("ids")(
+      expr(ReferenceForms.pairExpansionSql("ids")(
         (x, y) => s"named_struct('s1', $x, 's2', $y)")).as("l")).collect()
     rows.foreach { r =>
       assert(r.getSeq[org.apache.spark.sql.Row](0) ==
@@ -54,7 +54,7 @@ class PairStructsSpec extends SparkTestBase {
       .select(expr("transform(ms0, e -> named_struct('doc_id', e._1, 'simhash', e._2))").as("ms"))
     val rows = df.select(
       pairStructs(col("ms"), "x", "y").as("n"),
-      expr(DedupQueries.pairExpansionSql("ms")(
+      expr(ReferenceForms.pairExpansionSql("ms")(
         (x, y) => s"named_struct('x', $x, 'y', $y)")).as("l")).collect()
     rows.foreach { r =>
       assert(r.getSeq[org.apache.spark.sql.Row](0) ==

@@ -28,16 +28,16 @@ class DedupInternalsSpec extends SparkTestBase {
       a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     assert(bagEqual(
       DedupQueries.shingleRows(docs),
-      DedupQueries.shingleRowsViaWindow(docs)))
+      ReferenceForms.shingleRowsViaWindow(docs)))
     assert(bagEqual(
       DedupQueries.positionalShingles(docs, Seq("source")),
-      DedupQueries.positionalShinglesViaWindow(docs, Seq("source"))))
+      ReferenceForms.positionalShinglesViaWindow(docs, Seq("source"))))
     assert(bagEqual(
       DedupQueries.gramRows(docs, Seq("source")),
-      DedupQueries.gramRowsViaWindow(docs, Seq("source"))))
+      ReferenceForms.gramRowsViaWindow(docs, Seq("source"))))
     assert(bagEqual(
       DedupQueries.gramRows(docs, Nil),
-      DedupQueries.gramRowsViaWindow(docs, Nil)))
+      ReferenceForms.gramRowsViaWindow(docs, Nil)))
     assert(DedupQueries.shingleRows(docs).count() > 0) // non-vacuous
   }
 

@@ -48,7 +48,7 @@ class OptimizedFormsSpec extends SparkTestBase {
       .agg(array_sort(collect_set(col("dhash"))).as("hs"))
       .filter(size(col("hs")).between(2, cap))
     val hashPairs = buckets
-      .select(explode(expr(DedupQueries.pairExpansionSql("hs")((x, y) =>
+      .select(explode(expr(ReferenceForms.pairExpansionSql("hs")((x, y) =>
         s"named_struct('h1', $x, 'h2', $y)"))).as("p"))
       .select(col("p.h1").as("h1"), col("p.h2").as("h2"),
         expr("bit_count(p.h1 ^ p.h2)").cast("long").as("dist"))
@@ -61,7 +61,7 @@ class OptimizedFormsSpec extends SparkTestBase {
         greatest(col("da"), col("db")).as("b"), col("dist"))
     val same = byHash
       .filter(size(col("ids")) >= 2)
-      .select(explode(expr(DedupQueries.pairExpansionSql("ids")((x, y) =>
+      .select(explode(expr(ReferenceForms.pairExpansionSql("ids")((x, y) =>
         s"named_struct('a', $x, 'b', $y)"))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"), lit(0L).as("dist"))
     val slow = cross.union(same)

@@ -5,7 +5,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.sql.functions._
 
 /** Property pin for the shared in-bucket pair-expansion lambda
-  * ([[DedupQueries.pairExpansionSql]]): four pair generators depend on its
+  * ([[ReferenceForms.pairExpansionSql]]): four pair generators depend on its
   * 1-based `slice(l, i + 2, size(l))` arithmetic emitting EXACTLY the i < j
   * element pairs — an off-by-one would silently drop or duplicate candidate
   * pairs in every dedup query at once.
@@ -23,7 +23,7 @@ object PairExpansionSpec extends Properties("pairExpansion") {
       // sorted multiset, not a set: a regression that emits a pair TWICE
       // must fail here too, and .toSet would collapse the duplicates
       val got = Seq(Tuple1(ids)).toDF("ids")
-        .select(explode(expr(DedupQueries.pairExpansionSql("ids")(
+        .select(explode(expr(ReferenceForms.pairExpansionSql("ids")(
           (x, y) => s"named_struct('a', $x, 'b', $y)"))).as("p"))
         .select("p.a", "p.b").as[(Long, Long)].collect().toVector.sorted
       val want = (for {

@@ -36,7 +36,7 @@ class ScaleGateSpec extends SparkTestBase {
     val kept =
       if (capped) buckets.filter(size(col("ids")).between(2, DedupQueries.MaxBucket))
       else buckets.filter(size(col("ids")) >= 2)
-    kept.select(explode(expr(DedupQueries.pairExpansionSql("ids")(
+    kept.select(explode(expr(ReferenceForms.pairExpansionSql("ids")(
       (x, y) => s"named_struct('a', $x, 'b', $y)"))).as("p"))
       .count()
   }
