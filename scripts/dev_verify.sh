@@ -5,7 +5,8 @@
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-cd /root/repo
+# run from this checkout, wherever it lives
+cd "$(dirname "$0")/.."
 # Abort on compile failure (a grep-decided exit status previously let stale
 # classes masquerade as PASS — ADVICE r1).
 sbt -batch compile > /tmp/sbt_compile.log 2>&1 || { cat /tmp/sbt_compile.log; exit 1; }
@@ -18,10 +19,11 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens $p=ALL-UNNAMED"
 done
+CP="target/scala-2.13/classes:/opt/spark/jars/*"
 rm -rf "$OUT"
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CP" \
   graft.Verify "$SF" "$OUT" 2>&1 | grep -vE '^(2[0-9]|WARN|INFO)' || true
 python3 scripts/check_oracle.py "$SF" "$OUT"
 # Scale regression gate (VERDICT r7 #7): always-on in the dev loop, at
@@ -33,7 +35,7 @@ if [ -z "$GRAFT_SCALE_SMOKE_SKIP" ]; then
   GRAFT_SCALE_GATE=1 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
   java $ADD_OPENS -Xmx8g \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+    -cp "$CP" \
     graft.tools.ScaleSmoke 1 4 > /tmp/scale_gate.log 2>&1
   rc=$?
   set -e

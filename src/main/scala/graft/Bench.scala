@@ -3,7 +3,7 @@ import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
-  * Harness rules (VERDICT r1 #7):
+  * Harness rules:
   *  - deterministic (sorted) query order, so no query silently absorbs
   *    JIT/codegen warm-up for the others;
   *  - a full warm-up pass first, so timed numbers measure the plan, not
@@ -14,40 +14,38 @@ import org.apache.spark.sql.functions.{col, expr, to_json, xxhash64}
   *  - failures are surfaced (stderr + "errors" map + value -1), never
   *    swallowed into a fast-looking number.
   *
-  * PROCESS ISOLATION (VERDICT r9 = r8 next-step #1): a single JVM timing
-  * 138 queries × 4 evaluations accumulates state clearAllCaches cannot
-  * shed — JIT code-cache geometry, GC heap shape, block-manager history —
-  * measured inflating TAIL queries ~2× over their idle-standalone cost
-  * even after the r8 raw-RDD sweep (q_bloom_decontaminate 4.86 s in-bench
-  * vs 2.11 s via TimeQ). So the run is split into [[ChunkSize]]-query
-  * chunks and each chunk is timed in a FRESH JVM (the parent re-execs
-  * itself with the same JVM flags and classpath, `--chunk n1,n2,…`). When
-  * the fork cannot work — classpath not visible as plain files (sbt run),
-  * or the child fails — the chunk falls back to an in-process run with a
-  * fresh SparkSession, which resets the block manager and caches but not
-  * the JVM, and the emitted line records which isolation each chunk got.
+  * One run is one fixed sequence: read history, fork the streaming smoke,
+  * time the chunks, retime the flagged keys, print the closing sequence.
   *
-  * The full per-query map is also WRITTEN TO THE REPO
-  * ([[artifactPath]] + an append-only history line), because the driver
-  * keeps only the tail of stdout and the alphabetical head of the map was
-  * lost every round (VERDICT r8 missing #2).
+  * Process isolation: a single JVM timing the whole surface × 4
+  * evaluations accumulates state clearAllCaches cannot shed — JIT
+  * code-cache geometry, GC heap shape, block-manager history — measured
+  * inflating tail queries ~2× over their standalone cost. So the run is
+  * split into [[ChunkSize]]-query chunks and each chunk is timed in a
+  * FRESH JVM (the parent re-execs itself with the same JVM flags and
+  * classpath, `--chunk n1,n2,…`). Chunks only ever run forked: a child
+  * that cannot start or does not report every key leaves its keys at −1
+  * with the child's error ([[chunkTimings]]), because the parent is the
+  * one process that has to survive to print the closing line.
+  *
+  * The parent is the only writer of the `BENCH_*` and `STREAMING*`
+  * artifacts ([[writeRecord]]). The full per-query map goes to the repo
+  * because the consumer of the bench's stdout keeps only its tail.
   */
 object Bench {
 
   /** Queries per isolated JVM. 29 keeps 5 forks for the 144-query surface
-    * (VERDICT r16 next-step #6: 8 forks × ~15 s of JVM+session startup was
-    * a fifth of the idle wall). The r9 isolation bar — no query runs after
-    * ~80 prior evaluations in its process — still holds BECAUSE the quick
-    * keys dropped to ~1 reading each (see [[quickAccept]]): a 29-key chunk
-    * is ~29 warm-ups + ~22 quick×1 + ~7 slow×3 ≈ 72 evaluations, under the
-    * 80 that chunk-size 20 × 4 evaluations used to reach.
+    * (each fork costs ~15 s of JVM+session startup). The isolation bar — no
+    * query runs after ~80 prior evaluations in its process — holds because
+    * the quick keys take ~1 reading each (see [[quickAccept]]): a 29-key
+    * chunk is ~29 warm-ups + ~22 quick×1 + ~7 slow×3 ≈ 72 evaluations.
     */
   private val ChunkSize = 29
 
   /** Force full evaluation of a frame, touching every output column: hash
     * all columns per row, xor-fold to one value. Shared with the dev timing
     * tool so the two cannot diverge. Map columns (at ANY nesting depth)
-    * aren't hashable by xxhash64 — serialize those first (ADVICE r2), so a
+    * aren't hashable by xxhash64 — serialize those first, so a
     * map-returning query is timed, not failed. bit_xor, not sum: a 60M-row
     * sum of 64-bit hashes overflows under ANSI mode; xor is
     * order-insensitive and cannot overflow.
@@ -74,14 +72,12 @@ object Bench {
     * Dataset-level persists, but queries built on explicitly-owned RDD
     * persists (`Lineage.materialize` loops — dup-clusters, k-core — and the
     * lazy-checkpoint aggregates) leave RAW RDD blocks behind that
-    * clearCache cannot see. In a 125-query × 4-evaluation single-JVM bench
-    * those leaks compound (~100 orphaned block sets by the tail) and were
+    * clearCache cannot see. Left alone those leaks compound and were
     * measured inflating EVERY query ~2.4× through block-manager/memory
     * pressure — so the runner sweeps `getPersistentRDDs` too. Shared by
     * Bench/Verify/ScaleSmoke/Dev so no runner can drift back.
-    * blocking = true (ADVICE r8): an async eviction can still be running
-    * when the next timed evaluation starts — the exact cross-query
-    * interference the sweep exists to remove.
+    * blocking = true: an async eviction can still be running when the next
+    * timed evaluation starts.
     */
   private[graft] def clearAllCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.catalog.clearCache()
@@ -90,11 +86,8 @@ object Bench {
 
   /** (steal, busy, total) jiffies from /proc/stat's aggregate cpu line —
     * busy = total − idle − iowait. Emitted as steal%-over-the-run (this
-    * host is virtualized, and r3's driver total 157s vs a clean re-run 41s
-    * was pure hypervisor steal — VERDICT r3 next-step #7) and, per chunk,
-    * as the external-CPU signal behind the `degraded` flag (VERDICT r9
-    * next-step #1: the r9 driver artifact recorded 247.5 s on a box whose
-    * competing load an after-the-fact reader could not see per query).
+    * host is virtualized) and, per chunk, as the external-CPU signal behind
+    * the `degraded` flag.
     */
   private def cpuJiffies(): Option[(Long, Long, Long)] =
     try {
@@ -131,20 +124,15 @@ object Bench {
     * exceeds 2%. Thresholds are deliberately coarse — the flag exists so a
     * history consumer can FILTER contaminated runs, not to rank load.
     *
-    * Two sensors, not the seven earlier rounds carried: replaying all 66
-    * entries of the r1–r18 `BENCH_HISTORY.jsonl` (406 chunk loads,
-    * `BenchReplaySpec`) shows every hot chunk was flagged by steal and the
-    * first-chunk loadavg, io/cpu PSI, cgroup-throttle and both calibration
-    * probes never decided a verdict — and r18 saw all of them read clean
-    * through a 2–5× slowdown that only the per-query history comparison
-    * (suspect tiers, retime, `env_ratio`) caught.
+    * Two sensors only: replaying the 66-entry r1–r18 history
+    * (`BenchReplaySpec`) shows no other sensor the bench once carried ever
+    * decided a verdict.
     */
   private[graft] def isHot(cl: ChunkLoad, cores: Int): Boolean =
     cl.externalCores > cores / 4.0 || cl.stealPct > 2.0
 
   /** Minimal JSON string escape for builder-controlled content (query
-    * names, whitespace-collapsed error text). Shared with the streaming
-    * smoke so the two artifact writers cannot drift on the escaping rule.
+    * names, whitespace-collapsed error text).
     */
   private[graft] def jstr(s: String) =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -160,15 +148,11 @@ object Bench {
     * capture-free), so compare phases to PHASES across rounds and totals
     * to totals, never one to the other.
     *
-    * `stealPct` (r15): hypervisor steal across THIS query's three timed
-    * repeats. Chunk-level load averaging has a structural blind spot for
-    * BURST contention — a 2-second 100 % steal burst inside a 3-minute
-    * chunk averages ~1 % (under every threshold) yet makes a 0.4 s query
-    * read 18× (observed twice in the r15 trail: q_asof_join 8.1 s vs a
-    * 0.42 s median with chunk steal 0.5–1.4 %, all sensors quiet, fresh-JVM
-    * retime normal). The per-query window is short enough that a burst
-    * landing on the query IS visible in its own steal number — diagnostic
-    * context for the suspect flags, never an input to the verdicts.
+    * `stealPct`: hypervisor steal across THIS query's timed repeats. A
+    * short steal burst inside a long chunk averages under every chunk
+    * threshold yet can make a 0.4 s query read 18×; the per-query window
+    * shows it. Diagnostic context for the suspect flags, never an input to
+    * the verdicts.
     */
   private[graft] final case class Timed(name: String, secs: Double,
       err: Option[String], phases: Seq[(String, Double)] = Nil,
@@ -178,33 +162,28 @@ object Bench {
     * [[graft.Phases]] capture. Only these pay the extra diagnostic
     * evaluation — it rides the bench's wall clock, never `queries[k]` —
     * and the TIMED repeats run capture-free so every published total is
-    * the plain lazy plan's (VERDICT r11 #3's "totals unchanged" clause:
-    * in-repeat capture held that for the ANN pair, whose timed stages are
-    * driver-eager under either mode, but not for the crossmodal
-    * composite, whose capture mode inserts persist+count barriers).
+    * the plain lazy plan's (the crossmodal composite's capture mode
+    * inserts persist+count barriers).
     */
   private[graft] val PhasedQueries: Set[String] =
     Set("q_ann_ivfpq", "q_pq_adc", "q_crossmodal_dups", "q_hybrid_rrf",
       "q_semdedup", "q_containment_pairs",
-      // VERDICT r13 next-step #5 — the iterative graph family: dup_clusters
-      // self-attributes for free (the contraction is driver-eager);
-      // reach_hops uses the capture-gated count pattern
+      // the iterative graph family: dup_clusters self-attributes for free
+      // (the contraction is driver-eager); reach_hops uses the
+      // capture-gated count pattern
       "q_dup_clusters", "q_reach_hops",
-      // VERDICT r14 next-step #5 — the last two ≥2 s-median keys without
-      // stage attribution, both on the capture-gated count pattern
+      // the last two ≥2 s-median keys without stage attribution, both on
+      // the capture-gated count pattern
       "q_pagerank", "q_dup_span_coverage")
 
-  // ---- wall-clock self-deadline + cost controls (VERDICT r15) ------------
+  // ---- wall-clock self-deadline + cost controls --------------------------
   //
-  // r15's driver bench invocation died at the driver's own finite wall
-  // cap (rc 124, `parsed: null`, stdout tail = Spark startup logs): the
-  // bench capped its streaming-smoke CHILD at 600 s but nothing bounded
-  // the RUN, so every closing-line guarantee was conditional on the
-  // process reaching its own epilogue. Three layered defenses:
-  //  1. an internal deadline checked between chunks (and before the
-  //     retime pass and the smoke) — when it trips, everything un-run is
-  //     SKIPPED with visible skip records and the closing sequence prints
-  //     immediately (`deadline_hit:true`, run stamped degraded);
+  // A capture once died at its caller's wall cap with nothing parseable
+  // emitted. Three layered defenses:
+  //  1. an internal deadline checked between chunks (and before each
+  //     retime chunk) — when it trips, everything un-run is SKIPPED with
+  //     visible skip records and the closing sequence prints immediately
+  //     (`deadline_hit:true`, run stamped degraded);
   //  2. a degrade ladder — when the measured pace projects past the
   //     deadline, remaining chunks drop to repeats=1 and skip the phase
   //     evaluations (stamped `ladder:true` + degraded, never silent);
@@ -213,19 +192,17 @@ object Bench {
   //     bench cannot see leaves a parseable record in the stdout tail.
 
   /** Internal wall-clock budget (seconds), `GRAFT_BENCH_DEADLINE_SEC`.
-    * Default 1200: the r13/r14 driver invocations COMPLETED (rc 0), so the
-    * driver's unknown cap sits above their ~12–25-minute walls, and the
-    * r16 idle protocol measures well under 1200 s — the default clears an
-    * idle run with margin while cutting a contended run's tail before
-    * whatever finite cap killed r15 can. Junk / non-positive values fall
-    * back to the default (a zero budget would skip the whole surface).
+    * Default 1200: completed official captures ran 12–25 minutes, so the
+    * caller's cap sits above that, and an idle run finishes well under
+    * 1200 s. Junk / non-positive values fall back to the default (a zero
+    * budget would skip the whole surface).
     */
   private[graft] val DefaultDeadlineSec = 1200.0
   private[graft] def benchDeadlineSec(env: Option[String]): Double =
-    // isFinite too (ADVICE r16 #1): toDoubleOption accepts "Infinity" and
-    // overflow literals like "1e400", which pass `> 0` and then render as
-    // the bare token `Infinity` in budgetFields — invalid JSON on the very
-    // lines whose parseability is the whole contract
+    // isFinite too: toDoubleOption accepts "Infinity" and overflow
+    // literals like "1e400", which pass `> 0` and then render as the bare
+    // token `Infinity` — invalid JSON on the lines whose parseability is
+    // the whole contract
     env.flatMap(_.trim.toDoubleOption).filter(d => d > 0 && d.isFinite)
       .getOrElse(DefaultDeadlineSec)
 
@@ -241,29 +218,19 @@ object Bench {
     done > 0 && total > done &&
       elapsedSec / done * (total - done) > remainingSec
 
-  /** Keys timed with the ADAPTIVE estimator instead of median-of-3:
-    * clean-history median under this bar (VERDICT r15 next-step #3). The
-    * capture protocol paid 4 evaluations per query for a 119 s metric
-    * (~12 idle minutes); sub-second keys are ~110 of the 144 yet only
-    * ~47 s of that metric, and they are noise-floor for the suspect
-    * machinery — the ≥1 s keys, where the per-query history verdicts do
-    * real work, keep the full median-of-3.
+  /** Keys timed with the ADAPTIVE estimator instead of median-of-3: those
+    * whose clean-history median is under this bar. Sub-second keys are
+    * ~110 of the 144 but a minority of the metric, and they are
+    * noise-floor for the suspect machinery; the ≥1 s keys keep median-of-3.
     *
-    * r16 used MIN-of-2 (a burst must hit both readings to publish); r17
-    * (VERDICT r16 next-step #6, cutting the idle wall) tightens it to
-    * ADAPTIVE min-of-2 via [[quickAccept]]: ONE post-warm-up reading,
-    * published directly when it lands inside the plausibility band of the
-    * key's own clean median ([[QuickAcceptRatio]]× + [[QuickAcceptSlackSec]]);
-    * a second reading (publish the min of the two) only when it does not.
-    * The burst defense is STRONGER than plain min-of-2, not weaker: an
-    * accepted single reading is BY CONSTRUCTION within 1.3×median+0.05 s
-    * — a steal burst (the 18× q_asof_join shape) can never accept — while
-    * a rejected first reading falls back to exactly the r16 estimator.
-    * A published quick value can therefore only exceed its band when BOTH
-    * readings did (real regression, or a burst landing on both), at ~1
-    * evaluation per quiet-box key instead of 2. The map carries each quick
-    * key's median so the CHILD JVM can apply the accept test; a first run
-    * (no medians yet) times everything at median-of-3.
+    * The estimator takes ONE post-warm-up reading, published directly when
+    * it lands inside the key's own plausibility band
+    * ([[QuickAcceptRatio]]× median + [[QuickAcceptSlackSec]]); otherwise a
+    * second reading and the min of the two. A steal burst (the 18× shape)
+    * can never accept, so a published quick value exceeds its band only
+    * when BOTH readings did. The map carries each quick key's median so
+    * the CHILD JVM can apply the accept test; a first run (no medians yet)
+    * times everything at median-of-3.
     */
   private[graft] val QuickMedianSec = 1.0
   private[graft] val QuickAcceptRatio = 1.3
@@ -280,16 +247,13 @@ object Bench {
   private[graft] def quickAccept(reading: Double, median: Double): Boolean =
     reading <= QuickAcceptRatio * median + QuickAcceptSlackSec
 
-  /** Rotate the chunk order by `seed` (VERDICT r16 next-step #1): chunks
-    * were built — and run — in sorted-key order, so a deadline trip always
-    * starved the SAME alphabetical tail (r16's driver run skipped exactly
-    * the 4 sorted-last keys, and every future contended run would re-skip
-    * them: their driver timings could go stale indefinitely). Rotating the
-    * START OFFSET per run — seeded from the history length, which grows by
-    * one per completed run — keeps each run fully deterministic (same
-    * tree + same history ⇒ same order) while moving the skip burden across
-    * the surface run-over-run. Within-chunk composition and order are
-    * untouched, so per-chunk warm-up attribution stays comparable.
+  /** Rotate the chunk order by `seed`: in sorted order a deadline trip
+    * always starved the SAME alphabetical tail, whose timings could then go
+    * stale indefinitely. Seeded from the history length (one more per
+    * completed run), so each run stays deterministic (same tree + same
+    * history ⇒ same order) while the skip burden moves across the surface.
+    * Within-chunk composition and order are untouched, so per-chunk warm-up
+    * attribution stays comparable.
     */
   private[graft] def rotatedChunks[A](chunks: Seq[Seq[A]], seed: Int): Seq[Seq[A]] =
     if (chunks.size <= 1) chunks
@@ -297,46 +261,6 @@ object Bench {
       val k = ((seed % chunks.size) + chunks.size) % chunks.size
       chunks.drop(k) ++ chunks.take(k)
     }
-
-  /** Streaming-smoke budget reserve (VERDICT r16 next-step #2): r16's
-    * driver artifact had NO streaming evidence — the smoke was the first
-    * casualty of the deadline (`STREAMING.json` = "skipped: bench
-    * deadline") to save ~45 s of a 1200 s budget. The smoke now runs
-    * MID-RUN the moment the remaining budget first drops inside
-    * [[[SmokeMinRemainSec]], [[SmokeReserveSec]]) — before the last chunks
-    * spend it — so a contended run trades ~one timed chunk for the round's
-    * only driver-side streaming adjudication. On a clean run the budget
-    * never drops below the reserve before the chunks finish and the smoke
-    * runs at the end exactly as before. Below [[SmokeMinRemainSec]] the
-    * smoke cannot finish anyway (idle ~45 s incl. fork) and the explicit
-    * deadline skip record remains the honest output.
-    */
-  private[graft] val SmokeReserveSec = 180.0
-  private[graft] val SmokeMinRemainSec = 60.0
-
-  /** Is this between-chunks instant the time to spend the reserve? Two
-    * triggers, both requiring the smoke to still be runnable
-    * (`remainingSec >= minSec`): the remaining budget is already inside
-    * the reserve window, OR — pace-predictive — the projected next chunk
-    * would land it BELOW [[SmokeMinRemainSec]], i.e. straight over the
-    * window. The second trigger exists because the check only runs
-    * between chunks and a contended chunk's wall (~250 s at 2×
-    * contention) is wider than the 120 s static window: a run could sit
-    * at remaining=190 s (not due), spend 250 s on one chunk, and wake at
-    * remaining<60 s with the smoke unrunnable — exactly the r16
-    * starvation this reserve was built to end. `projectedChunkSec` is
-    * the same measured-pace estimator [[ladderNeeded]] uses (0 before
-    * any chunk has finished, which disables the predictive trigger, not
-    * the static one). A projection landing in [minSec, reserve) stays
-    * NOT due: the next between-chunks check catches it inside the
-    * window, and the chunks keep their budget priority.
-    */
-  private[graft] def smokeDueNow(remainingSec: Double,
-      projectedChunkSec: Double = 0.0,
-      reserve: Double = SmokeReserveSec,
-      minSec: Double = SmokeMinRemainSec): Boolean =
-    remainingSec >= minSec &&
-      (remainingSec < reserve || remainingSec - projectedChunkSec < minSec)
 
   /** Chunk size override (`GRAFT_BENCH_CHUNK_SIZE`) — dev/e2e plumbing
     * only, never set by the driver: the deadline/kill e2e needs a run with
@@ -346,18 +270,14 @@ object Bench {
     env.flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(ChunkSize)
 
   /** Warm up then time one chunk of queries against an OWNED SparkSession
-    * (created and stopped here). Median of 3 post-warm-up repeats per query
-    * (VERDICT r5 next-step #5): this host is virtualized, and a single-shot
-    * number conflates the plan with whatever the hypervisor was doing that
-    * second — except for `quick` keys (clean-history median under
-    * [[QuickMedianSec]], carried WITH their medians), which take ONE
-    * post-warm-up reading published directly when [[quickAccept]] holds
-    * against the key's own median, else a second reading and the min of
-    * the two (see [[quickKeys]] for why this is burst-robust), and
-    * ladder-degraded chunks (`repeats`=1), where everything takes its one
-    * reading. ANY failed repeat marks the query failed (−1 + error): an
-    * aggregate over surviving repeats would print a healthy-looking
-    * number for a flaky query.
+    * (created and stopped here) — the body of a forked chunk child. Median
+    * of 3 post-warm-up repeats per query (a single-shot number on a
+    * virtualized host conflates the plan with whatever the hypervisor was
+    * doing that second) — except for `quick` keys, which take the adaptive
+    * estimator (see [[quickKeys]]), and ladder-degraded chunks
+    * (`repeats`=1), where everything takes one reading. ANY failed repeat
+    * marks the query failed (−1 + error): an aggregate over surviving
+    * repeats would print a healthy-looking number for a flaky query.
     */
   private def runChunk(names: Seq[String], sfDir: String, cpus: String,
       repeats: Int = 3, quick: Map[String, Double] = Map.empty,
@@ -371,11 +291,10 @@ object Bench {
         } catch { case e: Throwable =>
           Some(e.toString.replaceAll("\\s+", " ").take(300))
         }
-      // warm-up: classloading, codegen, parquet footers. r18 (VERDICT r17
-      // next-step #1, cutting the capture wall): the pass runs on a small
-      // worker pool WITHOUT per-query cache sweeps, then ONE blocking sweep
-      // before the timed loop. Both halves are fidelity-neutral for the
-      // timed numbers and cut the warm-up wall ~2-3×:
+      // warm-up: classloading, codegen, parquet footers — on a small
+      // worker pool WITHOUT per-query cache sweeps, then ONE blocking
+      // sweep before the timed loop. Both halves are fidelity-neutral for
+      // the timed numbers and cut the warm-up wall ~2-3×:
       //  - no intra-warm-up sweeps: a query whose warm-up finds another's
       //    live cache for a shared trunk executes its downstream spans over
       //    an InMemoryRelation — exactly the shape its OWN timed evaluation
@@ -384,10 +303,9 @@ object Bench {
       //    class, JVM-wide cache) by whichever query warmed it first; the
       //    timed loop still sweeps before EVERY timed evaluation, so no
       //    warm-up cache survives into a measurement;
-      //  - concurrency (guide §2.6, overlap independent driver actions):
-      //    warm-up is untimed, so three queries' codegen compiles and
-      //    first-touch jobs back-filling each other's stage tails is pure
-      //    wall savings; the timed loop below stays strictly sequential.
+      //  - concurrency: warm-up is untimed, so three queries' codegen
+      //    compiles and first-touch jobs back-filling each other's stage
+      //    tails is pure wall savings; the timed loop stays sequential.
       // Worker count 3: enough to hide compile/schedule gaps, small enough
       // that the box is never oversubscribed 3× on the heavy warm-ups.
       locally {
@@ -406,9 +324,7 @@ object Bench {
       }
       names.map { name =>
         val isQuick = repeats != 1 && quick.contains(name)
-        // per-query steal window (see Timed.stealPct): jiffies around the
-        // timed repeats — a burst that lands on this query shows here even
-        // when the chunk-average stays under every threshold
+        // per-query steal window (see Timed.stealPct)
         val j0 = cpuJiffies()
         def oneTimed(): (Double, Option[String]) = {
           // drop caches persisted by OTHER queries' evaluation AND by this
@@ -447,9 +363,8 @@ object Bench {
         err.foreach(m => System.err.println(s"[bench] $name FAILED: $m"))
         // the phase split comes from ONE dedicated untimed evaluation —
         // see [[PhasedQueries]]; a failure here only costs the split.
-        // Skipped under the deadline ladder (phasesEnabled=false): phases
-        // are diagnostics, and a run racing its budget spends wall on
-        // timings first.
+        // Skipped under the deadline ladder: phases are diagnostics, and a
+        // run racing its budget spends wall on timings first.
         val phases =
           if (err.isEmpty && phasesEnabled && PhasedQueries(name)) {
             clearAllCaches(spark)
@@ -463,32 +378,22 @@ object Bench {
     } finally spark.stop()
   }
 
-  /** Child-mode entry: time the named queries in THIS JVM and print ONE
-    * easily-parsed line per query (`GRAFT_Q name seconds [error…]`) — a
-    * deliberately trivial wire format, because error strings may contain
-    * any JSON-hostile character and a chunk the parent cannot parse would
-    * silently re-run in-process, losing the isolation. A final `GRAFT_CPU`
-    * line reports the child's consumed CPU seconds, which the parent
-    * subtracts from the host's busy CPU to isolate EXTERNAL load (the
-    * per-chunk hot/degraded signal).
-    */
-  /** One timed result as its child-wire lines — split from [[childMain]]
-    * so the wire format and [[parseChunk]] can be property-tested as a
-    * round-trip (the fork isolation depends on this parse: a child line
-    * the parent cannot read silently demotes the chunk to the in-process
-    * fallback, losing the fresh-JVM isolation with no visible failure).
+  /** One timed result as its child-wire lines (`GRAFT_Q name seconds
+    * [error…]`, plus optional `GRAFT_PH` phases and `GRAFT_QS` steal) — a
+    * deliberately trivial format, because error strings may contain any
+    * JSON-hostile character. Split from [[childMain]] so the wire format
+    * and [[parseChunk]] are property-tested as a round-trip: a child line
+    * the parent cannot read fails the whole chunk.
     */
   private[graft] def childLines(t: Timed): Seq[String] = {
     // phase names are code-controlled identifiers (no spaces/semicolons),
-    // so `name=secs;name=secs` parses with two splits — same philosophy
-    // as GRAFT_Q: trivially parseable, JSON-hostile-content-proof
+    // so `name=secs;name=secs` parses with two splits
     val ph =
       if (t.phases.nonEmpty)
         Seq(s"GRAFT_PH ${t.name} " +
           t.phases.map { case (p, v) => s"$p=$v" }.mkString(";"))
       else Nil
-    // the query's own steal window (r15, burst-contention context) — its
-    // own line, because GRAFT_Q's 4th token is reserved for error text
+    // its own line, because GRAFT_Q's 4th token is reserved for error text
     val qs = if (t.stealPct > 0.0) Seq(s"GRAFT_QS ${t.name} ${t.stealPct}") else Nil
     // error text is already whitespace-collapsed by the catch site
     ph ++ qs :+ (s"GRAFT_Q ${t.name} ${t.secs}" +: t.err.toSeq).mkString(" ")
@@ -497,7 +402,7 @@ object Bench {
   /** The quick-key argv payload (`name=medianSecs,…`) and its inverse —
     * the medians ride the wire because the CHILD applies [[quickAccept]];
     * names are code-controlled identifiers and the medians are code-
-    * rendered doubles, so two splits parse it (the GRAFT_Q philosophy).
+    * rendered doubles, so two splits parse it.
     */
   private[graft] def quickCsvOf(quick: Map[String, Double],
       names: Seq[String]): String =
@@ -508,6 +413,11 @@ object Bench {
       kv.substring(i + 1).toDoubleOption.map(kv.substring(0, i) -> _)
     }.toMap
 
+  /** Child-mode entry: time the named queries in THIS JVM and print their
+    * wire lines, then a final `GRAFT_CPU` line with the child's consumed
+    * CPU seconds, which the parent subtracts from the host's busy CPU to
+    * isolate EXTERNAL load.
+    */
   private def childMain(csv: String, sfDir: String, cpus: String,
       repeats: Int, phasesEnabled: Boolean, quickCsv: String): Unit = {
     runChunk(csv.split(',').toSeq.filter(_.nonEmpty), sfDir, cpus, repeats,
@@ -524,8 +434,8 @@ object Bench {
     }
 
   /** Parse a child's `GRAFT_Q` lines (+ its `GRAFT_CPU` self-report). None
-    * (→ in-process fallback) unless EVERY requested query reported.
-    * private[graft]: property-tested as [[childLines]]' round-trip inverse.
+    * unless EVERY requested query reported: a chunk is the child's whole
+    * report or a failed chunk, never a partial one.
     */
   private[graft] def parseChunk(out: String, names: Seq[String]): Option[(Seq[Timed], Double)] =
     try {
@@ -548,17 +458,30 @@ object Bench {
       if (names.forall(rows.contains)) Some((names.map(rows), cpu)) else None
     } catch { case _: Exception => None }
 
-  /** Fork a fresh JVM for one chunk: same java binary, same JVM args
-    * (-Xmx, --add-opens, -D flags), same classpath, `--chunk` mode. Returns
-    * None when the fork is impossible or the child's output is unusable —
-    * the caller then runs the chunk in-process.
+  /** One chunk's outcome from its child — `Right(stdout)` of a child that
+    * exited 0, or `Left(error)` when it could not start or failed. Returns
+    * the timings, the child's CPU seconds, and whether the child reported.
+    * Anything short of a full report leaves EVERY key of the chunk at −1
+    * with the error (so each one counts in `queries_failed`); nothing is
+    * ever re-run in the parent, which has to survive to print the closing
+    * line.
     */
+  private[graft] def chunkTimings(names: Seq[String],
+      child: Either[String, String]): (Seq[Timed], Double, Boolean) =
+    child.flatMap(out => parseChunk(out, names)
+        .toRight("chunk child did not report every key")) match {
+      case Right((timed, cpu)) => (timed, cpu, true)
+      case Left(err)           => (names.map(Timed(_, -1.0, Some(err))), 0.0, false)
+    }
+
   /** ProcessBuilder for a child JVM running `mainClass args…` with THIS
     * JVM's flags (-Xmx, --add-opens, -D) and classpath — the fork plumbing
-    * shared by the chunk isolation and the streaming smoke (one copy, so a
-    * fix to e.g. the agent-flag filter reaches both). None when the graft
-    * classes are not reachable as plain files (the sbt-launcher classpath),
-    * where a child could never start — callers fall back or skip.
+    * shared by the chunks and the streaming smoke. None when the graft
+    * classes are not reachable as plain files (an sbt-launcher classpath),
+    * where a child could never start. Child stderr routing is the
+    * caller's job: it goes to a temp file, replayed only on failure, so a
+    * child's Spark startup spew never pushes the closing lines out of the
+    * merged stdout+stderr tail a caller keeps.
     */
   private def childJvm(mainClass: String, args: Seq[String]): Option[ProcessBuilder] = {
     val javaBin = java.nio.file.Paths.get(
@@ -578,20 +501,11 @@ object Bench {
     jvmArgs.forEach(a => if (!a.startsWith("-agentlib")) { cmd.add(a); () })
     cmd.add("-cp"); cmd.add(cp)
     cmd.add(mainClass); args.foreach(cmd.add(_))
-    val pb = new ProcessBuilder(cmd)
-    // stderr routing is the CALLER's job (r16). It used to inherit the
-    // console, but the driver reads a merged fixed-size stdout+stderr
-    // tail — a kill landing during a child's ~20-line Spark startup spew
-    // would push the provisional closing lines out of that window, the
-    // exact r8–r11 parsed:null shape resurrected one layer down. Both
-    // callers now divert child stderr to a temp file and replay its tail
-    // to the parent's stderr only on failure.
-    Some(pb)
+    Some(new ProcessBuilder(cmd))
   }
 
   /** Tail of a child's diverted stderr, replayed to the parent's stderr —
-    * only ever called on a FAILED child, so diagnostics survive without
-    * the success-path spew contaminating the driver's merged tail.
+    * only ever called on a FAILED child.
     */
   private def replayChildStderr(errFile: java.nio.file.Path, what: String): Unit =
     try {
@@ -603,75 +517,58 @@ object Bench {
       }
     } catch { case _: Exception => }
 
-  private def forkChunk(names: Seq[String], repeats: Int,
-      quick: Map[String, Double], phasesEnabled: Boolean): Option[(Seq[Timed], Double)] =
-    try {
-      // the chunk protocol rides argv (not env): repeats, phase flag, and
-      // the chunk's quick-key subset with medians — all builder-controlled
-      childJvm("graft.Bench", Seq("--chunk", names.mkString(","),
-        repeats.toString, if (phasesEnabled) "1" else "0",
-        quickCsvOf(quick, names))).flatMap { pb =>
-        val errFile = java.nio.file.Files.createTempFile("graft-chunk", ".err")
-        try {
-          pb.redirectError(errFile.toFile)
-          val proc = pb.start()
-          val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
-          val rc = proc.waitFor()
-          val parsed =
-            if (rc != 0) { System.err.println(s"[bench] fork rc=$rc"); None }
-            else parseChunk(out, names)
-          // a chunk that failed or could not be parsed gets its diverted
-          // stderr replayed (then falls back in-process); a healthy chunk's
-          // Spark spew never reaches the driver's merged tail
-          if (parsed.isEmpty) replayChildStderr(errFile, "chunk")
-          parsed
-        } finally { java.nio.file.Files.deleteIfExists(errFile); () }
-      }
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] fork failed: ${e.toString.take(200)}"); None
-    }
-
-  /** Time one chunk (forked when possible, in-process otherwise) and
-    * measure the load around it: steal% across it, and external CPU cores
-    * (host busy minus the bench's own parent+child CPU, per wall second).
-    * USER_HZ is 100 on every Linux this runs on.
+  /** Fork a fresh JVM for one chunk (`--chunk` mode) and read its report
+    * through [[chunkTimings]]. The chunk protocol rides argv, not env:
+    * repeats, phase flag, and the chunk's quick-key subset with medians.
     */
-  private def timeChunk(names: Seq[String], sfDir: String,
-      cpus: String, repeats: Int = 3, quick: Map[String, Double] = Map.empty,
-      phasesEnabled: Boolean = true): (Seq[Timed], Boolean, ChunkLoad) = {
-    // each attempt gets its OWN measurement window: a fork whose child died
-    // mid-chunk would otherwise leave its burned CPU inside the fallback's
-    // window with childCpu unreported (the GRAFT_CPU line never printed),
-    // mis-attributing the dead child's own work to external load
-    def measured[A](work: => (A, Double)): (A, ChunkLoad) = {
-      val j0      = cpuJiffies()
-      val own0    = ownCpuSec()
-      val t0      = System.nanoTime()
-      val (res, childCpu) = work
-      val elapsed = math.max(0.001, (System.nanoTime() - t0) / 1e9)
-      val ownSec  = math.max(0.0, ownCpuSec() - own0) + childCpu
-      val (stealPct, extCores) =
-        (for ((s0, b0, tt0) <- j0; (s1, b1, tt1) <- cpuJiffies()) yield {
-          val steal = if (tt1 > tt0) (s1 - s0) * 100.0 / (tt1 - tt0) else 0.0
-          val busySec = math.max(0L, b1 - b0) / 100.0
-          (steal, math.max(0.0, busySec - ownSec) / elapsed)
-        }).getOrElse((0.0, 0.0))
-      def r2(x: Double) = math.round(x * 100) / 100.0
-      (res, ChunkLoad(r2(stealPct), r2(extCores)))
-    }
-    val (forkRes, forkLoad) = measured {
-      forkChunk(names, repeats, quick, phasesEnabled) match {
-        case Some((t, cpu)) => (Some(t), cpu)
-        case None           => (None, 0.0)
+  private def forkChunk(names: Seq[String], repeats: Int,
+      quick: Map[String, Double], phasesEnabled: Boolean): (Seq[Timed], Double, Boolean) = {
+    val errFile = java.nio.file.Files.createTempFile("graft-chunk", ".err")
+    try {
+      val child: Either[String, String] =
+        try childJvm("graft.Bench", Seq("--chunk", names.mkString(","),
+            repeats.toString, if (phasesEnabled) "1" else "0",
+            quickCsvOf(quick, names))) match {
+          case None => Left("chunk child not forkable: classpath not visible as plain files")
+          case Some(pb) =>
+            pb.redirectError(errFile.toFile)
+            val proc = pb.start()
+            val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+            val rc = proc.waitFor()
+            if (rc == 0) Right(out) else Left(s"chunk child rc=$rc")
+        } catch { case e: Exception =>
+          Left("chunk fork failed: " + e.toString.replaceAll("\\s+", " ").take(200))
+        }
+      val res = chunkTimings(names, child)
+      if (!res._3) {
+        System.err.println(s"[bench] ${res._1.head.err.get} — ${names.size} keys read -1")
+        replayChildStderr(errFile, "chunk")
       }
-    }
-    forkRes match {
-      case Some(t) => (t, true, forkLoad)
-      case None =>
-        val (t, fbLoad) = measured(
-          (runChunk(names, sfDir, cpus, repeats, quick, phasesEnabled), 0.0))
-        (t, false, fbLoad)
-    }
+      res
+    } finally { java.nio.file.Files.deleteIfExists(errFile); () }
+  }
+
+  /** Time one chunk in its forked child and measure the load around it:
+    * steal% across it, and external CPU cores (host busy minus the bench's
+    * own parent+child CPU, per wall second). USER_HZ is 100 on every Linux
+    * this runs on. Returns (timings, child reported, load).
+    */
+  private def timeChunk(names: Seq[String], repeats: Int,
+      quick: Map[String, Double], phasesEnabled: Boolean): (Seq[Timed], Boolean, ChunkLoad) = {
+    val j0      = cpuJiffies()
+    val own0    = ownCpuSec()
+    val t0      = System.nanoTime()
+    val (timed, childCpu, reported) = forkChunk(names, repeats, quick, phasesEnabled)
+    val elapsed = math.max(0.001, (System.nanoTime() - t0) / 1e9)
+    val ownSec  = math.max(0.0, ownCpuSec() - own0) + childCpu
+    val (stealPct, extCores) =
+      (for ((s0, b0, tt0) <- j0; (s1, b1, tt1) <- cpuJiffies()) yield {
+        val steal = if (tt1 > tt0) (s1 - s0) * 100.0 / (tt1 - tt0) else 0.0
+        val busySec = math.max(0L, b1 - b0) / 100.0
+        (steal, math.max(0.0, busySec - ownSec) / elapsed)
+      }).getOrElse((0.0, 0.0))
+    def r2(x: Double) = math.round(x * 100) / 100.0
+    (timed, reported, ChunkLoad(r2(stealPct), r2(extCores)))
   }
 
   /** One chunk load as its JSON fields (no braces). */
@@ -680,10 +577,8 @@ object Bench {
 
   /** The per-chunk load block + run-level degraded flag for the emitted
     * line — split out so a spec can feed synthetic loads and parse the
-    * result (the r9 failure mode was an artifact READER trusting a number
-    * the bench knew was contaminated; the contract under test is the JSON
-    * itself). `chunk_load` holds each chunk's KEPT attempt; `retried`
-    * holds every attempt a retry threw away, keyed by its chunk's index in
+    * result. `chunk_load` holds each chunk's KEPT attempt; `retried` holds
+    * every attempt a retry threw away, keyed by its chunk's index in
     * `chunk_load`, so a reader can replay which sensor decided each retry.
     */
   private[graft] def loadFieldsJson(chunkLoads: Seq[ChunkLoad], cores: Int,
@@ -702,16 +597,15 @@ object Bench {
     (run.mkString("{", ",", "}"), hot.contains(true))
   }
 
-  // ---- history-aware per-query plausibility (VERDICT r10 next-step #1) --
+  // ---- history-aware per-query plausibility ------------------------------
   //
-  // The external-load machinery above measures CPU-shaped contention; the
-  // r10 driver capture proved cache/IO-shaped variance passes it clean
-  // (degraded:false while 7 unchanged queries read 2–9× their idle
-  // medians). The history check closes that blind spot from the other
-  // side: each query's timing is compared to ITS OWN median over the last
-  // clean history entries, and a run where several TRIVIAL queries inflate
-  // together is stamped suspect — one plan change cannot touch unrelated
-  // one-scan queries at once, so co-inflation is contention by definition.
+  // The load sensors above measure CPU-shaped contention; cache/IO-shaped
+  // variance passes them clean. The history check closes that blind spot
+  // from the other side: each query's timing is compared to ITS OWN median
+  // over the last clean history entries, and a run where several TRIVIAL
+  // queries inflate together is stamped suspect — one plan change cannot
+  // touch unrelated one-scan queries at once, so co-inflation is
+  // contention by definition.
 
   /** Clean entries consulted from the tail of BENCH_HISTORY.jsonl. */
   private[graft] val SuspectHistoryWindow = 5
@@ -727,17 +621,12 @@ object Bench {
   private[graft] val TrivialMedianSec = 0.5
   /** Run-level suspect: at least this many trivial queries inflated. */
   private[graft] val CoInflateCount = 3
-  /** Second-tier eligibility (VERDICT r13 next-step #3): non-trivial
-    * queries above this median…
-    */
+  /** Second-tier eligibility: non-trivial queries above this median… */
   private[graft] val ModerateMedianSec = 0.4
   /** …past this inflation ratio become retime-eligible when
-    * [[CoInflateCount]] of them co-inflate in one capture — the r13
-    * committed capture carried three such readings unflagged and
-    * therefore un-retimed (its 2nd-most-expensive key at 1.82× of a
-    * 1.65 s median, a 0.52 s-median key at 1.89×, a 0.44 s-median key at
-    * 1.71× — all under tier 1's 2.0× bar), leaving real money
-    * un-adjudicated.
+    * [[CoInflateCount]] of them co-inflate in one capture (1.7–1.9×
+    * readings on ≥0.4 s keys otherwise sit under tier 1's 2.0× bar,
+    * un-retimed).
     */
   private[graft] val ModerateRatio = 1.7
 
@@ -755,16 +644,13 @@ object Bench {
     median >= ModerateMedianSec && secs > ModerateRatio * median &&
       secs - median > SuspectMinDeltaSec
 
-  /** Core-count eligibility for one history entry (r18): scaling runs of
-    * the SAME tree at a LOW core count land in the same trail with zero
-    * flags — the r17_c8 run's 119.6 s total and ~2× per-query readings
-    * fed the medians, the quick-key accept bands, AND stretched the clean
-    * band to [86.0, 119.6].
-    * An entry's core count is its `cpus` stamp, or — for the entries that
-    * predate the stamp — its `load.cores`, the host width every pre-stamp
-    * capture recorded; a run is then never judged against another width's
-    * medians. Only an entry carrying NEITHER matches any requested cpus
-    * (the oldest trail lines, which age out of the recency windows).
+  /** Core-count eligibility for one history entry: scaling runs of the
+    * same tree at a LOW core count land in the same trail with zero flags,
+    * and their ~2× readings would otherwise feed the medians, the quick-key
+    * bands and the clean band. An entry's core count is its `cpus` stamp,
+    * or — for entries that predate the stamp — its `load.cores`. Only an
+    * entry carrying NEITHER matches any requested cpus (the oldest trail
+    * lines, which age out of the recency windows).
     */
   private[graft] def entryCpus(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
     Option(n.get("cpus")).map(_.asText()).orElse(
@@ -776,39 +662,28 @@ object Bench {
 
   /** Per-query medians over the last `window` CLEAN history entries —
     * entries that parse, carry a queries map, match this run's scale
-    * factor (`sf`, when given: a dev run appended at sf0.01 must never
-    * feed the medians that judge the driver's sf0.1 capture; an entry
-    * MISSING the stamp counts as a mismatch unless the whole history
-    * predates the field — see the grandfather clause below), and are
-    * neither `degraded` (external-CPU contaminated) nor `suspect` (a
-    * contaminated run must not feed the baseline that judges the next
-    * one). Queries with fewer than `minSamples` clean readings are absent
-    * — no verdict on thin history. Failed timings (−1) never enter a
-    * median.
+    * factor (`sf`, when given: a dev run at sf0.01 must never feed the
+    * medians that judge an sf0.1 capture; an entry MISSING the stamp counts
+    * as a mismatch unless the whole history predates the field) and core
+    * count, and are neither `degraded` nor `suspect` (a contaminated run
+    * must not feed the baseline that judges the next one). Queries with
+    * fewer than `minSamples` clean readings are absent — no verdict on thin
+    * history. Failed timings (−1) never enter a median.
     *
     * A non-suspect entry whose retime pass read `retime_clean:false` is
     * DELIBERATELY still baseline-eligible: excluding it would have no
-    * escape hatch — a genuine persistent regression of a few moderate
-    * keys re-flags every run (tier 2) with retimes that honestly stay at
-    * the new level, so `retime_clean` stays false forever, and an
-    * excluded-forever entry class would freeze the stale medians and the
-    * flag loop with them. Feeding the baseline instead re-converges the
-    * medians after `minSamples` such runs and the flags clear — the same
-    * self-healing direction as the all-suspect escape below, one tier
-    * down. The cost (a contended-window entry nudges a few medians up
-    * for one window) is bounded by the median, which one outlier cannot
-    * move.
+    * escape hatch — a genuine persistent regression of a few moderate keys
+    * re-flags every run (tier 2) with retimes that honestly stay at the new
+    * level, so `retime_clean` stays false forever and the medians would
+    * freeze. Feeding the baseline instead re-converges the medians after
+    * `minSamples` such runs; one outlier cannot move a median.
     *
     * NEW-NORMAL ESCAPE: when the `window` most recent eligible entries
     * are ALL suspect, they become the baseline instead. Without this, a
     * genuine persistent shift that slows several trivial queries together
     * (a config change, a JVM upgrade) would stamp every subsequent run
-    * suspect forever — the stale pre-shift medians keep judging, nothing
-    * new ever feeds them, and the flag degenerates to always-on, masking
-    * both the shift and any real contention on top. A transient
-    * contamination cannot trip the escape (its neighbors are clean); only
-    * the persistent signature — `window` consecutive suspect runs —
-    * re-converges the baseline to the measured new normal.
+    * suspect forever. A transient contamination cannot trip the escape
+    * (its neighbors are clean).
     */
   private[graft] def historyMedians(lines: Seq[String],
       window: Int = SuspectHistoryWindow,
@@ -835,13 +710,11 @@ object Bench {
       } catch { case _: Exception => None }
     }.toSeq
     // An entry with NO `sf` stamp is a mismatch the moment ANY entry in the
-    // history carries one (ADVICE r11): "absent matches anything" let
-    // pre-sf dev-scale lines keep feeding the medians that judge an sf0.1
-    // capture long after stamped entries existed. The grandfather clause is
-    // only for a wholly pre-sf history, where excluding unstamped entries
-    // would mean no baseline at all — and the era test reads EVERY parsed
-    // line, degraded/suspect included: a stamped-but-contaminated entry
-    // still proves the stamp era began, it just cannot feed a median.
+    // history carries one. The grandfather clause is only for a wholly
+    // pre-sf history, where excluding unstamped entries would mean no
+    // baseline at all — and the era test reads EVERY parsed line,
+    // degraded/suspect included: a stamped-but-contaminated entry still
+    // proves the stamp era began, it just cannot feed a median.
     val anyStamped = parsed.exists(_._1.isDefined)
     val entries = parsed.collect {
       case (sfStamp, false, suspectFlag, Some(qs))
@@ -861,21 +734,17 @@ object Bench {
     }
   }
 
-  /** The windowed clean-band totals (VERDICT r14 next-step #3): the last
-    * `window` baseline-eligible entries' run totals, oldest first — the
-    * "97–107 s" a round review re-derived from history by hand. Shared
-    * between the bench's emitted `band` field and
-    * [[graft.tools.HistoryReport]]'s header so the two can never disagree.
-    * Eligibility mirrors the baseline rules (non-degraded, non-suspect,
-    * sf-matched, cpus-matched, numeric value) plus the r15 env verdict: an
-    * entry that stamped itself `env_inflated` is contaminated by its own
-    * admission and must not stretch the band it exists to anchor.
+  /** The windowed clean-band totals: the last `window` baseline-eligible
+    * entries' run totals, oldest first. Shared between the bench's emitted
+    * `band` field and [[graft.tools.HistoryReport]]'s header so the two
+    * can never disagree. Eligibility mirrors the baseline rules
+    * (non-degraded, non-suspect, sf-matched, cpus-matched, numeric value)
+    * plus `env_inflated`: an entry contaminated by its own admission must
+    * not stretch the band it exists to anchor.
     *
-    * `sf` matching is EXACT, including absence (ADVICE r15 #3): an entry
-    * matches when its own stamp equals the Option — `None` matches only
-    * entries that carry NO stamp. The prior `forall` made an sf-less
-    * caller (a HistoryReport over a trail whose latest entry predates the
-    * stamp) pool totals across ALL scales into one meaningless band.
+    * `sf` matching is EXACT, including absence: `None` matches only
+    * entries that carry NO stamp, so an sf-less caller never pools totals
+    * across all scales into one meaningless band.
     */
   private[graft] def cleanBandTotals(lines: Seq[String],
       sf: Option[String], window: Int = 10,
@@ -896,17 +765,15 @@ object Bench {
     }.takeRight(window)
   }
 
-  /** Windowed drift verdict over the clean totals (VERDICT r15 next-step
-    * #4): median of the last [[TrendRecentN]] clean totals vs the median of
-    * the up-to-[[TrendPriorN]] clean totals before them, with the creep
-    * flag when the recent median sits past [[CreepRatio]]× the prior by at
-    * least [[CreepMinDeltaSec]]. A slow creep hides inside a widening
-    * min-max band (r14's clean captures were 101–105 s, r15's 119.4 s —
-    * "inside" the adjudicated 98.9–120.9 band, so nothing flagged); the
-    * trend asks the drift question directly. None below
-    * [[TrendRecentN]]+[[TrendRecentN]] clean entries — a two-total trail
-    * has no trend, only noise. Input is [[cleanBandTotals]]' output
-    * (oldest first), so trend and band can never disagree on eligibility.
+  /** Windowed drift verdict over the clean totals: median of the last
+    * [[TrendRecentN]] clean totals vs the median of the up-to-
+    * [[TrendPriorN]] clean totals before them, with the creep flag when the
+    * recent median sits past [[CreepRatio]]× the prior by at least
+    * [[CreepMinDeltaSec]]. A slow creep hides inside a widening min-max
+    * band; the trend asks the drift question directly. None below
+    * 2 × [[TrendRecentN]] clean entries — a short trail has no trend, only
+    * noise. Input is [[cleanBandTotals]]' output (oldest first), so trend
+    * and band can never disagree on eligibility.
     */
   private[graft] val TrendRecentN = 3
   private[graft] val TrendPriorN = 5
@@ -924,11 +791,9 @@ object Bench {
     }
 
   /** The `band` field body: `[lo,hi]` over the clean totals, `null` when
-    * the trail has none — one compact field that makes the closing line
-    * self-contextualizing (VERDICT r14 next-step #3: a tail-only consumer
-    * had to re-derive the clean band from the repo to read 276 s as an
-    * outlier). 0.1-rounded: the band is a plausibility yardstick, not a
-    * measurement.
+    * the trail has none — it makes the closing line self-contextualizing
+    * for a tail-only consumer. 0.1-rounded: the band is a plausibility
+    * yardstick, not a measurement.
     */
   private[graft] def bandJson(cleanTotals: Seq[Double]): String =
     if (cleanTotals.isEmpty) "null"
@@ -937,21 +802,17 @@ object Bench {
       s"[${r1(cleanTotals.min)},${r1(cleanTotals.max)}]"
     }
 
-  // ---- plan-independent environment adjudication (VERDICT r14 #2) -------
+  // ---- plan-independent environment adjudication -------------------------
   //
-  // The r14 capture proved a whole-window contention mode no per-chunk
-  // sensor saw: every query inflated ~2.6×, ext_cores/steal all idle, and
-  // the artifact bottomed out at "suspect, retime not clean, retime not
-  // hot" — byte-for-byte what a real multi-query regression prints. The
-  // streaming smoke adjudicates that case without any attribution model:
-  // its 21-assertion suite is identical every run (it read 105.16 s in r14
-  // vs a 26–29 s history — a 3.8× scream nothing consumed), so its
-  // duration against its own clean-history median is the `env_inflated`
-  // tri-state on the closing line.
+  // Whole-window contention can inflate every query ~2.6× with every load
+  // sensor idle — byte-for-byte what a real multi-query regression prints.
+  // The streaming smoke adjudicates that case without any attribution
+  // model: its 21-assertion suite is identical every run, so its duration
+  // against its own clean-history median is the `env_inflated` tri-state.
 
   /** Smoke-duration inflation bar (and its absolute floor): the smoke is
     * a fixed ~27 s workload whose clean spread is a couple of seconds, so
-    * 1.5× + 3 s is far outside noise; r14's 105.16 s read 3.8×.
+    * 1.5× + 3 s is far outside noise.
     */
   private[graft] val EnvSmokeRatio = 1.5
   private[graft] val EnvSmokeMinDeltaSec = 3.0
@@ -971,12 +832,11 @@ object Bench {
     } catch { case _: Exception => None }
 
   /** Median smoke duration over the last [[SmokeBaselineWindow]] REPORTING
-    * history entries (skip/timeout records don't count — same rule as
-    * [[streamingRegression]]'s baseline). None below [[SuspectMinSamples]]
-    * samples. Not filtered on contention flags — smoke lines carry none —
-    * so the median's outlier absorption is the only defense; at window 5
-    * it absorbs 2 contaminated captures, and a longer streak is the
-    * new-normal case the baseline SHOULD converge to.
+    * history entries (skip/timeout records don't count). None below
+    * [[SuspectMinSamples]] samples. Not filtered on contention flags —
+    * smoke lines carry none — so the median's outlier absorption is the
+    * only defense; at window 5 it absorbs 2 contaminated captures, and a
+    * longer streak is the new-normal case the baseline SHOULD converge to.
     */
   private[graft] def smokeBaseline(lines: Seq[String],
       window: Int = SmokeBaselineWindow): Option[Double] = {
@@ -988,29 +848,22 @@ object Bench {
   /** The plan-independent verdict, tri-state like the retime fields: true
     * when the smoke read inflated against its own clean history, false
     * when it was judged and was not, null when the smoke was skipped or has
-    * no baseline yet (a first run must read unknown, never clean). An
-    * r14-style capture — all queries inflated, every load sensor quiet —
-    * stamps true here, which is exactly the evidence the r14 artifact
-    * could not carry.
+    * no baseline yet (a first run must read unknown, never clean).
     */
   private[graft] def envInflatedVerdict(smokeSec: Option[Double],
       smokeBase: Option[Double]): Option[Boolean] =
     for (cur <- smokeSec; base <- smokeBase)
       yield cur > EnvSmokeRatio * base && cur - base > EnvSmokeMinDeltaSec
 
-  /** Run-level environment-normalization ratio (VERDICT r17 next-step #2):
-    * the MEDIAN over every judged query of (this run's seconds ÷ the
-    * query's own clean-history median) — the "untouched-query median
-    * ratio" yardstick the r17 round review applied by hand, published as a
-    * machine-readable field. A capture on a host running 17 % slow reads
-    * ~1.17 here even when every contention sensor is quiet (the documented
-    * below-sensor inflation class): the median is robust to the minority
-    * of queries a round's code changes actually moved, so a reviewer can
-    * env-normalize a total (value ÷ env_ratio) without re-deriving the
-    * ratio from BENCH_HISTORY by hand. None (emitted null) below
-    * [[EnvRatioMinSamples]] judged queries — a subset run or a first run
-    * must read unknown, never 1.0. Rounded to 0.01: it is a yardstick,
-    * not a measurement.
+  /** Run-level environment-normalization ratio: the MEDIAN over every
+    * judged query of (this run's seconds ÷ the query's own clean-history
+    * median). A host running 17 % slow reads ~1.17 here even when every
+    * contention sensor is quiet; the median is robust to the minority of
+    * queries a change actually moved, so `value ÷ env_ratio`
+    * env-normalizes a total. None (emitted null) below
+    * [[EnvRatioMinSamples]] judged queries — a subset or first run must
+    * read unknown, never 1.0. Rounded to 0.01: a yardstick, not a
+    * measurement.
     */
   private[graft] val EnvRatioMinSamples = 20
   private[graft] def envRatio(timed: Seq[(String, Double)],
@@ -1023,23 +876,16 @@ object Bench {
   }
 
   /** The suspect verdict for one run: the (name-sorted) flagged queries,
-    * each with its inflation RATIO over its history median (VERDICT r11
-    * next-step #2 — a name list made r11's 5.2× `q_crossmodal_dups` and a
-    * 2.1× wobble read the same; the ratio lets a consumer rank severity),
-    * and the run-level flag — true when at least [[CoInflateCount]]
-    * TRIVIAL-median queries inflated together (the contention signature; a
-    * single slow query is as likely a real regression, which this flag
-    * must never mask). A query flags unconditionally past
-    * [[SuspectRatio]]× its median by at least [[SuspectMinDeltaSec]]
-    * (tier 1); additionally (VERDICT r13 next-step #3) MODERATE
-    * inflations — median ≥ [[ModerateMedianSec]], ratio past
-    * [[ModerateRatio]] — flag when at least [[CoInflateCount]] of them
-    * co-inflate in one capture: r13's committed capture carried 1.8× and
-    * 2.2× readings on non-trivial keys that three co-inflating neighbors
-    * adjudicated environmental, but only by hand — the second tier gets
-    * them a retime. A LONE moderate inflation still never flags (it is as
-    * likely a real regression as the lone tier-1 outlier, and unlike
-    * tier 1 it is not even individually extreme). Ratios are rounded
+    * each with its inflation RATIO over its history median (so a consumer
+    * can rank severity), and the run-level flag — true when at least
+    * [[CoInflateCount]] TRIVIAL-median queries inflated together (the
+    * contention signature; a single slow query is as likely a real
+    * regression, which this flag must never mask). A query flags
+    * unconditionally past [[SuspectRatio]]× its median by at least
+    * [[SuspectMinDeltaSec]] (tier 1); MODERATE inflations — median ≥
+    * [[ModerateMedianSec]], ratio past [[ModerateRatio]] — flag when at
+    * least [[CoInflateCount]] of them co-inflate in one capture (tier 2).
+    * A LONE moderate inflation never flags on its own. Ratios are rounded
     * to 0.1.
     */
   private[graft] def suspectVerdict(timed: Seq[(String, Double)],
@@ -1051,31 +897,25 @@ object Bench {
         name -> ratio(secs, medians(name))
     }
     // tier-1 entries that ALSO satisfy the moderate predicate count toward
-    // the co-inflation quorum (ratio ≥ 2 on a ≥0.4 s median is a fortiori
-    // a moderate inflation) — the tier exists to widen the flag set, never
-    // to raise the bar on what tier 1 already caught
+    // the co-inflation quorum — the tier exists to widen the flag set,
+    // never to raise the bar on what tier 1 already caught
     val moderate = timed.collect {
       case (name, secs) if secs >= 0 &&
         medians.get(name).exists(tier2Inflated(secs, _)) =>
         name -> ratio(secs, medians(name))
     }
-    // the RUN-level stamp counts TIER-1 trivial flags only: tier 2 widens
-    // which queries get retimed, never the documented run signature (≥3
-    // trivial-median queries past 2.0×) — counting 1.7× tier-2 entries
-    // with medians in [0.4, 0.5) would silently lower that bar, and a
-    // suspect-stamped entry is excluded from the history baseline, so a
-    // genuine shared-trunk regression at 1.8× would re-flag every run
-    // until the all-suspect escape re-converged
+    // the RUN-level stamp counts TIER-1 trivial flags only: counting 1.7×
+    // tier-2 entries with medians in [0.4, 0.5) would silently lower the
+    // documented bar, and a suspect-stamped entry is excluded from the
+    // baseline, so a genuine shared-trunk regression at 1.8× would re-flag
+    // every run until the all-suspect escape re-converged
     val runSuspect =
       tier1.count { case (n, _) => medians(n) < TrivialMedianSec } >= CoInflateCount
     // tier-2 eligibility is satisfied by its own quorum OR by a run-level
-    // tier-1 suspect stamp (ADVICE r14 #3): once ≥3 trivial queries have
-    // confirmed contention for the capture, a lone 1.7–2.0× moderate
-    // reading in the same window is adjudicated by the same contention —
-    // requiring a second, moderate-only quorum left exactly the r13-shaped
-    // gap one notch narrower (1–2 moderates beside a confirmed-hot run
-    // stayed unflagged and un-retimed). Retiming them is cheap under the
-    // existing RetimeCap.
+    // tier-1 suspect stamp: once ≥3 trivial queries have confirmed
+    // contention for the capture, a lone 1.7–2.0× moderate reading in the
+    // same window is adjudicated by the same contention. Retiming it is
+    // cheap under the existing RetimeCap.
     val sus =
       (if (moderate.size >= CoInflateCount || (runSuspect && moderate.nonEmpty))
         (tier1 ++ moderate).distinctBy(_._1)
@@ -1083,39 +923,31 @@ object Bench {
     (sus, runSuspect)
   }
 
-  /** The `retimed` field body (VERDICT r12 next-step #2): the suspect
-    * queries' one-pass re-readings as `{"q_x":secs,…}` — `{}` when the
-    * run had nothing flagged, a raw `-1` when a retime repeat failed
-    * (a failure must read as a failure, not vanish). Split out so the
-    * spec can pin the shape without running a bench.
+  /** The `retimed` field body: the suspect queries' one-pass re-readings
+    * as `{"q_x":secs,…}` — `{}` when the run had nothing flagged, a raw
+    * `-1` when a retime repeat failed (a failure must read as a failure,
+    * not vanish).
     */
   private[graft] def retimedFieldJson(vals: Seq[(String, Double)]): String =
     vals.map { case (n, v) => s"${jstr(n)}:$v" }.mkString("{", ",", "}")
 
   /** Retime-pass cost bound: at most this many flagged queries re-run.
-    * A typical contended capture flags ~10 (r11/r12), well under the cap;
-    * a fully-saturated box could flag most of the 144-key surface, and an
-    * uncapped retime would then double the whole run — the cap keeps the
-    * pass at one-to-two chunks. NOT a silent cap: the retimed map's
-    * missing entries are visible against suspect_queries, and the
-    * selection is worst-ratio-first so what gets dropped is the mildest
-    * inflation — the part history medians adjudicate fine on their own.
+    * A typical contended capture flags ~10; a fully-saturated box could
+    * flag most of the surface, and an uncapped retime would then double the
+    * whole run. NOT a silent cap: the retimed map's missing entries are
+    * visible against suspect_queries, and the selection is
+    * worst-ratio-first so what gets dropped is the mildest inflation.
     */
   private[graft] val RetimeCap = 24
 
   /** The flagged queries the retime pass re-runs: worst inflation ratio
-    * first (the readings a consumer most needs a second opinion on),
-    * capped at [[RetimeCap]], name-tiebroken for determinism.
+    * first, capped at [[RetimeCap]], name-tiebroken for determinism.
     */
   private[graft] def retimeTargets(suspectQs: Seq[(String, Double)]): Seq[String] =
     suspectQs.sortBy { case (n, r) => (-r, n) }.take(RetimeCap).map(_._1)
 
-  /** The retime ADJUDICATION, tri-state (VERDICT r13 next-step #1): the
-    * r13 driver tail read `suspect:true` for a capture whose own retime
-    * pass had proved all three flags ambient — the compact closing line
-    * carries the scalar flags but (by design, to stay tail-sized) neither
-    * `suspect_queries` nor `retimed`, so a tail-only consumer could not
-    * see the run was clean. One additive boolean closes that:
+  /** The retime ADJUDICATION, tri-state, so a tail-only consumer can see
+    * whether a suspect run's own retime pass cleared its flags:
     *
     *  - None (emitted `null`) — nothing was flagged; no adjudication ran.
     *  - Some(true) — EVERY flagged query was retimed and every retime
@@ -1141,13 +973,9 @@ object Bench {
   private[graft] def triState(v: Option[Boolean]): String =
     v.fold("null")(_.toString)
 
-  /** Repo artifact the full per-query map persists to (overwritten per run)
-    * + an append-only JSONL history — the record the driver's stdout tail
-    * truncation cannot eat. Best-effort: an unwritable path must not fail
-    * the bench. The directory comes from `SPARK_GRAFT_REPO_DIR`, else the
-    * working directory when it looks like the repo root (has build.sbt),
-    * else the canonical /root/repo (ADVICE r9: a hardcoded path silently
-    * dropped the artifact on any other checkout).
+  /** The artifacts' directory: `SPARK_GRAFT_REPO_DIR`, else the working
+    * directory when it looks like the repo root (has build.sbt), else the
+    * default checkout path.
     */
   private def repoDir: String =
     sys.env.get("SPARK_GRAFT_REPO_DIR")
@@ -1156,172 +984,84 @@ object Bench {
           Some(new java.io.File(".").getCanonicalPath)
         else None)
       .getOrElse("/root/repo")
-  private lazy val artifactPath = s"$repoDir/BENCH_FULL.json"
+
+  /** One artifact family: the latest-run snapshot, its append-only trail,
+    * and the side file a subset run writes instead of both.
+    */
+  private[graft] final case class Artifact(snapshot: String, history: String,
+      subset: String)
+  private[graft] val BenchArtifact =
+    Artifact("BENCH_FULL.json", "BENCH_HISTORY.jsonl", "BENCH_SUBSET.json")
+  private[graft] val StreamingArtifact =
+    Artifact("STREAMING.json", "STREAMING_HISTORY.jsonl", "STREAMING_SUBSET.json")
+
   // private[graft]: tools/HistoryReport reads the same trail the suspect
   // verdict feeds on, so the two can never disagree on WHICH file is history
-  private[graft] lazy val historyPath = s"$repoDir/BENCH_HISTORY.jsonl"
+  private[graft] lazy val historyPath = s"$repoDir/${BenchArtifact.history}"
 
-  /** The snapshot+trail dual write both artifact families share: overwrite
-    * `snapPath` with the line (the latest-run record), append it to
-    * `histPath` (the cross-round trail). Best-effort — an unwritable path
-    * must not fail the run that produced the line.
+  /** The one artifact writer. A full run replaces the snapshot (tmp file +
+    * atomic rename, so a reader never sees a torn record) and appends the
+    * line to the trail. A subset run (`GRAFT_BENCH_QUERIES`) replaces only
+    * its side file: its partial total would mislead the snapshot, and a
+    * clean-stamped partial trail entry would starve the median window of
+    * the keys it did not run. Best-effort: an unwritable path must not fail
+    * the run that produced the line.
     */
-  private def writeSnapshotAndHistory(snapPath: String, histPath: String,
-      line: String): Unit =
+  private[graft] def writeRecord(a: Artifact, line: String, subset: Boolean,
+      dir: String = repoDir): Unit = {
+    import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+    val snap = Paths.get(dir, if (subset) a.subset else a.snapshot)
+    // one fixed temp name is enough: this process is the only writer
+    val tmp = Paths.get(s"$snap.tmp")
     try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(snapPath),
-        line + "\n")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(histPath),
-        line + "\n", java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] $snapPath write failed: ${e.toString.take(200)}")
-    }
-
-  private def writeArtifact(line: String): Unit =
-    writeSnapshotAndHistory(artifactPath, historyPath, line)
-
-  /** Snapshot-only overwrite (ADVICE r15 #1): the pre-smoke provisional
-    * artifact — if the JVM dies inside the smoke window, BENCH_FULL.json
-    * still holds this run's complete timings (stamped `partial:true`,
-    * `env_inflated` still null). NO history append: the final line owns the
-    * trail entry, so one run can never appear twice in the medians window.
-    */
-  private def writeSnapshotOnly(path: String, line: String): Unit =
-    try {
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), line + "\n")
-      ()
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] $path write failed: ${e.toString.take(200)}")
-    }
-
-  /** Subset-run artifact (GRAFT_BENCH_QUERIES set): snapshot ONLY, to a
-    * side path, and NO history append. A subset run's total is partial by
-    * construction — letting it overwrite BENCH_FULL.json would ship a
-    * misleading snapshot, and a clean-stamped partial entry appended to
-    * BENCH_HISTORY.jsonl would both starve the 5-entry median window of
-    * the non-subset queries' samples (silently disarming the next real
-    * capture's suspect machinery) and shrink HistoryReport's clean band
-    * toward the subset's tiny total.
-    */
-  private def writeSubsetArtifact(line: String): Unit =
-    try {
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$repoDir/BENCH_SUBSET.json"), line + "\n")
-      ()
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] BENCH_SUBSET.json write failed: ${e.toString.take(200)}")
-    }
-
-  /** Persist one streaming-smoke health line: `STREAMING.json` is the
-    * latest-run snapshot, `STREAMING_HISTORY.jsonl` the append-only trail
-    * (VERDICT r10 next-step #4 — with only the overwritten file, a suite
-    * that flipped red then green between round captures left no trace a
-    * reviewer could see; bench timings already keep exactly this dual
-    * record). `dir` is injectable so the spec exercises the real writer
-    * against a tmp directory.
-    *
-    * A SUBSET bench run diverts to `STREAMING_SUBSET.json`, snapshot only
-    * (ADVICE r14 #2, mirroring writeSubsetArtifact's rationale): a dev/e2e
-    * subset run's smoke is as real as any, but letting it overwrite the
-    * official snapshot and append to the trail would mutate the record the
-    * round review and [[smokeBaseline]] feed on — the exact official-
-    * artifact mutation the bench-side subset guard exists to prevent. The
-    * subset bit reaches the forked smoke child via `GRAFT_STREAMING_SUBSET`
-    * (the child writes its own record on success).
-    */
-  private[graft] def writeStreamingRecord(line: String,
-      dir: String = repoDir, subset: Boolean = false): Unit =
-    if (subset)
       try {
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$dir/STREAMING_SUBSET.json"), line + "\n")
-        ()
-      } catch { case e: Exception =>
-        System.err.println(s"[bench] STREAMING_SUBSET.json write failed: ${e.toString.take(200)}")
-      }
-    else
-      writeSnapshotAndHistory(s"$dir/STREAMING.json",
-        s"$dir/STREAMING_HISTORY.jsonl", line)
+        Files.writeString(tmp, line + "\n")
+        Files.move(tmp, snap, StandardCopyOption.REPLACE_EXISTING,
+          StandardCopyOption.ATOMIC_MOVE)
+      } finally { Files.deleteIfExists(tmp); () }
+      if (!subset)
+        Files.writeString(Paths.get(dir, a.history), line + "\n",
+          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      ()
+    } catch { case e: Exception =>
+      System.err.println(s"[bench] $snap write failed: ${e.toString.take(200)}")
+    }
+  }
 
   /** Run the streaming-surface smoke ([[graft.tools.StreamingSmoke]]) in a
-    * fresh JVM after the timing run (VERDICT r9 next-step #5: the T1–T8 /
-    * incremental-dedup / sketch / packing / funnel / velocity surface was
-    * green only under `sbt test`, which the driver never runs — now every
-    * driver bench invocation records streaming health beside the query
-    * timings, on stdout and as STREAMING.json). Forked, never in-process:
-    * the smoke owns its SparkSession lifecycle and must not share the
-    * bench's; where the fork is impossible (sbt-launcher classpath) the
-    * smoke is skipped with an explicit line rather than half-run.
-    * Hard-capped at min(10 minutes, `capSec` — the caller's remaining
-    * deadline budget, ADVICE r16 #2: a HUNG smoke used to get its full
-    * 600 s regardless, overshooting the internal deadline by up to ~9
-    * minutes into the external-kill zone; now it is destroyed at the
-    * budget boundary and its timeout skip record still lands) so a hung
-    * stream cannot wedge the bench.
-    *
-    * Every failure branch (unforkable, child died before printing its
-    * health line, launch exception) OVERWRITES `STREAMING.json` with its
-    * skip/fail record: the child only writes the artifact on success, so
-    * without the overwrite a wedged or crashed smoke would leave the
-    * PREVIOUS run's green record sitting beside a fresh BENCH_FULL.json
-    * with nothing to reveal it is stale. The TIMEOUT branch first scans
-    * the child's output for an emitted health line (ADVICE r10): a child
-    * that completed every suite — health line printed, artifact written —
-    * but whose JVM lingered past the cap (e.g. a non-daemon streaming
-    * thread after main returned) keeps its accurate record; only a child
-    * that never reported gets the timeout record.
+    * fresh JVM and return its health line — or, when none came, the skip
+    * record saying why. A capture never runs `sbt test`, so this is the
+    * streaming surface's only health evidence per capture. Forked, never
+    * in-process: the smoke owns its SparkSession lifecycle. Hard-capped at
+    * min(10 minutes, `capSec`) so a hung stream cannot wedge the bench;
+    * a child that printed its health line and then lingered past the cap
+    * (e.g. a non-daemon streaming thread) keeps its line.
     */
-  private def runStreamingSmoke(subset: Boolean,
-      capSec: Double = 600.0): (Seq[String], Option[String]) = {
+  private def runStreamingSmoke(capSec: Double): String = {
     val cap = math.max(1L, math.min(600.0, capSec).toLong)
-    def record(line: String): (Seq[String], Option[String]) = {
-      writeStreamingRecord(line, subset = subset)
-      (Seq(line), None)
-    }
-    def healthLines(f: java.nio.file.Path): Seq[String] =
-      java.nio.file.Files.readString(f).linesIterator
-        .filter(_.startsWith("""{"metric":"streaming_smoke"""")).toSeq
+    def skip(reason: String) =
+      s"""{"metric":"streaming_smoke","skipped":true,"reason":${jstr(reason)}}"""
     try {
       childJvm("graft.tools.StreamingSmoke", Nil) match {
-        case None =>
-          record("""{"metric":"streaming_smoke","skipped":true,"reason":"classpath not forkable"}""")
+        case None => skip("classpath not forkable")
         case Some(pb) =>
-          // a subset run's child must divert its own success record too
-          // (ADVICE r14 #2 — the child writes the artifact, not the parent)
-          if (subset) { pb.environment().put("GRAFT_STREAMING_SUBSET", "1"); () }
-          // child stdout goes to a file, NOT a pipe: reading a pipe to EOF
-          // would block this thread for as long as the child hangs, so the
-          // 10-minute cap below could never fire. stderr to its own file
-          // (r16): the smoke's Spark startup spew on the inherited console
-          // could push the pre-smoke provisional closing line out of the
-          // driver's merged tail if a kill lands inside the smoke window —
-          // replayed below only when the smoke failed to report.
+          // stdout goes to a file, NOT a pipe: reading a pipe to EOF would
+          // block for as long as the child hangs, so the cap could never fire
           val outFile = java.nio.file.Files.createTempFile("graft-smoke", ".out")
           val errFile = java.nio.file.Files.createTempFile("graft-smoke", ".err")
           try {
             pb.redirectOutput(outFile.toFile)
             pb.redirectError(errFile.toFile)
             val proc = pb.start()
-            if (!proc.waitFor(cap, java.util.concurrent.TimeUnit.SECONDS)) {
-              proc.destroyForcibly(); proc.waitFor()
-              val health = healthLines(outFile)
-              if (health.nonEmpty) {
-                // the child reported and wrote its own artifact before
-                // lingering — echo its line, keep its record
-                System.err.println(s"[bench] streaming smoke JVM lingered past ${cap}s AFTER reporting; its record is kept")
-                (health, health.lastOption)
-              } else {
+            val finished = proc.waitFor(cap, java.util.concurrent.TimeUnit.SECONDS)
+            if (!finished) { proc.destroyForcibly(); proc.waitFor() }
+            java.nio.file.Files.readString(outFile).linesIterator
+              .filter(_.startsWith("""{"metric":"streaming_smoke"""")).toSeq
+              .lastOption.getOrElse {
                 replayChildStderr(errFile, "smoke")
-                record(s"""{"metric":"streaming_smoke","skipped":true,"reason":"timeout after ${cap}s"}""")
+                skip(if (finished) s"child rc=${proc.exitValue} with no health line"
+                     else s"timeout after ${cap}s")
               }
-            } else {
-              val health = healthLines(outFile)
-              if (health.isEmpty) {
-                replayChildStderr(errFile, "smoke")
-                record(s"""{"metric":"streaming_smoke","skipped":true,"reason":"child rc=${proc.exitValue} with no health line"}""")
-              } else (health, health.lastOption)
-            }
           } finally {
             java.nio.file.Files.deleteIfExists(outFile)
             java.nio.file.Files.deleteIfExists(errFile); ()
@@ -1329,7 +1069,7 @@ object Bench {
       }
     } catch { case e: Exception =>
       System.err.println(s"[bench] streaming smoke failed: ${e.toString.take(200)}")
-      record(s"""{"metric":"streaming_smoke","skipped":true,"reason":${jstr("launch failed: " + e.toString.replaceAll("\\s+", " ").take(160))}}""")
+      skip("launch failed: " + e.toString.replaceAll("\\s+", " ").take(160))
     }
   }
 
@@ -1343,22 +1083,18 @@ object Bench {
       else Seq.empty
     } catch { case _: Exception => Seq.empty }
 
-  /** Streaming-health fields for the final headline (VERDICT r11 next-step
-    * #6): this run's smoke `failed` count against the previous
-    * `STREAMING_HISTORY.jsonl` entries', plus the one-field regression
-    * verdict — a red→green (or green→red) flap between round captures is
-    * now visible in the bench record itself, not only by diffing the
-    * history file by hand. The baseline is the LAST entry that actually
-    * REPORTED (carries a numeric `failed`): skip/timeout records — which
-    * the failure branches append so staleness is visible — would otherwise
-    * blind the comparison for a round after every wedged smoke. Returns
-    * `"k":v,…` (no braces, no trailing comma) to splice AFTER the headline
-    * body — appending keeps the historical `{"metric":"total_short",
-    * "value":…` byte prefix intact for any consumer that matches on it; a
-    * field is `null` when its side never reported (smoke skipped / no
-    * health line / no reporting prior entry), and the regression verdict
-    * is only non-null when BOTH sides did — a first run or a skipped
-    * smoke must read unknown, not clean.
+  /** Streaming-health fields for the closing lines: this run's smoke
+    * `failed` count against the previous `STREAMING_HISTORY.jsonl`
+    * entries', plus the one-field regression verdict, so a red↔green flap
+    * between captures is visible in the bench record itself. The baseline
+    * is the LAST entry that actually REPORTED (carries a numeric `failed`):
+    * skip/timeout records would otherwise blind the comparison for a round
+    * after every wedged smoke. Returns `"k":v,…` (no braces, no trailing
+    * comma) to splice AFTER a headline body, keeping the historical
+    * `{"metric":"total_short","value":…` byte prefix intact. A field is
+    * `null` when its side never reported, and the verdict is non-null only
+    * when BOTH sides did — a first run or a skipped smoke reads unknown,
+    * not clean.
     */
   private[graft] def streamingRegression(current: Option[String],
       previous: Seq[String]): String = {
@@ -1379,82 +1115,41 @@ object Bench {
       s""""streaming_regressed":$regressed"""
   }
 
-  /** The bench's closing stdout sequence (VERDICT r11 next-step #1 +
-    * r12 next-step #1): the smoke's record lines first, the repeated
+  /** Print the closing sequence: the smoke's record line, the one
     * `total_short` headline, then ONE compact `"metric":"total"` line as
-    * the absolute last program output. The driver keeps only a 2000-char
-    * tail of the output, and every `BENCH_r*.json` through r12 was
-    * `parsed: null`: r8–r11 because startup spew pushed the metric lines
-    * out of that window, r12 because — as r1's tail proves, where a
-    * complete in-window `[info] {"metric":"total",…}` line still nulled —
-    * the parser rejects sbt's log prefix (fixed in build.sbt via
-    * `Compile / run / outputStrategy := StdoutOutput`) and most plausibly
-    * keys on the `"metric":"total"` name its own full records carry
-    * (the full `total` line with its ~6 KB queries map prints early and
-    * always exceeds the window — hence the compact repeat, same headline
-    * fields minus the big maps, short enough that line + sbt's
-    * `[success]` trailer always fit the window together). Main prints
-    * THROUGH this function so the ordering is pinned by BenchLoadSpec,
-    * not by code layout.
-    */
-  private[graft] def closingLines(headline: String, closingTotal: String,
-      smokeLines: Seq[String]): Seq[String] =
-    smokeLines :+ headline :+ closingTotal
-
-  /** Print the closing sequence — the ONLY stdout the bench produces after
-    * the smoke returns, and the LAST it produces at all. `main` ends on
-    * this call; no call site may print after it (the driver's tail parser
-    * keys on the final compact `"metric":"total"` line — one stray
-    * `println` behind it would resurrect the 13-round `parsed: null`
-    * defect). The writer is injectable so BenchLoadSpec pins the emitted
-    * order and the ends-on-closing-total contract without running a bench.
+    * the absolute last program output. The benchmark's consumer keeps only
+    * a 2000-char tail of the output and keys on the final
+    * `"metric":"total"` line: the
+    * full `total` line with its per-query map prints earlier and always
+    * exceeds that window, hence the compact repeat. `main` ends on this
+    * call; one stray `println` behind it would break the tail parse.
+    * The writer is injectable so BenchLoadSpec pins the order without
+    * running a bench.
     */
   private[graft] def emitClosing(headline: String, closingTotal: String,
       smokeLines: Seq[String], out: String => Unit): Unit =
-    closingLines(headline, closingTotal, smokeLines).foreach(out)
+    (smokeLines :+ headline :+ closingTotal).foreach(out)
 
-  /** The compact closing `"metric":"total"` line (VERDICT r12 next-step
-    * #1): the headline's scalar fields, none of the per-query /
-    * per-chunk maps, so the whole line stays a few hundred bytes — small
-    * enough that it plus sbt's trailer always fit the driver's 2000-char
-    * stdout tail (BenchLoadSpec pins a worst-case-width byte budget).
-    * `"metric":"total"` therefore appears TWICE per run
-    * (the early full line with the queries map feeds BENCH_FULL.json /
-    * history; this compact one feeds the tail parser): the consumer
-    * contract for both `total` and the repeated `total_short` is
-    * at-least-once / LAST-wins — a JSONL consumer must key on the final
-    * occurrence, never count or sum per metric name (ADVICE r12).
+  /** The compact closing `"metric":"total"` line: the headline's scalar
+    * fields, none of the per-query / per-chunk maps, so the line stays a
+    * few hundred bytes (BenchLoadSpec pins a worst-case-width byte budget).
+    * `"metric":"total"` therefore appears more than once per run (the full
+    * line, every provisional line, this one): the consumer contract is
+    * at-least-once / LAST-wins — key on the final occurrence, never count
+    * or sum per metric name.
     *
-    * `retime_clean` (VERDICT r13 next-step #1) is the one adjudication
-    * field a tail-only consumer needs beside `suspect`: `suspect:true`
-    * with `retime_clean:true` reads "flagged, but the run's own retime
-    * pass proved every flag ambient" — r13's exact case, which the tail
-    * alone could not see. `retime_hot` (ADVICE r13 #2) qualifies the
-    * adjudication itself: true when any retime chunk ran under the same
-    * contention signals that degrade a run, so a still-inflated retime
-    * can be read as "the second opinion was also hot", not as a
-    * confirmed regression. Both tri-state: `null` when nothing was
-    * flagged (no adjudication ran).
+    * `retime_clean` beside `suspect` tells a tail-only consumer whether the
+    * run's own retime pass proved the flags ambient; `retime_hot` says
+    * whether that second opinion itself ran under contention; both `null`
+    * when nothing was flagged. `env_inflated` is the fixed-workload
+    * verdict ([[envInflatedVerdict]]) and `band` the clean-history total
+    * band (`null` on a bandless trail); the decision table for reading
+    * them is in README's performance section.
     *
-    * r15 additions (VERDICT r14 next-steps #2/#3): `env_inflated` — the
-    * plan-independent fixed-workload verdict ([[envInflatedVerdict]]);
-    * true means "this window ran slow against clean history for reasons
-    * no query plan can explain", which is the reading the r14 artifact
-    * could not give — and `band`, the clean-history total band `[lo,hi]`
-    * (null on a bandless trail), so a tail-only consumer can read this
-    * line's `value` AS an outlier (or not) without the repo. The decision
-    * table for the flag pair lives in README's bench-contract section.
-    *
-    * r16 additions (VERDICT r15 next-steps #1–#3): `partial:true` stamps
-    * the PROVISIONAL cumulative record printed after every chunk (and
-    * once more pre-smoke) so a kill at any instant leaves a parseable
-    * best-available record in the stdout tail — the final line DROPS the
-    * stamp (absent, not false), and last-wins still holds; `wall_sec` is
-    * the run's own wall clock so the capture's protocol cost is a
-    * published number, not a verdict estimate; `queries_skipped` counts
-    * keys the internal deadline skipped (0 on a completed run) — a
-    * nonzero count beside `deadline_hit:true` in the full line is the
-    * skip-record signature, never a silent truncation.
+    * `partial:true` stamps the PROVISIONAL cumulative record printed after
+    * every chunk; the final line drops the stamp (absent, not false).
+    * `wall_sec` is the run's own wall clock; `queries_skipped` counts keys
+    * the internal deadline skipped (0 on a completed run).
     */
   private[graft] def closingTotalLine(total: Double, degraded: Boolean,
       suspect: Boolean, retimeClean: Option[Boolean],
@@ -1487,22 +1182,14 @@ object Bench {
   }
 
   /** The run's query list from the optional `GRAFT_BENCH_QUERIES` comma
-    * list (dev/e2e plumbing, never set by the driver): the retime e2e gate
-    * (BenchE2eSpec) exercises the whole suspect→retime→closing-line path
-    * against a handful of queries instead of the full surface. Unknown
-    * names drop with a stderr warning; a NON-EMPTY list that resolves to
-    * ZERO known names is a HARD ERROR (ADVICE r14 #1): the old silent
-    * fallback-to-everything meant a typo'd prefix on every entry turned an
-    * intended subset run into a full run — which then wrote the official
-    * BENCH_FULL.json and appended a real history entry, the exact
-    * official-artifact mutation the subset guard exists to prevent. An
-    * unset or blank variable still means the full surface. Deduplicated —
-    * a repeated name would be timed and counted twice (triple-counting
-    * `total`, duplicate JSON keys, and one query's inflation contributing
-    * multiple entries to the co-inflation quorum), and a duplicate could
-    * make a PARTIAL list read as size == the full surface, defeating the
-    * subset-artifact guard. Always sorted — the deterministic order is
-    * what keeps warm-up attribution comparable across runs.
+    * list (dev/e2e plumbing, never set for an official capture). Unknown names drop
+    * with a stderr warning; a NON-EMPTY list that resolves to ZERO known
+    * names is a HARD ERROR — a silent fallback to everything would turn a
+    * typo'd subset run into a full run that writes the official artifacts.
+    * An unset or blank variable means the full surface. Deduplicated (a
+    * repeated name would be timed and counted twice, and could pad a
+    * partial list to full-surface size, defeating the subset guard) and
+    * always sorted, which keeps warm-up attribution comparable.
     */
   private[graft] def benchQueryNames(env: Option[String]): Seq[String] =
     env.filter(_.trim.nonEmpty) match {
@@ -1530,131 +1217,77 @@ object Bench {
     }
 
     // the run's own wall clock, started before any work: feeds the
-    // internal deadline (VERDICT r15 next-step #1) and the published
-    // wall_sec (next-step #3 — the protocol's cost is now a number)
+    // internal deadline and the published wall_sec
     val startNanos = System.nanoTime()
     def elapsedSec = (System.nanoTime() - startNanos) / 1e9
     val deadlineSec = benchDeadlineSec(sys.env.get("GRAFT_BENCH_DEADLINE_SEC"))
     def remainingSec = deadlineSec - elapsedSec
 
-    val jiffies0 = cpuJiffies()
     val cores = Runtime.getRuntime.availableProcessors
     val names = benchQueryNames(sys.env.get("GRAFT_BENCH_QUERIES"))
-    // a subset run is any run not covering the full graded surface — its
-    // artifacts go to the side path (see writeSubsetArtifact)
+    // a subset run is any run not covering the full graded surface
     val subsetRun = names.size < SparkEntry.queries.size
-    // history is read ONCE, before anything appends (the discipline every
-    // history consumer here shares): it feeds the per-query medians, the
-    // quick-key set, and the clean band the closing lines publish
+
+    // 1. history, read ONCE before anything appends: the per-query
+    // medians, the quick-key set and the clean band. cpus-filtered: the
+    // low-core scaling runs share this trail (see cpusMatches)
     val histLines = fileLines(historyPath)
-    // history plausibility (VERDICT r10 next-step #1): each query judged
-    // against its own median over the last clean history entries — also
-    // the source of the quick-key (repeats=1) set, and of the cumulative
-    // suspect verdicts on the provisional closing lines
-    // cpus-filtered (r18, see cpusMatches): the driver's low-core scaling
-    // runs share this trail and must not feed the main config's yardsticks
     val medians = historyMedians(histLines, sf = Some(sfDir),
       cpus = Some(cpus))
     val quick = quickKeys(names, medians)
-    // the clean-history band, so a tail-only consumer can read any closing
-    // line's `value` as inside/outside the tree's normal range (r14 #3)
     val band = bandJson(cleanBandTotals(histLines, sf = Some(sfDir),
       cpus = Some(cpus)))
-    // the PREVIOUS smoke records, read before this run's smoke appends its
-    // own — also pre-read so provisional closing lines can carry the
-    // null-sided streaming fields without touching a mid-append file
-    val prevSmoke = fileLines(s"$repoDir/STREAMING_HISTORY.jsonl")
+    val prevSmoke = fileLines(s"$repoDir/${StreamingArtifact.history}")
+
+    // 2. the streaming smoke, first and once, capped at the remaining
+    // budget: its verdicts then ride every line this run prints, the
+    // provisional ones included. Value check, not presence: =0 / empty
+    // means "run it".
+    val smokeSkipped =
+      sys.env.get("GRAFT_SKIP_STREAMING_SMOKE").exists(v => v.nonEmpty && v != "0")
+    val smokeStart = elapsedSec
+    val smokeLine =
+      if (smokeSkipped) None else Some(runStreamingSmoke(capSec = remainingSec))
+    val smokeWallSec = elapsedSec - smokeStart
+    smokeLine.foreach(writeRecord(StreamingArtifact, _, subsetRun))
+    val envInf = envInflatedVerdict(smokeLine.flatMap(smokeValueOf),
+      smokeBaseline(prevSmoke))
+    val streamingFields = streamingRegression(smokeLine, prevSmoke)
+
+    // 3. the chunks, in history-rotated order (see rotatedChunks)
     val chunkSize = chunkSizeFromEnv(sys.env.get("GRAFT_BENCH_CHUNK_SIZE"))
-    // rotate the chunk ORDER by the history length (VERDICT r16 next-step
-    // #1): a deadline trip skips whatever is still un-run, and sorted
-    // order starved the same alphabetical tail on every contended run —
-    // the offset moves that burden across the surface run-over-run while
-    // each individual run stays deterministic
     val chunks = rotatedChunks(names.grouped(chunkSize).toSeq, histLines.size)
     var forked = 0
     // a persistently-loaded box must not double the run: at most 3 chunk
     // retries per run — past that the run is degraded and says so
     var retryBudget = 3
-    // deadline state (VERDICT r15 next-step #1): `ladder` degrades the
-    // remaining chunks when the measured pace projects past the budget;
-    // `deadlineHit` skips them outright once the budget is spent
+    // `ladder` degrades the remaining chunks when the measured pace
+    // projects past the budget; `deadlineHit` skips them once it is spent
     var ladder = false
     var deadlineHit = false
+    def repeats = if (ladder) 1 else 3
     val timedBuf   = scala.collection.mutable.ArrayBuffer.empty[Timed]
     val loadBuf    = scala.collection.mutable.ArrayBuffer.empty[ChunkLoad]
     // each thrown-away attempt's load, keyed by its chunk's loadBuf index
     val retriedBuf = scala.collection.mutable.ArrayBuffer.empty[(Int, ChunkLoad)]
     val skippedBuf = scala.collection.mutable.ArrayBuffer.empty[String]
-    // streaming-smoke state (VERDICT r16 next-step #2): the smoke may now
-    // run MID-LOOP — the moment the remaining budget first drops inside
-    // the reserve window — so a deadline-bound run keeps its streaming
-    // evidence instead of sacrificing it to time one more chunk. Value
-    // check, not presence: =0 / empty must mean "run it".
-    val smokeSkippedByEnv =
-      sys.env.get("GRAFT_SKIP_STREAMING_SMOKE").exists(v => v.nonEmpty && v != "0")
-    var smokeDone = false
-    var smokeResult: (Seq[String], Option[String]) = (Seq.empty, None)
-    var smokeWallSec = 0.0
-    def runSmokeNow(): Unit = if (!smokeDone) {
-      smokeDone = true
-      val t0s = elapsedSec
-      // the wait is capped at the remaining budget (ADVICE r16 #2): a hung
-      // smoke is destroyed at the boundary, its timeout record still lands
-      smokeResult = runStreamingSmoke(subsetRun, capSec = remainingSec)
-      smokeWallSec = elapsedSec - t0s
-    }
-    // cumulative provisional closing line (VERDICT r15 next-step #2):
-    // printed after every chunk so whatever instant the process dies, the
-    // stdout tail holds a parseable record of everything timed so far —
-    // superseded by the next one, last-wins like every metric line here
-    def printProvisional(): Unit = {
-      val sofar = timedBuf.toSeq
-      val totalSoFar = sofar.collect { case Timed(_, v, None, _, _) => v }.sum
-      val hotSoFar = loadBuf.exists(isHot(_, cores))
-      val (_, susSoFar) =
-        suspectVerdict(sofar.map(t => t.name -> t.secs), medians)
-      printAtomic(closingTotalLine(totalSoFar,
-        degraded = hotSoFar || ladder || deadlineHit, suspect = susSoFar,
-        retimeClean = None, retimeHot = None, envInflated = None,
-        band = band, run = sofar.size, failed = sofar.count(_.err.isDefined),
-        sfDir = sfDir, streamingFields = streamingRegression(None, prevSmoke),
-        wallSec = elapsedSec, skipped = skippedBuf.size,
-        repeats = if (ladder) 1 else 3, partial = true))
-    }
+    def totalOf(ts: Seq[Timed]) = ts.collect { case Timed(_, v, None, _, _) => v }.sum
+    // run-level steal covers the timing run (chunks + retime), not the smoke
+    val jiffies0 = cpuJiffies()
+    val chunksStart = elapsedSec
     chunks.zipWithIndex.foreach { case (chunk, ci) =>
-      // the smoke reserve check comes BEFORE the chunk budget check: when
-      // the remaining budget first dips under the reserve — or the
-      // measured pace projects the next chunk jumping clean over the
-      // window (see smokeDueNow) — the smoke runs now; the chunks that
-      // follow get whatever is left. The pace numerator excludes the
-      // smoke's own wall: chunk pace must measure chunks.
-      val chunkPaceSec =
-        if (ci > 0) (elapsedSec - smokeWallSec) / ci else 0.0
-      if (!smokeSkippedByEnv && !smokeDone && !deadlineHit &&
-          smokeDueNow(remainingSec, projectedChunkSec = chunkPaceSec)) {
-        System.err.println(f"[bench] remaining budget $remainingSec%.0f s is " +
-          f"inside the $SmokeReserveSec%.0f s smoke reserve — running the " +
-          "streaming smoke before the last chunks spend it")
-        runSmokeNow()
-      }
       if (deadlineHit || remainingSec <= 0) {
-        // budget spent: every un-run key becomes a visible skip record —
-        // the closing sequence prints right after the loop, which is the
-        // whole point (r15's rc 124 left NO record at all)
+        // budget spent: every un-run key becomes a visible skip record
         deadlineHit = true
         skippedBuf ++= chunk
       } else {
-        // pace numerator excludes the mid-loop smoke's wall (it is a
-        // one-off, not a per-chunk cost): a run whose chunk pace was in
-        // hand must not degrade because the reserve fired between chunks
         if (!ladder && ladderNeeded(ci, chunks.length,
-            elapsedSec - smokeWallSec, remainingSec)) {
+            elapsedSec - chunksStart, remainingSec)) {
           ladder = true
           System.err.println(f"[bench] pace projects past the $deadlineSec%.0f s " +
             "deadline — degrading remaining chunks to repeats=1, no phase evaluations")
         }
-        val reps = if (ladder) 1 else 3
-        var (t, fk, cl) = timeChunk(chunk, sfDir, cpus, reps, quick, !ladder)
+        var (t, fk, cl) = timeChunk(chunk, repeats, quick, !ladder)
         // retry a hot chunk once — never with the deadline spent: a retry
         // that overshoots the budget trades one contaminated chunk for the
         // whole run's epilogue. The thrown-away attempt's load is kept
@@ -1664,131 +1297,89 @@ object Bench {
           retriedBuf += loadBuf.size -> cl
           System.err.println(s"[bench] chunk '${chunk.head}…' ran hot " +
             s"(ext_cores=${cl.externalCores} steal=${cl.stealPct}%) — retrying once")
-          val again = timeChunk(chunk, sfDir, cpus, reps, quick, !ladder)
+          val again = timeChunk(chunk, repeats, quick, !ladder)
           t = again._1; fk = again._2; cl = again._3
         }
         if (fk) forked += 1
         timedBuf ++= t; loadBuf += cl
-        printProvisional()
+        // the provisional cumulative closing line: whatever instant the
+        // process dies, the stdout tail holds a parseable record of
+        // everything timed so far (last-wins, superseded by the next)
+        val sofar = timedBuf.toSeq
+        printAtomic(closingTotalLine(totalOf(sofar),
+          degraded = loadBuf.exists(isHot(_, cores)) || ladder,
+          suspect = suspectVerdict(sofar.map(t => t.name -> t.secs), medians)._2,
+          retimeClean = None, retimeHot = None, envInflated = envInf,
+          band = band, run = sofar.size, failed = sofar.count(_.err.isDefined),
+          sfDir = sfDir, streamingFields = streamingFields,
+          wallSec = elapsedSec, skipped = skippedBuf.size,
+          repeats = repeats, partial = true))
       }
     }
+    val chunksWallSec = elapsedSec - chunksStart
     val timed: Seq[Timed] = timedBuf.toSeq
-    val chunkLoads: Seq[ChunkLoad] = loadBuf.toSeq
-    // wall attribution (r16, beside wall_sec): where the protocol's cost
-    // went — the chunk loop (timings + fork startups) vs the retime pass
-    // vs the smoke (r17: it may run mid-loop, so its wall is its own
-    // field, subtracted from the chunk share); the remainder is
-    // launcher/artifact overhead. Published so a wall regression can be
-    // attributed from the artifact instead of re-profiled.
-    val wallAfterChunks = elapsedSec
-    val chunksWallSec = wallAfterChunks - smokeWallSec
-    // the reserve can also fire at the PRE-RETIME check below, i.e. after
-    // this boundary: snapshot what the smoke had cost by now so the retime
-    // share can subtract only ITS smoke wall (not the mid-loop share,
-    // already excluded from chunksWallSec) — the three published shares
-    // must partition wall_sec, never over-count it
-    val smokeWallAtChunksEnd = smokeWallSec
+    val (suspectQs, suspect) = suspectVerdict(timed.map(t => t.name -> t.secs),
+      medians)
 
+    // 4. the retime pass: whenever ANYTHING was flagged (a lone tier-1
+    // outlier most needs a second opinion), the flagged keys get one more
+    // pass in fresh chunk JVMs, and the re-readings ride beside
+    // suspect_ratios as `retimed`. Strictly additive: `value` and
+    // `queries[k]` stay the original capture's. Deadline-aware: un-run
+    // retimes read as retime_clean:false via the no-evidence rule. No
+    // phase evaluations — the flagged composites shipped their splits in
+    // the main pass.
+    val retimeStart = elapsedSec
+    val retimeRuns: Seq[(Seq[Timed], Boolean, ChunkLoad)] =
+      if (suspectQs.isEmpty || deadlineHit || remainingSec <= 0) Nil
+      else retimeTargets(suspectQs).grouped(chunkSize).toSeq.flatMap { c =>
+        if (remainingSec <= 0) { deadlineHit = true; None }
+        else Some(timeChunk(c, repeats, quick, phasesEnabled = false))
+      }
+    val retimeWallSec = elapsedSec - retimeStart
+    val retimed = retimeRuns.flatMap(_._1.map(t => t.name -> t.secs))
+    val retimeHot: Option[Boolean] =
+      if (retimeRuns.isEmpty) None
+      else Some(retimeRuns.exists(r => isHot(r._3, cores)))
+    val retimeClean = retimeCleanVerdict(suspectQs, retimed, medians)
+
+    // 5. the closing sequence
     val qs = timed.map(t => s"${jstr(t.name)}:${t.secs}").mkString("{", ",", "}")
     val errs = timed.collect { case Timed(k, _, Some(m), _, _) => s"${jstr(k)}:${jstr(m)}" }
       .mkString("{", ",", "}")
-    // per-query steal context (r15): SPARSE — only queries whose own repeat
-    // window saw any steal carry a key (an absent key reads "quiet window",
-    // a 0.0 from a /proc-less host never emits). Diagnostic beside the
-    // suspect flags: a flagged query with 20% steal in ITS window is burst
-    // contention the chunk averages structurally cannot show.
+    // per-query steal context, SPARSE: only queries whose own repeat
+    // window saw any steal carry a key
     val qStealJson = timed.filter(_.stealPct > 0.0)
       .map(t => s"${jstr(t.name)}:${t.stealPct}").mkString("{", ",", "}")
-    // composite-query phase splits (VERDICT r10 next-step #5): a separate
-    // top-level block keyed by query name, so the scalar `queries` map —
-    // what every existing consumer parses — is untouched and totals are
-    // unchanged; `queries[k] − Σ phases[k]` is the lazy serve residual
+    // composite-query phase splits: a separate block keyed by query name,
+    // so the scalar `queries` map every consumer parses is untouched;
+    // `queries[k] − Σ phases[k]` is the lazy serve residual
     def r3(x: Double) = math.round(x * 1000) / 1000.0
     val phasesJson = timed.filter(_.phases.nonEmpty).map { t =>
       s"${jstr(t.name)}:" + t.phases.map { case (p, v) => s"${jstr(p)}:${r3(v)}" }
         .mkString("{", ",", "}")
     }.mkString("{", ",", "}")
-    val total = timed.collect { case Timed(_, v, None, _, _) => v }.sum
-    // machine-load context: run-level steal%, per-chunk steal/external
-    // cores (plus every thrown-away retry attempt's), and the run's
-    // degraded verdict (any chunk still hot after its retry) — VERDICT r9
-    // next-step #1
+    val total = totalOf(timed)
+    val failed = timed.count(_.err.isDefined)
     val runSteal = for ((s0, _, t0) <- jiffies0; (s1, _, t1) <- cpuJiffies()
         if t1 > t0) yield math.round((s1 - s0) * 10000.0 / (t1 - t0)) / 100.0
     val (loadJson, loadDegraded) =
-      loadFieldsJson(chunkLoads, cores, runSteal, retriedBuf.toSeq)
-    // a deadline-tripped or ladder-degraded run is degraded by definition
-    // (VERDICT r15 next-step #1: partial/reduced-protocol totals must
-    // never feed the clean band or the history medians). A def, not a val:
-    // the retime loop below can still trip deadlineHit.
-    def degraded = loadDegraded || deadlineHit || ladder
-    val (suspectQs, suspect) = suspectVerdict(timed.map(t => t.name -> t.secs),
-      medians)
+      loadFieldsJson(loadBuf.toSeq, cores, runSteal, retriedBuf.toSeq)
+    // a deadline-tripped or ladder-degraded run is degraded by definition:
+    // partial/reduced-protocol totals must never feed the band or medians
+    val degraded = loadDegraded || deadlineHit || ladder
     val suspectJson = suspectQs.map { case (n, _) => jstr(n) }.mkString("[", ",", "]")
-    // the SAME flagged set as an object keyed by ratio (VERDICT r11 #2):
-    // the name list stays for existing consumers, the ratios rank severity
     val ratiosJson = suspectQs.map { case (n, r) => s"${jstr(n)}:$r" }
       .mkString("{", ",", "}")
-    // self-healing suspect captures (VERDICT r12 next-step #2): two rounds
-    // running, the official capture landed under host load the chunk-level
-    // isHot never saw (per-query inflation, not a load/steal/PSI breach) —
-    // so the pass fires whenever ANYTHING was flagged (run-level suspect
-    // or not — ADVICE r13 #1: a lone tier-1 outlier is exactly the reading
-    // that most needs a second opinion, since it is as likely a real
-    // regression as contention): the flagged queries get ONE more
-    // sequential pass through the existing chunk fork machinery (fresh
-    // JVM, warm-up, median-of-3) and the re-readings ride beside
-    // suspect_ratios as `retimed`. Strictly ADDITIVE: `value` and
-    // `queries[k]` stay the original capture's (the retime is adjudication
-    // evidence, not a do-over — a retime that also ran hot must not
-    // silently overwrite a number the flags already mark); a flagged query
-    // whose retime lands inside its median band is thereby adjudicated
-    // environmental in the artifact itself, no reach into history needed.
-    // The retime chunks' OWN load is measured like any other chunk's
-    // (ADVICE r13 #2): `retime_hot` below says whether the second opinion
-    // itself ran under contention — a still-inflated retime under a hot
-    // window must not read as a confirmed regression.
-    // Deadline-aware (r16): the pass never starts on a spent budget, and
-    // checks again before each retime chunk — un-run retimes read as
-    // retime_clean:false via the no-evidence rule, never as clean. Phase
-    // evaluations stay off here: the retime is a timing second opinion,
-    // and its flagged composites already shipped their splits in the
-    // main pass.
-    // the smoke reserve applies here too: a retime pass on a contended run
-    // is exactly when the budget is tight — the round's streaming evidence
-    // outranks a second opinion on a few flagged timings
-    if (!smokeSkippedByEnv && !smokeDone && suspectQs.nonEmpty &&
-        !deadlineHit && smokeDueNow(remainingSec))
-      runSmokeNow()
-    val retimeRuns: Seq[(Seq[Timed], Boolean, ChunkLoad)] =
-      if (suspectQs.isEmpty || deadlineHit || remainingSec <= 0) Nil
-      else retimeTargets(suspectQs).grouped(chunkSize).toSeq.flatMap { c =>
-        if (remainingSec <= 0) { deadlineHit = true; None }
-        else Some(timeChunk(c, sfDir, cpus,
-          repeats = if (ladder) 1 else 3, quick = quick,
-          phasesEnabled = false))
-      }
-    val retimeWallSec =
-      elapsedSec - wallAfterChunks - (smokeWallSec - smokeWallAtChunksEnd)
-    val retimed = retimeRuns.flatMap(_._1.map(t => t.name -> t.secs))
-    val retimedJson = retimedFieldJson(retimed)
-    val retimeHot: Option[Boolean] =
-      if (retimeRuns.isEmpty) None
-      else Some(retimeRuns.exists(r => isHot(r._3, cores)))
-    val retimeClean = retimeCleanVerdict(suspectQs, retimed, medians)
-    val smokeBase = smokeBaseline(prevSmoke)
-    // deadline/ladder instrumentation + the skip records (r16): `skipped`
-    // names every key the internal deadline left un-run — a reader sees
-    // exactly what is missing from `queries`, never a silent truncation
     val skippedJson = skippedBuf.map(jstr).mkString("[", ",", "]")
-    // the quick-key set rides the FULL line (ADVICE r16 #3): `repeats` is
-    // nominal-only — quick keys use the adaptive estimator regardless — so
-    // a consumer of `queries[k]` can tell which estimator produced which
-    // value without reverse-engineering the medians
+    // `repeats` is nominal-only — quick keys use the adaptive estimator
+    // regardless — so the full line names them
     val quickKeysJson =
       names.filter(quick.contains).map(jstr).mkString("[", ",", "]")
     def r1(x: Double) = math.round(x * 10) / 10.0
-    def budgetFields =
+    // wall attribution beside wall_sec: the three shares partition it (the
+    // remainder is launcher/artifact overhead)
+    val budgetFields =
       s""""wall_sec":${r1(elapsedSec)},""" +
         s""""wall_chunks_sec":${r1(chunksWallSec)},""" +
         s""""wall_retime_sec":${r1(retimeWallSec)},""" +
@@ -1798,104 +1389,32 @@ object Bench {
         s""""skipped":$skippedJson"""
     val isolation =
       s""""chunks":${chunks.length},"chunks_forked":$forked,"chunk_size":$chunkSize,"chunks_retried":${retriedBuf.size}"""
-    // ONE full-line builder so the pre-smoke provisional artifact and the
-    // final line cannot drift in shape — they differ only in
-    // `env_inflated` (null until the smoke adjudicates) and the partial stamp
-    // the run-level env-normalization yardstick (VERDICT r17 next-step #2)
-    // — computed once, rides the full line and both headline shapes
     val envRatioJson =
       s""""env_ratio":${envRatio(timed.map(t => t.name -> t.secs), medians)
         .fold("null")(_.toString)}"""
-    def fullLineJson(envInfJ: Option[Boolean], partial: Boolean): String = {
-      val adjudication =
-        s""""retime_clean":${triState(retimeClean)},"retime_hot":${triState(retimeHot)},""" +
-          s""""env_inflated":${triState(envInfJ)},""" +
-          s"""$envRatioJson,"band":$band"""
-      s"""{"metric":"total","value":$total,"unit":"sec","repeats":${if (ladder) 1 else 3},""" +
-        (if (partial) """"partial":true,""" else "") +
-        s"""$budgetFields,"degraded":$degraded,"suspect":$suspect,"suspect_queries":$suspectJson,"suspect_ratios":$ratiosJson,"retimed":$retimedJson,$adjudication,$isolation,"quick_keys":$quickKeysJson,"queries":$qs,"phases":$phasesJson,"query_steal":$qStealJson,"errors":$errs,"load":$loadJson,"cpus":${jstr(cpus)},"sf":"$sfDir"}"""
-    }
-    // pre-smoke persistence + provisional closing line (ADVICE r15 #1 +
-    // VERDICT r15 next-step #2): r15 moved the smoke BEFORE the artifact
-    // write, so a kill inside the smoke window lost the entire timing
-    // run. The snapshot (never the history — see writeSnapshotOnly) and
-    // one more partial-stamped closing line land first; the final records
-    // supersede both the moment the smoke returns.
-    if (!subsetRun)
-      writeSnapshotOnly(artifactPath, fullLineJson(None, partial = true))
-    printAtomic(closingTotalLine(total, degraded, suspect, retimeClean,
-      retimeHot, None, band,
-      timed.size, timed.count(_.err.isDefined), sfDir,
-      streamingRegression(None, prevSmoke), wallSec = elapsedSec,
-      skipped = skippedBuf.size, repeats = if (ladder) 1 else 3,
-      partial = true))
-    // the streaming smoke completes BEFORE the final artifact lines are
-    // built (r15): its duration is the env verdict's fixed workload, so the
-    // full line and the closing line carry ONE consistent `env_inflated`.
-    // The smoke's own stdout lines still print last, via emitClosing.
-    // If the reserve trigger already ran it mid-loop (r17), this is a
-    // no-op; otherwise it runs here with the remaining budget as its wait
-    // cap. Only a budget under [[SmokeMinRemainSec]] — where the ~45 s
-    // suite cannot finish anyway — skips it with the explicit deadline
-    // record. NOT a deadline_hit/degraded stamp of its own: a complete
-    // query surface with a budget-skipped smoke is still a clean total —
-    // the skip record (and null env fields) carry the story.
-    if (!smokeSkippedByEnv && !smokeDone) {
-      if (remainingSec < SmokeMinRemainSec) {
-        val line = """{"metric":"streaming_smoke","skipped":true,"reason":"bench deadline"}"""
-        writeStreamingRecord(line, subset = subsetRun)
-        smokeDone = true
-        smokeResult = (Seq(line), None)
-      } else runSmokeNow()
-    }
-    val (smokeLines, health) = smokeResult
-    // plan-independent environment adjudication (VERDICT r14 next-step
-    // #2): the fixed-workload smoke against its own clean history. This is
-    // what the r14 capture was missing: 276 s with every sensor quiet now
-    // stamps env_inflated:true off the 3.8× smoke, readable from the tail.
-    val envInf = envInflatedVerdict(health.flatMap(smokeValueOf), smokeBase)
-    val fullLine = fullLineJson(envInf, partial = false)
-    println(fullLine)
-    // The full line above grows with the query count and the driver keeps
-    // only the tail of the output, so the full map ALSO goes to the repo
-    // artifact + history (VERDICT r8 missing #2), and the headline fields
-    // repeat on SHORT lines the stdout tail always keeps: the top-10
-    // slowest timings, then the total — printed once here for a live
-    // reader, and once more as the FINAL stdout line (since r16 every
-    // child's stderr is diverted to a temp file, so no Spark startup spew
-    // can land in the driver's merged tail at all) so the
-    // driver's tail parser is guaranteed to see it (VERDICT r11 #1), and
-    // once more — compact, no maps — as the final `"metric":"total"` line
-    // (VERDICT r12 #1). Both `total` and `total_short` are therefore
-    // at-least-once / LAST-wins on stdout (ADVICE r12): the repeats carry
-    // identical headline values, so a last-match consumer — which the
-    // fixed-size-tail driver is — reads one consistent record; a
-    // per-metric counter/summer must not run on this stream (documented
-    // in README's bench-contract section).
-    if (subsetRun) writeSubsetArtifact(fullLine) else writeArtifact(fullLine)
-    val slowest = timed.filter(_.err.isEmpty).sortBy(-_.secs).take(10)
-      .map(t => s"${jstr(t.name)}:${t.secs}").mkString("{", ",", "}")
-    println(s"""{"metric":"slowest10","unit":"sec","queries":$slowest,"sf":"$sfDir"}""")
-    val failed = timed.count(_.err.isDefined)
     val adjudication =
       s""""retime_clean":${triState(retimeClean)},"retime_hot":${triState(retimeHot)},""" +
         s""""env_inflated":${triState(envInf)},""" +
         s"""$envRatioJson,"band":$band"""
-    val shortBody =
-      s""""value":$total,"unit":"sec","repeats":${if (ladder) 1 else 3},$budgetFields,"degraded":$degraded,"suspect":$suspect,"suspect_queries":$suspectJson,"suspect_ratios":$ratiosJson,"retimed":$retimedJson,$adjudication,$isolation,"queries_run":${timed.size},"queries_failed":$failed,"queries_skipped":${skippedBuf.size},"load":$loadJson,"sf":"$sfDir""""
-    println(s"""{"metric":"total_short",$shortBody}""")
-    // streaming fields APPENDED so the final line's byte prefix is exactly
+    // the fields the full line and the total_short headline share, in order
+    val common =
+      s""""value":$total,"unit":"sec","repeats":$repeats,$budgetFields,"degraded":$degraded,"suspect":$suspect,"suspect_queries":$suspectJson,"suspect_ratios":$ratiosJson,"retimed":${retimedFieldJson(retimed)},$adjudication,$isolation"""
+    val fullLine =
+      s"""{"metric":"total",$common,"quick_keys":$quickKeysJson,"queries":$qs,"phases":$phasesJson,"query_steal":$qStealJson,"errors":$errs,"load":$loadJson,"cpus":${jstr(cpus)},"sf":"$sfDir"}"""
+    println(fullLine)
+    writeRecord(BenchArtifact, fullLine, subsetRun)
+    val slowest = timed.filter(_.err.isEmpty).sortBy(-_.secs).take(10)
+      .map(t => s"${jstr(t.name)}:${t.secs}").mkString("{", ",", "}")
+    println(s"""{"metric":"slowest10","unit":"sec","queries":$slowest,"sf":"$sfDir"}""")
+    // streaming fields APPENDED so the headline's byte prefix is exactly
     // the historical total_short shape a prefix-matching parser expects
-    val streamingFields = streamingRegression(health, prevSmoke)
-    val finalHeadline =
-      s"""{"metric":"total_short",$shortBody,$streamingFields}"""
+    val headline =
+      s"""{"metric":"total_short",$common,"queries_run":${timed.size},"queries_failed":$failed,"queries_skipped":${skippedBuf.size},"load":$loadJson,"sf":"$sfDir",$streamingFields}"""
     // the ABSOLUTE last statement of main — nothing may print after it
-    // (see emitClosing; BenchLoadSpec pins the order and byte budget)
-    emitClosing(finalHeadline,
+    emitClosing(headline,
       closingTotalLine(total, degraded, suspect, retimeClean, retimeHot,
         envInf, band, timed.size, failed, sfDir, streamingFields,
-        wallSec = elapsedSec, skipped = skippedBuf.size,
-        repeats = if (ladder) 1 else 3),
-      smokeLines, printAtomic)
+        wallSec = elapsedSec, skipped = skippedBuf.size, repeats = repeats),
+      smokeLine.toSeq, printAtomic)
   }
 }

@@ -51,7 +51,12 @@ object HistoryReport {
     // earlier line, and dropRight(1) would have left it inside the
     // baseline, partially judging itself
     val latestIdx = lines.lastIndexWhere(l => parse(l).isDefined)
-    val medians = graft.Bench.historyMedians(lines.take(latestIdx), sf = sf)
+    // judged at the latest entry's own core count, as the bench judges it:
+    // a low-core scaling run in the trail must not feed this config's
+    // medians or band
+    val cpus = graft.Bench.entryCpus(latest)
+    val medians = graft.Bench.historyMedians(lines.take(latestIdx), sf = sf,
+      cpus = cpus)
 
     val sb = new StringBuilder
     // the tree's clean band (VERDICT r13 next-step #6): min–max of the
@@ -66,7 +71,7 @@ object HistoryReport {
     // the contention flags themselves (the live trail's unwindowed band
     // read 89–248 s off one pre-flag-era contaminated entry — useless as
     // a plausibility yardstick).
-    val cleanTotals = graft.Bench.cleanBandTotals(lines, sf)
+    val cleanTotals = graft.Bench.cleanBandTotals(lines, sf, cpus = cpus)
     if (cleanTotals.nonEmpty)
       sb ++= s"== clean band (sf=${sf.getOrElse("-")}, last ${cleanTotals.size} clean): " +
         fnum("%.1f-%.1f", cleanTotals.min, cleanTotals.max) + " s ==\n"

@@ -11,10 +11,11 @@ import graft.streaming.{Funnels, IncrementalDedup, Ingest, KeyedTable, Packing, 
   * `sbt test`, which the grading driver never runs — so their per-round
   * health was invisible in the round artifacts. This main re-exercises the
   * load-bearing contract of each family in seconds (MemoryStream feeds,
-  * tmp-dir stores, deterministic inputs), prints ONE JSON line in the
-  * Bench format, and persists it as `STREAMING.json` next to
-  * `BENCH_FULL.json`. graft.Bench forks it after the timing run, so every
-  * driver bench invocation records streaming health beside query timings.
+  * tmp-dir stores, deterministic inputs) and prints ONE JSON line in the
+  * Bench format. graft.Bench forks it before the timing run and is the one
+  * writer of its record (`STREAMING.json` + `STREAMING_HISTORY.jsonl`, or
+  * `STREAMING_SUBSET.json` for a subset run), so every bench
+  * invocation records streaming health beside query timings.
   *
   * These are SMOKE contracts, not the spec suite: each suite asserts the
   * one property whose regression would corrupt a deployment (resume
@@ -282,7 +283,7 @@ object StreamingSmoke {
     "packing"           -> packing _)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.LocalSpark.session(cpus, "graft-streaming-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime()
@@ -303,15 +304,6 @@ object StreamingSmoke {
       s"""{"metric":"streaming_smoke","value":$secs,"unit":"sec",""" +
         s""""suites":${results.length},"assertions":${results.map(_._2).sum},""" +
         s""""failed":${results.count(_._3.isDefined)},"failures":$failures}"""
-    // artifact BEFORE stdout: the parent's timeout branch treats an
-    // emitted health line as proof the record was persisted (it keeps the
-    // record of a child that reported and then lingered) — printing first
-    // would open a kill window where the line exists but the artifact is
-    // the previous run's. A subset bench parent sets GRAFT_STREAMING_SUBSET
-    // (ADVICE r14 #2): the record then diverts to STREAMING_SUBSET.json so
-    // a dev/e2e subset run never mutates the official streaming trail.
-    graft.Bench.writeStreamingRecord(line, subset =
-      sys.env.get("GRAFT_STREAMING_SUBSET").exists(v => v.nonEmpty && v != "0"))
     println(line)
     if (results.exists(_._3.isDefined)) sys.exit(1)
   }

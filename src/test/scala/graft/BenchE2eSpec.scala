@@ -141,6 +141,8 @@ class BenchE2eSpec extends AnyFunSuite {
       assert(n.get("band").isArray && n.get("band").get(0).asDouble === 1.0,
         s"the clean-history band must ride the closing line: $last")
       assert(last.length < 600, s"closing line over budget: ${last.length}")
+      assert(lines.count(_.startsWith("""{"metric":"total_short",""")) === 1,
+        s"the total_short headline prints once:\n$out")
 
       // a subset run persists its full line to the SIDE artifact only:
       // the graded snapshot must not be overwritten by a partial total and
@@ -193,10 +195,7 @@ class BenchE2eSpec extends AnyFunSuite {
       val (proc, outFile) = forkBench(dir, Map(
         "GRAFT_BENCH_QUERIES" -> cheapSubset.mkString(","),
         "GRAFT_BENCH_CHUNK_SIZE" -> "2",
-        "GRAFT_BENCH_DEADLINE_SEC" -> "10",
-        // smoke NOT env-skipped here: the point is the deadline branch's
-        // own skip record (no JVM is launched for it — still cheap)
-        "GRAFT_SKIP_STREAMING_SMOKE" -> "0"))
+        "GRAFT_BENCH_DEADLINE_SEC" -> "10"))
       val finished = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
       if (!finished) { proc.destroyForcibly(); proc.waitFor() }
       val out = java.nio.file.Files.readString(outFile)
@@ -232,11 +231,6 @@ class BenchE2eSpec extends AnyFunSuite {
       // real, the (never-run) retime pass's is ~0
       assert(full.get("wall_chunks_sec").asDouble > 0.0)
       assert(full.get("wall_retime_sec").asDouble >= 0.0)
-      // a run whose smoke would have been deadline-skipped diverts a skip
-      // record (subset run -> the side file)
-      val smoke = java.nio.file.Files.readString(dir.resolve("STREAMING_SUBSET.json"))
-      assert(smoke.contains(""""skipped":true""") && smoke.contains("deadline"),
-        s"the smoke skip must say WHY: $smoke")
       // provisional closing lines preceded the final one (next-step #2):
       // at least chunk 0's cumulative record, stamped partial
       val partials = out.linesIterator.filter(_.contains(""""partial":true,""")).toSeq
@@ -245,21 +239,18 @@ class BenchE2eSpec extends AnyFunSuite {
     } finally rmTree(dir)
   }
 
-  test("a deadline-bound run still lands a REAL streaming smoke via the reserve (GRAFT_BENCH_E2E=1)") {
+  test("a deadline-bound run still lands a REAL streaming smoke, run first (GRAFT_BENCH_E2E=1)") {
     assume(sys.env.get("GRAFT_BENCH_E2E").exists(v => v.nonEmpty && v != "0"),
-      "set GRAFT_BENCH_E2E=1 to run the bench smoke-reserve e2e")
-    // VERDICT r16 next-step #2: the r16 driver artifact had NO streaming
-    // evidence — the smoke was the deadline's first casualty. With the
-    // reserve, a 100 s budget is ALREADY inside the [60, 180) window at
-    // chunk 0, so the smoke must run FIRST (real record, failed=0), and
-    // the chunks spend what is left. Whether they then all fit is pace-
-    // dependent — the ladder's smoke-free pace numerator means a fast box
-    // can finish every degraded chunk inside one-chunk overshoot
-    // atomicity — so the assertions pin the OUTCOME INVARIANTS, not one
-    // ending: every key accounted (timed or visible skip), deadline_hit
-    // consistent with the skips, wall shares partitioning wall_sec, and
-    // rc 0 with a parseable close.
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-reserve")
+      "set GRAFT_BENCH_E2E=1 to run the bench smoke-first e2e")
+    // The smoke runs FIRST on every run (real record, failed=0), and the
+    // chunks spend what is left of the 100 s budget. Whether they then all
+    // fit is pace-dependent — the ladder's smoke-free pace numerator means
+    // a fast box can finish every degraded chunk inside one-chunk
+    // overshoot atomicity — so the assertions pin the OUTCOME INVARIANTS,
+    // not one ending: every key accounted (timed or visible skip),
+    // deadline_hit consistent with the skips, wall shares partitioning
+    // wall_sec, and rc 0 with a parseable close.
+    val dir = java.nio.file.Files.createTempDirectory("graft-bench-smoke-first")
     try {
       val (proc, outFile) = forkBench(dir, Map(
         "GRAFT_BENCH_QUERIES" -> subset.mkString(","),
@@ -269,20 +260,26 @@ class BenchE2eSpec extends AnyFunSuite {
       val finished = proc.waitFor(10, java.util.concurrent.TimeUnit.MINUTES)
       if (!finished) { proc.destroyForcibly(); proc.waitFor() }
       val out = java.nio.file.Files.readString(outFile)
-      assert(finished, s"reserve run exceeded 10 minutes; tail:\n${out.takeRight(800)}")
+      assert(finished, s"smoke-first run exceeded 10 minutes; tail:\n${out.takeRight(800)}")
       assert(proc.exitValue === 0, s"rc=${proc.exitValue}:\n${out.takeRight(800)}")
       val last = out.linesIterator.toSeq.filter(_.nonEmpty).last
       assert(last.startsWith("""{"metric":"total","value":"""), last)
       val n = mapper.readTree(last)
       // the round's streaming evidence survived the deadline: a REPORTING
-      // record (numeric failed), not a skip — the exact artifact r16 lost
+      // record (numeric failed), not a skip, written by the bench parent
       val smoke = mapper.readTree(
         java.nio.file.Files.readString(dir.resolve("STREAMING_SUBSET.json")))
       assert(smoke.get("failed") != null && smoke.get("failed").isNumber,
-        s"the reserve must yield a REAL smoke record, not a skip: $smoke")
+        s"the smoke must yield a REAL record, not a skip: $smoke")
       assert(smoke.get("failed").asInt === 0, s"smoke suites must be green: $smoke")
       assert(n.get("streaming_failed").asInt === 0,
         s"the closing line must carry the smoke's verdict: $last")
+      // the smoke ran before any chunk, so every provisional line already
+      // carries its verdict
+      val partials = out.linesIterator.filter(_.contains(""""partial":true,""")).toSeq
+      assert(partials.nonEmpty && partials.forall(l =>
+        mapper.readTree(l).get("streaming_failed").asInt == 0),
+        s"provisional lines must carry the smoke's verdict: $partials")
       // every key accounted for — timed or a visible skip, never silent
       val full = mapper.readTree(
         java.nio.file.Files.readString(dir.resolve("BENCH_SUBSET.json")))
@@ -298,9 +295,7 @@ class BenchE2eSpec extends AnyFunSuite {
           s"skip records require the deadline stamp: $full")
       assert(full.get("wall_smoke_sec").asDouble > 0.0,
         "the smoke's wall share is attributed on the full line")
-      // the three wall shares must PARTITION wall_sec (the r17 reserve can
-      // fire at the pre-retime check too; its smoke wall must not be
-      // double-counted into wall_retime_sec)
+      // the three wall shares must PARTITION wall_sec, never over-count it
       val shares = full.get("wall_chunks_sec").asDouble +
         full.get("wall_retime_sec").asDouble +
         full.get("wall_smoke_sec").asDouble

@@ -427,6 +427,32 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(node.get("phases").get("q_ann_ivfpq").get("train_pq").asDouble === 2.5)
   }
 
+  test("a failed chunk child leaves its keys at -1 with its error, never re-run in-process") {
+    // chunks only run forked: the parent must survive to print the closing
+    // line, so a child that cannot start, crashes, or under-reports yields
+    // failed keys (counted in queries_failed), not a second in-parent run
+    val names = Seq("q_a", "q_b")
+    val wire = (ts: Seq[Bench.Timed]) =>
+      (ts.flatMap(Bench.childLines) :+ "GRAFT_CPU 3.0").mkString("\n")
+    val unforkable = "chunk child not forkable: classpath not visible as plain files"
+    val (dead, deadCpu, deadOk) = Bench.chunkTimings(names, Left(unforkable))
+    assert(!deadOk && deadCpu === 0.0)
+    assert(dead === names.map(Bench.Timed(_, -1.0, Some(unforkable))),
+      "every key reads -1 with the child's error")
+    assert(dead.count(_.err.isDefined) === names.size,
+      "each lost key counts as failed")
+    // a child that exited 0 but never reported q_b: the whole chunk fails,
+    // its one reported timing is not half-trusted
+    val (short, _, shortOk) = Bench.chunkTimings(names,
+      Right(wire(Seq(Bench.Timed("q_a", 0.5, None)))))
+    assert(!shortOk)
+    assert(short.map(_.secs) === Seq(-1.0, -1.0))
+    assert(short.forall(_.err.exists(_.contains("did not report every key"))), short)
+    // a full report passes through untouched, CPU self-report included
+    val full = names.map(Bench.Timed(_, 0.5, None))
+    assert(Bench.chunkTimings(names, Right(wire(full))) === ((full, 3.0, true)))
+  }
+
   // ---- streaming history (VERDICT r10 next-step #4) ----------------------
 
   test("streaming records keep a snapshot AND an append-only history") {
@@ -434,8 +460,8 @@ class BenchLoadSpec extends AnyFunSuite {
     try {
       val l1 = """{"metric":"streaming_smoke","value":1.0,"suites":7,"failed":1}"""
       val l2 = """{"metric":"streaming_smoke","value":0.9,"suites":7,"failed":0}"""
-      Bench.writeStreamingRecord(l1, dir.toString)
-      Bench.writeStreamingRecord(l2, dir.toString)
+      Bench.writeRecord(Bench.StreamingArtifact, l1, subset = false, dir.toString)
+      Bench.writeRecord(Bench.StreamingArtifact, l2, subset = false, dir.toString)
       val snap = java.nio.file.Files.readString(dir.resolve("STREAMING.json"))
         .linesIterator.toSeq
       assert(snap === Seq(l2), "snapshot must hold exactly the latest line")
@@ -448,6 +474,23 @@ class BenchLoadSpec extends AnyFunSuite {
         assert(n.get("metric").asText === "streaming_smoke")
         assert(n.get("suites").asInt === 7)
       }
+      // the bench family goes through the same writer: snapshot replaced,
+      // trail appended, and no publish temp file left behind
+      Bench.writeRecord(Bench.BenchArtifact, l1, subset = false, dir.toString)
+      Bench.writeRecord(Bench.BenchArtifact, l2, subset = false, dir.toString)
+      assert(java.nio.file.Files.readString(dir.resolve("BENCH_FULL.json"))
+        .linesIterator.toSeq === Seq(l2))
+      assert(java.nio.file.Files.readString(dir.resolve("BENCH_HISTORY.jsonl"))
+        .linesIterator.toSeq === Seq(l1, l2))
+      val names = scala.jdk.CollectionConverters.IteratorHasAsScala(
+        java.nio.file.Files.list(dir).iterator()).asScala
+        .map(_.getFileName.toString).toSet
+      assert(names === Set("STREAMING.json", "STREAMING_HISTORY.jsonl",
+        "BENCH_FULL.json", "BENCH_HISTORY.jsonl"), s"stray files: $names")
+      // an unwritable directory is reported, never thrown: the run that
+      // produced the line must still print its closing sequence
+      Bench.writeRecord(Bench.BenchArtifact, l1, subset = false,
+        dir.resolve("missing").toString)
     } finally {
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
@@ -456,20 +499,24 @@ class BenchLoadSpec extends AnyFunSuite {
 
   // ---- the driver-parseable closing sequence (VERDICT r11 next-step #1) --
 
+  private val closingHeadline = """{"metric":"total_short","value":1.0,"sf":"/tmp/sf"}"""
+  private val closingTotal = """{"metric":"total","value":1.0,"sf":"/tmp/sf"}"""
+  private val closingSmoke = Seq("""{"metric":"streaming_smoke","failed":0}""")
+
+  /** Everything `emitClosing` writes, in order. */
+  private def emittedClosing(smokeLines: Seq[String]): Seq[String] = {
+    val got = scala.collection.mutable.ArrayBuffer.empty[String]
+    Bench.emitClosing(closingHeadline, closingTotal, smokeLines, got += _)
+    got.toSeq
+  }
+
   test("the closing stdout sequence ends on the compact total, after headline and smoke") {
-    // every BENCH_r*.json through r12 was parsed:null — r8–r11 because
-    // startup spew pushed the metric lines out of the driver's 2000-char
-    // tail, r12 (headline already last) because the parser rejects sbt's
-    // log prefix and plausibly keys on "metric":"total". Main prints
-    // through closingLines, whose contract is: smoke lines, then the
-    // total_short headline, then the compact total as the ABSOLUTE last
-    // program output.
-    val headline = """{"metric":"total_short","value":1.0,"sf":"/tmp/sf"}"""
-    val closing  = """{"metric":"total","value":1.0,"sf":"/tmp/sf"}"""
-    val smoke = Seq("""{"metric":"streaming_smoke","failed":0}""")
-    assert(Bench.closingLines(headline, closing, smoke) ===
-      smoke ++ Seq(headline, closing))
-    assert(Bench.closingLines(headline, closing, Nil) === Seq(headline, closing),
+    // a tail parser that sees a log prefix or a metric line pushed out of
+    // its window reads nothing; main's closing order is therefore fixed:
+    // smoke lines, then the total_short headline, then the compact total
+    assert(emittedClosing(closingSmoke) ===
+      closingSmoke ++ Seq(closingHeadline, closingTotal))
+    assert(emittedClosing(Nil) === Seq(closingHeadline, closingTotal),
       "a skipped smoke still ends headline-then-total")
   }
 
@@ -565,20 +612,16 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("emitClosing writes the closing sequence and nothing else, ending on the total") {
-    // main's last statement is emitClosing; this pins that the emitted
-    // stream IS closingLines' order — smoke, headline, compact total —
-    // with the total as the final write (the driver's tail parser keys on
-    // it; anything printed after it would resurrect parsed:null)
-    val headline = """{"metric":"total_short","value":1.0,"sf":"/tmp/sf"}"""
-    val closing  = """{"metric":"total","value":1.0,"sf":"/tmp/sf"}"""
-    val smoke = Seq("""{"metric":"streaming_smoke","failed":0}""")
-    val got = scala.collection.mutable.ArrayBuffer.empty[String]
-    Bench.emitClosing(headline, closing, smoke, got += _)
-    assert(got.toSeq === smoke ++ Seq(headline, closing))
-    assert(got.last === closing, "the compact total must be the final write")
-    val gotNoSmoke = scala.collection.mutable.ArrayBuffer.empty[String]
-    Bench.emitClosing(headline, closing, Nil, gotNoSmoke += _)
-    assert(gotNoSmoke.last === closing)
+    // main's last statement is emitClosing, and the whole tail it writes
+    // is: the smoke's record line, ONE total_short headline, then the
+    // compact total as the ABSOLUTE last program output (a tail parser
+    // keys on it; anything printed after it breaks the parse)
+    val got = emittedClosing(closingSmoke)
+    assert(got.size === closingSmoke.size + 2, s"stray writes: $got")
+    assert(got.count(_.startsWith("""{"metric":"total_short",""")) === 1,
+      "total_short prints once")
+    assert(got.last === closingTotal, "the compact total must be the final write")
+    assert(emittedClosing(Nil).last === closingTotal)
   }
 
   test("retimed re-readings ride the headline as an additive map") {
@@ -725,6 +768,25 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(dirty.contains("no clean entries"), dirty)
   }
 
+  test("HistoryReport judges at the latest entry's core count, like the bench") {
+    // the bench filters its medians and band by core count; a report that
+    // did not would disagree with the flags the bench emitted whenever a
+    // low-core scaling run sits in the trail
+    def line(v: Double, qa: Double, cpus: String) =
+      s"""{"metric":"total","value":$v,"unit":"sec","degraded":false,""" +
+        s""""suspect":false,"queries":{"q_a":$qa},"cpus":"$cpus","sf":"/tmp/sf"}"""
+    // a 32-core trail with ONE clean-stamped, inflated 8-core entry
+    val trail = Seq(line(100.0, 0.4, "32"), line(100.0, 0.6, "32"),
+      line(200.0, 2.0, "8"), line(100.0, 0.5, "32"), line(100.0, 1.0, "32"))
+    val rep = graft.tools.HistoryReport.report(trail)
+    assert(rep.contains("clean band (sf=/tmp/sf, last 4 clean): 100.0-100.0 s"),
+      s"the 8-core 200 s total must not stretch the band: $rep")
+    assert(rep.contains("med    0.50 s  x 2.00"),
+      s"q_a must be judged against the 32-core median only: $rep")
+    assert(Bench.historyMedians(trail.init, sf = Some("/tmp/sf"),
+      cpus = Some("32"))("q_a") === 0.5, "the bench's own median agrees")
+  }
+
   test("HistoryReport surfaces retimed re-readings beside the flagged timing") {
     val latest = s"""{"metric":"total","value":9.9,"unit":"sec","suspect":true,""" +
       s""""queries":{"q_collocations":1.2,"q_hash_sample":0.16},""" +
@@ -847,9 +909,9 @@ class BenchLoadSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-subset")
     try {
       val official = """{"metric":"streaming_smoke","value":27.0,"failed":0}"""
-      Bench.writeStreamingRecord(official, dir.toString)
+      Bench.writeRecord(Bench.StreamingArtifact, official, subset = false, dir.toString)
       val sub = """{"metric":"streaming_smoke","value":3.0,"failed":0}"""
-      Bench.writeStreamingRecord(sub, dir.toString, subset = true)
+      Bench.writeRecord(Bench.StreamingArtifact, sub, subset = true, dir.toString)
       assert(java.nio.file.Files.readString(dir.resolve("STREAMING_SUBSET.json"))
         .linesIterator.toSeq === Seq(sub))
       assert(java.nio.file.Files.readString(dir.resolve("STREAMING.json"))
@@ -859,6 +921,13 @@ class BenchLoadSpec extends AnyFunSuite {
         .linesIterator.toSeq === Seq(official),
         "a subset smoke must never append to the official trail " +
           "(it would feed smokeBaseline and the round review)")
+      // a subset bench line likewise lands only in its side file
+      Bench.writeRecord(Bench.BenchArtifact, sub, subset = true, dir.toString)
+      assert(java.nio.file.Files.readString(dir.resolve("BENCH_SUBSET.json"))
+        .linesIterator.toSeq === Seq(sub))
+      assert(!java.nio.file.Files.exists(dir.resolve("BENCH_FULL.json")) &&
+        !java.nio.file.Files.exists(dir.resolve("BENCH_HISTORY.jsonl")),
+        "a subset bench line must never touch the official pair")
     } finally {
       java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
@@ -997,41 +1066,6 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(Bench.rotatedChunks(Seq(Seq("a")), 7) === Seq(Seq("a")))
     assert(Bench.rotatedChunks(Seq.empty[Seq[String]], 3) ===
       Seq.empty[Seq[String]])
-  }
-
-  test("the smoke reserve triggers mid-run inside [60 s, 180 s) (r17)") {
-    // VERDICT r16 next-step #2: the smoke was the deadline's first
-    // casualty (r16's STREAMING.json = "skipped: bench deadline"). It now
-    // runs the moment the remaining budget first drops under the reserve —
-    // before the last chunks spend it — and only a budget the ~45 s suite
-    // cannot finish in (< 60 s) still yields the explicit skip record.
-    assert(!Bench.smokeDueNow(1000.0), "a comfortable budget waits for the end")
-    assert(Bench.smokeDueNow(179.9))
-    assert(!Bench.smokeDueNow(180.0), "at the reserve is not yet inside it")
-    assert(Bench.smokeDueNow(60.0), "the floor is inclusive")
-    assert(!Bench.smokeDueNow(59.9),
-      "under the floor the smoke cannot finish — deadline skip record instead")
-    assert(!Bench.smokeDueNow(-5.0))
-  }
-
-  test("the smoke reserve is pace-predictive: a wide chunk cannot jump the window") {
-    // The between-chunks check sees remaining=190 s (outside the static
-    // window); a contended chunk then takes 250 s and the next check
-    // wakes at remaining<60 s — smoke lost. The predictive trigger runs
-    // it NOW when the measured pace projects the next chunk landing the
-    // budget below the runnable floor.
-    assert(Bench.smokeDueNow(190.0, projectedChunkSec = 250.0),
-      "projected to jump clean over the window — last chance, due now")
-    assert(!Bench.smokeDueNow(190.0, projectedChunkSec = 100.0),
-      "projected to land INSIDE the window — the next check catches it")
-    assert(!Bench.smokeDueNow(400.0, projectedChunkSec = 120.0),
-      "comfortable budget, normal pace — waits for the end")
-    assert(Bench.smokeDueNow(400.0, projectedChunkSec = 390.0),
-      "even a comfortable budget is due when one chunk would spend it all")
-    assert(!Bench.smokeDueNow(59.9, projectedChunkSec = 250.0),
-      "already under the floor — unrunnable regardless of projection")
-    assert(!Bench.smokeDueNow(1000.0),
-      "no pace measured yet (projection 0) — static window only")
   }
 
   test("a provisional closing line is stamped partial and parses as the same shape") {

@@ -5,13 +5,12 @@ import org.scalacheck.{Gen, Prop, Properties}
 /** ScalaCheck properties for the chunk-fork wire format — the
   * `GRAFT_Q`/`GRAFT_PH`/`GRAFT_QS`/`GRAFT_CPU` lines [[Bench.childLines]]
   * emits and [[Bench.parseChunk]] reads back. This parse is load-bearing
-  * for the bench's process isolation: a child line the parent cannot read
-  * silently demotes the chunk to the in-process fallback (documented, but
-  * a formatting regression would shed the fresh-JVM isolation on EVERY
-  * chunk with nothing red anywhere). The laws: render→parse is identity
-  * over every reachable [[Bench.Timed]]; non-wire noise on the stream is
-  * ignored; a missing or torn report yields None (fallback), never a
-  * partial chunk.
+  * for the bench's process isolation: a child report the parent cannot
+  * read fails the whole chunk (every key −1, see [[Bench.chunkTimings]]),
+  * so a formatting regression would fail EVERY chunk. The laws:
+  * render→parse is identity over every reachable [[Bench.Timed]]; non-wire
+  * noise on the stream is ignored; a missing or torn report yields None
+  * (a failed chunk), never a partial chunk.
   */
 object BenchWireProperties extends Properties("benchWire") {
 
