@@ -131,11 +131,19 @@ object Bench {
   private[graft] def isHot(cl: ChunkLoad, cores: Int): Boolean =
     cl.externalCores > cores / 4.0 || cl.stealPct > 2.0
 
-  /** Minimal JSON string escape for builder-controlled content (query
-    * names, whitespace-collapsed error text).
+  /** JSON string literal: backslash, quote and EVERY control char (< 0x20)
+    * escaped. Whitespace collapse leaves others (an ANSI ESC in exception
+    * text) that strict parsers reject, voiding the whole record.
     */
-  private[graft] def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** One timed query result: median-of-3 seconds (−1 on failure), the
     * first error message if any repeat failed, and — for the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.DotProductLong.dotLong
+import graft.streaming.{Fs, Layers}
 import graft.queries.{Dialect, SimilarityQueries => SQ}
 
 /** Persisted IVF ANN index — the SERVED form of the graded `q_ann_ivf` scan
@@ -64,19 +65,13 @@ object AnnIndex {
     out match { case Right(bv) => (av, bv); case Left(e) => throw e }
   }
 
-  // --- incremental-append batch protocol (VERDICT r6 next-step #2) -------
+  // --- incremental-append batch protocol --------------------------------
   //
-  // Both stores are laid out `batch=<id>/<derived key>=<v>`: a full build
-  // writes one base layer `batch=-1`, [[appendBatch]]/[[appendBatchLsh]]
-  // add one layer per micro-batch with dynamic partition overwrite scoped
-  // to their own batch id (the IncrementalDedup.processBatch move), and a
-  // `_APPLIED` pointer file — published tmp + atomic rename-overwrite
-  // through the Hadoop FileSystem API like KeyedTable's `_LATEST` — records
-  // the highest applied batch id. Replay of an applied
-  // id is a no-op; a crash BETWEEN the layer write and the pointer swap is
-  // healed by the replay overwriting exactly its own partitions with the
-  // same deterministically-assigned rows. Spark readers ignore `_`-prefixed
-  // files, so the pointer can live inside the store directory.
+  // Every store is a [[Layers]] store laid out `batch=<id>/<derived key>=<v>`:
+  // a full build is layer −1, [[appendBatch]]/[[appendBatchLsh]]/
+  // [[appendBatchPq]] add one replay-guarded layer per micro-batch, and the
+  // compactions fold layers into one generation (crash discipline: the
+  // [[Layers]] scaladoc).
   //
   // Appends keep the build-time codebook/planes FIXED (an IVF list grows,
   // its centroid does not move) — search cost per probe stays O(1) in the
@@ -85,63 +80,30 @@ object AnnIndex {
   // band index); search dedups candidates by (probe, vec_id), and a full
   // [[build]]/[[buildLsh]] is the compaction that restores exactness.
 
-  // pointer ops route through the Hadoop FileSystem API ([[Fs]]) so the
-  // index stores deploy on HDFS/object stores unchanged (VERDICT r7 #1)
-  private def appliedPtr(store: String) = store + "/_APPLIED"
-
-  private def lastApplied(s: SparkSession, store: String): Long =
-    graft.streaming.Fs.readString(s, appliedPtr(store))
-      .map(_.trim.toLong).getOrElse(-1L)
-
-  private def markApplied(s: SparkSession, store: String, batchId: Long): Unit = {
-    val tmp = store + s"/_APPLIED.tmp.$batchId"
-    graft.streaming.Fs.writeString(s, tmp, batchId.toString)
-    graft.streaming.Fs.renameOverwrite(s, tmp, appliedPtr(store))
-  }
-
-  /** Generational small-files compaction for an appended store (VERDICT r7
-    * #4): [[appendBatch]]/[[appendBatchLsh]] accumulate one file-set per
-    * batch inside each `cid=`/`pb=` partition forever — this folds every
-    * layer into ONE fresh reserved layer `batch=-g` (next unused negative
-    * id, like compactBands/compactPacks) and only then sweeps the others.
-    * Crash anywhere leaves a read-equivalent SUPERSET: mid-write, staged
-    * files are invisible and old layers intact; mid-sweep, survivors'
-    * rows are exact duplicates of new-layer rows, which search's
-    * per-(probe, vec_id) dedup already tolerates, and the next compaction
-    * folds away. The full-row dropDuplicates collapses identical
-    * re-appended rows; a CHANGED re-appended vector keeps both its rows —
-    * the store's documented staleness, restored to exact by a full
-    * [[build]]/[[buildLsh]]. The `_APPLIED` pointer is untouched, so the
-    * replay protocol continues across compactions. `clusterBy` re-imposes
-    * a writer's one-file-per-list layout on the folded generation
-    * (`repartition(n, col)` before the partitioned write): without it the
-    * dropDuplicates shuffle hands every task a slice of every partition,
-    * so the first compaction of the PQ store would regress each `cid=`
-    * directory from ONE file back to the tasks×lists lattice the build
-    * writer exists to prevent — a pruned search then opens
-    * shuffle-partitions files per probed list instead of one.
+  /** Generational small-files compaction for an appended store: fold every
+    * layer into one fresh generation. A crashed sweep's survivors are exact
+    * duplicates of new-layer rows, which search's per-(probe, vec_id) dedup
+    * tolerates. The full-row dropDuplicates collapses identical re-appended
+    * rows; a CHANGED re-appended vector keeps both its rows — the store's
+    * documented staleness, restored to exact by a full [[build]]/[[buildLsh]].
+    * `clusterBy` re-imposes a writer's one-file-per-list layout on the
+    * folded generation (`repartition(n, col)` before the partitioned
+    * write): without it the dropDuplicates shuffle hands every task a slice
+    * of every partition, so the first compaction of the PQ store would
+    * regress each `cid=` directory from ONE file back to the tasks×lists
+    * lattice the build writer exists to prevent.
     */
   private[graft] def compactStore(s: SparkSession, store: String,
       partCols: Seq[String], sweep: Boolean,
       minus: Option[DataFrame] = None,
-      clusterBy: Option[(Int, String)] = None): Unit = {
-    if (!graft.streaming.Fs.isDirectory(s, store)) return
-    if (graft.streaming.Fs.layerIds(s, store).isEmpty) return
-    // the reserve-gen / write / sweep ordering is the shared crash-safety
-    // invariant — single-sourced in Fs.compactLayers with the band index
-    // and the pack store
-    graft.streaming.Fs.compactLayers(s, store, sweep) { gen =>
-      val folded = s.read.parquet(store)
-        .drop("batch").dropDuplicates()
+      clusterBy: Option[(Int, String)] = None): Unit =
+    Layers.read(s, store).foreach { rows =>
+      val folded = rows.dropDuplicates()
       val cleaned =
         minus.fold(folded)(t => folded.join(broadcast(t), Seq("vec_id"), "left_anti"))
-      clusterBy.fold(cleaned) { case (n, c) => cleaned.repartition(n, col(c)) }
-        .withColumn("batch", lit(gen))
-        .write.mode("append")
-        .partitionBy("batch" +: partCols: _*)
-        .parquet(store)
+      Layers.fold(clusterBy.fold(cleaned) { case (n, c) => cleaned.repartition(n, col(c)) },
+        store, sweep, partCols: _*)
     }
-  }
 
   /** The data stores present under `indexDir`. The tombstone set is SHARED
     * by all of them (one `tombs/` per index dir, consumed by search,
@@ -153,8 +115,7 @@ object AnnIndex {
     */
   private def dataStores(s: SparkSession, indexDir: String): Seq[String] =
     Seq(vectorsPath(indexDir), lshPath(indexDir), pqCodesPath(indexDir))
-      .filter(p => graft.streaming.Fs.isDirectory(s, p) &&
-        graft.streaming.Fs.layerIds(s, p).nonEmpty)
+      .filter(p => Layers.ids(s, p).nonEmpty)
 
   /** Clear the shared tombstones iff `store` is the ONLY data store under
     * `indexDir`; co-located stores keep them (stale-but-safe — the search
@@ -213,11 +174,11 @@ object AnnIndex {
   //
   // The index's delete path (the takedown/GDPR shape): deletes arrive as
   // vec_id batches under the same layered protocol as appends — one
-  // `tombs/batch=<id>/` parquet per batch, replay-guarded by the store's
-  // own `_APPLIED` pointer. Search subtracts the tombstone set from the
-  // candidate rows (an anti-join against a ≤ #deletes broadcast side), so
-  // a delete is VISIBLE immediately without touching any data layer;
-  // compaction later drops the rows physically and clears the tombstones.
+  // replay-guarded `tombs/` layer per batch. Search subtracts the tombstone
+  // set from the candidate rows (an anti-join against a ≤ #deletes
+  // broadcast side), so a delete is VISIBLE immediately without touching
+  // any data layer; compaction later drops the rows physically and clears
+  // the tombstones.
   // Crash discipline: the fold writes the cleaned generation first; a crash
   // before the tombstone clear leaves tombstones whose anti-join is a
   // no-op over already-clean data. A vec_id re-appended AFTER its delete
@@ -230,38 +191,19 @@ object AnnIndex {
     * Returns false for an already-applied batch id.
     */
   def deleteIds(s: SparkSession, indexDir: String, ids: DataFrame,
-      batchId: Long): Boolean = {
-    val store = tombsPath(indexDir)
-    if (lastApplied(s, store) >= batchId) false
-    else {
-      ids.select("vec_id").distinct()
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(store)
-      markApplied(s, store, batchId)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    Layers.appendOnce(s, tombsPath(indexDir), batchId)(ids.select("vec_id").distinct())
 
   /** The current tombstone set, if any — ≤ #deleted rows, broadcastable. */
-  private def tombstones(s: SparkSession, indexDir: String): Option[DataFrame] = {
-    val store = tombsPath(indexDir)
-    if (graft.streaming.Fs.isDirectory(s, store) &&
-        graft.streaming.Fs.layerIds(s, store).nonEmpty)
-      Some(s.read.parquet(store).select("vec_id").distinct())
-    else None
-  }
+  private def tombstones(s: SparkSession, indexDir: String): Option[DataFrame] =
+    Layers.read(s, tombsPath(indexDir)).map(_.select("vec_id").distinct())
 
   /** Drop tombstone LAYERS after a compaction folded them into the data
-    * (the `_APPLIED` pointer survives, so replayed delete batch ids are
-    * still refused after the clear). The clear discipline itself is
-    * single-sourced in [[graft.streaming.Fs.clearLayers]] with the dedup
-    * band index's tombstones.
+    * (the applied pointer survives, so replayed delete batch ids are still
+    * refused after the clear).
     */
   private def clearTombstones(s: SparkSession, indexDir: String): Unit =
-    graft.streaming.Fs.clearLayers(s, tombsPath(indexDir))
+    Layers.clear(s, tombsPath(indexDir))
 
   /** Subtract the tombstone set from a candidate frame (no-op when none). */
   private def minusTombs(s: SparkSession, indexDir: String,
@@ -269,20 +211,11 @@ object AnnIndex {
     tombstones(s, indexDir).fold(candidates)(t =>
       candidates.join(broadcast(t), Seq("vec_id"), "left_anti"))
 
-  /** Assign under a FIXED codebook and write one batch layer. Shared by the
-    * full build (layer −1, static overwrite clears everything else) and the
-    * incremental appends (dynamic overwrite of own partitions only).
+  /** One IVF layer's rows: each vector assigned under a FIXED codebook.
+    * Shared by the full build and the incremental appends.
     */
-  private def writeIvfLayer(vectors: DataFrame, cents: Seq[Seq[Long]],
-      indexDir: String, batchId: Long, full: Boolean): Unit = {
-    val w = vectors
-      .withColumn("cid", SQ.cidColOf(cents))
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .partitionBy("batch", "cid")
-      .parquet(vectorsPath(indexDir))
-  }
+  private def ivfRows(vectors: DataFrame, cents: Seq[Seq[Long]]): DataFrame =
+    vectors.withColumn("cid", SQ.cidColOf(cents))
 
   /** Full build from an explicit corpus frame under an explicit codebook —
     * the base-layer writer [[build]] delegates to, and the spec's honest
@@ -302,8 +235,7 @@ object AnnIndex {
     */
   private[graft] def buildFrom(s: SparkSession, vectorsRaw: DataFrame,
       cents: Seq[(Int, Seq[Long])], indexDir: String): Unit = {
-    writeIvfLayer(corpusOf(vectorsRaw), cents.map(_._2), indexDir, -1L, full = true)
-    markApplied(s, vectorsPath(indexDir), -1L)
+    Layers.rebuild(ivfRows(corpusOf(vectorsRaw), cents.map(_._2)), vectorsPath(indexDir), "cid")
     import s.implicits._
     cents.toDF("cid", "cq")
       .coalesce(1).write.mode("overwrite").parquet(codebookPath(indexDir))
@@ -311,8 +243,8 @@ object AnnIndex {
 
   /** Train (2 fixed Lloyd iterations from the deterministic seeds), assign,
     * and write the index under `indexDir` — also the COMPACTION for a store
-    * that has accumulated append layers (static overwrite folds them into
-    * the fresh base layer, and the applied pointer resets with the store).
+    * that has accumulated append layers (the rebuild replaces them and
+    * resets the applied pointer).
     */
   def build(s: SparkSession, sfDir: String, indexDir: String): Unit =
     buildFrom(s, Tables.embeddings(s, sfDir), SQ.trainCodebook(s, sfDir), indexDir)
@@ -322,16 +254,9 @@ object AnnIndex {
     * writes nothing) for an already-applied batch id.
     */
   def appendBatch(s: SparkSession, indexDir: String, vectors: DataFrame,
-      batchId: Long): Boolean = {
-    val store = vectorsPath(indexDir)
-    if (lastApplied(s, store) >= batchId) false
-    else {
-      writeIvfLayer(corpusOf(vectors), codebook(s, indexDir), indexDir,
-        batchId, full = false)
-      markApplied(s, store, batchId)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    Layers.appendOnce(s, vectorsPath(indexDir), batchId, "cid")(
+      ivfRows(corpusOf(vectors), codebook(s, indexDir)))
 
   /** Top-3 cosine neighbors for `probes` (vec_id, q, n2 — the external query
     * workload) against the stored index: each probe explodes its NProbe
@@ -434,18 +359,14 @@ object AnnIndex {
 
   private def lshPath(dir: String) = dir + "/lsh"
 
-  /** Bits-per-table the store was BUILT with, persisted as a `_BITS` marker
-    * inside the store (readers skip `_`-prefixed files): probe-side
-    * bucketization must replay the build-side geometry exactly, so searches
-    * and appends read it from the store rather than trusting the caller —
-    * the [[SQ.planBits]] growth knob made executable (VERDICT r8 #3).
-    * Absent marker = the graded default (pre-knob stores).
+  /** Bits-per-table the store was BUILT with, persisted as a marker beside
+    * the store: probe-side bucketization must replay the build-side
+    * geometry exactly, so searches and appends read it from the store
+    * rather than trusting the caller — the [[SQ.planBits]] growth knob made
+    * executable. Absent marker = the graded default.
     */
   private def lshBits(s: SparkSession, indexDir: String): Int =
-    graft.streaming.Fs.readString(s, lshBitsPath(indexDir))
-      // legacy location (pre-r11 stores kept the marker INSIDE the store
-      // dir, where a full rebuild's static overwrite deletes it)
-      .orElse(graft.streaming.Fs.readString(s, lshPath(indexDir) + "/_BITS"))
+    Fs.readString(s, lshBitsPath(indexDir))
       .map(_.trim.toInt).getOrElse(SQ.BitsPerTable)
 
   /** Geometry marker OUTSIDE the store dir, so it survives the store's
@@ -463,19 +384,6 @@ object AnnIndex {
       .select(col("vec_id"), col("q"), col("n2"),
         posexplode(col("bs")).as(Seq("t", "bucket")))
       .withColumn("pb", col("t") * bucketSpan(bits) + col("bucket"))
-
-  /** One batch layer of the LSH store — same shape as [[writeIvfLayer]];
-    * bucketization is the fixed sign-plane construction, so no codebook.
-    */
-  private def writeLshLayer(vectors: DataFrame, indexDir: String,
-      batchId: Long, full: Boolean, bits: Int): Unit = {
-    val w = lshRows(vectors, bits)
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .partitionBy("batch", "pb")
-      .parquet(lshPath(indexDir))
-  }
 
   /** Full LSH build from an explicit corpus frame — see [[buildFrom]].
     * `bits` defaults to the graded geometry; deployments size it with
@@ -497,9 +405,8 @@ object AnnIndex {
     // empty, appends bucketize correctly); for a rebuild that CHANGES bits
     // the window shrinks to the instant before the overwrite's delete,
     // and a crashed rebuild's re-run restores consistency either way.
-    graft.streaming.Fs.writeString(s, lshBitsPath(indexDir), bits.toString)
-    writeLshLayer(corpus, indexDir, -1L, full = true, bits)
-    markApplied(s, lshPath(indexDir), -1L)
+    Fs.writeString(s, lshBitsPath(indexDir), bits.toString)
+    Layers.rebuild(lshRows(corpus, bits), lshPath(indexDir), "pb")
   }
 
   def buildLsh(s: SparkSession, sfDir: String, indexDir: String): Unit =
@@ -528,16 +435,9 @@ object AnnIndex {
     * layer is bucketized with the store's OWN persisted geometry.
     */
   def appendBatchLsh(s: SparkSession, indexDir: String, vectors: DataFrame,
-      batchId: Long): Boolean = {
-    val store = lshPath(indexDir)
-    if (lastApplied(s, store) >= batchId) false
-    else {
-      writeLshLayer(corpusOf(vectors), indexDir, batchId, full = false,
-        lshBits(s, indexDir))
-      markApplied(s, store, batchId)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    Layers.appendOnce(s, lshPath(indexDir), batchId, "pb")(
+      lshRows(corpusOf(vectors), lshBits(s, indexDir)))
 
   /** Each probe exploded to its Hamming-1 multi-probe (t, bucket) set —
     * the own bucket plus every single-bit flip, as in the graded query.
@@ -601,27 +501,20 @@ object AnnIndex {
   private def pqCodesPath(dir: String) = dir + "/pqcodes"
   private def pqBookPath(dir: String)  = dir + "/pqbook"
 
-  /** One codes layer: (vec_id, codes, cid) under the fixed codebooks.
-    * Repartitioned by list id before the write so each `cid=` directory
-    * gets ONE file instead of one per upstream task — the pruned search
-    * then lists/opens NProbe files, and the store never accumulates the
-    * tasks × lists small-file lattice that a 1000-executor writer would
+  /** One codes layer's rows: (vec_id, codes, cid) under the fixed
+    * codebooks. Repartitioned by list id before the write so each `cid=`
+    * directory gets ONE file instead of one per upstream task — the pruned
+    * search then lists/opens NProbe files, and the store never accumulates
+    * the tasks × lists small-file lattice that a 1000-executor writer would
     * otherwise produce.
     */
-  private def writePqLayer(vectors: DataFrame, coarse: Seq[Seq[Long]],
-      pq: Seq[Seq[(Int, Seq[Long])]], indexDir: String, batchId: Long,
-      full: Boolean): Unit = {
-    val w = vectors
+  private def pqRows(vectors: DataFrame, coarse: Seq[Seq[Long]],
+      pq: Seq[Seq[(Int, Seq[Long])]]): DataFrame =
+    vectors
       .withColumn("cid", SQ.cidColOf(coarse))
       .withColumn("codes", SQ.pqCodesCol(pq))
       .select("vec_id", "codes", "cid")
       .repartition(coarse.size, col("cid"))
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-    (if (full) w else w.option("partitionOverwriteMode", "dynamic"))
-      .partitionBy("batch", "cid")
-      .parquet(pqCodesPath(indexDir))
-  }
 
   /** Build the composed index from an explicit ALREADY-PROJECTED corpus
     * frame (vec_id, q, n2) and explicit codebooks — the shared writer both
@@ -632,8 +525,7 @@ object AnnIndex {
   private def buildIvfPqFromCorpus(s: SparkSession, corpus: DataFrame,
       coarse: Seq[(Int, Seq[Long])], pq: Seq[Seq[(Int, Seq[Long])]],
       indexDir: String): Unit = {
-    writePqLayer(corpus, coarse.map(_._2), pq, indexDir, -1L, full = true)
-    markApplied(s, pqCodesPath(indexDir), -1L)
+    Layers.rebuild(pqRows(corpus, coarse.map(_._2), pq), pqCodesPath(indexDir), "cid")
     import s.implicits._
     // the two codebook writes are independent tiny (coalesce(1)) jobs whose
     // cost is scheduling + commit protocol, not data — overlapped; both are
@@ -724,16 +616,9 @@ object AnnIndex {
 
   /** Index one micro-batch of new vectors under the FIXED codebooks. */
   def appendBatchPq(s: SparkSession, indexDir: String, vectors: DataFrame,
-      batchId: Long): Boolean = {
-    val store = pqCodesPath(indexDir)
-    if (lastApplied(s, store) >= batchId) false
-    else {
-      writePqLayer(corpusOf(vectors), codebook(s, indexDir),
-        pqCodebooks(s, indexDir), indexDir, batchId, full = false)
-      markApplied(s, store, batchId)
-      true
-    }
-  }
+      batchId: Long): Boolean =
+    Layers.appendOnce(s, pqCodesPath(indexDir), batchId, "cid")(
+      pqRows(corpusOf(vectors), codebook(s, indexDir), pqCodebooks(s, indexDir)))
 
   /** Fold the codes store's batch layers; tombstoned vectors drop, and the
     * tombstones clear when this is the dir's only store (see
@@ -745,12 +630,12 @@ object AnnIndex {
     clearTombstonesIfSole(s, indexDir, pqCodesPath(indexDir))
   }
 
-  /** The PQ store's one-file-per-list fold layout — writePqLayer's
+  /** The PQ store's one-file-per-list fold layout — pqRows'
     * `repartition(lists, cid)`, re-derived from the stored coarse codebook
     * (None when the dir has no codebook to read, e.g. a bare-store test).
     */
   private def pqClusterBy(s: SparkSession, indexDir: String): Option[(Int, String)] =
-    if (graft.streaming.Fs.isDirectory(s, codebookPath(indexDir)))
+    if (Fs.isDirectory(s, codebookPath(indexDir)))
       Some((codebook(s, indexDir).size, "cid"))
     else None
 

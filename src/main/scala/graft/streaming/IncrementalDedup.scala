@@ -19,16 +19,14 @@ import graft.queries.DedupQueries
   *    a replayed micro-batch neither duplicates signatures nor re-emits
   *    pairs;
   *  - a band-row INDEX at `<dir>/bands`: the 4 (band, bh) rows per
-  *    signature, written once when the document is first indexed, laid out
-  *    as parquet partitioned by (batch, pb) where pb = hash(bh) mod
-  *    [[BandBuckets]]. A micro-batch collects the ≤[[BandBuckets]] pb
-  *    values its own band hashes fall into and reads ONLY those partitions
-  *    (partition pruning, pinned by the spec) — the VERDICT r5 top item:
-  *    the previous form re-derived all 4 band md5s from every stored
-  *    signature on every batch, an O(corpus) stage per batch. Replay-safe
-  *    by construction: the write uses dynamic partition overwrite scoped to
-  *    `batch=<id>`, so a crash between the band write and the signature
-  *    merge just overwrites the same partitions on retry.
+  *    signature, written once when the document is first indexed, as a
+  *    [[Layers]] store partitioned by pb = hash(bh) mod [[BandBuckets]]
+  *    within each batch layer. A micro-batch collects the ≤[[BandBuckets]]
+  *    pb values its own band hashes fall into and reads ONLY those
+  *    partitions (partition pruning, pinned by the spec) — never an
+  *    O(corpus) re-derivation of every stored signature's bands. A crash
+  *    between the band write and the signature merge replays onto the
+  *    same layer ([[Layers.append]]).
   *
   * A (band, bh) bucket lies wholly inside one pb partition (pb is a
   * function of bh alone), so for every bucket containing at least one new
@@ -85,8 +83,8 @@ object IncrementalDedup {
     */
   private[graft] def storedBands(spark: org.apache.spark.sql.SparkSession,
                                  bands: String, touched: Seq[Int], batchId: Long): DataFrame =
-    spark.read.parquet(bands)
-      .filter(col("batch") =!= lit(batchId) && col("pb").isin(touched: _*))
+    Layers.readExcept(spark, bands, batchId)
+      .filter(col("pb").isin(touched: _*))
       .select(col("doc_id"), col("band"), col("bh"), lit(false).as("is_new"))
 
   // ---- document deletes -------------------------------------------------
@@ -103,27 +101,16 @@ object IncrementalDedup {
   private[graft] def tombsPath(table: KeyedTable): String = table.dir + "/tombs"
 
   /** The current tombstone set, if any. */
-  private def tombstones(table: KeyedTable): Option[DataFrame] = {
-    val spark = table.session
-    val store = tombsPath(table)
-    if (Fs.isDirectory(spark, store) && Fs.layerIds(spark, store).nonEmpty)
-      Some(spark.read.parquet(store).select("doc_id").distinct())
-    else None
-  }
+  private def tombstones(table: KeyedTable): Option[DataFrame] =
+    Layers.read(table.session, tombsPath(table)).map(_.select("doc_id").distinct())
 
   /** Remove `ids` (any frame with a `doc_id` column) from the index under
-    * `batchId`. Replay-safe: the tombstone write is an idempotent dynamic
-    * overwrite of its own `batch=` partition, and the signature republish
-    * rides the table's applied guard.
+    * `batchId`. Replay-safe: the tombstone layer is rewritten in place on
+    * replay, and the signature republish rides the table's applied guard.
     */
   def deleteDocs(table: KeyedTable, ids: DataFrame, batchId: Long): Unit = {
     if (table.alreadyApplied(batchId)) return
-    ids.select("doc_id").distinct()
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch")
-      .parquet(tombsPath(table))
+    Layers.append(ids.select("doc_id").distinct(), tombsPath(table), batchId)
     table.read().foreach { sig =>
       table.publish(
         sig.join(broadcast(ids.select("doc_id").distinct()), Seq("doc_id"), "left_anti"),
@@ -136,40 +123,21 @@ object IncrementalDedup {
     * band rows from re-indexed documents' previous texts (the documented
     * staleness source) and folds the per-batch partitions into one layer.
     *
-    * Crash-safety is GENERATIONAL, never in-place: each compaction writes a
-    * FRESH reserved layer `batch=-g` (the next unused negative id — real
-    * batch ids are >= 0), whose partition directories did not previously
-    * exist, and only after that write commits does it sweep every OTHER
-    * batch layer (positive and older negatives). A crash anywhere therefore
-    * leaves a SUPERSET of the current index — mid-write: staged files are
-    * invisible, old layers intact; mid-sweep: the new complete layer plus
-    * surviving old layers, whose duplicate/stale rows the per-bucket
-    * dedup-and-verify path already tolerates. (An in-place dynamic
-    * overwrite of one fixed layer id would delete an old partition during
-    * commit before its replacement renames in — a crash window that LOSES
-    * rows whose only copy was the previous compaction's output — and would
-    * also leave stale rows alive in any partition the rebuilt data doesn't
-    * touch.)
+    * Crash-safety is generational ([[Layers.fold]]), never in-place:
+    * sweeping ALL superseded layers (old generations included) is what
+    * drops stale re-index rows, and a crashed sweep's survivors are
+    * duplicate/stale rows the per-bucket dedup-and-verify path tolerates.
+    * (An in-place overwrite of one fixed layer id would delete an old
+    * partition before its replacement renames in — a crash window that
+    * LOSES rows whose only copy was the previous compaction's output.)
     */
   def compactBands(table: KeyedTable): Unit =
     table.read().foreach { sig =>
-      val spark = table.session
-      val bands = bandsPath(table)
-      // commit-then-sweep via the shared generational helper; sweeping ALL
-      // superseded layers (old compaction generations included) is what
-      // drops stale re-index rows — a crash survivor is stale-but-safe
-      // (see above)
-      Fs.compactLayers(spark, bands) { gen =>
-        withPb(DedupQueries.bandRows(sig))
-          .withColumn("batch", lit(gen))
-          .write.mode("append")
-          .partitionBy("batch", "pb")
-          .parquet(bands)
-      }
+      Layers.fold(withPb(DedupQueries.bandRows(sig)), bandsPath(table), sweep = true, "pb")
       // the rebuild came from the post-delete signature table, so the
       // tombstones are folded in — clear their layers (a crash before this
       // leaves tombstones whose anti-join is a no-op over clean bands)
-      Fs.clearLayers(spark, tombsPath(table))
+      Layers.clear(table.session, tombsPath(table))
     }
 
   /** Index `docs` (doc_id, text, ...) under `batchId` and return the near-dup
@@ -213,13 +181,7 @@ object IncrementalDedup {
     // collect (the pruning predicate, not data)
     val touched = newBands.select("pb").distinct().collect().map(_.getInt(0)).toSeq
     val bands = bandsPath(table)
-    if (touched.nonEmpty)
-      newBands
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch", "pb")
-        .parquet(bands)
+    if (touched.nonEmpty) Layers.append(newBands, bands, batchId, "pb")
     val newTagged = newBands.select(col("doc_id"), col("band"), col("bh"), lit(true).as("is_new"))
     // an all-short-docs (or empty) batch has no band rows: nothing to probe,
     // and the bands dir may not exist yet (reading it would fail schema

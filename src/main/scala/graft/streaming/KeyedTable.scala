@@ -114,11 +114,8 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
       case None =>
         df.write.mode("overwrite").parquet(s"$dir/v$version")
     }
-    // the reference's os.replace, through the FileSystem abstraction:
-    // stage the pointer content, then one atomic rename-overwrite
-    val tmp = s"$dir/_LATEST.tmp.$version"
-    Fs.writeString(spark, tmp, s"$version $applied")
-    Fs.renameOverwrite(spark, tmp, pointer)
+    // the reference's os.replace, through the FileSystem abstraction
+    Fs.publishString(spark, pointer, s"$version $applied", version)
     gc(version)
     version
   }

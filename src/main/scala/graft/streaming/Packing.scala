@@ -30,19 +30,17 @@ object Packing {
     *
     *  - the KeyedTable snapshot holds only the per-source NEXT-FREE OFFSETS
     *    (≤ #sources rows — bounded forever) plus the applied-batch pointer;
-    *  - the assignments themselves land in an append-only layer directory
-    *    (`<table.dir>/packs/batch=<id>/`), one layer per batch, written
-    *    with dynamic partition overwrite scoped to the batch id.
+    *  - the assignments themselves land in an append-only [[Layers]] store
+    *    (`<table.dir>/packs`), one layer per batch.
     *
     * Per-batch cost is therefore O(batch + #sources) regardless of stream
     * age — a snapshot that re-published every historical assignment would
-    * pay O(history) write volume per batch (round-7 review finding).
+    * pay O(history) write volume per batch.
     *
     * Crash/replay safety: an already-applied id is a no-op; a crash BETWEEN
-    * the layer write and the offsets publish heals on replay because the
-    * replayed layer write overwrites exactly its own `batch=` partition
-    * with identical rows (offsets still reflect the pre-batch state until
-    * the publish lands).
+    * the layer write and the offsets publish heals on replay, which
+    * rewrites the same layer with identical rows (offsets still reflect
+    * the pre-batch state until the publish lands).
     *
     * Ordering contract (same as [[packStream]]): docs pack in arrival
     * order, doc_id order within a batch — a stream fed in doc_id order
@@ -83,12 +81,7 @@ object Packing {
     // retries batches, and an exception-path leak accumulates one cached
     // dataset per retry (ADVICE r7)
     try {
-      assigned
-        .withColumn("batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(packsPath(table))
+      Layers.append(assigned, packsPath(table), batchId)
       // new offsets = old bases advanced by this batch's token mass per source
       val batchEnds = assigned.groupBy("source")
         .agg(max(col("pack_id") * budget + col("pack_off") + col("tok")).as("end"))
@@ -105,29 +98,14 @@ object Packing {
     }
   }
 
-  /** Fold the accumulated `batch=` layers into one — the small-files
-    * control a long-running packer schedules between streaming epochs (the
-    * [[IncrementalDedup.compactBands]] move, same generational crash
-    * safety): write a FRESH reserved layer `batch=-g` (next unused negative
-    * id — real batch ids are ≥ 0) and only after it commits sweep every
-    * other layer. A crash mid-write leaves staged files invisible and old
-    * layers intact; mid-sweep leaves the complete new layer plus survivors
-    * whose rows are exact duplicates of new-layer rows — [[readPacked]]'s
-    * per-doc dropDuplicates makes that state read-equivalent, and the next
-    * compaction folds it away. The offsets snapshot and applied pointer are
-    * untouched.
+  /** Fold the accumulated layers into one generation ([[Layers.fold]]) —
+    * the small-files control a long-running packer schedules between
+    * streaming epochs. A crashed sweep's survivors are exact duplicates of
+    * new-layer rows, which [[readPacked]]'s per-doc dropDuplicates makes
+    * read-equivalent. The offsets snapshot is untouched.
     */
-  def compactPacks(spark: org.apache.spark.sql.SparkSession, table: KeyedTable): Unit = {
-    import org.apache.spark.sql.functions.lit
-    readPacked(spark, table).foreach { packs =>
-      Fs.compactLayers(spark, packsPath(table)) { gen =>
-        packs.withColumn("batch", lit(gen))
-          .write.mode("append")
-          .partitionBy("batch")
-          .parquet(packsPath(table))
-      }
-    }
-  }
+  def compactPacks(spark: org.apache.spark.sql.SparkSession, table: KeyedTable): Unit =
+    readPacked(spark, table).foreach(Layers.fold(_, packsPath(table), sweep = true))
 
   /** All pack assignments so far — the union of batch layers. The per-doc
     * dropDuplicates is exact (an assignment is immutable, so any cross-layer
@@ -135,13 +113,10 @@ object Packing {
     * keeps post-crash reads equivalent to the clean state.
     */
   def readPacked(spark: org.apache.spark.sql.SparkSession,
-      table: KeyedTable): Option[org.apache.spark.sql.DataFrame] = {
-    val path = packsPath(table)
-    if (!Fs.isDirectory(spark, path)) None
-    else Some(spark.read.parquet(path)
-      .select("source", "doc_id", "tok", "pack_id", "pack_off")
-      .dropDuplicates("source", "doc_id"))
-  }
+      table: KeyedTable): Option[org.apache.spark.sql.DataFrame] =
+    Layers.read(spark, packsPath(table)).map(
+      _.select("source", "doc_id", "tok", "pack_id", "pack_off")
+        .dropDuplicates("source", "doc_id"))
 
   private def packsPath(table: KeyedTable): String = table.dir + "/packs"
 

@@ -169,18 +169,23 @@ object ScaleSmoke {
 
   /** Time the graded query set at every scale (per-query warm-up at base
     * scale first, so scale 1 — always timed first — does not eat the one-off
-    * codegen cost and flatten the curve).
+    * codegen cost and flatten the curve). Timed like the bench: build plus
+    * [[graft.Bench.forceFrame]], which evaluates every output column —
+    * `.count()` would let Catalyst prune the projections under test. `rows`
+    * comes from an untimed count afterwards.
     */
   private[graft] def measure(spark: SparkSession, dirs: Map[Int, String],
       queries: Seq[String]): Seq[Point] =
     queries.flatMap { q =>
       graft.Bench.clearAllCaches(spark)
-      graft.SparkEntry.queries(q)(spark, dirs(dirs.keys.min)).count()
+      graft.Bench.forceFrame(graft.SparkEntry.queries(q)(spark, dirs(dirs.keys.min)))
       dirs.keys.toSeq.sorted.map { r =>
         graft.Bench.clearAllCaches(spark)
-        val t0   = System.nanoTime()
-        val rows = graft.SparkEntry.queries(q)(spark, dirs(r)).count()
-        Point(q, r, (System.nanoTime() - t0) / 1e9, rows)
+        val t0  = System.nanoTime()
+        val df  = graft.SparkEntry.queries(q)(spark, dirs(r))
+        graft.Bench.forceFrame(df)
+        val sec = (System.nanoTime() - t0) / 1e9
+        Point(q, r, sec, df.count())
       }
     }
 
@@ -215,7 +220,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val base   = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scales = if (args.nonEmpty) args.toSeq.map(_.toInt) else DefaultScales
-    val spark = graft.LocalSpark.session("32", "graft-scale-smoke")
+    val spark = graft.LocalSpark.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
     val viol = run(spark, base, scales)
     if (sys.env.contains("GRAFT_SCALE_GATE"))

@@ -140,18 +140,18 @@ class AnnIndexSpec extends SparkTestBase {
     assert(AnnIndex.appendBatch(spark, idx, b0, 0L))
     assert(AnnIndex.appendBatch(spark, idx, b1, 1L))
     val before = top3(AnnIndex.search(spark, idx, probes))
-    assert(graft.streaming.Fs.layerIds(spark, s"$idx/vectors").size == 3)
+    assert(graft.streaming.Layers.ids(spark, s"$idx/vectors").size == 3)
 
     // CRASHED sweep: the fold layer committed but every old layer survives —
     // the store is a superset whose duplicates search must tolerate
     AnnIndex.compactStore(spark, s"$idx/vectors", Seq("cid"), sweep = false)
-    assert(graft.streaming.Fs.layerIds(spark, s"$idx/vectors").size == 4)
+    assert(graft.streaming.Layers.ids(spark, s"$idx/vectors").size == 4)
     assert(top3(AnnIndex.search(spark, idx, probes)) == before,
       "crashed-sweep state diverged from the pre-compaction search")
 
     // the finishing compaction folds everything into the next generation
     AnnIndex.compactIndex(spark, idx)
-    val layers = graft.streaming.Fs.layerIds(spark, s"$idx/vectors")
+    val layers = graft.streaming.Layers.ids(spark, s"$idx/vectors")
     assert(layers.size == 1 && layers.head < 0, s"layers after compaction: $layers")
     assert(top3(AnnIndex.search(spark, idx, probes)) == before,
       "search after compaction diverged")
@@ -173,7 +173,7 @@ class AnnIndexSpec extends SparkTestBase {
     assert(AnnIndex.appendBatchLsh(spark, idx, b0, 1L))
     val before = top3(AnnIndex.searchLsh(spark, idx, probes))
     AnnIndex.compactIndexLsh(spark, idx)
-    val layers = graft.streaming.Fs.layerIds(spark, s"$idx/lsh")
+    val layers = graft.streaming.Layers.ids(spark, s"$idx/lsh")
     assert(layers.size == 1 && layers.head < 0, s"layers after compaction: $layers")
     assert(top3(AnnIndex.searchLsh(spark, idx, probes)) == before)
     val perKey = spark.read.parquet(s"$idx/lsh")
@@ -203,13 +203,13 @@ class AnnIndexSpec extends SparkTestBase {
     // store still physically holds the victims' rows, and clearing here
     // would resurrect deleted (takedown) vectors in its results
     AnnIndex.compactIndex(spark, idx)
-    assert(graft.streaming.Fs.layerIds(spark, s"$idx/tombs").nonEmpty,
+    assert(graft.streaming.Layers.ids(spark, s"$idx/tombs").nonEmpty,
       "per-store compaction cleared the tombstones another store still needs")
     assert(lshVictims.isEmpty,
       "per-store compaction resurrected tombstoned vectors in the co-located store")
     // compactAll folds EVERY store against one snapshot, then clears
     AnnIndex.compactAll(spark, idx)
-    assert(graft.streaming.Fs.layerIds(spark, s"$idx/tombs").isEmpty,
+    assert(graft.streaming.Layers.ids(spark, s"$idx/tombs").isEmpty,
       "compactAll must clear the folded tombstones")
     assert(lshVictims.isEmpty, "victims reappeared after compactAll")
   }
@@ -297,7 +297,7 @@ class AnnIndexSpec extends SparkTestBase {
     // cid list: the generic fold's dedup shuffle would otherwise hand every
     // task a slice of every list, regressing the pruned search from NProbe
     // file opens to NProbe × shuffle-partitions
-    val gen = graft.streaming.Fs.layerIds(spark, idx + "/pqcodes").filter(_ < 0).min
+    val gen = graft.streaming.Layers.ids(spark, idx + "/pqcodes").filter(_ < 0).min
     val cidDirs = new java.io.File(s"$idx/pqcodes/batch=$gen")
       .listFiles().filter(f => f.isDirectory && f.getName.startsWith("cid="))
     assert(cidDirs.nonEmpty)
@@ -332,7 +332,7 @@ class AnnIndexSpec extends SparkTestBase {
     // no-ops, so its final clear must be guarded exactly like the sole-store
     // paths above
     AnnIndex.compactAll(spark, idx)
-    assert(graft.streaming.Fs.layerIds(spark, idx + "/tombs").nonEmpty,
+    assert(graft.streaming.Layers.ids(spark, idx + "/tombs").nonEmpty,
       "premature compaction cleared tombstones that were never folded")
     // the delete still wins once the store exists
     AnnIndex.buildFrom(spark, raw, cents, idx)
@@ -507,7 +507,7 @@ class AnnIndexSpec extends SparkTestBase {
       .select("vec_id").as[Long].collect().toSet
     assert(victims.forall(v => !remaining.contains(v)),
       "compaction left tombstoned rows in the data layers")
-    assert(graft.streaming.Fs.layerIds(spark, idx + "/tombs").isEmpty,
+    assert(graft.streaming.Layers.ids(spark, idx + "/tombs").isEmpty,
       "compaction did not clear the tombstone layers")
     assert(!AnnIndex.deleteIds(spark, idx, victims.toDF("vec_id"), 0L),
       "replayed delete batch accepted after the tombstone clear")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{Fs, IncrementalDedup, KeyedTable}
+import graft.streaming.{IncrementalDedup, KeyedTable, Layers}
 
 /** Incremental near-dup indexing ([[IncrementalDedup]]): new batches must
   * find pairs against the stored corpus without reprocessing old text, be
@@ -148,7 +148,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     // compaction rebuilds bands from the clean signature table and clears
     // the tombstones; the deleted doc stays gone
     IncrementalDedup.compactBands(table)
-    assert(Fs.layerIds(spark, IncrementalDedup.tombsPath(table)).isEmpty,
+    assert(Layers.ids(spark, IncrementalDedup.tombsPath(table)).isEmpty,
       "compaction did not clear the tombstone layers")
     val bandDocs = spark.read.parquet(IncrementalDedup.bandsPath(table))
       .select("doc_id").distinct().as[Long].collect().toSet
