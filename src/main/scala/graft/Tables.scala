@@ -1,20 +1,30 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver's read-only parquet test tables (TESTDATA.md).
   *
   * Every graded query takes `(spark, sfDir)` and reads only through here, so
   * the physical layout (one parquet file per table today; partitioned
-  * directories at 100 TB) is isolated in one place. At cluster scale these
-  * would be catalog tables with partition/bucket metadata; the query code does
-  * not care.
+  * directories at 100 TB) is isolated in one place. Each table behaves as a
+  * catalog table: its schema is resolved once per file set ([[schemas]]) and
+  * every later load reads with that declared schema, so building a query
+  * launches no footer-reading job. The query code does not care.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key  = schemaKey(spark, path)
+    // an unlistable path keeps the plain read, and with it Spark's own error
+    if (key.isEmpty) spark.read.parquet(path)
+    else {
+      val schema = schemas.getOrElseUpdate(key, spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "nation")
@@ -91,30 +101,74 @@ object Tables {
     */
   private val splitCounts = scala.collection.concurrent.TrieMap.empty[String, Int]
 
-  /** Memo key for [[spread]]: sorted `path@len` per input file plus the
-    * file-split session confs. Empty when the frame has no resolvable
-    * files (non-file sources) — callers treat that as non-memoizable.
+  /** Inferred schemas by [[schemaKey]]: `spark.read.parquet` runs one
+    * footer-reading job per call, and every query build loads its tables.
+    * The inferred schema is a function of the files (names, lengths,
+    * modification times — a table rewritten in place is a new key) and of
+    * the session confs in [[SchemaConfs]], so one inference per distinct
+    * key is exact. Only the `StructType` is kept, never a frame or session.
+    */
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** Session confs that change what parquet schema inference returns: the
+    * four type mappings, and schema merging across files.
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Memo key over a file set: sorted `path@len@mtime` per file plus the
+    * caller's `confs`, the one encoding both memos use. Empty for an empty
+    * file set — callers treat that as non-memoizable.
+    */
+  private def fileSetKey(files: Seq[FileStatus], confs: String): String =
+    if (files.isEmpty) ""
+    // NUL separator (the ESCAPE, not a raw byte — a literal NUL made git
+    // treat this file as binary, ADVICE r9): no legal path contains
+    // U+0000, so space-containing paths cannot alias two distinct file
+    // sets onto one memo cell the way a space join would
+    else (files.map(f => s"${f.getPath}@${f.getLen}@${f.getModificationTime}").sorted :+ confs)
+      .mkString("\u0000")
+
+  /** Memo key for [[schemas]]: every leaf file under `path` (one listing,
+    * lengths and times included) plus the [[SchemaConfs]] values. Empty
+    * when the path cannot be listed. Computed BEFORE the inference it keys,
+    * so a rewrite racing the inference files its schema under the old,
+    * never-again-listed file set rather than under the new one.
+    */
+  private def schemaKey(spark: SparkSession, path: String): String = {
+    val p = new Path(path)
+    val files =
+      try {
+        val it  = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+        val out = Seq.newBuilder[FileStatus]
+        while (it.hasNext) out += it.next()
+        out.result()
+      } catch { case _: java.io.IOException => Seq.empty }
+    // getOption, not getConfString(k, ""): a "" default fails the boolean
+    // confs' value check
+    val confs = SchemaConfs.map(k => s"$k=${spark.conf.getOption(k).getOrElse("")}")
+    fileSetKey(files, confs.mkString(","))
+  }
+
+  /** Memo key for [[spread]]: the frame's input files plus the file-split
+    * session confs. Empty when the frame has no resolvable files (non-file
+    * sources) or a file cannot be stat'ed.
     */
   private def splitKey(df: DataFrame): String = {
-    val files = df.inputFiles
-    if (files.isEmpty) ""
-    else {
-      val conf = df.sparkSession.sessionState.conf
-      val hconf = df.sparkSession.sparkContext.hadoopConfiguration
-      val sizes = files.sorted.map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val len =
-          try p.getFileSystem(hconf).getFileStatus(p).getLen
-          catch { case _: Exception => -1L }
-        s"$f@$len"
-      }
-      // NUL separator (the ESCAPE, not a raw byte — a literal NUL made git
-      // treat this file as binary, ADVICE r9): no legal path contains
-      // U+0000, so space-containing paths cannot alias two distinct file
-      // sets onto one memo cell the way a space join would
-      (sizes :+ s"confs=${conf.filesMaxPartitionBytes}:${conf.filesOpenCostInBytes}:" +
-        s"${df.sparkSession.sparkContext.defaultParallelism}").mkString("\u0000")
-    }
+    val spark = df.sparkSession
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val files =
+      try df.inputFiles.toSeq.map { f =>
+        val p = new Path(f)
+        p.getFileSystem(hconf).getFileStatus(p)
+      } catch { case _: java.io.IOException => Seq.empty }
+    val conf = spark.sessionState.conf
+    fileSetKey(files, s"confs=${conf.filesMaxPartitionBytes}:${conf.filesOpenCostInBytes}:" +
+      s"${spark.sparkContext.defaultParallelism}")
   }
 
   /** Spread a scan whose SPLIT COUNT cannot feed the available task slots —

@@ -215,8 +215,14 @@ object Components {
         eRdd = nextRdd
       }
     }
-    // fixpoint edges are (node → component min); singletons label themselves
-    val roots = e.groupBy("a").agg(min("b").as("lbl"))
+    // fixpoint edges are (node → component min); singletons label themselves.
+    // The returned plan reads the fixpoint edges through a catalog-cached
+    // frame (released by clearCache with the rest of the query's caches),
+    // filled from the last round's RDD, which is then unpersisted.
+    val fixpoint = e.persist()
+    try fixpoint.count()
+    finally eRdd.unpersist()
+    val roots = fixpoint.groupBy("a").agg(min("b").as("lbl"))
       .select(col("a").as("id"), col("lbl"))
     val ids = nodes.select(nodes.columns.map(nodes(_)).head.as("id"))
     ids.join(roots, Seq("id"), "left")

@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Relational
 
@@ -36,6 +37,16 @@ import graft.operators.Relational
   * network again. Bucket metadata is catalog-scoped: after a restart the
   * first read falls back to a plain parquet scan (one shuffled merge) and
   * the next publish re-registers the bucketing.
+  *
+  * Schema slot: a plain parquet read infers its schema with one
+  * footer-reading job. Each instance keeps the `(version, schema)` of the
+  * newest snapshot it wrote or read; [[publish]] fills it from the frame it
+  * wrote, and a read of that version (the read-merge-publish loop of
+  * [[merge]], serving right after a commit) reads with the kept schema and
+  * runs no job. A version published by another instance misses the slot,
+  * is inferred once, and becomes the slot. With one writer a version
+  * directory is written once, before the pointer names it, so the slot
+  * never goes stale.
   */
 final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
                        buckets: Option[Int] = None) {
@@ -81,8 +92,25 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
     latestVersion().map { v =>
       if (buckets.isDefined && spark.catalog.tableExists(tableName(v)))
         spark.table(tableName(v)) // bucketed scan: HashPartitioning(key, n)
-      else spark.read.parquet(s"$dir/v$v")
+      else snapshot(v)
     }
+
+  /** (version, schema) of the newest snapshot this instance wrote or read. */
+  @volatile private var schemaSlot: Option[(Long, StructType)] = None
+
+  /** Plain parquet scan of version `v`: with the slot's schema when it holds
+    * `v`, else inferred; an inferred version newer than the slot's fills it.
+    */
+  private def snapshot(v: Long): DataFrame = {
+    val path = s"$dir/v$v"
+    schemaSlot match {
+      case Some((`v`, schema)) => spark.read.schema(schema).parquet(path)
+      case held =>
+        val df = spark.read.parquet(path)
+        if (held.forall(_._1 < v)) schemaSlot = Some((v, df.schema))
+        df
+    }
+  }
 
   /** True iff streaming batch `batchId` has already been applied — a
     * foreachBatch replay after crash-resume (T3/T4).
@@ -116,6 +144,7 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
     }
     // the reference's os.replace, through the FileSystem abstraction
     Fs.publishString(spark, pointer, s"$version $applied", version)
+    schemaSlot = Some((version, df.schema))
     gc(version)
     version
   }
@@ -156,13 +185,14 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
     * COMMON to both versions null-safely, so an additively-evolved column
     * doesn't mark every old row changed). The publish-audit shape: both
     * sides are plain snapshot scans full-outer-joined on the key, so the
-    * diff distributes like the merge itself. Versions older than
+    * diff distributes like the merge itself; each side is read like
+    * [[read]] reads it (slot or inference). Versions older than
     * [[KeepSnapshots]] are GC'd — diff what you retain.
     */
   def diff(vOld: Long, vNew: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, struct, to_json, when}
-    val o = spark.read.parquet(s"$dir/v$vOld").alias("o")
-    val n = spark.read.parquet(s"$dir/v$vNew").alias("n")
+    val o = snapshot(vOld).alias("o")
+    val n = snapshot(vNew).alias("n")
     val common = o.columns.toSet.intersect(n.columns.toSet) - key
     val cols   = common.toSeq.sorted
     val oState = to_json(struct(cols.map(c => col(s"o.$c").as(c)): _*))
