@@ -43,16 +43,20 @@ if [ -z "$GRAFT_SCALE_SMOKE_SKIP" ]; then
   [ $rc -eq 0 ] || { echo "SCALE GATE FAILED"; exit 1; }
   echo "scale gate OK (sf0.001, 1x->4x)"
 fi
-# Bench self-healing e2e (VERDICT r13 #4): the suspect->retime->closing-line
-# path feeds the driver's parsed record; exercise it against a synthetic
-# tiny-median history on a 4-query subset (~2 min). GRAFT_BENCH_E2E_SKIP=1
-# opts out (e.g. when iterating on one query).
+# Bench e2e: the suspect->retime->closing-line path feeds the record a
+# tail parser reads; exercise it against a synthetic tiny-median history on a
+# 4-query subset. The Spark-free bench specs (record format, wire, history
+# readers, replay) run first in the same sbt call, so a record-format break
+# fails in seconds instead of after the e2e. GRAFT_BENCH_E2E_SKIP=1 opts
+# out (e.g. when iterating on one query).
 if [ -z "$GRAFT_BENCH_E2E_SKIP" ]; then
   set +e
-  GRAFT_BENCH_E2E=1 sbt -batch 'testOnly graft.BenchE2eSpec' > /tmp/bench_e2e.log 2>&1
+  GRAFT_BENCH_E2E=1 sbt -batch \
+    'testOnly graft.BenchReplaySpec graft.BenchLoadSpec graft.BenchWireProperties graft.BenchHistoryProperties graft.JstrSpec graft.BenchRecordSpec' \
+    'testOnly graft.BenchE2eSpec' > /tmp/bench_e2e.log 2>&1
   rc=$?
   set -e
-  grep -E '^\[info\] (- |Tests:)' /tmp/bench_e2e.log || true
+  grep -E '^\[info\] (- |\+ |Tests:)' /tmp/bench_e2e.log || true
   [ $rc -eq 0 ] || { echo "BENCH E2E FAILED (see /tmp/bench_e2e.log)"; exit 1; }
   echo "bench retime e2e OK"
 fi

@@ -27,7 +27,7 @@ object Verify {
       }
     }
     val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${BenchRecord.jstr(k)}: ${BenchRecord.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

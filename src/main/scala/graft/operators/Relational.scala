@@ -83,10 +83,7 @@ object Relational {
     *
     * Implementation: single full-outer shuffle join on the key + per-column
     * `coalesce` — one shuffle, no window, no driver state. At 100 TB both
-    * sides hash-partition on the key; with bucketed snapshot storage
-    * ([[graft.streaming.KeyedTable]] `buckets = Some(n)`) the snapshot side
-    * arrives pre-partitioned and only the update side shuffles
-    * (BucketedTableSpec pins that plan).
+    * sides hash-partition on the key.
     */
   def upsertMerge(existing: DataFrame, updates: DataFrame, key: String): DataFrame = {
     val e = existing.alias("e")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -25,18 +23,7 @@ import graft.operators.Relational
   * server.py:245-252).
   *
   * Scale posture: snapshots are plain parquet directories written by the
-  * cluster; only the ~30-byte pointer file is driver-side. With
-  * `buckets = Some(n)` each snapshot is published as a bucketed+sorted
-  * datasource table over the same `v<version>` directory (bucket metadata in
-  * the session catalog, data files untouched), which removes the single most
-  * expensive recurring shuffle in the engine (SURVEY §7.5 knob; VERDICT r3
-  * next-step #4): the next [[merge]]'s full-outer join reads the snapshot
-  * side already hash-partitioned on the key — only the (small) micro-batch
-  * side shuffles, into the snapshot's n buckets — and the re-publish write
-  * reuses that same partitioning, so the O(snapshot) data never crosses the
-  * network again. Bucket metadata is catalog-scoped: after a restart the
-  * first read falls back to a plain parquet scan (one shuffled merge) and
-  * the next publish re-registers the bucketing.
+  * cluster; only the ~30-byte pointer file is written outside its tasks.
   *
   * Schema slot: a plain parquet read infers its schema with one
   * footer-reading job. Each instance keeps the `(version, schema)` of the
@@ -48,8 +35,7 @@ import graft.operators.Relational
   * directory is written once, before the pointer names it, so the slot
   * never goes stale.
   */
-final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
-                       buckets: Option[Int] = None) {
+final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
 
   /** The session the store's filesystem ops resolve through — exposed for
     * the co-located stores (band index, pack layers) that share this
@@ -61,16 +47,6 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
   // ([[Fs]]) — `file:`, `hdfs:`, or object-store paths all work (VERDICT
   // r7 #1); java.nio would pin the store to the driver's local disk
   private val pointer = dir + "/_LATEST"
-
-  /** Catalog-safe table name for a bucketed snapshot version — one namespace
-    * entry per (table dir, version), derived from the dir so two KeyedTables
-    * in one session can't collide.
-    */
-  private def tableName(version: Long): String = {
-    val md  = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(dir.getBytes(StandardCharsets.UTF_8)).map("%02x".format(_)).mkString
-    s"graft_kt_${hex.take(8)}_v$version"
-  }
 
   /** How many superseded snapshots survive each publish (in-flight readers
     * of the previous version keep working during the swap).
@@ -88,12 +64,7 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
 
   def latestVersion(): Option[Long] = pointerState().map(_._1)
 
-  def read(): Option[DataFrame] =
-    latestVersion().map { v =>
-      if (buckets.isDefined && spark.catalog.tableExists(tableName(v)))
-        spark.table(tableName(v)) // bucketed scan: HashPartitioning(key, n)
-      else snapshot(v)
-    }
+  def read(): Option[DataFrame] = latestVersion().map(snapshot)
 
   /** (version, schema) of the newest snapshot this instance wrote or read. */
   @volatile private var schemaSlot: Option[(Long, StructType)] = None
@@ -129,19 +100,7 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
     val state   = pointerState()
     val version = state.map(_._1 + 1).getOrElse(0L)
     val applied = batchId.orElse(state.map(_._2)).getOrElse(-1L)
-    buckets match {
-      case Some(n) =>
-        // external bucketed+sorted table over the version directory: a merge
-        // output is already hash-partitioned on the key (the join required
-        // it), so the bucketed write assigns files without another shuffle
-        df.write.mode("overwrite")
-          .option("path", s"$dir/v$version")
-          .bucketBy(n, key).sortBy(key)
-          .format("parquet")
-          .saveAsTable(tableName(version))
-      case None =>
-        df.write.mode("overwrite").parquet(s"$dir/v$version")
-    }
+    df.write.mode("overwrite").parquet(s"$dir/v$version")
     // the reference's os.replace, through the FileSystem abstraction
     Fs.publishString(spark, pointer, s"$version $applied", version)
     schemaSlot = Some((version, df.schema))
@@ -162,23 +121,9 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
         .filter(_.matches("v\\d+"))
         .map(n => (n, n.drop(1).toLong))
         .filter { case (_, v) => v < current - KeepSnapshots || v > current }
-        .foreach { case (n, v) =>
-          // external tables: DROP releases the catalog entry only; the
-          // version directory is deleted explicitly below
-          if (buckets.isDefined)
-            spark.sql(s"DROP TABLE IF EXISTS ${tableName(v)}")
-          Fs.deleteRecursively(spark, s"$dir/$n")
-        }
+        .foreach { case (n, _) => Fs.deleteRecursively(spark, s"$dir/$n") }
     catch { case _: Exception => () } // GC must never fail a publish
 
-  /** Keyed upsert of one micro-batch (J4 semantics — pet_scraper.py:410-466):
-    * merge into the current snapshot (or bootstrap from the batch), publish
-    * as the next snapshot version, record `batchId` as applied. Replayed
-    * batch ids are skipped, making the sink effectively exactly-once under
-    * foreachBatch's at-least-once replay. Intra-batch duplicate keys are
-    * resolved before the merge (server.py:207's intra-batch dedup): highest
-    * `seqCol` wins when given, else an arbitrary-but-single row per key.
-    */
   /** What changed between two retained snapshot versions: one row per key
     * whose state differs — status `added` / `removed` / `changed`
     * (unchanged keys are dropped; `changed` compares the non-key columns
@@ -207,6 +152,14 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String,
       .filter(col("status").isNotNull)
   }
 
+  /** Keyed upsert of one micro-batch (J4 semantics — pet_scraper.py:410-466):
+    * merge into the current snapshot (or bootstrap from the batch), publish
+    * as the next snapshot version, record `batchId` as applied. Replayed
+    * batch ids are skipped, making the sink effectively exactly-once under
+    * foreachBatch's at-least-once replay. Intra-batch duplicate keys are
+    * resolved before the merge (server.py:207's intra-batch dedup): highest
+    * `seqCol` wins when given, else an arbitrary-but-single row per key.
+    */
   def merge(updates: DataFrame, batchId: Long, seqCol: Option[String] = None): Unit = {
     if (alreadyApplied(batchId)) return
     import org.apache.spark.sql.functions.col

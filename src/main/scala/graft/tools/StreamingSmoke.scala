@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import graft.BenchRecord
 import graft.streaming.{Funnels, IncrementalDedup, Ingest, KeyedTable, Packing, Sketches, Velocity}
 
 /** Driver-visible health check for the UNGRADED streaming surface (VERDICT
@@ -298,13 +301,9 @@ object StreamingSmoke {
     }
     spark.stop()
     val secs = math.round((System.nanoTime() - t0) / 1e7) / 100.0
-    val failures = results.collect { case (n, _, Some(m)) => s"${graft.Bench.jstr(n)}:${graft.Bench.jstr(m)}" }
-      .mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"streaming_smoke","value":$secs,"unit":"sec",""" +
-        s""""suites":${results.length},"assertions":${results.map(_._2).sum},""" +
-        s""""failed":${results.count(_._3.isDefined)},"failures":$failures}"""
-    println(line)
+    val failures = ListMap.from(results.collect { case (n, _, Some(m)) => n -> m })
+    println(BenchRecord.render(BenchRecord.Smoke, BenchRecord.SmokeHealth(secs,
+      results.length, results.map(_._2).sum, results.count(_._3.isDefined), failures)))
     if (results.exists(_._3.isDefined)) sys.exit(1)
   }
 }

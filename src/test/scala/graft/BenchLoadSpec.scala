@@ -1,53 +1,46 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.scalatest.funsuite.AnyFunSuite
 import com.fasterxml.jackson.databind.ObjectMapper
 
-/** The bench's self-qualifying load verdict (VERDICT r9 next-step #1): a
-  * run on a contended box must stamp its emitted line `degraded: true` so
-  * history consumers can filter it (the r9 driver artifact recorded 247.5 s
-  * for a tree an idle box times at 110.9 s — a phantom 2.2× "regression"
-  * to any reader who did not cross-check the load field by hand). The
-  * contract under test is the JSON the consumers parse, so these tests go
-  * through the emitted fields, not internals. Jackson (on the Spark
-  * classpath) is the parser — hand-rolled containment checks would accept
-  * a line no real JSON consumer could read.
+import graft.BenchRecord._
+import graft.BenchRecordSpec.runRecord
+
+/** The bench's self-qualifying verdicts: the load sensors, the history
+  * baselines and their suspect/retime/env adjudication, and the lines that
+  * carry them. A run on a contended box must stamp its emitted line so
+  * history consumers can filter it, so these tests go through the emitted
+  * fields, parsed with Jackson as a real consumer would.
   */
 class BenchLoadSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper()
   private val cores = 32
 
-  private def idle = Bench.ChunkLoad(stealPct = 0.1, externalCores = 0.2)
+  private def idle = Bench.ChunkLoad(stealPct = 0.1, extCores = 0.2)
 
   test("an idle box is not hot; each contention signal alone flips it") {
     assert(!Bench.isHot(idle, cores))
     // a concurrent stress -c 16 / Verify run: ~16 external cores >> cores/4
-    assert(Bench.isHot(idle.copy(externalCores = 16.0), cores))
+    assert(Bench.isHot(idle.copy(extCores = 16.0), cores))
     // hypervisor steal
     assert(Bench.isHot(idle.copy(stealPct = 3.5), cores))
     // boundary: exactly at the thresholds is NOT hot (strict >)
-    assert(!Bench.isHot(idle.copy(externalCores = cores / 4.0), cores))
+    assert(!Bench.isHot(idle.copy(extCores = cores / 4.0), cores))
     assert(!Bench.isHot(idle.copy(stealPct = 2.0), cores))
   }
 
   test("idle chunks emit degraded=false; one hot chunk degrades the run") {
-    val (okJson, okDeg) =
-      Bench.loadFieldsJson(Seq(idle, idle, idle), cores, Some(0.1))
-    assert(!okDeg)
-    val ok = mapper.readTree(okJson)
-    assert(!ok.get("chunk_load").get(0).get("hot").asBoolean)
-    assert(ok.get("cores").asInt === cores)
-    assert(ok.get("steal_pct").asDouble === 0.1)
-
-    val (hotJson, hotDeg) = Bench.loadFieldsJson(
-      Seq(idle, idle.copy(externalCores = 16.0), idle), cores, Some(0.1))
+    val (ok, okDeg) = Bench.loadFieldsJson(Seq(idle, idle, idle), cores, Some(0.1))
+    assert(!okDeg && !ok.chunkLoad(0).hot)
+    assert(ok.cores === cores && ok.stealPct === Some(0.1))
+    val (hot, hotDeg) = Bench.loadFieldsJson(
+      Seq(idle, idle.copy(extCores = 16.0), idle), cores, Some(0.1))
     assert(hotDeg, "a chunk with 16 external cores busy must degrade the run")
-    val hot = mapper.readTree(hotJson)
-    assert(hot.get("chunk_load").size === 3)
-    assert(hot.get("chunk_load").get(1).get("hot").asBoolean)
-    assert(!hot.get("chunk_load").get(0).get("hot").asBoolean)
-    assert(hot.get("chunk_load").get(1).get("ext_cores").asDouble === 16.0)
+    assert(hot.chunkLoad.map(_.hot) === Seq(false, true, false))
+    assert(hot.chunkLoad(1).extCores === 16.0)
   }
 
   test("load.retried keeps each thrown-away attempt's two sensors") {
@@ -55,18 +48,12 @@ class BenchLoadSpec extends AnyFunSuite {
     // the retry threw away rides load.retried, keyed by its chunk's index,
     // so a reader can replay which sensor decided the retry
     val kept = Seq(idle, idle.copy(stealPct = 0.4), idle)
-    val thrown = Seq(1 -> idle.copy(stealPct = 3.7, externalCores = 0.3))
-    val (json, deg) = Bench.loadFieldsJson(kept, cores, Some(0.5), thrown)
+    val thrown = Seq(1 -> idle.copy(stealPct = 3.7, extCores = 0.3))
+    val (load, deg) = Bench.loadFieldsJson(kept, cores, Some(0.5), thrown)
     assert(!deg, "the verdict reads the kept attempts only")
-    val n = mapper.readTree(json)
-    def fields(o: com.fasterxml.jackson.databind.JsonNode): Seq[String] = {
-      val b = Seq.newBuilder[String]; o.fieldNames().forEachRemaining(b += _); b.result()
-    }
-    assert(fields(n) === Seq("steal_pct", "cores", "chunk_load", "retried"))
-    assert(fields(n.get("chunk_load").get(0)) === Seq("steal_pct", "ext_cores", "hot"))
+    val n = mapper.readTree(write(load))
     val r = n.get("retried")
     assert(r.isArray && r.size === 1)
-    assert(fields(r.get(0)) === Seq("chunk", "steal_pct", "ext_cores"))
     assert(r.get(0).get("chunk").asInt === 1)
     assert(r.get(0).get("steal_pct").asDouble === 3.7)
     assert(r.get(0).get("ext_cores").asDouble === 0.3)
@@ -76,10 +63,12 @@ class BenchLoadSpec extends AnyFunSuite {
       "the recorded attempt must replay as hot under the predicate that retried it")
     // a run with no retry publishes an empty list, never an absent field
     val (none, _) = Bench.loadFieldsJson(kept, cores, None)
-    assert(mapper.readTree(none).get("retried").size === 0)
+    assert(mapper.readTree(write(none)).get("retried").size === 0)
+    // an unreadable run-level steal is left out, never printed as null
+    assert(!mapper.readTree(write(none)).has("steal_pct"))
   }
 
-  // ---- history-aware per-query plausibility (VERDICT r10 next-step #1) --
+  // ---- history-aware per-query plausibility ----------------------------
 
   /** A synthetic clean history line in the BENCH_HISTORY.jsonl format. */
   private def histLine(qs: Map[String, Double], degraded: Boolean = false,
@@ -99,8 +88,7 @@ class BenchLoadSpec extends AnyFunSuite {
   test("the r10 scatter fires suspect_queries and the run-level flag") {
     val medians = Bench.historyMedians(idleHistory)
     assert(medians("q_hash_sample") === 0.16)
-    // the driver's actual r10 contaminated readings (VERDICT "what's
-    // wrong" #1): unchanged queries at 2–9× their idle medians
+    // contaminated readings: unchanged queries at 2–9× their idle medians
     val contaminated = Seq(
       "q_hash_sample" -> 0.58, "q_compaction_summary" -> 0.62,
       "q_collocations" -> 3.63, "q_ann_ivfpq" -> 7.8)
@@ -109,8 +97,8 @@ class BenchLoadSpec extends AnyFunSuite {
       s"the three >2x readings must flag (ivfpq at 1.4x must not): $sus")
     assert(runSuspect,
       "3 trivial-median queries co-inflating IS the contention signature")
-    // each flagged query carries its inflation ratio (VERDICT r11 #2) so a
-    // consumer can rank severity — 0.1-rounded secs/median
+    // each flagged query carries its 0.1-rounded inflation ratio so a
+    // consumer can rank severity
     val ratios = sus.toMap
     assert(ratios("q_collocations") === 9.1, s"3.63/0.40 must read 9.1: $ratios")
     assert(ratios("q_hash_sample") === 3.6)
@@ -141,10 +129,8 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("moderate co-inflation flags one tier down; lone moderates never do") {
-    // VERDICT r13 next-step #3: the r13 committed capture carried its
-    // 2nd-most-expensive key at 1.8x (median 1.65 s) unflagged — real
-    // money left un-adjudicated. The mechanism under test is the
-    // 1.7x–2.0x window on >=0.4 s medians, gated on a co-inflation quorum
+    // the 1.7x–2.0x window on >=0.4 s medians, gated on a co-inflation
+    // quorum (a 1.8x reading on a 1.65 s key otherwise goes unflagged)
     val medians = Map("q_heavy" -> 1.65, "q_mid" -> 0.45, "q_other" -> 0.60,
       "q_tiny" -> 0.16, "q_cheap" -> 0.05)
     // three moderate (1.7x–2.0x) inflations on >=0.4 s medians co-inflate:
@@ -215,10 +201,6 @@ class BenchLoadSpec extends AnyFunSuite {
     // of evidence must never read as clean
     assert(Bench.retimeCleanVerdict(flagged,
       Seq("q_a" -> 0.22), medians) === Some(false))
-    // the tri-state JSON rendering
-    assert(Bench.triState(None) === "null")
-    assert(Bench.triState(Some(true)) === "true")
-    assert(Bench.triState(Some(false)) === "false")
   }
 
   test("contaminated and thin history never feeds the medians") {
@@ -248,8 +230,8 @@ class BenchLoadSpec extends AnyFunSuite {
     val noSf = Seq.fill(5)("""{"degraded":false,"queries":{"q_old":2.0}}""")
     assert(Bench.historyMedians(noSf, sf = Some("/tmp/sf"))("q_old") === 2.0)
     // ...but the moment ANY entry is sf-stamped, unstamped entries count
-    // as mismatches (ADVICE r11): "absent matches anything" let legacy
-    // dev-scale lines keep feeding the medians that judge an sf0.1 capture
+    // as mismatches: "absent matches anything" would let legacy dev-scale
+    // lines keep feeding the medians that judge an sf0.1 capture
     val mixed = noSf ++ Seq.fill(2)(histLine(Map("q_old" -> 9.0)))
     assert(Bench.historyMedians(mixed, sf = Some("/tmp/sf")) ===
       Map.empty[String, Double],
@@ -361,7 +343,7 @@ class BenchLoadSpec extends AnyFunSuite {
       "clean neighbors must keep the clean baseline")
   }
 
-  // ---- phase sub-timings (VERDICT r10 next-step #5) ----------------------
+  // ---- phase sub-timings -----------------------------------------------
 
   test("Phases capture attributes eager stages and is a no-op outside one") {
     // outside a capture: timed is transparent
@@ -383,9 +365,9 @@ class BenchLoadSpec extends AnyFunSuite {
   test("GRAFT_BENCH_QUERIES subsets the run; an all-unknown list is a hard error") {
     // dev/e2e plumbing (BenchE2eSpec rides it): unknown names drop with a
     // warning; an unset/blank variable means the FULL sorted surface; a
-    // NON-EMPTY list resolving to zero known names must THROW (ADVICE r14
-    // #1 — the old silent fallback turned a typo'd subset run into a full
-    // run that overwrote BENCH_FULL.json and appended real history)
+    // NON-EMPTY list resolving to zero known names must THROW (a silent
+    // fallback turns a typo'd subset run into a full run that overwrites
+    // BENCH_FULL.json and appends real history)
     val all = SparkEntry.queries.keys.toSeq.sorted
     assert(Bench.benchQueryNames(None) === all)
     assert(Bench.benchQueryNames(Some("")) === all)
@@ -413,27 +395,12 @@ class BenchLoadSpec extends AnyFunSuite {
       s"stale PhasedQueries entries: ${Bench.PhasedQueries -- live}")
   }
 
-  test("the GRAFT_PH wire format round-trips and rides a parseable line") {
-    val ph = Bench.parsePhases("train_coarse=1.25;train_pq=2.5;encode_write=0.75")
-    assert(ph === Seq("train_coarse" -> 1.25, "train_pq" -> 2.5, "encode_write" -> 0.75))
-    assert(Bench.parsePhases("").isEmpty)
-    // the artifact block: phases keyed by query beside the scalar queries
-    // map (totals unchanged — the consumer contract)
-    val line =
-      s"""{"metric":"total","value":8.2,"queries":{"q_ann_ivfpq":8.2},""" +
-        s""""phases":{"q_ann_ivfpq":{"train_coarse":1.25,"train_pq":2.5}},"errors":{}}"""
-    val node = mapper.readTree(line)
-    assert(node.get("queries").get("q_ann_ivfpq").asDouble === 8.2)
-    assert(node.get("phases").get("q_ann_ivfpq").get("train_pq").asDouble === 2.5)
-  }
-
   test("a failed chunk child leaves its keys at -1 with its error, never re-run in-process") {
     // chunks only run forked: the parent must survive to print the closing
     // line, so a child that cannot start, crashes, or under-reports yields
     // failed keys (counted in queries_failed), not a second in-parent run
     val names = Seq("q_a", "q_b")
-    val wire = (ts: Seq[Bench.Timed]) =>
-      (ts.flatMap(Bench.childLines) :+ "GRAFT_CPU 3.0").mkString("\n")
+    val wire = (ts: Seq[Bench.Timed]) => ChunkPrefix + write(ChunkReport(ts, 3.0))
     val unforkable = "chunk child not forkable: classpath not visible as plain files"
     val (dead, deadCpu, deadOk) = Bench.chunkTimings(names, Left(unforkable))
     assert(!deadOk && deadCpu === 0.0)
@@ -453,7 +420,7 @@ class BenchLoadSpec extends AnyFunSuite {
     assert(Bench.chunkTimings(names, Right(wire(full))) === ((full, 3.0, true)))
   }
 
-  // ---- streaming history (VERDICT r10 next-step #4) ----------------------
+  // ---- streaming history -----------------------------------------------
 
   test("streaming records keep a snapshot AND an append-only history") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-hist")
@@ -497,7 +464,7 @@ class BenchLoadSpec extends AnyFunSuite {
     }
   }
 
-  // ---- the driver-parseable closing sequence (VERDICT r11 next-step #1) --
+  // ---- the tail-parseable closing sequence -----------------------------
 
   private val closingHeadline = """{"metric":"total_short","value":1.0,"sf":"/tmp/sf"}"""
   private val closingTotal = """{"metric":"total","value":1.0,"sf":"/tmp/sf"}"""
@@ -521,91 +488,48 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("the compact closing total parses, is tail-sized, and keys metric=total") {
-    val streaming = Bench.streamingRegression(
-      Some("""{"metric":"streaming_smoke","failed":0}"""),
-      Seq("""{"metric":"streaming_smoke","failed":0}"""))
-    val line = Bench.closingTotalLine(total = 148.553, degraded = false,
-      suspect = true, retimeClean = Some(true), retimeHot = Some(false),
-      envInflated = Some(false), band = "[97.2,107.1]",
-      run = 144, failed = 0,
-      sfDir = "/root/testdata/sf0.1", streamingFields = streaming,
-      wallSec = 612.34, skipped = 0)
+    val line = render(Compact, runRecord(wallSec = 612.3, suspect = true))
     val n = mapper.readTree(line)
-    // r16: the protocol's own wall cost is a published number (VERDICT r15
-    // next-step #3) and the deadline's skip count is tail-visible (#1)
-    assert(n.get("wall_sec").asDouble === 612.3)
-    assert(n.get("queries_skipped").asInt === 0)
     assert(n.get("partial") === null,
       "the FINAL closing line drops the partial stamp entirely — absent, not false")
     assert(n.get("metric").asText === "total",
       "the tail parser's most plausible key is the full record's own name")
     assert(n.get("value").asDouble === 148.553)
-    assert(n.get("queries_run").asInt === 144)
-    assert(n.get("suspect").asBoolean === true)
-    // VERDICT r13 #1: the r13 tail read suspect:true for a run whose own
-    // retime pass proved every flag ambient — the adjudication now rides
-    // the tail-visible line itself
-    assert(n.get("retime_clean").asBoolean === true)
-    assert(n.get("retime_hot").asBoolean === false)
-    // VERDICT r14 #2/#3: the plan-independent env verdict and the clean
-    // band make the line self-contextualizing for a tail-only consumer
-    assert(n.get("env_inflated").asBoolean === false)
-    assert(n.get("band").get(0).asDouble === 97.2)
-    assert(n.get("band").get(1).asDouble === 107.1)
+    assert(n.get("wall_sec").asDouble === 612.3)
+    assert(n.get("queries_run").asInt === 144 && n.get("queries_skipped").asInt === 0)
+    // the adjudication, the env verdict and the clean band ride the
+    // tail-visible line itself, so it is self-contextualizing
+    assert(n.get("suspect").asBoolean && n.get("retime_clean").asBoolean)
+    assert(!n.get("retime_hot").asBoolean && !n.get("env_inflated").asBoolean)
+    assert(n.get("band").get(0).asDouble === 97.2 && n.get("band").get(1).asDouble === 107.1)
     assert(n.get("streaming_failed").asInt === 0)
-    assert(n.get("sf").asText === "/root/testdata/sf0.1")
+    assert(n.get("sf").asText === "/data/sf0.1")
     assert(n.get("queries") === null, "no per-query map — that is what keeps it compact")
     // the binding constraint: this line + sbt's ~90-char [success] trailer
     // must ALWAYS fit the driver's 2000-char stdout tail together
     assert(line.length < 600, s"closing total must stay tail-sized: ${line.length}")
     assert(line.startsWith("""{"metric":"total","value":"""),
       "prefix pinned — a tail parser may match on it")
-    // a SKIPPED smoke rides null streaming fields — the closing line must
-    // still parse (nulls are valid JSON; a formatting slip here would
-    // resurrect parsed:null exactly when the smoke is off); an unflagged
-    // run likewise rides tri-state null adjudication fields, and a
-    // bandless trail a literal null band
-    val skipped = Bench.closingTotalLine(total = 1.0, degraded = false,
-      suspect = false, retimeClean = None, retimeHot = None,
-      envInflated = None, band = "null",
-      run = 144, failed = 0, sfDir = "/tmp/sf",
-      streamingFields = Bench.streamingRegression(None, Nil))
-    val sn = mapper.readTree(skipped)
-    assert(sn.get("streaming_failed").isNull && sn.get("metric").asText === "total")
-    assert(sn.get("retime_clean").isNull && sn.get("retime_hot").isNull,
-      "no flags -> no adjudication -> null, never a fake clean/dirty")
-    assert(sn.get("env_inflated").isNull && sn.get("band").isNull,
-      "no baseline -> unknown, never a fake clean band/verdict")
-    // the remaining tri-state arm: a retime that stayed inflated (or never
-    // ran for a capped/errored flag) must read explicitly false
-    val dirty = mapper.readTree(Bench.closingTotalLine(total = 1.0,
-      degraded = false, suspect = true, retimeClean = Some(false),
-      retimeHot = Some(true), envInflated = Some(true), band = "[1.0,1.1]",
-      run = 144, failed = 0, sfDir = "/tmp/sf",
-      streamingFields = Bench.streamingRegression(None, Nil)))
-    assert(dirty.get("retime_clean").asBoolean === false)
-    assert(dirty.get("retime_hot").asBoolean === true)
-    assert(dirty.get("env_inflated").asBoolean === true,
-      "the r14 reading: still-inflated retimes + fixed workloads slow = environmental")
+    // an unflagged run, a skipped smoke and a bandless trail read null —
+    // unknown, never a fake clean verdict
+    val unknown = mapper.readTree(render(Compact, runRecord(retimeClean = None,
+      retimeHot = None, envInflated = None, band = None, streamingFailed = None,
+      streamingPrevFailed = None, streamingRegressed = None)))
+    Seq("retime_clean", "retime_hot", "env_inflated", "band", "streaming_failed",
+      "streaming_regressed").foreach(f => assert(unknown.get(f).isNull, f))
   }
 
   test("the closing total stays under the byte budget at worst-case widths") {
-    // VERDICT r13 next-step #2: now that the tail parser works, the
-    // biggest regression risk is the closing line growing past the
-    // driver's 2000-char window (it must fit TOGETHER with sbt's
-    // [success] trailer and any stderr burst sharing the pipe). Pin a
-    // hard budget with every numeric field at its widest plausible
-    // rendering and every tri-state/streaming field non-null.
-    val worstStreaming = Bench.streamingRegression(
-      Some("""{"metric":"streaming_smoke","failed":999999}"""),
-      Seq("""{"metric":"streaming_smoke","failed":999999}"""))
-    val line = Bench.closingTotalLine(total = 8640000.123456789,
-      degraded = true, suspect = true, retimeClean = Some(false),
-      retimeHot = Some(false), envInflated = Some(false),
-      band = "[8640000.1,8640000.9]", run = 999999, failed = 999999,
-      sfDir = "/very/long/testdata/path/that/should/never/happen/sf0.0000001",
-      streamingFields = worstStreaming, wallSec = 8640000.123456789,
-      skipped = 999999, partial = true)
+    // the line must fit the consumer's 2000-char window TOGETHER with sbt's
+    // [success] trailer and any stderr burst sharing the pipe: every
+    // numeric field at its widest plausible rendering, every tri-state and
+    // streaming field non-null
+    val line = render(Provisional, runRecord(value = 8640000.123456789, partial = true,
+      wallSec = 8640000.1, degraded = true, suspect = true,
+      retimeClean = Some(false), band = Some((8640000.1, 8640000.9)),
+      queriesRun = 999999, queriesFailed = 999999, queriesSkipped = 999999,
+      sf = "/very/long/testdata/path/that/should/never/happen/sf0.0000001",
+      streamingFailed = Some(999999), streamingPrevFailed = Some(999999)))
     assert(mapper.readTree(line).get("metric").asText === "total")
     assert(line.length < 700,
       s"worst-case closing total must stay under the 700-byte budget: ${line.length}")
@@ -625,21 +549,19 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("retimed re-readings ride the headline as an additive map") {
-    // VERDICT r12 #2: a suspect capture re-times JUST the flagged queries
-    // once and publishes the re-readings beside suspect_ratios — the
-    // original value/queries stay untouched (additive adjudication
-    // evidence, never a do-over)
-    assert(Bench.retimedFieldJson(Nil) === "{}")
-    val body = Bench.retimedFieldJson(Seq("q_hybrid_rrf" -> 2.31,
-      "q_hopping_window" -> 0.38, "q_broken" -> -1.0))
-    val line = s"""{"metric":"total_short","value":148.5,"suspect":true,"retimed":$body,"sf":"/tmp/sf"}"""
-    val n = mapper.readTree(line)
+    // a suspect capture re-times JUST the flagged queries once and
+    // publishes the re-readings beside suspect_ratios — the original
+    // value/queries stay untouched (additive evidence, never a do-over)
+    val n = mapper.readTree(render(Headline, runRecord(value = 148.5, suspect = true,
+      retimed = ListMap("q_hybrid_rrf" -> 2.31, "q_hopping_window" -> 0.38, "q_broken" -> -1.0))))
     assert(n.get("retimed").get("q_hybrid_rrf").asDouble === 2.31)
     assert(n.get("retimed").get("q_hopping_window").asDouble === 0.38)
     assert(n.get("retimed").get("q_broken").asDouble === -1.0,
       "a failed retime must read as a failure, not vanish")
     assert(n.get("value").asDouble === 148.5,
       "the published total stays the original capture's")
+    assert(mapper.readTree(render(Headline, runRecord(retimed = ListMap.empty)))
+      .get("retimed").size === 0)
     // the pass is cost-bounded, worst-ratio-first: a fully-saturated box
     // flagging most of the surface must not double the run
     val many = (1 to 40).map(i => (f"q_$i%02d", i / 10.0 + 2.0))
@@ -652,15 +574,15 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("suspect_ratios and streaming fields ride a parseable headline") {
-    val smokeNow  = Some("""{"metric":"streaming_smoke","value":30.5,"suites":7,"failed":1}""")
+    val smokeNow  = entry("""{"metric":"streaming_smoke","value":30.5,"suites":7,"failed":1}""")
     val smokePrev = Seq("""{"metric":"streaming_smoke","value":29.9,"suites":7,"failed":0}""")
-    // streaming fields ride at the END: the final line's byte prefix must
-    // stay the historical {"metric":"total_short","value":… shape
-    val line = s"""{"metric":"total_short","value":100.5,"suspect":true,""" +
-      s""""suspect_queries":["q_a","q_b"],"suspect_ratios":{"q_a":5.2,"q_b":2.4},""" +
-      s""""sf":"/tmp/sf",${Bench.streamingRegression(smokeNow, smokePrev)}}"""
-    assert(line.startsWith("""{"metric":"total_short","value":"""),
-      "appending the streaming fields must not disturb the headline prefix")
+    val (cur, prev, regressed) = Bench.streamingRegression(smokeNow, smokePrev)
+    val line = render(Headline, runRecord(suspect = true,
+      suspectRatios = ListMap("q_a" -> 5.2, "q_b" -> 2.4), streamingFailed = cur,
+      streamingPrevFailed = prev, streamingRegressed = regressed))
+    // streaming fields ride at the END: the byte prefix stays the
+    // historical {"metric":"total_short","value":… shape
+    assert(line.startsWith("""{"metric":"total_short","value":"""))
     val n = mapper.readTree(line)
     assert(n.get("streaming_failed").asInt === 1)
     assert(n.get("streaming_prev_failed").asInt === 0)
@@ -674,32 +596,23 @@ class BenchLoadSpec extends AnyFunSuite {
     val greenL = """{"metric":"streaming_smoke","failed":0}"""
     val redL   = """{"metric":"streaming_smoke","failed":2}"""
     val skipL  = """{"metric":"streaming_smoke","skipped":true,"reason":"timeout"}"""
-    val green  = Some(greenL)
-    def node(cur: Option[String], prev: Seq[String]) =
-      mapper.readTree(s"""{"sf":"x",${Bench.streamingRegression(cur, prev)}}""")
-    // green -> green: explicit false
-    assert(node(green, Seq(greenL)).get("streaming_regressed").asBoolean === false)
-    // recovering run (red -> green) is not a regression
-    assert(node(green, Seq(redL)).get("streaming_regressed").asBoolean === false)
-    // ...and going red IS one
-    assert(node(Some(redL), Seq(greenL)).get("streaming_regressed").asBoolean === true)
-    // no prior entry / skipped smoke / unparseable sides: null, never false
-    assert(node(green, Nil).get("streaming_regressed").isNull)
-    assert(node(None, Seq(greenL)).get("streaming_regressed").isNull)
-    assert(node(None, Seq(greenL)).get("streaming_failed").isNull)
-    assert(node(Some("not json"), Seq(greenL)).get("streaming_regressed").isNull)
-    // a current-side skip record (no `failed` field) must not parse as failed=0
-    assert(node(Some(skipL), Seq(greenL)).get("streaming_failed").isNull)
-    assert(node(Some(skipL), Seq(greenL)).get("streaming_regressed").isNull)
+    def verdict(cur: String, prev: Seq[String]) =
+      Bench.streamingRegression(entry(cur), prev)
+    assert(verdict(greenL, Seq(greenL)) === ((Some(0), Some(0), Some(false))))
+    // recovering (red -> green) is not a regression; going red IS one
+    assert(verdict(greenL, Seq(redL))._3 === Some(false))
+    assert(verdict(redL, Seq(greenL))._3 === Some(true))
+    // no prior entry / skipped smoke / unparseable sides: unknown, never false
+    assert(verdict(greenL, Nil)._3 === None)
+    assert(Bench.streamingRegression(None, Seq(greenL)) === ((None, Some(0), None)))
+    assert(verdict("not json", Seq(greenL))._3 === None)
+    // a current-side skip record (no `failed` field) must not read as failed=0
+    assert(verdict(skipL, Seq(greenL)) === ((None, Some(0), None)))
     // the PREVIOUS baseline scans back past skip/timeout records to the
-    // last entry that actually reported — a wedged smoke last round must
-    // not blind this round's comparison
-    val n = node(Some(redL), Seq(redL, greenL, skipL))
-    assert(n.get("streaming_prev_failed").asInt === 0,
+    // last entry that actually reported
+    assert(verdict(redL, Seq(redL, greenL, skipL)) === ((Some(2), Some(0), Some(true))),
       "baseline must be the last REPORTING entry, not the skip record")
-    assert(n.get("streaming_regressed").asBoolean === true)
-    // a history of only skip records reads unknown
-    assert(node(green, Seq(skipL, skipL)).get("streaming_regressed").isNull)
+    assert(verdict(greenL, Seq(skipL, skipL))._3 === None)
   }
 
   test("HistoryReport adjudicates the latest entry against the prior clean baseline") {
@@ -722,9 +635,8 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("HistoryReport never lets the adjudicated entry feed its own baseline") {
-    // ADVICE r12: with a truncated (unparseable) final append, parsed.last
-    // is the PREVIOUS line — dropping only the raw last line left the
-    // adjudicated entry inside the baseline, partially judging itself.
+    // with a truncated (unparseable) final append, the adjudicated entry is
+    // the PREVIOUS line, and it must not sit inside its own baseline.
     // Pin via the min-samples rule: 2 clean entries + the adjudicated one
     // + trailing garbage. Self-inclusion hands every query a 3rd sample —
     // enough to mint a (self-fed) median and print a verdict row; the fix
@@ -740,10 +652,8 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("HistoryReport prints the tree's clean band in its header") {
-    // VERDICT r13 next-step #6: the clean-entry band ("97–107 s") used to
-    // be re-derived by hand each round; now the tool prints it — min-max
-    // of non-suspect, non-degraded, same-sf totals, contaminated and
-    // other-sf entries excluded
+    // min-max of non-suspect, non-degraded, same-sf totals, contaminated
+    // and other-sf entries excluded
     def line(v: Double, degraded: Boolean = false, suspect: Boolean = false,
         sf: String = "/tmp/sf") =
       s"""{"metric":"total","value":$v,"unit":"sec","degraded":$degraded,""" +
@@ -819,7 +729,7 @@ class BenchLoadSpec extends AnyFunSuite {
       "sub-1% steal is noise, not evidence — stays silent")
   }
 
-  // ---- invisible-contention sensors + env adjudication (VERDICT r14) ----
+  // ---- invisible-contention sensors + env adjudication -----------------
 
   test("the clean band is shared, windowed, and excludes self-stamped entries") {
     def line(v: Double, extra: String = "") =
@@ -841,10 +751,10 @@ class BenchLoadSpec extends AnyFunSuite {
     val rep = (v: Double) =>
       s"""{"metric":"streaming_smoke","value":$v,"suites":7,"failed":0}"""
     val skip = """{"metric":"streaming_smoke","skipped":true,"reason":"timeout"}"""
-    assert(Bench.smokeValueOf(rep(27.5)) === Some(27.5))
-    assert(Bench.smokeValueOf(skip) === None,
-      "a skip record must never read as a 0-second sample")
-    assert(Bench.smokeValueOf("not json") === None)
+    def smokeSec(l: String) = entry(l).flatMap(_.smokeSec)
+    assert(smokeSec(rep(27.5)) === Some(27.5))
+    assert(smokeSec(skip) === None, "a skip record must never read as a 0-second sample")
+    assert(smokeSec("not json") === None)
     assert(Bench.smokeBaseline(Seq(rep(27.46), rep(26.4), skip, rep(29.0))) ===
       Some(27.46), "median of the last reporting values; skips don't count")
     assert(Bench.smokeBaseline(Seq(rep(27.0), rep(28.0))) === None,
@@ -855,14 +765,14 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("envInflatedVerdict stamps the r14 capture true from the tail alone") {
-    // THE r14 replay (VERDICT r14 next-step #2): smoke history 26-29 s,
+    // the r14 replay: smoke history 26-29 s,
     // this capture's smoke 105.16 s — the artifact must stamp env_inflated
     // true even though every load sensor read idle
     val smokeHist = Seq(27.46, 26.4, 29.0).map(v =>
       s"""{"metric":"streaming_smoke","value":$v,"suites":7,"failed":0}""")
     val verdict = Bench.envInflatedVerdict(
-      smokeSec = Bench.smokeValueOf(
-        """{"metric":"streaming_smoke","value":105.16,"suites":7,"failed":0}"""),
+      smokeSec = entry("""{"metric":"streaming_smoke","value":105.16,"suites":7,"failed":0}""")
+        .flatMap(_.smokeSec),
       smokeBase = Bench.smokeBaseline(smokeHist))
     assert(verdict === Some(true),
       "the 3.8x fixed-workload smoke IS the contention evidence r14 lacked")
@@ -883,7 +793,7 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("a run-level tier-1 suspect stamp admits lone moderates to the retime set") {
-    // ADVICE r14 #3: >=3 trivial tier-1 flags already adjudicate the
+    // >=3 trivial tier-1 flags already adjudicate the
     // capture as contention — a lone 1.7-2.0x moderate in the same window
     // must get its retime without needing a moderate-only quorum
     val medians = Map("q_t1" -> 0.16, "q_t2" -> 0.15, "q_t3" -> 0.2,
@@ -964,7 +874,7 @@ class BenchLoadSpec extends AnyFunSuite {
       .contains("treat the total with caution"))
   }
 
-  // ---- internal deadline + degrade ladder + quick keys (VERDICT r15) ----
+  // ---- internal deadline + degrade ladder + quick keys -----------------
 
   test("the deadline and chunk-size knobs parse defensively") {
     // r15 died at the driver's wall cap with nothing emitted; the internal
@@ -979,7 +889,7 @@ class BenchLoadSpec extends AnyFunSuite {
     // non-finite values parse (toDoubleOption accepts "Infinity", and
     // "1e400" overflows to it) but would render as the bare token
     // `Infinity` in budgetFields — invalid JSON on the lines whose
-    // parseability is the whole contract (ADVICE r16 #1)
+    // parseability is the whole contract
     assert(Bench.benchDeadlineSec(Some("Infinity")) === Bench.DefaultDeadlineSec)
     assert(Bench.benchDeadlineSec(Some("1e400")) === Bench.DefaultDeadlineSec)
     assert(Bench.benchDeadlineSec(Some("NaN")) === Bench.DefaultDeadlineSec)
@@ -1016,7 +926,7 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("the adaptive-quick accept test and its argv round-trip (r17)") {
-    // VERDICT r16 next-step #6: one reading publishes alone only when it
+    // one reading publishes alone only when it
     // lands inside 1.3x median + 0.05 s of the key's own clean median — a
     // steal burst (the 18x q_asof_join shape) can never accept, so the
     // min-of-2 fallback keeps the r16 burst defense at ~half the cost
@@ -1029,20 +939,17 @@ class BenchLoadSpec extends AnyFunSuite {
         "key must not force the second reading")
     assert(!Bench.quickAccept(reading = 3.6, median = 0.2),
       "a burst reading is rejected and falls back to min-of-2")
-    // the quick set rides the chunk-fork argv as name=median pairs
-    val quick = Map("q_a" -> 0.2, "q_b" -> 0.05)
-    val csv = Bench.quickCsvOf(quick, Seq("q_a", "q_b", "q_c"))
-    assert(Bench.parseQuickCsv(csv) === quick,
-      "the child must reconstruct exactly the parent's quick medians")
-    assert(Bench.parseQuickCsv("") === Map.empty[String, Double])
-    assert(Bench.parseQuickCsv("junk,q_x=notanumber") ===
-      Map.empty[String, Double], "junk entries drop, they never crash a chunk")
+    // the quick medians ride the chunk-fork argv inside the chunk request
+    val req = ChunkRequest(Seq("q_a", "q_b", "q_c"), 3, phasesOn = true,
+      Map("q_a" -> 0.2, "q_b" -> 0.05, "q_c" -> 1.0E-4))
+    assert(read(write(req), classOf[ChunkRequest]) === Some(req),
+      "the child must reconstruct exactly the parent's request")
+    assert(read("junk", classOf[ChunkRequest]) === None)
   }
 
   test("rotatedChunks moves the deadline-skip burden across runs (r17)") {
-    // VERDICT r16 next-step #1: chunks ran in sorted order, so a deadline
-    // trip always starved the SAME alphabetical tail (r16 skipped exactly
-    // the 4 sorted-last keys; every contended run would re-skip them).
+    // in sorted order a deadline trip always starves the SAME
+    // alphabetical tail, and every contended run would re-skip it
     val chunks = Seq(Seq("a", "b"), Seq("c", "d"), Seq("e", "f"))
     assert(Bench.rotatedChunks(chunks, 0) === chunks,
       "seed 0 (empty history) keeps the sorted order")
@@ -1069,35 +976,24 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("a provisional closing line is stamped partial and parses as the same shape") {
-    // VERDICT r15 next-step #2: after every chunk the bench prints the
-    // cumulative record stamped partial:true — whatever instant the
-    // process dies, the stdout tail holds a parseable best-available
-    // record. Same metric name, same prefix, last-wins like every metric
-    // line here; the stamp is what tells a reader adjudication is
-    // incomplete.
-    val line = Bench.closingTotalLine(total = 42.5, degraded = false,
-      suspect = false, retimeClean = None, retimeHot = None,
-      envInflated = None, band = "[97.2,107.1]", run = 40, failed = 0,
-      sfDir = "/tmp/sf", streamingFields = Bench.streamingRegression(None, Nil),
-      wallSec = 123.45, skipped = 0, partial = true)
+    // after every chunk the bench prints the cumulative record stamped
+    // partial:true — whatever instant the process dies, the stdout tail
+    // holds a parseable best-available record, last-wins like every
+    // metric line here
+    val line = render(Provisional, runRecord(value = 42.5, partial = true, wallSec = 123.5,
+      queriesRun = 40, retimeClean = None, retimeHot = None, envInflated = None))
     assert(line.startsWith("""{"metric":"total","value":"""),
       "the partial stamp must not disturb the pinned prefix")
     val n = mapper.readTree(line)
     assert(n.get("partial").asBoolean === true)
-    assert(n.get("wall_sec").asDouble === 123.5)
-    assert(n.get("value").asDouble === 42.5)
-    assert(n.get("queries_run").asInt === 40)
+    assert(n.get("value").asDouble === 42.5 && n.get("queries_run").asInt === 40)
     assert(n.get("retime_clean").isNull && n.get("env_inflated").isNull,
       "mid-run adjudication is unknown, never a fake verdict")
     assert(line.length < 700, s"provisional lines share the byte budget: ${line.length}")
-    // a deadline-tripped final record carries the skip count (the skip
-    // NAMES ride the full line's `skipped` array, not the compact tail)
-    val clipped = Bench.closingTotalLine(total = 42.5, degraded = true,
-      suspect = false, retimeClean = None, retimeHot = None,
-      envInflated = None, band = "null", run = 40, failed = 0,
-      sfDir = "/tmp/sf", streamingFields = Bench.streamingRegression(None, Nil),
-      wallSec = 905.0, skipped = 104, repeats = 1)
-    val c = mapper.readTree(clipped)
+    // a deadline-tripped, ladder-degraded final record carries the skip
+    // count (the skip NAMES ride the full line's `skipped` array)
+    val c = mapper.readTree(render(Compact, runRecord(degraded = true, repeats = 1,
+      queriesSkipped = 104)))
     assert(c.get("queries_skipped").asInt === 104)
     assert(c.get("repeats").asInt === 1, "a ladder-degraded run says so")
     assert(c.get("degraded").asBoolean === true,
@@ -1239,21 +1135,15 @@ class BenchLoadSpec extends AnyFunSuite {
   }
 
   test("the emitted degraded flag rides a parseable full line") {
-    // assemble a line the way main does (same field layout) and check a
-    // JSON consumer reads metric/degraded/load back — guards the string
-    // plumbing around loadFieldsJson, where a misplaced quote would turn
-    // the whole artifact line unreadable
-    val (loadJson, degraded) =
+    val (load, degraded) =
       Bench.loadFieldsJson(Seq(idle.copy(stealPct = 4.0)), cores, None)
-    val line =
-      s"""{"metric":"total","value":12.5,"unit":"sec","repeats":3,""" +
-        s""""degraded":$degraded,"chunks":1,"chunks_forked":1,"chunk_size":20,""" +
-        s""""chunks_retried":1,"queries":{"q_x":12.5},"errors":{},""" +
-        s""""load":$loadJson,"sf":"/tmp/sf"}"""
-    val node = mapper.readTree(line)
+    val node = mapper.readTree(render(Full, runRecord(degraded = degraded, load = load)))
     assert(node.get("degraded").asBoolean === true)
     assert(node.get("load").get("chunk_load").get(0).get("steal_pct").asDouble === 4.0)
     assert(node.get("metric").asText === "total")
+    assert(node.get("queries").get("q_a").asDouble === 1.2)
+    assert(node.get("phases").get("q_a").get("train").asDouble === 0.5,
+      "composite phase splits ride beside the scalar queries map")
   }
 
   test("envRatio is the median per-query inflation vs clean medians (VERDICT r17 #2)") {

@@ -142,15 +142,14 @@ class StreamingSpec extends SparkTestBase {
         }
       }.toMap
     }
-    def check(trial: String, o: Rows, n: Rows, oCols: Seq[String], nCols: Seq[String],
-        buckets: Option[Int] = None): Unit = {
-      val table = new KeyedTable(spark, tmp(s"diffprop"), "link", buckets)
+    def check(trial: String, o: Rows, n: Rows, oCols: Seq[String], nCols: Seq[String]): Unit = {
+      val table = new KeyedTable(spark, tmp(s"diffprop"), "link")
       table.publish(mkDf(o, oCols))
       table.publish(mkDf(n, nCols))
       val got = table.diff(0L, 1L).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got == model(o, n, oCols, nCols),
-        s"$trial: oCols=$oCols nCols=$nCols old=$o new=$n buckets=$buckets")
+        s"$trial: oCols=$oCols nCols=$nCols old=$o new=$n")
     }
 
     // the trap, pinned deterministically: an all-null-payload row is
@@ -164,13 +163,12 @@ class StreamingSpec extends SparkTestBase {
       o = Map("k0" -> Map("v" -> "1"), "k1" -> Map.empty),
       n = Map("k0" -> Map("w" -> "2"), "k2" -> Map("w" -> "3")),
       oCols = Seq("v"), nCols = Seq("w"))
-    // the bucketed (scale-path) store diffs identically: diff reads the
-    // snapshot directories as plain parquet, bucket layout must not leak
-    // into the audit semantics
-    check("bucketed snapshots",
+    // every status at once beside an added column: k0 removed, k1 changed,
+    // k2 added, k3 unchanged (the new `w` is not common, so it is ignored)
+    check("mixed statuses, added column",
       o = Map("k0" -> Map.empty, "k1" -> Map("v" -> "1"), "k3" -> Map("v" -> "2")),
       n = Map("k1" -> Map("v" -> "2", "w" -> "1"), "k2" -> Map.empty, "k3" -> Map("v" -> "2")),
-      oCols = Seq("v"), nCols = Seq("v", "w"), buckets = Some(4))
+      oCols = Seq("v"), nCols = Seq("v", "w"))
 
     for (trial <- 0 until 10) {
       def someCols() = colPool.filter(_ => rnd.nextBoolean()) match {
