@@ -34,26 +34,28 @@ object Pipeline {
   }
 
   /** One ingest batch: keep only NEW links (J3 — "check before scraping to
-    * save time"), validate (F1+F2), merge survivors by key (J4). Existing
-    * keys are untouched — the reference's loop skips known links before
-    * scraping; in-place UPDATES flow through the verification/merge path
-    * (KeyedTable.merge), not ingest.
+    * save time"), validate (F1+F2), merge survivors by key (J4), one row
+    * per link. Existing keys are untouched — the reference's loop skips
+    * known links before scraping; in-place UPDATES flow through the
+    * verification/merge path (KeyedTable.merge), not ingest.
     */
-  def ingestBatch(existing: DataFrame, batch: DataFrame): DataFrame = {
-    val fresh = Relational.antiJoin(batch, existing.select("link"), "link")
-    Relational.upsertMerge(existing, fresh.filter(ingestValid), "link")
-  }
+  def ingestBatch(existing: DataFrame, batch: DataFrame): DataFrame =
+    ingested(Some(existing), batch)
 
   /** Same ingest semantics into a versioned [[KeyedTable]] (atomic publish,
-    * S5): anti-join against the current snapshot, validate, merge — one
-    * batch, one new snapshot version, idempotent per `batchId`.
+    * S5): one [[KeyedTable.commit]], so the anti-join and the merge see the
+    * same snapshot — one batch, one new snapshot version, idempotent per
+    * `batchId`.
     */
-  def ingestBatch(table: KeyedTable, batch: DataFrame, batchId: Long): Unit = {
-    val fresh = table.read() match {
-      case Some(existing) => Relational.antiJoin(batch, existing.select("link"), "link")
-      case None           => batch
-    }
-    table.merge(fresh.filter(ingestValid), batchId)
+  def ingestBatch(table: KeyedTable, batch: DataFrame, batchId: Long): Unit =
+    table.commit(batchId)(ingested(_, batch))
+
+  /** The one definition of an ingest batch against snapshot `existing`:
+    * anti-join its links, validate, dedup within the batch, upsert.
+    */
+  private def ingested(existing: Option[DataFrame], batch: DataFrame): DataFrame = {
+    val fresh = existing.fold(batch)(Relational.antiJoin(batch, _, "link"))
+    KeyedTable.upsert(existing, fresh.filter(ingestValid), "link", None)
   }
 
   /** Verification compaction: a row survives iff fewer than 3 of the 15

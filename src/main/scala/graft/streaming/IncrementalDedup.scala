@@ -15,9 +15,9 @@ import graft.queries.DedupQueries
   * State is two co-located stores under the signature table's directory:
   *
   *  - a [[KeyedTable]] of signature rows (doc_id, m0..m7, sz) — ~40 bytes
-  *    per document — merged with the table's idempotent batch protocol, so
-  *    a replayed micro-batch neither duplicates signatures nor re-emits
-  *    pairs;
+  *    per document — merged through the table's replay-guarded
+  *    [[KeyedTable.commit]], so a replayed micro-batch neither duplicates
+  *    signatures nor re-emits pairs;
   *  - a band-row INDEX at `<dir>/bands`: the 4 (band, bh) rows per
   *    signature, written once when the document is first indexed, as a
   *    [[Layers]] store partitioned by pb = hash(bh) mod [[BandBuckets]]
@@ -91,7 +91,7 @@ object IncrementalDedup {
   //
   // The index's takedown path, mirroring AnnIndex's tombstones: the
   // SIGNATURE table is the source of truth (the delete removes its rows
-  // under the normal batch protocol), but the append-only band index still
+  // through the table's commit), but the append-only band index still
   // holds the deleted docs' rows until the next [[compactBands]] — so a
   // tombstone layer under `<dir>/tombs` hides them from the stored-side
   // probe immediately (a broadcast anti-join, bounded by deletes since the
@@ -105,18 +105,20 @@ object IncrementalDedup {
     Layers.read(table.session, tombsPath(table)).map(_.select("doc_id").distinct())
 
   /** Remove `ids` (any frame with a `doc_id` column) from the index under
-    * `batchId`. Replay-safe: the tombstone layer is rewritten in place on
-    * replay, and the signature republish rides the table's applied guard.
+    * `batchId`: one [[KeyedTable.commit]] that writes the tombstone layer,
+    * then publishes the signatures without the deleted docs. Replay-safe:
+    * an applied id is skipped, and a crash between the tombstone write and
+    * the publish rewrites the same layer on replay. An index with no
+    * signatures yet publishes an empty signature table, so the delete's id
+    * is recorded like an empty first batch's.
     */
-  def deleteDocs(table: KeyedTable, ids: DataFrame, batchId: Long): Unit = {
-    if (table.alreadyApplied(batchId)) return
-    Layers.append(ids.select("doc_id").distinct(), tombsPath(table), batchId)
-    table.read().foreach { sig =>
-      table.publish(
-        sig.join(broadcast(ids.select("doc_id").distinct()), Seq("doc_id"), "left_anti"),
-        Some(batchId))
+  def deleteDocs(table: KeyedTable, ids: DataFrame, batchId: Long): Unit =
+    table.commit(batchId) { prev =>
+      val gone = ids.select("doc_id").distinct()
+      Layers.append(gone, tombsPath(table), batchId)
+      prev.fold(signaturesOf(gone.select(col("doc_id"), lit("").as("text"))))(
+        _.join(broadcast(gone), Seq("doc_id"), "left_anti"))
     }
-  }
 
   /** Rebuild the band index from the CURRENT signature table — the
     * maintenance compaction the index's append-only growth calls for: drops
@@ -144,7 +146,8 @@ object IncrementalDedup {
     * candidate pairs (a, b) this batch creates against the corpus-so-far
     * (including within-batch pairs); `is_new_b` marks within-batch pairs.
     * Replay-safe: an already-applied batchId returns no pairs and leaves the
-    * table untouched.
+    * table untouched; the signature merge is the table's
+    * [[KeyedTable.merge]], so the batch commits through its replay guard.
     *
     * The returned frame is persisted (it must be materialized before the
     * signature merge supersedes the snapshot it reads) — the CALLER owns the

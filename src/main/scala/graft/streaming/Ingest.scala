@@ -73,23 +73,22 @@ object Ingest {
       .trigger(trigger)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // One replay gate for the WHOLE batch effect (merge + quarantine):
-        // foreachBatch is at-least-once, and a quarantine append outside the
-        // gate would double-count invalid rows on crash-replay.
-        if (!table.alreadyApplied(batchId)) {
-          val marked = batch.withColumn("__valid", valid).persist()
-          try {
-            quarantineDir.foreach { qd =>
-              val bad = marked.filter(!col("__valid")).drop("__valid")
-              if (!bad.isEmpty)
-                // per-batch directory + overwrite → a replay that slipped past
-                // the gate (crash between this write and the pointer swap)
-                // rewrites the same files instead of appending duplicates
-                bad.write.mode("overwrite").parquet(s"$qd/batch=$batchId")
-            }
-            table.merge(marked.filter(col("__valid")).drop("__valid"), batchId, seqCol)
-          } finally marked.unpersist()
-        }
+        // One replay guard for the WHOLE batch effect (quarantine + merge):
+        // foreachBatch is at-least-once, and a quarantine append outside
+        // the commit would double-count invalid rows on crash-replay.
+        val marked = batch.withColumn("__valid", valid).persist()
+        try table.commit(batchId) { prev =>
+          quarantineDir.foreach { qd =>
+            val bad = marked.filter(!col("__valid")).drop("__valid")
+            if (!bad.isEmpty)
+              // per-batch directory + overwrite → a replay after a crash
+              // between this write and the pointer swap rewrites the same
+              // files instead of appending duplicates
+              bad.write.mode("overwrite").parquet(s"$qd/batch=$batchId")
+          }
+          KeyedTable.upsert(prev, marked.filter(col("__valid")).drop("__valid"),
+            table.key, seqCol)
+        } finally marked.unpersist()
         ()
       }
       .start()

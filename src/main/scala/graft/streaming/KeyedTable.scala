@@ -25,11 +25,18 @@ import graft.operators.Relational
   * Scale posture: snapshots are plain parquet directories written by the
   * cluster; only the ~30-byte pointer file is written outside its tasks.
   *
+  * Batch writes: [[commit]] is the one owner of the replay guard. Every
+  * writer that records a streaming batch id (keyed [[merge]],
+  * `Pipeline.ingestBatch`, the `Ingest.start` batch body, the sketch,
+  * pack and signature stores) folds its batch into the snapshot through
+  * it. Only `IncrementalDedup.processBatch` also reads the applied id, to
+  * return its typed empty result early.
+  *
   * Schema slot: a plain parquet read infers its schema with one
   * footer-reading job. Each instance keeps the `(version, schema)` of the
   * newest snapshot it wrote or read; [[publish]] fills it from the frame it
-  * wrote, and a read of that version (the read-merge-publish loop of
-  * [[merge]], serving right after a commit) reads with the kept schema and
+  * wrote, and a read of that version (the read-fold-publish loop of
+  * [[commit]], serving right after a commit) reads with the kept schema and
   * runs no job. A version published by another instance misses the slot,
   * is inferred once, and becomes the slot. With one writer a version
   * directory is written once, before the pointer names it, so the slot
@@ -84,17 +91,38 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
   }
 
   /** True iff streaming batch `batchId` has already been applied — a
-    * foreachBatch replay after crash-resume (T3/T4).
+    * foreachBatch replay after crash-resume (T3/T4). Writers leave this
+    * check to [[commit]].
     */
   def alreadyApplied(batchId: Long): Boolean =
     pointerState().exists(_._2 >= batchId)
+
+  /** The replay-guarded commit of streaming batch `batchId`: resolve
+    * `_LATEST` once; if the id is already applied (a foreachBatch replay)
+    * return without building anything; else hand `fold` the snapshot AT
+    * THAT VERSION (None before the first publish) and [[publish]] what it
+    * returns under the id. `fold` may write a sidecar first (a pack or
+    * tombstone layer, a quarantine directory): it runs after the guard and
+    * before the pointer swap, so a crash between the two replays onto the
+    * same sidecar. For a non-idempotent fold (addition) this guard is the
+    * exactly-once guarantee.
+    */
+  def commit(batchId: Long)(fold: Option[DataFrame] => DataFrame): Unit =
+    pointerState() match {
+      case Some((_, applied)) if applied >= batchId => ()
+      case state =>
+        publish(fold(state.map { case (v, _) => snapshot(v) }), Some(batchId))
+        ()
+    }
 
   /** Write a full snapshot as the next version and atomically swing the
     * pointer (recording `batchId` when the write came from a streaming
     * batch). Parquet write is the cluster-side heavy path (Spark's commit
     * protocol already publishes the directory all-or-nothing); the pointer
-    * swap is the reference's os.replace. Superseded and orphaned snapshots
-    * beyond [[KeepSnapshots]] are deleted best-effort afterwards.
+    * swap is the reference's os.replace. The new version comes from this
+    * call's own pointer read, not from the one [[commit]] folded against.
+    * Superseded and orphaned snapshots beyond [[KeepSnapshots]] are deleted
+    * best-effort afterwards.
     */
   def publish(df: DataFrame, batchId: Option[Long] = None): Long = {
     val state   = pointerState()
@@ -153,23 +181,27 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
   }
 
   /** Keyed upsert of one micro-batch (J4 semantics — pet_scraper.py:410-466):
-    * merge into the current snapshot (or bootstrap from the batch), publish
-    * as the next snapshot version, record `batchId` as applied. Replayed
-    * batch ids are skipped, making the sink effectively exactly-once under
-    * foreachBatch's at-least-once replay. Intra-batch duplicate keys are
-    * resolved before the merge (server.py:207's intra-batch dedup): highest
-    * `seqCol` wins when given, else an arbitrary-but-single row per key.
+    * [[commit]] of [[KeyedTable.upsert]] — replayed batch ids are skipped,
+    * making the sink effectively exactly-once under foreachBatch's
+    * at-least-once replay.
     */
-  def merge(updates: DataFrame, batchId: Long, seqCol: Option[String] = None): Unit = {
-    if (alreadyApplied(batchId)) return
+  def merge(updates: DataFrame, batchId: Long, seqCol: Option[String] = None): Unit =
+    commit(batchId)(KeyedTable.upsert(_, updates, key, seqCol))
+}
+
+object KeyedTable {
+
+  /** `updates` folded into snapshot `prev` by `key` (or bootstrapping the
+    * table when there is none). Intra-batch duplicate keys are resolved
+    * first (server.py:207's intra-batch dedup): highest `seqCol` wins when
+    * given, else an arbitrary-but-single row per key — so the result keeps
+    * one row per key.
+    */
+  private[graft] def upsert(prev: Option[DataFrame], updates: DataFrame, key: String,
+      seqCol: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
     val order   = seqCol.map(c => col(c).desc).getOrElse(col(key).asc)
     val deduped = Relational.topKPerGroup(updates, Seq(col(key)), Seq(order), 1).drop("rn")
-    val merged = read() match {
-      case Some(existing) => Relational.upsertMerge(existing, deduped, key)
-      case None           => deduped
-    }
-    publish(merged, Some(batchId))
-    ()
+    prev.fold(deduped)(Relational.upsertMerge(_, deduped, key))
   }
 }

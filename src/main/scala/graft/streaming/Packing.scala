@@ -37,10 +37,12 @@ object Packing {
     * age — a snapshot that re-published every historical assignment would
     * pay O(history) write volume per batch.
     *
-    * Crash/replay safety: an already-applied id is a no-op; a crash BETWEEN
-    * the layer write and the offsets publish heals on replay, which
-    * rewrites the same layer with identical rows (offsets still reflect
-    * the pre-batch state until the publish lands).
+    * Crash/replay safety: the layer write and the offsets publish are one
+    * [[KeyedTable.commit]], the owner of the replay guard, so an
+    * already-applied id is a no-op; a crash BETWEEN the layer write and the
+    * offsets publish heals on replay, which rewrites the same layer with
+    * identical rows (offsets still reflect the pre-batch state until the
+    * publish lands).
     *
     * Ordering contract (same as [[packStream]]): docs pack in arrival
     * order, doc_id order within a batch — a stream fed in doc_id order
@@ -50,50 +52,48 @@ object Packing {
       budget: Long = graft.queries.TextQueries.PackBudget): Unit = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    if (table.alreadyApplied(batchId)) return
-    val toks = docs
-      .withColumn("tok", expr(s"cast(size(${graft.queries.Dialect.wordsSql}) as bigint)"))
-      .select("source", "doc_id", "tok")
-    // ONE snapshot read for both uses below (base lookup + offset advance):
-    // resolving the pointer twice is wasted IO and, under a concurrent
-    // publisher, could even mix versions
-    val prevBases = table.read().map(_.select("source", "base"))
-    // next free offset per source: the tiny snapshot, not a history scan
-    val based = prevBases match {
-      case Some(bases) =>
-        toks.join(broadcast(bases), Seq("source"), "left")
-          .withColumn("base", coalesce(col("base"), lit(0L)))
-      case None => toks.withColumn("base", lit(0L))
-    }
     val w = Window.partitionBy("source").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, -1)
+    // each doc's token offset inside its source's share of this batch —
     // persisted because BOTH the layer write and the offset advance consume
-    // it (the processBatch move) — without it the per-source window runs
-    // twice per batch
-    val assigned = based
-      .withColumn("off", col("base") + coalesce(sum("tok").over(w), lit(0L)))
-      .select(col("source"), col("doc_id"), col("tok"),
-        expr(s"off div $budget").as("pack_id"),
-        expr(s"off % $budget").as("pack_off"))
+    // it (the processBatch move); without it the per-source window runs
+    // twice per batch. It does not depend on the snapshot, so it is cached
+    // outside the commit and released after the publish.
+    val local = docs
+      .withColumn("tok", expr(s"cast(size(${graft.queries.Dialect.wordsSql}) as bigint)"))
+      .select("source", "doc_id", "tok")
+      .withColumn("local", coalesce(sum("tok").over(w), lit(0L)))
       .persist()
     // try/finally: a transient failure in the layer write or the publish
     // must not leak the cached batch — a long-running foreachBatch driver
     // retries batches, and an exception-path leak accumulates one cached
     // dataset per retry (ADVICE r7)
-    try {
+    try table.commit(batchId) { prev =>
+      // next free offset per source: the tiny snapshot, not a history scan
+      val prevBases = prev.map(_.select("source", "base"))
+      val based = prevBases match {
+        case Some(bases) =>
+          local.join(broadcast(bases), Seq("source"), "left")
+            .withColumn("base", coalesce(col("base"), lit(0L)))
+        case None => local.withColumn("base", lit(0L))
+      }
+      val assigned = based
+        .withColumn("off", col("base") + col("local"))
+        .select(col("source"), col("doc_id"), col("tok"),
+          expr(s"off div $budget").as("pack_id"),
+          expr(s"off % $budget").as("pack_off"))
       Layers.append(assigned, packsPath(table), batchId)
       // new offsets = old bases advanced by this batch's token mass per source
       val batchEnds = assigned.groupBy("source")
         .agg(max(col("pack_id") * budget + col("pack_off") + col("tok")).as("end"))
-      val newBases = prevBases match {
+      prevBases match {
         case Some(bases) =>
           bases.unionByName(batchEnds.select(col("source"), col("end").as("base")))
             .groupBy("source").agg(max("base").as("base"))
         case None => batchEnds.select(col("source"), col("end").as("base"))
       }
-      table.publish(newBases, Some(batchId))
     } finally {
-      assigned.unpersist()
+      local.unpersist()
       ()
     }
   }

@@ -12,10 +12,15 @@ import graft.queries.{DedupQueries, Dialect, PipelineQueries, TextQueries}
   * merge associatively and old text is never reprocessed; state is the fixed
   * D×W grid, independent of stream length).
   *
-  * Replay safety rides the [[KeyedTable]] batch protocol: an already-applied
-  * batch id is skipped, so foreachBatch's at-least-once replay cannot
-  * double-count a batch into the counters (addition is NOT idempotent — this
-  * guard is what makes the merge exactly-once).
+  * Every store here publishes through [[KeyedTable.commit]], which owns the
+  * replay guard: an already-applied batch id is skipped before the batch is
+  * built, so foreachBatch's at-least-once replay cannot double-count a
+  * batch into the counters (addition is NOT idempotent — this guard is what
+  * makes the merge exactly-once). Each store's fold is its monoid: the
+  * previous snapshot first, the batch second, re-aggregated over their
+  * union (the first batch is published as is). A store's snapshot holds
+  * exactly its state columns; the table's `key` is unused (sketch stores
+  * never call `merge` or `diff`).
   *
   * The salted bucket construction is single-sourced with the graded query
   * ([[TextQueries.cmsBucketExprs]]); [[SketchesSpec]] pins that counters
@@ -23,48 +28,20 @@ import graft.queries.{DedupQueries, Dialect, PipelineQueries, TextQueries}
   */
 object Sketches {
 
-  /** The replay-guarded merge-publish protocol every sketch store here
-    * rides, single-sourced (it appeared once per store before — eight
-    * slightly-varied copies of the exactly-once rule): skip an
-    * already-applied batch id BEFORE building anything, read the previous
-    * snapshot ONCE (resolving the pointer twice could straddle a concurrent
-    * publish and mix versions), fold the batch in with the store's monoid
-    * `merge` (prev first, batch second — the order every store documented),
-    * and publish `finish(merged)` under the batch id. `prev` is narrowed to
-    * the batch frame's columns so publish-side derived keys (cell/pair)
-    * never leak back into the merge. For non-idempotent monoids (addition)
-    * the guard IS the exactly-once guarantee under foreachBatch's
-    * at-least-once replay.
-    */
-  private def mergePublish(table: KeyedTable, batchId: Long,
-      batch: => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame,
-      finish: DataFrame => DataFrame = identity): Unit = {
-    if (table.alreadyApplied(batchId)) return
-    val b = batch
-    val merged = table.read() match {
-      case Some(prev) => merge(prev.select(b.columns.toSeq.map(col): _*), b)
-      case None       => b
-    }
-    table.publish(finish(merged), Some(batchId))
-    ()
-  }
-
   /** Per-batch counters of `docs` (any frame with a `text` column) added
-    * into the sketch at `table` (schema: cell, r, bucket, cnt; key "cell" =
-    * r·W + bucket). Returns after the merged snapshot is published.
+    * into the sketch at `table` (schema: r, bucket, cnt). Returns after the
+    * merged snapshot is published.
     */
   def updateCms(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      docs
+    table.commit(batchId) { prev =>
+      val b = docs
         .select(explode(expr(Dialect.wordsSql)).as("w"))
         .filter(col("w") =!= "")
         .groupBy("w").agg(count(lit(1)).as("wc"))
         .select(col("wc"), posexplode(array(TextQueries.cmsBucketExprs: _*)).as(Seq("r", "bucket")))
-        .groupBy("r", "bucket").agg(sum("wc").as("cnt")))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("r", "bucket").agg(sum("cnt").as("cnt")),
-      m => m.withColumn("cell", col("r") * TextQueries.CmsWidth + col("bucket")))
+        .groupBy("r", "bucket").agg(sum("wc").as("cnt"))
+      prev.fold(b)(_.unionByName(b).groupBy("r", "bucket").agg(sum("cnt").as("cnt")))
+    }
 
   /** Point estimates for `words` against the sketch: min over the D
     * counters, 0 for a word hitting only empty cells (never seen). The probe
@@ -91,25 +68,26 @@ object Sketches {
     * bit positions UNION into the persisted set-of-set-bits. Set union is
     * idempotent and commutative — batches merge associatively and even an
     * unguarded replay could not corrupt the filter (unlike CMS addition);
-    * the batch protocol still skips replays to avoid wasted work. State is
+    * the commit still skips replays to avoid wasted work. State is
     * ≤ BloomBits rows forever, independent of stream length, and bits only
     * turn on — so the no-false-negative guarantee holds at every point in
     * the stream. Salt construction is single-sourced with the graded query
     * ([[DedupQueries.bloomPosCols]]).
     */
   def updateBloom(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      DedupQueries.shingleRows(docs)
+    table.commit(batchId) { prev =>
+      val b = DedupQueries.shingleRows(docs)
         .select(explode(DedupQueries.bloomPosCols).as("pos"))
-        .distinct())(
-      (prev, b) => prev.unionByName(b).distinct())
+        .distinct()
+      prev.fold(b)(_.unionByName(b).distinct())
+    }
 
   /** Streaming HLL registers (the incremental form of `q_hll_distinct`'s
     * sketch side): each micro-batch's (source, j, r) registers merge BY MAX
     * into the persisted register table. Max is an idempotent commutative
     * monoid — batches merge associatively AND even an unguarded replay
     * could not corrupt the registers (the Bloom property, not the CMS
-    * one); the batch protocol still skips replays to avoid wasted work.
+    * one); the commit still skips replays to avoid wasted work.
     * State is ≤ 64 rows per source forever, independent of stream length —
     * the reason HLL (not KMV, whose merge must re-rank k hashes per group)
     * is the distinct counter of unbounded ingest. Register construction is
@@ -117,11 +95,10 @@ object Sketches {
     * ([[TextQueries.hllShingles]]/[[TextQueries.hllRegistersOf]]).
     */
   def updateHll(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      TextQueries.hllRegistersOf(TextQueries.hllShingles(docs)))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("source", "j").agg(max("r").as("r")),
-      m => m.withColumn("reg", concat_ws(":", col("source"), col("j"))))
+    table.commit(batchId) { prev =>
+      val b = TextQueries.hllRegistersOf(TextQueries.hllShingles(docs))
+      prev.fold(b)(_.unionByName(b).groupBy("source", "j").agg(max("r").as("r")))
+    }
 
   /** Per-source distinct estimates from the CURRENT register snapshot —
     * the graded query's integer-exact estimator over the ≤ 64·#sources
@@ -142,9 +119,10 @@ object Sketches {
     * query ([[TextQueries.scoreHistogram]]).
     */
   def updateScoreHist(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId, TextQueries.scoreHistogram(docs))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("bucket").agg(sum("n").as("n")))
+    table.commit(batchId) { prev =>
+      val b = TextQueries.scoreHistogram(docs)
+      prev.fold(b)(_.unionByName(b).groupBy("bucket").agg(sum("n").as("n")))
+    }
 
   /** The percentile calibration table from the CURRENT histogram snapshot —
     * the deployment shape: train the histogram on the full stream (constant
@@ -165,11 +143,11 @@ object Sketches {
     * query ([[TextQueries.dsirGrams]]/[[TextQueries.dsirModel]]).
     */
   def updateDsirModel(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      TextQueries.dsirModel(TextQueries.dsirGrams(docs)))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("bucket")
+    table.commit(batchId) { prev =>
+      val b = TextQueries.dsirModel(TextQueries.dsirGrams(docs))
+      prev.fold(b)(_.unionByName(b).groupBy("bucket")
         .agg(sum("r_b").as("r_b"), sum("t_b").as("t_b")))
+    }
 
   /** Importance-select the top `k` of `docs` against the CURRENT model
     * snapshot — the deployment shape of DSIR: train the model on the full
@@ -195,11 +173,11 @@ object Sketches {
     * identical across the store family).
     */
   def updateNovelty(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      DedupQueries.shingleRows(docs)
-        .groupBy("shingle").agg(min(col("doc_id")).as("first_doc")))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("shingle").agg(min(col("first_doc")).as("first_doc")))
+    table.commit(batchId) { prev =>
+      val b = DedupQueries.shingleRows(docs)
+        .groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
+      prev.fold(b)(_.unionByName(b).groupBy("shingle").agg(min(col("first_doc")).as("first_doc")))
+    }
 
   /** The novelty report for `docs` against the CURRENT first-occurrence
     * snapshot (call after [[updateNovelty]] has ingested them): a doc's
@@ -239,7 +217,7 @@ object Sketches {
     * documents are never reprocessed. State is bounded by
     * |domains|·|sources| forever, independent of stream length.
     *
-    * Replay safety rides the [[KeyedTable]] batch protocol: addition is not
+    * Replay safety rides [[KeyedTable.commit]]: addition is not
     * idempotent, so the already-applied guard is what makes the merge
     * exactly-once. URL synthesis/canonicalization/domain extraction are
     * single-sourced with the graded query
@@ -247,13 +225,12 @@ object Sketches {
     * SketchesSpec pins streamed state ≡ the batch rollup.
     */
   def updateDomains(table: KeyedTable, docs: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId,
-      PipelineQueries.domainPairs(PipelineQueries.domainRows(docs)))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("domain", "source")
+    table.commit(batchId) { prev =>
+      val b = PipelineQueries.domainPairs(PipelineQueries.domainRows(docs))
+      prev.fold(b)(_.unionByName(b).groupBy("domain", "source")
         .agg(sum("n_docs").as("n_docs"), sum("total_chars").as("total_chars"),
-          sum("n_tracked").as("n_tracked")),
-      m => m.withColumn("pair", concat_ws("\u001f", col("domain"), col("source"))))
+          sum("n_tracked").as("n_tracked")))
+    }
 
   /** The graded report shape from the persisted domain state — shared
     * [[PipelineQueries.domainReport]], so streamed-then-reported equals the
@@ -272,10 +249,10 @@ object Sketches {
     * (type, hour) pair, independent of event volume.
     */
   def updateHourly(table: KeyedTable, events: DataFrame, batchId: Long): Unit =
-    mergePublish(table, batchId, graft.queries.EventQueries.hourlyCounts(events))(
-      (prev, b) => prev.unionByName(b)
-        .groupBy("event_type", "hr").agg(sum("c").as("c")),
-      m => m.withColumn("cell", concat_ws("\u001f", col("event_type"), col("hr"))))
+    table.commit(batchId) { prev =>
+      val b = graft.queries.EventQueries.hourlyCounts(events)
+      prev.fold(b)(_.unionByName(b).groupBy("event_type", "hr").agg(sum("c").as("c")))
+    }
 
   /** The graded anomaly report from the persisted hourly counts — shared
     * [[graft.queries.EventQueries.anomalyReport]], so streamed-then-reported

@@ -157,7 +157,7 @@ object StreamingSmoke {
   private def sketchesHll(spark: SparkSession, c: Checks): Unit = {
     import spark.implicits._
     import graft.queries.TextQueries
-    val table = new KeyedTable(spark, tmpDir("hll"), "reg")
+    val table = new KeyedTable(spark, tmpDir("hll"), "j")
     val docs = (1 to 40).map { i =>
       (i.toLong, if (i % 2 == 0) "even" else "odd",
         (1 to 12).map(j => s"t${i}w$j").mkString(" "))

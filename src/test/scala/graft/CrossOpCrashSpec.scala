@@ -31,7 +31,7 @@ class CrossOpCrashSpec extends SparkTestBase {
       java.nio.file.Files.createTempDirectory(s"xop_${tag}_$op").toString
     Quad(
       new KeyedTable(spark, tmp("dedup"), "doc_id"),
-      new KeyedTable(spark, tmp("cms"), "cell"),
+      new KeyedTable(spark, tmp("cms"), "bucket"),
       new KeyedTable(spark, tmp("dsir"), "bucket"),
       new KeyedTable(spark, tmp("pack"), "doc_id"),
       tmp("ann"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.model.PetSchema
-import graft.streaming.Sessions
+import graft.streaming.{KeyedTable, Sessions}
 
 /** The §7.1 pipeline facade over the pets shape, plus the streaming-form
   * sessionizer cross-checked against the graded batch query.
@@ -40,6 +40,18 @@ class PipelineSpec extends SparkTestBase {
     val out = Pipeline.ingestBatch(existing, batch)
     val names = out.orderBy("link").select("link", "name").as[(String, String)].collect().toSeq
     assert(names == Seq("L1" -> "Rex", "L4" -> "Mia"))
+  }
+
+  test("ingestBatch: a new link sent twice in one batch lands once, in both overloads") {
+    val existing = petsDf(Seq(pet("L1", "Rex", 7)))
+    val batch = petsDf(Seq(pet("L2", "Mia", 7), pet("L2", "Mia", 7)))
+    def links(df: org.apache.spark.sql.DataFrame) =
+      df.select("link").as[String].collect().toSeq.sorted
+    assert(links(Pipeline.ingestBatch(existing, batch)) == Seq("L1", "L2"))
+    val table = new KeyedTable(spark, Files.createTempDirectory("graft-ingest").toString, "link")
+    table.publish(existing)
+    Pipeline.ingestBatch(table, batch, 0L)
+    assert(links(table.read().get) == Seq("L1", "L2"))
   }
 
   test("compact: field-failure threshold with summary counts") {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +10,6 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType, TimestampType}
 
 import graft.streaming.KeyedTable
@@ -25,44 +23,11 @@ import graft.streaming.KeyedTable
 class SchemaMemoSpec extends SparkTestBase {
 
   private val Sf = "/root/testdata/sf0.001"
-  private val Barrier = "schema-memo-spec-barrier"
-
-  /** Job starts seen by the listener: (job group, inside a SQL execution). */
-  private final class JobLog extends SparkListener {
-    val starts = new ConcurrentLinkedQueue[(Option[String], Boolean)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
-      val p = Option(j.properties)
-      starts.add((p.flatMap(x => Option(x.getProperty("spark.jobGroup.id"))),
-        p.exists(_.getProperty("spark.sql.execution.id") != null)))
-    }
-  }
-
-  /** Run one job in the barrier group and wait until `log` has seen it: the
-    * bus delivers in order, so every job started before it is seen too.
-    */
-  private def barrier(log: JobLog): Unit = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(Barrier, "listener barrier")
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (!log.starts.asScala.exists(_._1.contains(Barrier))) {
-      assert(System.nanoTime() < deadline, "listener never saw the barrier job")
-      Thread.sleep(10)
-    }
-  }
 
   /** `body`'s result and the number of jobs it started outside a SQL execution. */
   private def inferenceJobs[T](body: => T): (T, Int) = {
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
-    try {
-      barrier(log)
-      log.starts.clear()
-      val out = body
-      barrier(log)
-      (out, log.starts.asScala.count { case (g, inExec) => !inExec && !g.contains(Barrier) })
-    } finally spark.sparkContext.removeSparkListener(log)
+    val (out, jobs) = jobsDuring(body)
+    (out, jobs.count { case (_, inExec) => !inExec })
   }
 
   private def tempDir(name: String): String =
