@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,27 +9,34 @@ import graft.expressions.DotProductLong.dotLong
 import graft.streaming.{Fs, Layers}
 import graft.queries.{Dialect, SimilarityQueries => SQ}
 
-/** Persisted IVF ANN index — the SERVED form of the graded `q_ann_ivf` scan
-  * (which recomputes assignment per query): [[build]] trains the codebook
-  * (the same deterministic 2-Lloyd-iteration fit), assigns every vector
-  * once, and writes the corpus PARTITIONED BY inverted-list id; [[search]]
-  * then reads ONLY the NProbe list partitions each probe hashes into
-  * (partition pruning, pinned by the spec) — at 100 TB a query touches a
-  * constant number of list directories, never the corpus. The same
+/** Persisted ANN indexes — the SERVED forms of the graded `q_ann_ivf`,
+  * `q_ann_lsh` and `q_ann_ivfpq` scans (which recompute assignment per
+  * query). [[buildFrom]] assigns every vector once under a trained codebook
+  * and writes the corpus PARTITIONED BY inverted-list id; [[search]] then
+  * reads ONLY the NProbe list partitions each probe hashes into (partition
+  * pruning, pinned by the spec) — at 100 TB a query touches a constant
+  * number of list directories, never the corpus. The same
   * store-partitioned-by-derived-key move as the incremental-dedup band
   * index; the index is derived data over the embeddings table, rebuilt by
-  * re-running [[build]].
+  * re-running the build.
   *
-  * Layout: `<dir>/vectors/batch=<id>/cid=<list>/` (vec_id, q, n2 per row;
-  * batch −1 is the full-build base layer, one layer per incremental
-  * [[appendBatch]]) and `<dir>/codebook/` ((cid, cq) — k rows, read to the
-  * driver at search time so probe-side dots are literal expressions, same
-  * as the graded query).
+  * Layout of `<dir>`:
+  *  - `vectors/batch=<id>/cid=<list>/` (vec_id, q, n2 per row), `lsh/
+  *    batch=<id>/pb=<bucket>/` and `pqcodes/batch=<id>/cid=<list>/` — the
+  *    IVF, LSH and IVF+PQ stores; batch −1 is the full-build base layer,
+  *    one layer per incremental append;
+  *  - `tombs/batch=<id>/` — the delete set all three stores share;
+  *  - `_CODEBOOK` (coarse centroids), `_PQBOOK` (PQ codebooks) and
+  *    `_LSH_BITS` (the LSH geometry) — small text markers read to the
+  *    driver, so probe-side dots are literal expressions, same as the
+  *    graded queries.
+  *
+  * Every search runs one skeleton ([[prunedSearch]]) and every store is
+  * maintained by one compaction ([[compact]]).
   */
 object AnnIndex {
 
-  private def vectorsPath(dir: String)  = dir + "/vectors"
-  private def codebookPath(dir: String) = dir + "/codebook"
+  private def vectorsPath(dir: String) = dir + "/vectors"
 
   /** (vec_id, q, n2) — the quantized, norm-filtered projection of any
     * embeddings-shaped frame (well-formed vectors only).
@@ -42,18 +49,13 @@ object AnnIndex {
       .filter(col("n2") > 0)
       .select("vec_id", "q", "n2")
 
-  /** The whole-corpus projection the graded E2 family scans. */
-  private def corpus(s: SparkSession, sfDir: String): DataFrame =
-    corpusOf(Tables.embeddings(s, sfDir))
-
   /** Run `a` on the calling thread and `b` on a fresh child thread, and
-    * return both — the join for two INDEPENDENT sequences of driver
-    * actions (two trainers, two codebook writes, two codebook reads),
-    * which otherwise serialize on the driver even though the cluster
-    * could run their jobs side by side. A fresh Thread rather than a
-    * pool so Spark's inheritable thread-locals (job group/description)
-    * propagate from the caller; the child is ALWAYS joined before the
-    * call returns — even when `a` throws — so no job outlives the call.
+    * return both — the join for the two INDEPENDENT codebook trainers,
+    * which otherwise serialize on the driver even though the cluster could
+    * run their jobs side by side. A fresh Thread rather than a pool so
+    * Spark's inheritable thread-locals (job group/description) propagate
+    * from the caller; the child is ALWAYS joined before the call returns —
+    * even when `a` throws — so no job outlives the call.
     */
   private def join2[A, B](a: => A, b: => B): (A, B) = {
     @volatile var out: Either[Throwable, B] =
@@ -69,8 +71,8 @@ object AnnIndex {
   //
   // Every store is a [[Layers]] store laid out `batch=<id>/<derived key>=<v>`:
   // a full build is layer −1, [[appendBatch]]/[[appendBatchLsh]]/
-  // [[appendBatchPq]] add one replay-guarded layer per micro-batch, and the
-  // compactions fold layers into one generation (crash discipline: the
+  // [[appendBatchPq]] add one replay-guarded layer per micro-batch, and
+  // [[compact]] folds layers into one generation (crash discipline: the
   // [[Layers]] scaladoc).
   //
   // Appends keep the build-time codebook/planes FIXED (an IVF list grows,
@@ -78,14 +80,14 @@ object AnnIndex {
   // corpus while update cost drops from O(corpus) to O(batch). A re-appended
   // vec_id adds a second row for the same key (append-only, like the dedup
   // band index); search dedups candidates by (probe, vec_id), and a full
-  // [[build]]/[[buildLsh]] is the compaction that restores exactness.
+  // rebuild ([[buildFrom]]/[[buildLshFrom]]) restores exactness.
 
-  /** Generational small-files compaction for an appended store: fold every
+  /** Generational small-files compaction for one appended store: fold every
     * layer into one fresh generation. A crashed sweep's survivors are exact
     * duplicates of new-layer rows, which search's per-(probe, vec_id) dedup
     * tolerates. The full-row dropDuplicates collapses identical re-appended
     * rows; a CHANGED re-appended vector keeps both its rows — the store's
-    * documented staleness, restored to exact by a full [[build]]/[[buildLsh]].
+    * documented staleness, restored to exact by a full rebuild.
     * `clusterBy` re-imposes a writer's one-file-per-list layout on the
     * folded generation (`repartition(n, col)` before the partitioned
     * write): without it the dropDuplicates shuffle hands every task a slice
@@ -98,87 +100,43 @@ object AnnIndex {
       minus: Option[DataFrame] = None,
       clusterBy: Option[(Int, String)] = None): Unit =
     Layers.read(s, store).foreach { rows =>
-      val folded = rows.dropDuplicates()
-      val cleaned =
-        minus.fold(folded)(t => folded.join(broadcast(t), Seq("vec_id"), "left_anti"))
+      val cleaned = minusTombs(rows.dropDuplicates(), minus)
       Layers.fold(clusterBy.fold(cleaned) { case (n, c) => cleaned.repartition(n, col(c)) },
         store, sweep, partCols: _*)
     }
 
-  /** The data stores present under `indexDir`. The tombstone set is SHARED
-    * by all of them (one `tombs/` per index dir, consumed by search,
-    * searchLsh, and searchIvfPq alike), so a compaction may clear the
-    * tombstone layers only when no OTHER store could still be serving the
-    * tombstoned rows from its un-folded layers — clearing after folding
-    * just one store would resurrect deleted (takedown/GDPR) vectors in the
-    * co-located ones.
+  /** The index dir's compaction: fold EVERY store present under `indexDir`
+    * against one tombstone snapshot, physically dropping the tombstoned
+    * vectors, then clear the shared tombstones.
+    *
+    * The clear is guarded on a data store existing: with deletes laid
+    * before the FIRST build, every fold above no-ops on the absent stores,
+    * and an unconditional clear would wipe tombstones that were never
+    * folded into anything — resurrecting the deleted (takedown/GDPR)
+    * vec_ids in the first subsequent build (ADVICE r11).
     */
-  private def dataStores(s: SparkSession, indexDir: String): Seq[String] =
-    Seq(vectorsPath(indexDir), lshPath(indexDir), pqCodesPath(indexDir))
-      .filter(p => Layers.ids(s, p).nonEmpty)
-
-  /** Clear the shared tombstones iff `store` is the ONLY data store under
-    * `indexDir`; co-located stores keep them (stale-but-safe — the search
-    * anti-join stays active) until [[compactAll]] folds every store. The
-    * nonEmpty guard is load-bearing: with NO data stores present (deletes
-    * arrived before the first build, then someone ran a compaction — which
-    * no-ops on the absent store), a vacuous `forall` would clear tombstones
-    * that were never folded into anything, silently resurrecting the
-    * deleted ids in the first subsequent build.
-    */
-  private def clearTombstonesIfSole(s: SparkSession, indexDir: String,
-      store: String): Unit = {
-    val stores = dataStores(s, indexDir)
-    if (stores.nonEmpty && stores.forall(_ == store)) clearTombstones(s, indexDir)
-  }
-
-  /** Fold the IVF store's batch layers into one generation; tombstoned
-    * vectors are physically dropped, and the tombstones cleared when this
-    * is the dir's only store (see [[clearTombstonesIfSole]]).
-    */
-  def compactIndex(s: SparkSession, indexDir: String): Unit = {
-    compactStore(s, vectorsPath(indexDir), Seq("cid"), sweep = true,
-      minus = tombstones(s, indexDir))
-    clearTombstonesIfSole(s, indexDir, vectorsPath(indexDir))
-  }
-
-  /** Fold the LSH store's batch layers into one generation; tombstoned
-    * vectors are physically dropped, and the tombstones cleared when this
-    * is the dir's only store (see [[clearTombstonesIfSole]]).
-    */
-  def compactIndexLsh(s: SparkSession, indexDir: String): Unit = {
-    compactStore(s, lshPath(indexDir), Seq("pb"), sweep = true,
-      minus = tombstones(s, indexDir))
-    clearTombstonesIfSole(s, indexDir, lshPath(indexDir))
-  }
-
-  /** Fold EVERY store present under `indexDir` against one tombstone
-    * snapshot, then clear the shared tombstones — the compaction to use
-    * when stores co-locate in one index dir.
-    */
-  def compactAll(s: SparkSession, indexDir: String): Unit = {
+  def compact(s: SparkSession, indexDir: String): Unit = {
     val t = tombstones(s, indexDir)
     compactStore(s, vectorsPath(indexDir), Seq("cid"), sweep = true, minus = t)
     compactStore(s, lshPath(indexDir), Seq("pb"), sweep = true, minus = t)
     compactStore(s, pqCodesPath(indexDir), Seq("cid"), sweep = true, minus = t,
       clusterBy = pqClusterBy(s, indexDir))
-    // Same empty-dir guard as [[clearTombstonesIfSole]] (ADVICE r11): with
-    // deletes laid before the FIRST build, every compactStore above no-ops
-    // on the absent stores, and an unconditional clear here would wipe
-    // tombstones that were never folded into anything — resurrecting the
-    // deleted (takedown/GDPR) vec_ids in the first subsequent build.
-    if (dataStores(s, indexDir).nonEmpty) clearTombstones(s, indexDir)
+    if (Seq(vectorsPath(indexDir), lshPath(indexDir), pqCodesPath(indexDir))
+        .exists(p => Layers.ids(s, p).nonEmpty))
+      Layers.clear(s, tombsPath(indexDir))
   }
 
   // ---- tombstone deletes ------------------------------------------------
   //
   // The index's delete path (the takedown/GDPR shape): deletes arrive as
   // vec_id batches under the same layered protocol as appends — one
-  // replay-guarded `tombs/` layer per batch. Search subtracts the tombstone
-  // set from the candidate rows (an anti-join against a ≤ #deletes
-  // broadcast side), so a delete is VISIBLE immediately without touching
-  // any data layer; compaction later drops the rows physically and clears
-  // the tombstones.
+  // replay-guarded `tombs/` layer per batch, shared by every store in the
+  // dir. Search subtracts the tombstone set from the candidate rows (an
+  // anti-join against a ≤ #deletes broadcast side), so a delete is VISIBLE
+  // immediately without touching any data layer; [[compact]] later drops
+  // the rows physically and clears the tombstones (the applied pointer
+  // survives, so replayed delete batch ids are still refused after the
+  // clear).
   // Crash discipline: the fold writes the cleaned generation first; a crash
   // before the tombstone clear leaves tombstones whose anti-join is a
   // no-op over already-clean data. A vec_id re-appended AFTER its delete
@@ -198,103 +156,104 @@ object AnnIndex {
   private def tombstones(s: SparkSession, indexDir: String): Option[DataFrame] =
     Layers.read(s, tombsPath(indexDir)).map(_.select("vec_id").distinct())
 
-  /** Drop tombstone LAYERS after a compaction folded them into the data
-    * (the applied pointer survives, so replayed delete batch ids are still
-    * refused after the clear).
-    */
-  private def clearTombstones(s: SparkSession, indexDir: String): Unit =
-    Layers.clear(s, tombsPath(indexDir))
+  /** `rows` without the tombstoned vec_ids (no-op when there are none). */
+  private def minusTombs(rows: DataFrame, tombs: Option[DataFrame]): DataFrame =
+    tombs.fold(rows)(t => rows.join(broadcast(t), Seq("vec_id"), "left_anti"))
 
-  /** Subtract the tombstone set from a candidate frame (no-op when none). */
-  private def minusTombs(s: SparkSession, indexDir: String,
-      candidates: DataFrame): DataFrame =
-    tombstones(s, indexDir).fold(candidates)(t =>
-      candidates.join(broadcast(t), Seq("vec_id"), "left_anti"))
+  // ---- codebook markers -------------------------------------------------
+  //
+  // The coarse and PQ codebooks are tiny (k·Dim and PqM·PqK·PqSubDim longs)
+  // and always read whole to the driver, so they are text markers beside
+  // the stores, like `_LSH_BITS`: one centroid per line, its key ids then
+  // its components, space-separated. Each is published atomically (staged,
+  // then renamed over the old one — a reader sees the old book or the new,
+  // never none) and read with no Spark job.
 
-  /** One IVF layer's rows: each vector assigned under a FIXED codebook.
-    * Shared by the full build and the incremental appends.
-    */
-  private def ivfRows(vectors: DataFrame, cents: Seq[Seq[Long]]): DataFrame =
-    vectors.withColumn("cid", SQ.cidColOf(cents))
+  private def codebookPath(dir: String) = dir + "/_CODEBOOK"
+  private def pqBookPath(dir: String)   = dir + "/_PQBOOK"
 
-  /** Full build from an explicit corpus frame under an explicit codebook —
-    * the base-layer writer [[build]] delegates to, and the spec's honest
-    * rebuild-for-comparison path (append parity only holds under the SAME
-    * codebook; a retrained codebook may re-list vectors).
-    *
-    * Write order (crash discipline): the HEAVY data layer first, the tiny
-    * codebook overwrite last — deliberately. The two writes cannot be
-    * atomic together, so some window where stored assignments and served
-    * codebook disagree is unavoidable on a rebuild that moves centroids;
-    * codebook-last makes that window the milliseconds of one coalesce(1)
-    * parquet write instead of the whole corpus-sized assignment pass the
-    * reverse order would leave (new codebook serving old/partial layers
-    * for minutes at scale). A crash inside the residual window is repaired
-    * by re-running the build — the deployment's recovery for a died build
-    * either way.
-    */
-  private[graft] def buildFrom(s: SparkSession, vectorsRaw: DataFrame,
-      cents: Seq[(Int, Seq[Long])], indexDir: String): Unit = {
-    Layers.rebuild(ivfRows(corpusOf(vectorsRaw), cents.map(_._2)), vectorsPath(indexDir), "cid")
-    import s.implicits._
-    cents.toDF("cid", "cq")
-      .coalesce(1).write.mode("overwrite").parquet(codebookPath(indexDir))
+  private def publishBook(s: SparkSession, path: String, rows: Seq[Seq[Long]]): Unit =
+    Fs.publishString(s, path, rows.map(_.mkString(" ")).mkString("\n"), 0L)
+
+  private def readBook(s: SparkSession, path: String): Option[Seq[Seq[Long]]] =
+    Fs.readString(s, path).map(_.split('\n').toSeq.filter(_.nonEmpty)
+      .map(_.split(' ').toSeq.map(_.toLong)))
+
+  private def bookAt(s: SparkSession, path: String): Seq[Seq[Long]] =
+    readBook(s, path).getOrElse(throw new IllegalStateException(s"no codebook at $path"))
+
+  /** Publish the coarse codebook, one `cid components…` line per list. */
+  private def publishCodebook(s: SparkSession, indexDir: String,
+      cents: Seq[(Int, Seq[Long])]): Unit =
+    publishBook(s, codebookPath(indexDir), cents.map { case (c, v) => c.toLong +: v })
+
+  /** The stored coarse codebook, sorted by cid (index order = id order). */
+  private[graft] def codebook(s: SparkSession, indexDir: String): Seq[Seq[Long]] =
+    bookAt(s, codebookPath(indexDir)).sortBy(_.head).map(_.tail)
+
+  /** The stored PQ codebooks, code-id order within each subspace. */
+  private[graft] def pqCodebooks(s: SparkSession, indexDir: String): Seq[Seq[(Int, Seq[Long])]] = {
+    val rows = bookAt(s, pqBookPath(indexDir))
+    (0 until SQ.PqM).map(m =>
+      rows.filter(_.head == m).map(r => (r(1).toInt, r.drop(2))).sortBy(_._1))
   }
 
-  /** Train (2 fixed Lloyd iterations from the deterministic seeds), assign,
-    * and write the index under `indexDir` — also the COMPACTION for a store
-    * that has accumulated append layers (the rebuild replaces them and
-    * resets the applied pointer).
+  // ---- the pruned-probe search skeleton ----------------------------------
+
+  /** The `key` values a probe expansion touches — the pruning predicate
+    * (bounded by the probe workload, never the corpus; a bounded collect).
     */
-  def build(s: SparkSession, sfDir: String, indexDir: String): Unit =
-    buildFrom(s, Tables.embeddings(s, sfDir), SQ.trainCodebook(s, sfDir), indexDir)
+  private[graft] def touched(probeRows: DataFrame, key: String): Seq[Any] =
+    probeRows.select(key).distinct().collect().map(_.get(0)).toSeq
 
-  /** Index one micro-batch of new vectors (embeddings-shaped frame) into the
-    * existing IVF store under the batch protocol above. Returns false (and
-    * writes nothing) for an already-applied batch id.
-    */
-  def appendBatch(s: SparkSession, indexDir: String, vectors: DataFrame,
-      batchId: Long): Boolean =
-    Layers.appendOnce(s, vectorsPath(indexDir), batchId, "cid")(
-      ivfRows(corpusOf(vectors), codebook(s, indexDir)))
-
-  /** Top-3 cosine neighbors for `probes` (vec_id, q, n2 — the external query
-    * workload) against the stored index: each probe explodes its NProbe
-    * nearest list ids, the scan is pruned to exactly those `cid=` partitions,
-    * and scoring is exact within the lists. Output matches `q_ann_ivf`
-    * row-for-row when probes and corpus come from the same table.
-    */
-  /** The stored codebook, sorted by cid (index order = id order). */
-  private def codebook(s: SparkSession, indexDir: String): Seq[Seq[Long]] =
-    s.read.parquet(codebookPath(indexDir))
-      .collect().map(r => (r.getInt(0), r.getSeq[Long](1)))
-      .sortBy(_._1).map(_._2).toSeq
-
-  /** Probe rows exploded to their NProbe nearest list ids. */
-  private def probeCidsOf(probes: DataFrame, cents: Seq[Seq[Long]]): DataFrame =
-    probes
-      .withColumn("dots", SQ.dotsColOf(cents))
-      .select(col("vec_id").as("qid"), col("q").as("qq"),
-        col("n2").as("qn"), explode(SQ.probeCidsCol).as("cid"))
-
-  /** The list ids a probe workload touches — the pruning predicate
-    * (≤ probes × NProbe ints, a bounded collect).
-    */
-  private[graft] def touchedLists(s: SparkSession, indexDir: String, probes: DataFrame): Seq[Int] =
-    probeCidsOf(probes, codebook(s, indexDir))
-      .select("cid").distinct().collect().map(_.getInt(0)).toSeq
-
-  /** The pruned index scan: only the `cid=` partitions in `touched` are
+  /** The pruned store scan: only the `key=` partitions in `touched` are
     * listed and read.
     */
-  private[graft] def listScan(s: SparkSession, indexDir: String, touched: Seq[Int]): DataFrame =
-    s.read.parquet(vectorsPath(indexDir))
-      .filter(col("cid").isin(touched: _*))
+  private[graft] def prunedScan(s: SparkSession, store: String, key: String,
+      touched: Seq[Any]): DataFrame =
+    s.read.parquet(store).filter(col(key).isin(touched: _*))
 
-  /** The exact-scoring tail both indexes share: per-probe cosine over the
+  /** The search every store runs: `probeRows` (each probe expanded to the
+    * `key` partitions it reaches) is persisted, because the [[touched]]
+    * collect AND the join both evaluate it and it may carry an expensive
+    * external probe pipeline; only the touched partitions of `store` are
+    * scanned ([[prunedScan]]) and joined to it on `key`; `score` turns the
+    * candidate rows into the result. The eager localCheckpoint (top-3 ×
+    * probes rows) lets the probe cache be unpersisted HERE — a long-lived
+    * session calling search repeatedly must not accumulate one cached
+    * dataset per call (ADVICE r6) — and the `finally` frees it when the
+    * collect or the checkpoint throws (ADVICE r7).
+    */
+  private def prunedSearch(s: SparkSession, store: String, key: String,
+      probeRows: DataFrame)(score: DataFrame => DataFrame): DataFrame = {
+    val rows = probeRows.persist()
+    try score(prunedScan(s, store, key, touched(rows, key)).join(rows, key))
+      .localCheckpoint(true)
+    finally rows.unpersist()
+  }
+
+  /** Each (probe, vec_id) candidate once, tombstoned ids removed BEFORE
+    * ranking (deletes are visible immediately, later candidates move up):
+    * a re-appended vec_id has one row per append layer, and LSH candidates
+    * OR across tables.
+    * repartition(qid) FIRST (r18, guide §2.4 "share one exchange"):
+    * hash(qid) clusters (qid, vec_id) pairs too, so the dedup aggregate AND
+    * the per-probe ranking window after it both ride this one exchange —
+    * without it the dedup exchanges on (qid, vec_id) and the window
+    * re-exchanges on qid, two shuffles of the same candidate rows. Key
+    * cardinality is the probe workload (external, O(1) in the corpus) and
+    * per-probe candidates are bounded by the probe geometry, so the coarser
+    * key cannot skew.
+    */
+  private def liveCandidates(s: SparkSession, indexDir: String,
+      candidates: DataFrame): DataFrame =
+    minusTombs(candidates.repartition(col("qid")).dropDuplicates("qid", "vec_id"),
+      tombstones(s, indexDir))
+
+  /** The exact-scoring tail every index shares: per-probe cosine over the
     * candidate rows, top-3 by (cos desc, id asc), the graded output shape.
-    * One source — a tie-break or rounding change must move BOTH indexes and
-    * their graded twins together.
+    * One source — a tie-break or rounding change must move EVERY index and
+    * its graded twin together.
     */
   private def scoreTop3(candidates: DataFrame): DataFrame =
     candidates
@@ -308,50 +267,82 @@ object AnnIndex {
         col("vec_id").as("neighbor"), round(col("cos"), 4).as("cos_r"))
       .orderBy("qid", "rank")
 
-  def search(s: SparkSession, indexDir: String, probes: DataFrame): DataFrame = {
-    val cents = codebook(s, indexDir)
-    // persisted: the touched-list collect AND the join both evaluate this
-    // lineage (which may carry an expensive external probe pipeline)
-    val probeCids = probeCidsOf(probes, cents).persist()
-    // try/finally: a failure in the collect or the checkpoint must not leak
-    // the probe cache across a long-lived session's retries (ADVICE r7)
-    try {
-      val touched = probeCids.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-      // dropDuplicates: a re-appended vec_id has one row per append layer (all
-      // in the same cid partition under the fixed codebook) and must score once;
-      // tombstoned ids leave the candidate set BEFORE ranking (deletes are
-      // visible immediately, later candidates move up).
-      // repartition(qid) FIRST (r18, guide §2.4 "share one exchange"):
-      // hash(qid) clusters (qid, vec_id) pairs too, so the dedup aggregate
-      // AND scoreTop3's per-probe window both ride this one exchange —
-      // without it the dedup exchanges on (qid, vec_id) and the window
-      // re-exchanges on qid, two shuffles of the same candidate rows. Key
-      // cardinality is the probe workload (external, O(1) in the corpus)
-      // and per-probe candidates are bounded by the NProbe×list geometry,
-      // so the coarser key cannot skew.
-      scoreTop3(minusTombs(s, indexDir,
-        listScan(s, indexDir, touched).join(probeCids, "cid")
-          .repartition(col("qid"))
-          .dropDuplicates("qid", "vec_id")))
-        // eager localCheckpoint (top-3 × probes rows) so the probe lineage can
-        // be unpersisted HERE — a long-lived session calling search repeatedly
-        // must not accumulate one cached dataset per call (ADVICE r6)
-        .localCheckpoint(true)
-    } finally probeCids.unpersist()
+  /** The flat indexes' scoring: [[liveCandidates]], then [[scoreTop3]]. */
+  private def exactTop3(s: SparkSession, indexDir: String)(candidates: DataFrame): DataFrame =
+    scoreTop3(liveCandidates(s, indexDir, candidates))
+
+  // ---- IVF --------------------------------------------------------------
+
+  /** One IVF layer's rows: each vector assigned under a FIXED codebook.
+    * Shared by the full build and the incremental appends.
+    */
+  private def ivfRows(vectors: DataFrame, cents: Seq[Seq[Long]]): DataFrame =
+    vectors.withColumn("cid", SQ.cidColOf(cents))
+
+  /** Full IVF build from an explicit embeddings-shaped frame under an
+    * explicit codebook ([[SQ.trainCodebook]] trains the graded one) — also
+    * the COMPACTION-to-exact for a store that has accumulated append layers
+    * (the rebuild replaces them and resets the applied pointer), and the
+    * spec's honest rebuild-for-comparison path (append parity only holds
+    * under the SAME codebook; a retrained codebook may re-list vectors).
+    *
+    * Write order (crash discipline): the HEAVY data layer first, the tiny
+    * codebook marker last — deliberately. The two writes cannot be atomic
+    * together, so some window where stored assignments and served codebook
+    * disagree is unavoidable on a rebuild that moves centroids;
+    * codebook-last makes that window one marker publish instead of the
+    * whole corpus-sized assignment pass the reverse order would leave (new
+    * codebook serving old/partial layers for minutes at scale). A crash
+    * inside the residual window is repaired by re-running the build — the
+    * deployment's recovery for a died build either way.
+    */
+  private[graft] def buildFrom(s: SparkSession, vectorsRaw: DataFrame,
+      cents: Seq[(Int, Seq[Long])], indexDir: String): Unit = {
+    Layers.rebuild(ivfRows(corpusOf(vectorsRaw), cents.map(_._2)), vectorsPath(indexDir), "cid")
+    publishCodebook(s, indexDir, cents)
   }
+
+  /** Index one micro-batch of new vectors (embeddings-shaped frame) into the
+    * existing IVF store under the batch protocol above. Returns false (and
+    * writes nothing) for an already-applied batch id.
+    */
+  def appendBatch(s: SparkSession, indexDir: String, vectors: DataFrame,
+      batchId: Long): Boolean =
+    Layers.appendOnce(s, vectorsPath(indexDir), batchId, "cid")(
+      ivfRows(corpusOf(vectors), codebook(s, indexDir)))
+
+  /** Probe rows (qid, qq, qn, `carry`…) exploded to their NProbe nearest
+    * list ids.
+    */
+  private[graft] def probeCidsOf(probes: DataFrame, cents: Seq[Seq[Long]],
+      carry: Column*): DataFrame =
+    probes
+      .withColumn("dots", SQ.dotsColOf(cents))
+      .select(Seq(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn")) ++
+        carry :+ explode(SQ.probeCidsCol).as("cid"): _*)
+
+  /** Top-3 cosine neighbors for `probes` (vec_id, q, n2 — the external query
+    * workload) against the stored index: each probe explodes its NProbe
+    * nearest list ids, the scan is pruned to exactly those `cid=` partitions,
+    * and scoring is exact within the lists. Output matches `q_ann_ivf`
+    * row-for-row when probes and corpus come from the same table.
+    */
+  def search(s: SparkSession, indexDir: String, probes: DataFrame): DataFrame =
+    prunedSearch(s, vectorsPath(indexDir), "cid",
+      probeCidsOf(probes, codebook(s, indexDir)))(exactTop3(s, indexDir))
 
   /** The graded probe workload (fixed literal ids) as a search input. */
   def probeWorkload(s: SparkSession, sfDir: String): DataFrame =
-    corpus(s, sfDir).filter(col("vec_id").isin(SQ.ProbeIds: _*))
+    corpusOf(Tables.embeddings(s, sfDir)).filter(col("vec_id").isin(SQ.ProbeIds: _*))
 
   // ---------------------------------------------------------------------
   // Persisted LSH index — the SERVED form of the graded `q_ann_lsh` scan,
   // and the third instance of the store-partitioned-by-derived-key pattern
-  // (IVF lists above, IncrementalDedup band buckets). buildLsh bucketizes
-  // every vector with the graded NTables×BitsPerTable sign-bit construction
-  // and writes one row PER TABLE partitioned by the composite key
-  // pb = t·2^bits + bucket (the L-fold copy is inherent to multi-table LSH —
-  // disk trades for the OR-amplified recall); searchLsh expands each
+  // (IVF lists above, IncrementalDedup band buckets). buildLshFrom
+  // bucketizes every vector with the graded NTables×BitsPerTable sign-bit
+  // construction and writes one row PER TABLE partitioned by the composite
+  // key pb = t·2^bits + bucket (the L-fold copy is inherent to multi-table
+  // LSH — disk trades for the OR-amplified recall); searchLsh expands each
   // probe's Hamming-1 multi-probe set and prunes the scan to exactly those
   // pb partitions — a probe touches NTables·(1+BitsPerTable) of the
   // NTables·2^bits directories no matter how large the corpus grows.
@@ -385,9 +376,9 @@ object AnnIndex {
         posexplode(col("bs")).as(Seq("t", "bucket")))
       .withColumn("pb", col("t") * bucketSpan(bits) + col("bucket"))
 
-  /** Full LSH build from an explicit corpus frame — see [[buildFrom]].
-    * `bits` defaults to the graded geometry; deployments size it with
-    * [[SQ.planBits]] (or call [[buildLshScaled]], which does).
+  /** Full LSH build from an explicit embeddings-shaped frame — see
+    * [[buildFrom]]. `bits` defaults to the graded geometry; deployments
+    * size it with [[SQ.planBits]] (or call [[buildLshScaled]], which does).
     */
   private[graft] def buildLshFrom(vectorsRaw: DataFrame, indexDir: String,
       bits: Int = SQ.BitsPerTable): Unit =
@@ -395,7 +386,6 @@ object AnnIndex {
 
   private def buildLshFromCorpus(corpus: DataFrame, indexDir: String,
       bits: Int): Unit = {
-    val s = corpus.sparkSession
     // geometry marker BEFORE the heavy layer write, at a path the store's
     // static overwrite cannot delete: the old in-store marker-after-layer
     // order left a crash window (layer committed, marker not yet written)
@@ -405,12 +395,9 @@ object AnnIndex {
     // empty, appends bucketize correctly); for a rebuild that CHANGES bits
     // the window shrinks to the instant before the overwrite's delete,
     // and a crashed rebuild's re-run restores consistency either way.
-    Fs.writeString(s, lshBitsPath(indexDir), bits.toString)
+    Fs.publishString(corpus.sparkSession, lshBitsPath(indexDir), bits.toString, 0L)
     Layers.rebuild(lshRows(corpus, bits), lshPath(indexDir), "pb")
   }
-
-  def buildLsh(s: SparkSession, sfDir: String, indexDir: String): Unit =
-    buildLshFrom(Tables.embeddings(s, sfDir), indexDir)
 
   /** The deployment build: bits-per-table sized from the ACTUAL corpus row
     * count by [[SQ.planBits]] (expected bucket population pinned at
@@ -439,51 +426,27 @@ object AnnIndex {
     Layers.appendOnce(s, lshPath(indexDir), batchId, "pb")(
       lshRows(corpusOf(vectors), lshBits(s, indexDir)))
 
-  /** Each probe exploded to its Hamming-1 multi-probe (t, bucket) set —
-    * the own bucket plus every single-bit flip, as in the graded query.
+  /** Each probe (qid, qq, qn) exploded to its Hamming-1 multi-probe `pb`
+    * set — the own bucket plus every single-bit flip in every table, as in
+    * the graded query.
     */
-  private def probeBuckets(probes: DataFrame, bits: Int): DataFrame = {
+  private[graft] def probeBuckets(probes: DataFrame, bits: Int): DataFrame = {
     val masks = lit(0L) +: (0 until bits).map(i => lit(1L << i))
     lshRows(probes, bits)
       .select(col("vec_id").as("qid"), col("q").as("qq"), col("n2").as("qn"),
         col("t"),
         explode(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)).as("bucket"))
-      .withColumn("pb", col("t") * bucketSpan(bits) + col("bucket"))
+      .select(col("qid"), col("qq"), col("qn"),
+        (col("t") * bucketSpan(bits) + col("bucket")).as("pb"))
   }
-
-  /** The pb partitions a probe workload touches — bounded by
-    * probes × NTables × (1 + bits), never the corpus.
-    */
-  private[graft] def touchedBuckets(probes: DataFrame,
-      bits: Int = SQ.BitsPerTable): Seq[Long] =
-    probeBuckets(probes, bits).select("pb").distinct().collect().map(_.getLong(0)).toSeq
-
-  /** The pruned bucket scan: only the `pb=` partitions in `touched`. */
-  private[graft] def bucketScan(s: SparkSession, indexDir: String, touched: Seq[Long]): DataFrame =
-    s.read.parquet(lshPath(indexDir))
-      .filter(col("pb").isin(touched: _*))
 
   /** Top-3 cosine neighbors against the stored LSH index — matches
     * `q_ann_lsh` row-for-row when probes and corpus come from the same
     * table (candidates OR across tables, scored once, exact within bucket).
     */
-  def searchLsh(s: SparkSession, indexDir: String, probes: DataFrame): DataFrame = {
-    // persisted for the same collect+join double evaluation as search;
-    // try/finally for the same exception-path leak (ADVICE r7)
-    val pb = probeBuckets(probes, lshBits(s, indexDir)).persist()
-    try {
-      val touched = pb.select("pb").distinct().collect().map(_.getLong(0)).toSeq
-      scoreTop3(minusTombs(s, indexDir,
-        bucketScan(s, indexDir, touched)
-          .select("pb", "vec_id", "q", "n2")
-          .join(pb.select("pb", "qid", "qq", "qn"), "pb")
-          // one hash(qid) exchange serves both the OR-dedup aggregate and
-          // scoreTop3's window — see search's repartition note (r18)
-          .repartition(col("qid"))
-          .dropDuplicates("qid", "vec_id"))) // OR across tables, score once
-        .localCheckpoint(true) // see search: frees the probe cache eagerly
-    } finally pb.unpersist()
-  }
+  def searchLsh(s: SparkSession, indexDir: String, probes: DataFrame): DataFrame =
+    prunedSearch(s, lshPath(indexDir), "pb",
+      probeBuckets(probes, lshBits(s, indexDir)))(exactTop3(s, indexDir))
 
   // ---------------------------------------------------------------------
   // Composed IVF+PQ index (the FAISS IVFADC deployment shape): coarse
@@ -499,7 +462,6 @@ object AnnIndex {
   // ---------------------------------------------------------------------
 
   private def pqCodesPath(dir: String) = dir + "/pqcodes"
-  private def pqBookPath(dir: String)  = dir + "/pqbook"
 
   /** One codes layer's rows: (vec_id, codes, cid) under the fixed
     * codebooks. Repartitioned by list id before the write so each `cid=`
@@ -517,30 +479,21 @@ object AnnIndex {
       .repartition(coarse.size, col("cid"))
 
   /** Build the composed index from an explicit ALREADY-PROJECTED corpus
-    * frame (vec_id, q, n2) and explicit codebooks — the shared writer both
-    * build paths end in. Same heavy-layer-first/tiny-codebooks-last crash
+    * frame (vec_id, q, n2) and explicit codebooks — the shared writer every
+    * build path ends in. Same heavy-layer-first/codebooks-last crash
     * discipline as [[buildFrom]] (see its scaladoc): the mismatch window is
-    * two coalesce(1) writes, not the corpus-sized encode pass.
+    * two marker publishes, not the corpus-sized encode pass.
     */
   private def buildIvfPqFromCorpus(s: SparkSession, corpus: DataFrame,
       coarse: Seq[(Int, Seq[Long])], pq: Seq[Seq[(Int, Seq[Long])]],
       indexDir: String): Unit = {
     Layers.rebuild(pqRows(corpus, coarse.map(_._2), pq), pqCodesPath(indexDir), "cid")
-    import s.implicits._
-    // the two codebook writes are independent tiny (coalesce(1)) jobs whose
-    // cost is scheduling + commit protocol, not data — overlapped; both are
-    // still strictly after the heavy layer (the crash discipline above)
-    join2(
-      coarse.toDF("cid", "cq")
-        .coalesce(1).write.mode("overwrite").parquet(codebookPath(indexDir)),
-      pq.zipWithIndex
-        .flatMap { case (cs, m) => cs.map { case (c, v) => (m, c, v) } }
-        .toDF("m", "code", "cq")
-        .coalesce(1).write.mode("overwrite").parquet(pqBookPath(indexDir)))
-    ()
+    publishCodebook(s, indexDir, coarse)
+    publishBook(s, pqBookPath(indexDir), pq.zipWithIndex.flatMap { case (cs, m) =>
+      cs.map { case (c, v) => Seq(m.toLong, c.toLong) ++ v } })
   }
 
-  /** Build the composed index from explicit codebooks — also the spec's
+  /** Build the composed index from explicit codebooks — the spec's
     * rebuild-for-parity path.
     */
   private[graft] def buildIvfPqFrom(s: SparkSession, vectorsRaw: DataFrame,
@@ -548,28 +501,17 @@ object AnnIndex {
       indexDir: String): Unit =
     buildIvfPqFromCorpus(s, corpusOf(vectorsRaw), coarse, pq, indexDir)
 
-  /** Train both codebooks (the graded queries' own constructions) and
-    * build the composed index. The corpus is quantized ONCE and cached:
-    * coarse training, PQ training, and the encode pass all read the same
-    * in-memory projection instead of re-scanning + re-quantizing the
-    * embeddings table three times (the training math is unchanged —
-    * [[SQ.trainCodebookFrom]]/[[SQ.trainPqFrom]] are the graded
-    * constructions over the shared base).
-    */
-  def buildIvfPq(s: SparkSession, sfDir: String, indexDir: String): Unit = {
-    val corpus = corpusOf(Tables.embeddings(s, sfDir)).persist()
-    try buildIvfPqOver(s, corpus, indexDir)
-    finally { corpus.unpersist(); () }
-  }
-
-  /** [[buildIvfPq]] over a CALLER-OWNED (already persisted) corpus
-    * projection (vec_id, q, n2) — so a caller that also serves against the
-    * same base table (the graded q_ann_ivfpq build+serve cycle) can scan
-    * and quantize the corpus ONCE and feed the build, the probe workload,
-    * and the exact re-rank from the same cache instead of three full
-    * scan+quantize passes (guide §5: persist on reuse; at 100 TB this is
-    * 3 corpus scans → 1 per build+serve cycle). Training math and the
-    * store writes are byte-identical to [[buildIvfPq]].
+  /** Train both codebooks (the graded queries' own constructions) and build
+    * the composed index over a CALLER-OWNED (already persisted) corpus
+    * projection (vec_id, q, n2): coarse training, PQ training and the
+    * encode pass all read the same in-memory projection instead of
+    * re-scanning + re-quantizing the embeddings table three times (the
+    * training math is unchanged — [[SQ.trainCodebookFrom]]/
+    * [[SQ.trainPqFrom]] are the graded constructions over the shared base).
+    * A caller that also serves against the same base table (the graded
+    * q_ann_ivfpq build+serve cycle) feeds the build, the probe workload,
+    * and the exact re-rank from the same cache (guide §5: persist on
+    * reuse; at 100 TB this is 3 corpus scans → 1 per build+serve cycle).
     */
   def buildIvfPqOver(s: SparkSession, corpus: DataFrame, indexDir: String): Unit = {
     {
@@ -590,8 +532,8 @@ object AnnIndex {
     }
   }
 
-  /** [[buildIvfPq]] with the coarse list count derived from the corpus by
-    * [[SQ.planCentroids]] (list population stays a design constant, list
+  /** [[buildIvfPqOver]] with the coarse list count derived from the corpus
+    * by [[SQ.planCentroids]] (list population stays a design constant, list
     * count grows with N — the SemDeDup/FAISS sizing rule, executable;
     * VERDICT r9 next-step #7). Returns the chosen list count. NProbe stays
     * fixed: with constant-size lists, probing NProbe of them is
@@ -620,32 +562,12 @@ object AnnIndex {
     Layers.appendOnce(s, pqCodesPath(indexDir), batchId, "cid")(
       pqRows(corpusOf(vectors), codebook(s, indexDir), pqCodebooks(s, indexDir)))
 
-  /** Fold the codes store's batch layers; tombstoned vectors drop, and the
-    * tombstones clear when this is the dir's only store (see
-    * [[clearTombstonesIfSole]]).
-    */
-  def compactIndexPq(s: SparkSession, indexDir: String): Unit = {
-    compactStore(s, pqCodesPath(indexDir), Seq("cid"), sweep = true,
-      minus = tombstones(s, indexDir), clusterBy = pqClusterBy(s, indexDir))
-    clearTombstonesIfSole(s, indexDir, pqCodesPath(indexDir))
-  }
-
   /** The PQ store's one-file-per-list fold layout — pqRows'
     * `repartition(lists, cid)`, re-derived from the stored coarse codebook
     * (None when the dir has no codebook to read, e.g. a bare-store test).
     */
   private def pqClusterBy(s: SparkSession, indexDir: String): Option[(Int, String)] =
-    if (Fs.isDirectory(s, codebookPath(indexDir)))
-      Some((codebook(s, indexDir).size, "cid"))
-    else None
-
-  /** The stored PQ codebooks, code-id order within each subspace. */
-  private def pqCodebooks(s: SparkSession, indexDir: String): Seq[Seq[(Int, Seq[Long])]] = {
-    val rows = s.read.parquet(pqBookPath(indexDir))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
-    (0 until SQ.PqM).map(m =>
-      rows.filter(_._1 == m).map(r => (r._2, r._3.toSeq)).sortBy(_._1).toSeq)
-  }
+    readBook(s, codebookPath(indexDir)).map(b => (b.size, "cid"))
 
   /** Top-3 cosine neighbors against the composed index. `raw` supplies the
     * (vec_id, q, n2) rows the exact re-rank fetches — only shortlist ids
@@ -653,8 +575,6 @@ object AnnIndex {
     */
   def searchIvfPq(s: SparkSession, indexDir: String, probes: DataFrame,
       raw: DataFrame): DataFrame = {
-    // two independent tiny collect jobs (k rows / PqM·PqK rows) — overlapped
-    val (coarse, pq) = join2(codebook(s, indexDir), pqCodebooks(s, indexDir))
     // per-probe ADC distance table computed ONCE per probe row (PqM·PqK
     // dots), so the corpus-sized scoring path below is pure table lookups —
     // same move as the graded q_pq_adc (SQ.pqAdcTableCol scaladoc). The
@@ -662,17 +582,10 @@ object AnnIndex {
     // the generated rows for free, where the post-explode withColumn form
     // re-evaluated the 256-dot expression once per (probe, cid) row —
     // NProbe× the advertised cost
-    val probeCids = probes
-      .withColumn("tbl", SQ.pqAdcTableCol(pq, col("q")))
-      .withColumn("dots", SQ.dotsColOf(coarse))
-      .select(col("vec_id").as("qid"), col("q").as("qq"),
-        col("n2").as("qn"), col("tbl"), explode(SQ.probeCidsCol).as("cid"))
-      .persist()
-    try {
-      val touched = probeCids.select("cid").distinct().collect().map(_.getInt(0)).toSeq
-      val codes = s.read.parquet(pqCodesPath(indexDir))
-        .filter(col("cid").isin(touched: _*))
-        .select("cid", "vec_id", "codes")
+    val probeCids = probeCidsOf(
+      probes.withColumn("tbl", SQ.pqAdcTableCol(pqCodebooks(s, indexDir), col("q"))),
+      codebook(s, indexDir), col("tbl"))
+    prunedSearch(s, pqCodesPath(indexDir), "cid", probeCids) { candidates =>
       // adc is computed in the projection straight off the join and `tbl`
       // dropped in the same breath, so the dedup shuffle and the shortlist
       // window move slim (qid, vec_id, adc) rows, never the table payload;
@@ -682,20 +595,16 @@ object AnnIndex {
       // the probe's own vector must not consume a PqShort slot; left to
       // scoreTop3's late filter it ranked #1 by adc and shrank every
       // probe's effective shortlist by one).
-      val scored = codes.join(probeCids, "cid")
+      val scored = candidates
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("adc", SQ.pqAdcLookupCol(col("tbl"), col("codes")))
         .select("qid", "qq", "qn", "vec_id", "adc")
-      // one hash(qid) exchange serves the dedup aggregate AND the shortlist
-      // window — see search's repartition note (r18)
-      val shortlist = minusTombs(s, indexDir,
-        scored.repartition(col("qid")).dropDuplicates("qid", "vec_id"))
+      val shortlist = liveCandidates(s, indexDir, scored)
         .withColumn("srank", row_number().over(
           Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("vec_id").asc)))
         .filter(col("srank") <= SQ.PqShort)
         .select("qid", "qq", "qn", "vec_id")
       scoreTop3(shortlist.join(raw.select("vec_id", "q", "n2"), "vec_id"))
-        .localCheckpoint(true) // frees the probe cache eagerly (see search)
-    } finally probeCids.unpersist()
+    }
   }
 }

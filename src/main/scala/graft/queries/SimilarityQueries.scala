@@ -385,7 +385,7 @@ object SimilarityQueries {
   /** [[pqAdcPairs]] over a caller-owned (vec_id, q) frame — lets the graded
     * query share ONE persisted scan+quantize pass across training, the
     * probe-table collect, encoding, and its exact re-rank (the
-    * [[graft.operators.AnnIndex.buildIvfPq]] corpus-cache move).
+    * [[graft.operators.AnnIndex.buildIvfPqOver]] corpus-cache move).
     */
   private[graft] def pqAdcPairsFrom(base: org.apache.spark.sql.DataFrame,
       cents: Seq[Seq[(Int, Seq[Long])]]): org.apache.spark.sql.DataFrame = {
@@ -938,7 +938,7 @@ object SimilarityQueries {
       s"IVF-bucketed cosine top-3 (16 seeds + $TrainIters Lloyd iterations, $NProbe probe lists)",
       (s, dir) => {
         // ONE persisted scan+quantize pass feeds training, assignment, and
-        // the probe side (the buildIvfPq corpus-cache move); deliberately
+        // the probe side (the buildIvfPqOver corpus-cache move); deliberately
         // not unpersisted (runner sweeps, see the DedupQueries note)
         val base = normedBase(s, dir)
           .select("vec_id", "q", "n2").persist()
@@ -1008,7 +1008,7 @@ object SimilarityQueries {
       s"SemDeDup prune list: earlier cosine >= $SemTau neighbor in the same trained cluster",
       (s, dir) => {
         // ONE persisted scan+quantize pass feeds training and both sides of
-        // the in-cluster pair join (the buildIvfPq corpus-cache move);
+        // the in-cluster pair join (the buildIvfPqOver corpus-cache move);
         // deliberately not unpersisted (runner sweeps, DedupQueries note).
         // Bench.PhasedQueries member: the k-means training loop is DRIVER-
         // EAGER under either mode (capture changes no plan here, unlike the
@@ -1223,7 +1223,7 @@ object SimilarityQueries {
       s"PQ($PqM x $PqK) ADC shortlist-$PqShort + exact re-rank top-3, trained codebooks",
       (s, dir) => {
         // ONE persisted scan+quantize pass feeds training, the probe-table
-        // collect, encoding, and the exact re-rank (the buildIvfPq
+        // collect, encoding, and the exact re-rank (the buildIvfPqOver
         // corpus-cache move — the un-shared form paid four scan+quantize
         // passes over the embeddings for identical rows); deliberately not
         // unpersisted (runner sweeps, see the DedupQueries note)
@@ -1311,9 +1311,9 @@ object SimilarityQueries {
         // the same projection-sharing move as q_pq_adc/q_ann_ivf (guide
         // §5; r17 §11): before, the timed cycle paid three full
         // scan+quantize passes (build corpus, probeWorkload, re-rank raw).
-        // The served-store contract is untouched — codebooks still round-
-        // trip through parquet and the search still prunes `cid=`
-        // partitions of the on-disk codes layer.
+        // The served-store contract is untouched — the codebooks are read
+        // back from the index dir's marker files and the search still
+        // prunes `cid=` partitions of the on-disk codes layer.
         val corpus = graft.operators.AnnIndex
           .corpusOf(Tables.embeddings(s, dir)).persist()
         try {

@@ -155,7 +155,6 @@ object IncrementalDedup {
     * pipeline accumulates one cached dataset per batch until LRU eviction.
     */
   def processBatch(table: KeyedTable, docs: DataFrame, batchId: Long): DataFrame = {
-    val spark = docs.sparkSession
     val sig0 = signaturesOf(docs)
     if (table.alreadyApplied(batchId))
       return sig0.select(col("doc_id").as("a"), col("doc_id").as("b"),

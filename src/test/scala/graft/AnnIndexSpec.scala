@@ -1,18 +1,27 @@
 package graft
 
-import graft.operators.AnnIndex
+import org.apache.spark.sql.DataFrame
 
-/** Persisted IVF index ([[AnnIndex]]): build-then-search must reproduce the
-  * graded `q_ann_ivf` results exactly, and a search must read ONLY the list
-  * partitions its probes hash into.
+import graft.operators.AnnIndex
+import graft.queries.{SimilarityQueries => SQ}
+import graft.streaming.Layers
+
+/** Persisted ANN indexes ([[AnnIndex]]): build-then-search must reproduce
+  * the graded `q_ann_*` results exactly, a search must read ONLY the
+  * partitions its probes hash into, and one compaction maintains every
+  * store of an index dir.
   */
 class AnnIndexSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
+  // the graded trainings are deterministic: train once, share across tests
+  private lazy val cents  = SQ.trainCodebook(spark, dir)
+  private lazy val pqBook = SQ.trainPq(spark, dir)
+
   test("build + search reproduces q_ann_ivf exactly, reading only probed lists") {
     val idx = java.nio.file.Files.createTempDirectory("ann_idx").toString
-    AnnIndex.build(spark, dir, idx)
+    AnnIndex.buildFrom(spark, Tables.embeddings(spark, dir), cents, idx)
 
     val got = AnnIndex.search(spark, idx, AnnIndex.probeWorkload(spark, dir))
     val want = SparkEntry.queries("q_ann_ivf")(spark, dir)
@@ -25,11 +34,11 @@ class AnnIndexSpec extends SparkTestBase {
     // pruned scan's actual input files stay within exactly those
     val probes = AnnIndex.probeWorkload(spark, dir)
       .filter(org.apache.spark.sql.functions.col("vec_id") === 0L)
-    val touched = AnnIndex.touchedLists(spark, idx, probes)
-    val nProbe = graft.queries.SimilarityQueries.NProbe
+    val touched = AnnIndex.touched(AnnIndex.probeCidsOf(probes, AnnIndex.codebook(spark, idx)), "cid")
+    val nProbe = SQ.NProbe
     assert(touched.nonEmpty && touched.size <= nProbe,
       s"one probe touched ${touched.size} lists (max NProbe=$nProbe)")
-    val scan = AnnIndex.listScan(spark, idx, touched)
+    val scan = AnnIndex.prunedScan(spark, s"$idx/vectors", "cid", touched)
     // input_file_name on surviving rows is necessary but NOT sufficient (a
     // defeated pruning still filters rows post-read) — also assert the
     // predicate landed in the scan's PartitionFilters, i.e. non-touched
@@ -54,7 +63,7 @@ class AnnIndexSpec extends SparkTestBase {
   test("LSH build + search reproduces q_ann_lsh exactly, reading only probed buckets") {
     import org.apache.spark.sql.functions.{col, input_file_name}
     val idx = java.nio.file.Files.createTempDirectory("ann_lsh").toString
-    AnnIndex.buildLsh(spark, dir, idx)
+    AnnIndex.buildLshFrom(Tables.embeddings(spark, dir), idx)
 
     val got = AnnIndex.searchLsh(spark, idx, AnnIndex.probeWorkload(spark, dir))
     val want = SparkEntry.queries("q_ann_lsh")(spark, dir)
@@ -66,10 +75,10 @@ class AnnIndexSpec extends SparkTestBase {
     // IO pin: one probe touches at most NTables·(1 + BitsPerTable) bucket
     // partitions, and the pruned scan's input files stay within them
     val oneProbe = AnnIndex.probeWorkload(spark, dir).filter(col("vec_id") === 0L)
-    val touched = AnnIndex.touchedBuckets(oneProbe)
+    val touched = AnnIndex.touched(AnnIndex.probeBuckets(oneProbe, SQ.BitsPerTable), "pb")
     assert(touched.nonEmpty && touched.size <= 4 * (1 + 4),
       s"one probe touched ${touched.size} buckets (max NTables*(1+bits)=20)")
-    val scan = AnnIndex.bucketScan(spark, idx, touched)
+    val scan = AnnIndex.prunedScan(spark, s"$idx/lsh", "pb", touched)
     // same sufficiency argument as the IVF test: the predicate must be a
     // PARTITION filter, not a post-read row filter
     val plan = scan.queryExecution.executedPlan.toString
@@ -90,7 +99,7 @@ class AnnIndexSpec extends SparkTestBase {
 
   // --- incremental appendBatch maintenance (VERDICT r6 next-step #2) ------
 
-  private def top3(df: org.apache.spark.sql.DataFrame) =
+  private def top3(df: DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
 
   test("IVF appendBatch: search-after-appends equals search-after-rebuild; replay is a no-op") {
@@ -101,7 +110,6 @@ class AnnIndexSpec extends SparkTestBase {
     val b1    = raw.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0)
     // the codebook is fixed at build time and shared by the rebuild — append
     // parity is only claimed under the same codebook (retraining may re-list)
-    val cents = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
     val probes = AnnIndex.probeWorkload(spark, dir)
 
     val inc = java.nio.file.Files.createTempDirectory("ann_inc").toString
@@ -127,64 +135,88 @@ class AnnIndexSpec extends SparkTestBase {
     }, probes)), "append batches changed nothing — parity pin is vacuous")
   }
 
-  test("IVF compactIndex: one generation layer, search unchanged, crashed sweep read-equivalent") {
-    import org.apache.spark.sql.functions.col
-    val raw   = Tables.embeddings(spark, dir)
-    val base  = raw.filter(col("vec_id") % 3 =!= 0)
-    val b0    = raw.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0)
-    val b1    = raw.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0)
-    val cents = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
-    val probes = AnnIndex.probeWorkload(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("ann_cmp").toString
-    AnnIndex.buildFrom(spark, base, cents, idx)
-    assert(AnnIndex.appendBatch(spark, idx, b0, 0L))
-    assert(AnnIndex.appendBatch(spark, idx, b1, 1L))
-    val before = top3(AnnIndex.search(spark, idx, probes))
-    assert(graft.streaming.Layers.ids(spark, s"$idx/vectors").size == 3)
+  // --- compaction: one table over the three stores ------------------------
 
-    // CRASHED sweep: the fold layer committed but every old layer survives —
-    // the store is a superset whose duplicates search must tolerate
-    AnnIndex.compactStore(spark, s"$idx/vectors", Seq("cid"), sweep = false)
-    assert(graft.streaming.Layers.ids(spark, s"$idx/vectors").size == 4)
-    assert(top3(AnnIndex.search(spark, idx, probes)) == before,
-      "crashed-sweep state diverged from the pre-compaction search")
+  /** One data store of an index dir, as the compaction table drives it. */
+  private case class Store(name: String, subdir: String, key: String,
+      build: (DataFrame, String) => Unit,
+      append: (String, DataFrame, Long) => Boolean,
+      search: String => DataFrame)
 
-    // the finishing compaction folds everything into the next generation
-    AnnIndex.compactIndex(spark, idx)
-    val layers = graft.streaming.Layers.ids(spark, s"$idx/vectors")
-    assert(layers.size == 1 && layers.head < 0, s"layers after compaction: $layers")
-    assert(top3(AnnIndex.search(spark, idx, probes)) == before,
-      "search after compaction diverged")
-    // the applied pointer survives the sweep: replays still refused
-    assert(!AnnIndex.appendBatch(spark, idx, b1, 1L))
-  }
+  private lazy val probeRows = AnnIndex.probeWorkload(spark, dir)
+  // (vec_id, q, n2) for the IVF+PQ re-rank fetch
+  private lazy val rawC      = AnnIndex.corpusOf(Tables.embeddings(spark, dir))
 
-  test("LSH compactIndexLsh: one generation layer, search unchanged") {
-    import org.apache.spark.sql.functions.col
-    val raw  = Tables.embeddings(spark, dir)
-    val base = raw.filter(col("vec_id") % 3 =!= 0)
-    val b0   = raw.filter(col("vec_id") % 3 === 0)
-    val probes = AnnIndex.probeWorkload(spark, dir)
-    val idx = java.nio.file.Files.createTempDirectory("lsh_cmp").toString
-    AnnIndex.buildLshFrom(base, idx)
-    assert(AnnIndex.appendBatchLsh(spark, idx, b0, 0L))
-    // re-append the same vectors under a new id: identical rows must FOLD
-    // (full-row dedup), not survive as layer duplicates
-    assert(AnnIndex.appendBatchLsh(spark, idx, b0, 1L))
-    val before = top3(AnnIndex.searchLsh(spark, idx, probes))
-    AnnIndex.compactIndexLsh(spark, idx)
-    val layers = graft.streaming.Layers.ids(spark, s"$idx/lsh")
-    assert(layers.size == 1 && layers.head < 0, s"layers after compaction: $layers")
-    assert(top3(AnnIndex.searchLsh(spark, idx, probes)) == before)
-    val perKey = spark.read.parquet(s"$idx/lsh")
-      .groupBy("vec_id", "t").count()
-      .agg(org.apache.spark.sql.functions.max("count")).collect()(0).getLong(0)
-    assert(perKey == 1L, s"re-appended duplicate rows survived compaction (max $perKey)")
-  }
+  private val stores = Seq(
+    Store("IVF", "vectors", "cid", AnnIndex.buildFrom(spark, _, cents, _),
+      AnnIndex.appendBatch(spark, _, _, _), AnnIndex.search(spark, _, probeRows)),
+    Store("LSH", "lsh", "pb", AnnIndex.buildLshFrom(_, _),
+      AnnIndex.appendBatchLsh(spark, _, _, _), AnnIndex.searchLsh(spark, _, probeRows)),
+    Store("IVF+PQ", "pqcodes", "cid", AnnIndex.buildIvfPqFrom(spark, _, cents, pqBook, _),
+      AnnIndex.appendBatchPq(spark, _, _, _), AnnIndex.searchIvfPq(spark, _, probeRows, rawC)))
 
-  test("shared tombstones survive per-store compaction when stores co-locate") {
+  for (st <- stores)
+    test(s"${st.name} compact: one generation, search and replay guard kept, rows folded") {
+      import org.apache.spark.sql.functions.col
+      import spark.implicits._
+      val raw   = Tables.embeddings(spark, dir)
+      val b0    = raw.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0)
+      val b1    = raw.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0)
+      val idx   = java.nio.file.Files.createTempDirectory("ann_cmp").toString
+      val store = s"$idx/${st.subdir}"
+      st.build(raw.filter(col("vec_id") % 3 =!= 0), idx)
+      assert(st.append(idx, b0, 0L))
+      assert(st.append(idx, b1, 1L))
+      // b0 again under a new id: identical rows must FOLD (full-row dedup),
+      // not survive the compaction as layer duplicates
+      assert(st.append(idx, b0, 2L))
+      assert(Layers.ids(spark, store).size == 4)
+      // a pending delete (every rank-1 neighbor) for the compaction to fold
+      val victims = top3(st.search(idx)).filter(_._2 == 1L).map(_._3).distinct
+      assert(AnnIndex.deleteIds(spark, idx, victims.toDF("vec_id"), 0L))
+      val before = top3(st.search(idx))
+      assert(!before.exists(r => victims.contains(r._3)), "deleted id survived in top-3")
+
+      // CRASHED sweep: the fold layer committed but every old layer survives —
+      // the store is a superset whose duplicates search must tolerate
+      AnnIndex.compactStore(spark, store, Seq(st.key), sweep = false)
+      assert(Layers.ids(spark, store).size == 5)
+      assert(top3(st.search(idx)) == before,
+        "crashed-sweep state diverged from the pre-compaction search")
+
+      // the finishing compaction folds everything into the next generation
+      AnnIndex.compact(spark, idx)
+      val layers = Layers.ids(spark, store)
+      assert(layers.size == 1 && layers.head < 0, s"layers after compaction: $layers")
+      assert(top3(st.search(idx)) == before, "search after compaction diverged")
+      // the applied pointer survives the sweep: replays still refused
+      assert(!st.append(idx, b1, 1L))
+      val rows = spark.read.parquet(store).drop("batch")
+      assert(rows.count() == rows.distinct().count(),
+        "re-appended duplicate rows survived compaction")
+      assert(rows.filter(col("vec_id").isin(victims: _*)).isEmpty,
+        "compaction left tombstoned rows in the data layers")
+      assert(Layers.ids(spark, s"$idx/tombs").isEmpty,
+        "compaction did not clear the tombstone layers")
+
+      // the folded PQ generation keeps the build writer's ONE file per cid
+      // list: the generic fold's dedup shuffle would otherwise hand every
+      // task a slice of every list, regressing the pruned search from NProbe
+      // file opens to NProbe × shuffle-partitions
+      if (st.subdir == "pqcodes") {
+        val cidDirs = new java.io.File(s"$store/batch=${layers.head}")
+          .listFiles().filter(f => f.isDirectory && f.getName.startsWith("cid="))
+        assert(cidDirs.nonEmpty)
+        cidDirs.foreach { d =>
+          val parts = d.listFiles().count(_.getName.startsWith("part-"))
+          assert(parts == 1,
+            s"compacted list ${d.getName} holds $parts files — the fold lost the one-file-per-list layout")
+        }
+      }
+    }
+
+  test("co-located stores: compact folds the shared tombstones into every store") {
     val raw    = Tables.embeddings(spark, dir)
-    val cents  = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
     val probes = AnnIndex.probeWorkload(spark, dir)
     // one index dir hosting BOTH an IVF store (vectors/) and an LSH store
     // (lsh/) — they share the dir's single tombs/ set
@@ -199,19 +231,16 @@ class AnnIndexSpec extends SparkTestBase {
     def lshVictims = top3(AnnIndex.searchLsh(spark, idx, probes))
       .map(_._3).toSet.intersect(victims.toSet)
     assert(lshVictims.isEmpty, "delete not visible to the LSH search")
-    // folding only the IVF store must LEAVE the shared tombstones: the LSH
-    // store still physically holds the victims' rows, and clearing here
-    // would resurrect deleted (takedown) vectors in its results
-    AnnIndex.compactIndex(spark, idx)
-    assert(graft.streaming.Layers.ids(spark, s"$idx/tombs").nonEmpty,
-      "per-store compaction cleared the tombstones another store still needs")
-    assert(lshVictims.isEmpty,
-      "per-store compaction resurrected tombstoned vectors in the co-located store")
-    // compactAll folds EVERY store against one snapshot, then clears
-    AnnIndex.compactAll(spark, idx)
-    assert(graft.streaming.Layers.ids(spark, s"$idx/tombs").isEmpty,
-      "compactAll must clear the folded tombstones")
-    assert(lshVictims.isEmpty, "victims reappeared after compactAll")
+    // compact folds EVERY store against one snapshot, then clears
+    AnnIndex.compact(spark, idx)
+    assert(Layers.ids(spark, s"$idx/tombs").isEmpty,
+      "compact must clear the folded tombstones")
+    assert(lshVictims.isEmpty, "victims reappeared after compact")
+    Seq("vectors", "lsh").foreach { sub =>
+      assert(spark.read.parquet(s"$idx/$sub").filter(
+        org.apache.spark.sql.functions.col("vec_id").isin(victims: _*)).isEmpty,
+        s"compact left tombstoned rows in $sub/")
+    }
   }
 
   test("LSH appendBatchLsh: search-after-appends equals search-after-rebuild; replay is a no-op") {
@@ -246,12 +275,19 @@ class AnnIndexSpec extends SparkTestBase {
   test("IVF+PQ composed index: recall floor, determinism, append parity, tombstones") {
     import org.apache.spark.sql.functions.col
     val raw    = Tables.embeddings(spark, dir)
-    val rawC   = AnnIndex.corpusOf(raw) // (vec_id, q, n2) for the re-rank fetch
     val probes = AnnIndex.probeWorkload(spark, dir)
 
     val idx = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    AnnIndex.buildIvfPq(spark, dir, idx)
+    val corpus = rawC.persist()
+    try AnnIndex.buildIvfPqOver(spark, corpus, idx) finally { corpus.unpersist(); () }
     val got = top3(AnnIndex.searchIvfPq(spark, idx, probes, rawC))
+
+    // the codebooks are driver-side marker files: reading both runs no
+    // Spark job, and they round-trip the graded trainings exactly
+    val (books, bookJobs) =
+      jobsDuring((AnnIndex.codebook(spark, idx), AnnIndex.pqCodebooks(spark, idx)))
+    assert(bookJobs.isEmpty, s"reading the codebooks ran ${bookJobs.size} Spark job(s)")
+    assert(books == ((cents.map(_._2), pqBook)), "stored codebooks differ from the trained ones")
 
     // recall@3 against the exact brute-force query: probing 4/16 lists AND
     // ranking compressed codes, on a ~uniform-sphere corpus (PQ's worst
@@ -272,13 +308,11 @@ class AnnIndexSpec extends SparkTestBase {
     assert(top3(AnnIndex.searchIvfPq(spark, idx, probes, rawC)) == got)
 
     // append parity under the SAME codebooks: build on 2/3, append 1/3
-    val coarse = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
-    val pq     = graft.queries.SimilarityQueries.trainPq(spark, dir)
     val inc = java.nio.file.Files.createTempDirectory("ivfpq_inc").toString
-    AnnIndex.buildIvfPqFrom(spark, raw.filter(col("vec_id") % 3 =!= 0), coarse, pq, inc)
+    AnnIndex.buildIvfPqFrom(spark, raw.filter(col("vec_id") % 3 =!= 0), cents, pqBook, inc)
     assert(AnnIndex.appendBatchPq(spark, inc, raw.filter(col("vec_id") % 3 === 0), 0L))
     val reb = java.nio.file.Files.createTempDirectory("ivfpq_reb").toString
-    AnnIndex.buildIvfPqFrom(spark, raw, coarse, pq, reb)
+    AnnIndex.buildIvfPqFrom(spark, raw, cents, pqBook, reb)
     assert(top3(AnnIndex.searchIvfPq(spark, inc, probes, rawC)) ==
       top3(AnnIndex.searchIvfPq(spark, reb, probes, rawC)),
       "appended IVF+PQ index diverged from the same-codebook rebuild")
@@ -290,28 +324,11 @@ class AnnIndexSpec extends SparkTestBase {
     assert(AnnIndex.deleteIds(spark, idx, victims.toDF("vec_id"), 0L))
     val after = top3(AnnIndex.searchIvfPq(spark, idx, probes, rawC))
     assert(!after.exists(r => victims.contains(r._3)), "deleted id survived in top-3")
-    // compaction folds the delete into the codes store and clears tombs
-    AnnIndex.compactIndexPq(spark, idx)
-    assert(top3(AnnIndex.searchIvfPq(spark, idx, probes, rawC)) == after)
-    // ...and the folded generation keeps the build writer's ONE file per
-    // cid list: the generic fold's dedup shuffle would otherwise hand every
-    // task a slice of every list, regressing the pruned search from NProbe
-    // file opens to NProbe × shuffle-partitions
-    val gen = graft.streaming.Layers.ids(spark, idx + "/pqcodes").filter(_ < 0).min
-    val cidDirs = new java.io.File(s"$idx/pqcodes/batch=$gen")
-      .listFiles().filter(f => f.isDirectory && f.getName.startsWith("cid="))
-    assert(cidDirs.nonEmpty)
-    cidDirs.foreach { d =>
-      val parts = d.listFiles().count(_.getName.startsWith("part-"))
-      assert(parts == 1,
-        s"compacted list ${d.getName} holds $parts files — the fold lost the one-file-per-list layout")
-    }
   }
 
   test("tombstones laid before any build survive a premature compaction") {
     import spark.implicits._
     val raw    = Tables.embeddings(spark, dir)
-    val cents  = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
     val probes = AnnIndex.probeWorkload(spark, dir)
     val idx = java.nio.file.Files.createTempDirectory("ann_tombs_first").toString
     // a takedown arrives before the first build ever runs
@@ -320,19 +337,12 @@ class AnnIndexSpec extends SparkTestBase {
         AnnIndex.buildFrom(spark, raw, cents, tmp); tmp }, probes))
       .filter(_._2 == 1L).map(_._3).distinct
     assert(AnnIndex.deleteIds(spark, idx, victims.toDF("vec_id"), 0L))
-    // maintenance runs against the not-yet-built dir: every per-store
-    // compaction no-ops on the absent store and must NOT clear the pending
-    // tombstones (the empty-store forall is vacuous — a cleared tombstone
-    // here silently resurrects the deleted ids in the first build)
-    AnnIndex.compactIndex(spark, idx)
-    AnnIndex.compactIndexLsh(spark, idx)
-    AnnIndex.compactIndexPq(spark, idx)
-    // compactAll shares the entry-point family and had its OWN unconditional
-    // clear (ADVICE r11): on the not-yet-built dir every per-store fold
-    // no-ops, so its final clear must be guarded exactly like the sole-store
-    // paths above
-    AnnIndex.compactAll(spark, idx)
-    assert(graft.streaming.Layers.ids(spark, idx + "/tombs").nonEmpty,
+    // maintenance runs against the not-yet-built dir: compact's fold no-ops
+    // on every absent store, and its clear must NOT wipe the pending
+    // tombstones (ADVICE r11 — a cleared tombstone here silently resurrects
+    // the deleted ids in the first build)
+    AnnIndex.compact(spark, idx)
+    assert(Layers.ids(spark, idx + "/tombs").nonEmpty,
       "premature compaction cleared tombstones that were never folded")
     // the delete still wins once the store exists
     AnnIndex.buildFrom(spark, raw, cents, idx)
@@ -343,7 +353,6 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("IVF+PQ planCentroids growth knob: list population stays flat and recall holds at 1x and 4x") {
     import org.apache.spark.sql.functions.{avg, col, lit}
-    val SQ = graft.queries.SimilarityQueries
     // the sizing rule itself, executable (VERDICT r9 #7): constant list
     // population, list count grows with the corpus
     assert(SQ.planCentroids(2000) == 16)                      // the graded build's constant
@@ -415,7 +424,6 @@ class AnnIndexSpec extends SparkTestBase {
 
   test("LSH planBits growth knob: occupancy stays flat and recall holds when bits grow with the corpus") {
     import org.apache.spark.sql.functions.{avg, col, lit}
-    val SQ = graft.queries.SimilarityQueries
     // the sizing rule itself, executable: bits = ceil(log2(rows / TargetBucket))
     assert(SQ.planBits(2000) == 4)                    // the graded build's constant
     assert(SQ.planBits(8000) == SQ.planBits(2000) + 2) // 4x corpus -> +2 bits
@@ -477,7 +485,6 @@ class AnnIndexSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val raw    = Tables.embeddings(spark, dir)
-    val cents  = graft.queries.SimilarityQueries.trainCodebook(spark, dir)
     val probes = AnnIndex.probeWorkload(spark, dir)
 
     val idx = java.nio.file.Files.createTempDirectory("ann_del").toString
@@ -501,13 +508,13 @@ class AnnIndexSpec extends SparkTestBase {
 
     // compaction physically drops the rows and clears the tombstones;
     // search is unchanged and the replay guard survives the clear
-    AnnIndex.compactIndex(spark, idx)
+    AnnIndex.compact(spark, idx)
     assert(top3(AnnIndex.search(spark, idx, probes)) == after)
     val remaining = spark.read.parquet(idx + "/vectors")
       .select("vec_id").as[Long].collect().toSet
     assert(victims.forall(v => !remaining.contains(v)),
       "compaction left tombstoned rows in the data layers")
-    assert(graft.streaming.Layers.ids(spark, idx + "/tombs").isEmpty,
+    assert(Layers.ids(spark, idx + "/tombs").isEmpty,
       "compaction did not clear the tombstone layers")
     assert(!AnnIndex.deleteIds(spark, idx, victims.toDF("vec_id"), 0L),
       "replayed delete batch accepted after the tombstone clear")

@@ -145,7 +145,7 @@ class CrossOpCrashSpec extends SparkTestBase {
     runBatch(t, batch(1), 1L)
     IncrementalDedup.compactBands(t.dedup)
     Packing.compactPacks(spark, t.pack)
-    AnnIndex.compactIndexLsh(spark, t.annDir)
+    AnnIndex.compact(spark, t.annDir)
     // replay of an applied id after compaction is still refused
     assert(t.dedup.alreadyApplied(1L) && t.pack.alreadyApplied(1L))
     assert(!AnnIndex.appendBatchLsh(spark, t.annDir, vecBatch(1L), 1L))
@@ -193,7 +193,7 @@ class CrossOpCrashSpec extends SparkTestBase {
     IncrementalDedup.deleteDocs(early.dedup, docVictims, 2L)
     AnnIndex.deleteIds(spark, early.annDir, vecVictims.toDF(), 2L)
     IncrementalDedup.compactBands(early.dedup)
-    AnnIndex.compactIndexLsh(spark, early.annDir)
+    AnnIndex.compact(spark, early.annDir)
     runBatchAt(early, 2L, 3L)
 
     // delete LATE: all three batches first, then the same deletes + compact
@@ -202,7 +202,7 @@ class CrossOpCrashSpec extends SparkTestBase {
     IncrementalDedup.deleteDocs(late.dedup, docVictims, 3L)
     AnnIndex.deleteIds(spark, late.annDir, vecVictims.toDF(), 3L)
     IncrementalDedup.compactBands(late.dedup)
-    AnnIndex.compactIndexLsh(spark, late.annDir)
+    AnnIndex.compact(spark, late.annDir)
 
     assert(dedupRows(early) == dedupRows(late),
       "signature tables diverge between delete-early and delete-late")

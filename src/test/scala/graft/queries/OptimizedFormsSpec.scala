@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,6 +93,13 @@ class OptimizedFormsSpec extends SparkTestBase {
     assert(fast.count() > 0)
   }
 
+  /** The IVF+PQ build over its own persisted scan of the embeddings table. */
+  private def buildIvfPq(s: SparkSession, indexDir: String): Unit = {
+    val corpus = graft.operators.AnnIndex.corpusOf(graft.Tables.embeddings(s, dir)).persist()
+    try graft.operators.AnnIndex.buildIvfPqOver(s, corpus, indexDir)
+    finally { corpus.unpersist(); () }
+  }
+
   test("buildIvfPq's overlapped trainers serve the same results as the sequential capture form") {
     // the r17 overlap (join2) must be invisible in the store: the capture
     // branch trains sequentially, the plain branch concurrently — same
@@ -100,9 +107,8 @@ class OptimizedFormsSpec extends SparkTestBase {
     val s = spark
     val tmp = java.nio.file.Files.createTempDirectory("graft-ivfpq-par-spec").toString
     try {
-      graft.Phases.capture(
-        graft.operators.AnnIndex.buildIvfPq(s, dir, s"$tmp/seq"))
-      graft.operators.AnnIndex.buildIvfPq(s, dir, s"$tmp/par")
+      graft.Phases.capture(buildIvfPq(s, s"$tmp/seq"))
+      buildIvfPq(s, s"$tmp/par")
       val probes = graft.operators.AnnIndex.probeWorkload(s, dir)
       val raw = graft.operators.AnnIndex.corpusOf(graft.Tables.embeddings(s, dir))
       val a = graft.operators.AnnIndex.searchIvfPq(s, s"$tmp/seq", probes, raw)
@@ -129,7 +135,7 @@ class OptimizedFormsSpec extends SparkTestBase {
       val shared = graft.operators.AnnIndex.searchIvfPq(s, s"$tmp/shared",
         corpus.filter(col("vec_id").isin(SimilarityQueries.ProbeIds: _*)), corpus)
       corpus.unpersist()
-      graft.operators.AnnIndex.buildIvfPq(s, dir, s"$tmp/scan")
+      buildIvfPq(s, s"$tmp/scan")
       val scan = graft.operators.AnnIndex.searchIvfPq(s, s"$tmp/scan",
         graft.operators.AnnIndex.probeWorkload(s, dir),
         graft.operators.AnnIndex.corpusOf(graft.Tables.embeddings(s, dir)))
