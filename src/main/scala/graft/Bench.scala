@@ -447,18 +447,23 @@ object Bench {
     median >= ModerateMedianSec && secs > ModerateRatio * median &&
       secs - median > SuspectMinDeltaSec
 
-  /** An entry's core count: its `cpus` stamp, else its `load.cores`.
-    * Low-core scaling runs share the trail with zero flags, and their ~2×
-    * readings must not feed another config's baselines; only an entry with
-    * NEITHER (the oldest lines) matches any requested cpus.
+  /** The core count of a history entry that carries neither a `cpus`
+    * stamp nor `load.cores`: the oldest lines (r1–r7) were all taken on the
+    * 32-core driver config.
     */
-  private[graft] def entryCpus(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+  private[graft] val UnstampedCpus = "32"
+
+  /** An entry's core count: its `cpus` stamp, else its `load.cores`, else
+    * [[UnstampedCpus]]. Low-core scaling runs share the trail with zero
+    * flags, and their ~2× readings must not feed another config's
+    * baselines.
+    */
+  private[graft] def entryCpus(n: com.fasterxml.jackson.databind.JsonNode): String =
     Option(n.get("cpus")).map(_.asText()).orElse(
       Option(n.get("load")).flatMap(l => Option(l.get("cores")))
-        .filter(_.isNumber).map(_.asInt.toString))
-  private[graft] def cpusMatches(stamp: Option[String],
-      want: Option[String]): Boolean =
-    want.forall(w => stamp.forall(_ == w))
+        .filter(_.isNumber).map(_.asInt.toString)).getOrElse(UnstampedCpus)
+  private[graft] def cpusMatches(stamp: String, want: Option[String]): Boolean =
+    want.forall(_ == stamp)
 
   /** Per-query medians over the last `window` CLEAN entries: a queries
     * map, this run's `sf` (an unstamped entry mismatches unless the whole

@@ -159,7 +159,7 @@ object BenchRecord {
     * true, a number of the wrong type is absent, a non-numeric timing
     * reads −1.
     */
-  final case class Entry(sf: Option[String], cpus: Option[String],
+  final case class Entry(sf: Option[String], cpus: String,
       value: Option[Double], degraded: Boolean, suspect: Boolean,
       envInflated: Option[Boolean], retimeClean: Option[Boolean],
       retimeHot: Option[Boolean], envRatio: Option[Double],

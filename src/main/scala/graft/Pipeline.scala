@@ -11,8 +11,9 @@ import graft.streaming.KeyedTable
 /** The reference's three lifecycles (SURVEY.md §3, §7.1) composed from the
   * engine's combinators — the facade a user of the reference switches to:
   *
-  *  - [[ingestBatch]] = links → anti-join existing → validate → keyed merge
-  *    (`scraping_loop` body, server.py:318-404 + pet_scraper.py:364-466);
+  *  - [[ingestBatch]] = links → validate → merge of the links not yet
+  *    stored (`scraping_loop` body, server.py:318-404 +
+  *    pet_scraper.py:364-466);
   *  - [[compact]] = verification delete-by-predicate + counts
   *    (`verify_all_pets`, server.py:226-315);
   *  - [[serve]] / [[exportCsv]] = the `GET /pets` / `GET /pets.csv` shapes
@@ -43,19 +44,19 @@ object Pipeline {
     ingested(Some(existing), batch)
 
   /** Same ingest semantics into a versioned [[KeyedTable]] (atomic publish,
-    * S5): one [[KeyedTable.commit]], so the anti-join and the merge see the
-    * same snapshot — one batch, one new snapshot version, idempotent per
-    * `batchId`.
+    * S5): one [[KeyedTable.commit]], so the ingest reads one snapshot — one
+    * batch, one new snapshot version, idempotent per `batchId`.
     */
   def ingestBatch(table: KeyedTable, batch: DataFrame, batchId: Long): Unit =
     table.commit(batchId)(ingested(_, batch))
 
   /** The one definition of an ingest batch against snapshot `existing`:
-    * anti-join its links, validate, dedup within the batch, upsert.
+    * validate, dedup within the batch, then one join that appends only the
+    * links `existing` lacks ([[Relational.insertNew]]).
     */
   private def ingested(existing: Option[DataFrame], batch: DataFrame): DataFrame = {
-    val fresh = existing.fold(batch)(Relational.antiJoin(batch, _, "link"))
-    KeyedTable.upsert(existing, fresh.filter(ingestValid), "link", None)
+    val fresh = KeyedTable.latestPerKey(batch.filter(ingestValid), "link", None)
+    existing.fold(fresh)(Relational.insertNew(_, fresh, "link"))
   }
 
   /** Verification compaction: a row survives iff fewer than 3 of the 15

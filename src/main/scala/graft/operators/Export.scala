@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.Scalars
 
@@ -20,18 +21,22 @@ import graft.functions.Scalars
 object Export {
 
   /** Encode a table into its export representation: declared column order,
-    * booleans stringified, newlines escaped, nulls → "". `boolCols` names the
-    * tri-state boolean columns (the pets schema's six compat/health flags).
+    * booleans stringified, newlines escaped, nulls → "", absent columns "".
+    * `boolCols` names the tri-state boolean columns (the pets schema's six
+    * compat/health flags). One `select`, so the plan is analyzed once
+    * whatever the column count.
     */
   def encodeForCsv(df: DataFrame, columns: Seq[String], boolCols: Set[String]): DataFrame = {
-    val staged = df.columns.foldLeft(df) { (acc, c) =>
-      if (boolCols.contains(c))
-        acc.withColumn(c, Scalars.encodeBool(col(c).cast("boolean")))
-      else if (acc.schema(c).dataType.typeName == "string")
-        acc.withColumn(c, Scalars.escapeNewlines(col(c)))
-      else acc
-    }
-    Relational.fixedProjection(staged, columns)
+    val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
+    df.select(columns.map { c =>
+      types.get(c).fold(lit("").as(c)) { t =>
+        val encoded =
+          if (boolCols.contains(c)) Scalars.encodeBool(col(c).cast("boolean"))
+          else if (t == StringType) Scalars.escapeNewlines(col(c))
+          else col(c)
+        coalesce(encoded.cast("string"), lit("")).as(c)
+      }
+    }: _*)
   }
 
   /** Write the encoded table as header-ful CSV. Partitioned by default;

@@ -104,6 +104,32 @@ object Relational {
     )
   }
 
+  /** J3+J4 insert-only merge (server.py:194-207 + pet_scraper.py:410-466):
+    * a key already in `existing` keeps its stored row whole, and a row of
+    * `inserts` whose key is new is appended — the anti-join and the merge
+    * in ONE full-outer shuffle join on the key, with no separate key-set
+    * probe. `inserts` must hold one row per key (dedup first). Schema
+    * evolution and output columns as [[upsertMerge]]: update-only columns
+    * append, null on stored rows. A null key never matches, so a
+    * null-keyed insert is appended and a null-keyed stored row stays; the
+    * `__new` marker, not the key, tells an insert from a stored row.
+    */
+  def insertNew(existing: DataFrame, inserts: DataFrame, key: String): DataFrame = {
+    val e = existing.alias("e")
+    val u = inserts.withColumn("__new", lit(true)).alias("u")
+    val stored = col("u.__new").isNull || col(s"e.$key").isNotNull
+    def pick(c: String) = when(stored, col(s"e.$c")).otherwise(col(s"u.$c"))
+    val insertCols = inserts.columns.toSet
+    val existingCols = existing.columns.toSet
+    val newCols = inserts.columns.filter(c => c != key && !existingCols(c))
+    e.join(u, col(s"e.$key") === col(s"u.$key"), "full_outer").select(
+      pick(key).as(key) +:
+        (existing.columns.filterNot(_ == key).map { c =>
+          if (insertCols(c)) pick(c).as(c) else col(s"e.$c").as(c)
+        } ++ newCols.map(c => when(!stored, col(s"u.$c")).as(c))): _*
+    )
+  }
+
   /** F4 delete-by-predicate compaction — keep survivors (server.py:226-315).
     * The overwrite itself is the caller's concern (Spark's commit protocol
     * supplies the reference's tmp+rename atomicity for free, SURVEY.md §4).

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -110,23 +110,23 @@ object Ingest {
     * published snapshot (server.py:226-315), republished atomically as a new
     * version. Runs between streaming epochs (caller stops/starts the query,
     * as the reference interleaves verify-all with scraping).
+    *
+    * One Spark job: the survivor write carries the (kept, total) counts as
+    * observed metrics, so the snapshot is scanned once and never cached. A
+    * row whose `keep` is null counts as dropped, as the filter drops it.
     */
   def compact(table: KeyedTable, keep: org.apache.spark.sql.Column): Option[(Long, Long)] =
     table.read().map { df =>
-      // owned persist, released even when a count or the publish throws
-      // (ADVICE r7 — same discipline as `start` and Packing.updatePacked):
-      // the caller's epoch loop retries compact, and a leaked snapshot
-      // cache per retry would pin one full-table dataset each cycle
-      val marked = df.persist()
-      try {
-        val survivors = marked.filter(keep)
-        val kept      = survivors.count()
-        val dropped   = marked.count() - kept
-        // snapshot versions are the table's own counter — a compaction between
-        // micro-batches can never collide with the stream's batch ids
-        table.publish(survivors)
-        (kept, dropped)
-      } finally { marked.unpersist(); () }
+      val obs    = Observation()
+      val marked = df.withColumn("__keep", keep)
+        .observe(obs, count(when(col("__keep"), 1)).as("kept"), count(lit(1)).as("total"))
+      // snapshot versions are the table's own counter — a compaction between
+      // micro-batches can never collide with the stream's batch ids
+      table.publish(marked.filter(col("__keep")).drop("__keep"))
+      // the metrics land when the write's execution ends; read them after
+      val counts = obs.get
+      val kept   = counts("kept").asInstanceOf[Long]
+      (kept, counts("total").asInstanceOf[Long] - kept)
     }
 
   /** T7 outer loop, one turn: drain everything currently available from the

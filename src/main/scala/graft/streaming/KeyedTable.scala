@@ -192,16 +192,22 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
 object KeyedTable {
 
   /** `updates` folded into snapshot `prev` by `key` (or bootstrapping the
-    * table when there is none). Intra-batch duplicate keys are resolved
-    * first (server.py:207's intra-batch dedup): highest `seqCol` wins when
-    * given, else an arbitrary-but-single row per key — so the result keeps
-    * one row per key.
+    * table when there is none), after [[latestPerKey]] — so the result
+    * keeps one row per key.
     */
   private[graft] def upsert(prev: Option[DataFrame], updates: DataFrame, key: String,
       seqCol: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val order   = seqCol.map(c => col(c).desc).getOrElse(col(key).asc)
-    val deduped = Relational.topKPerGroup(updates, Seq(col(key)), Seq(order), 1).drop("rn")
+    val deduped = latestPerKey(updates, key, seqCol)
     prev.fold(deduped)(Relational.upsertMerge(_, deduped, key))
+  }
+
+  /** One row per `key` of `updates` (server.py:207's intra-batch dedup):
+    * highest `seqCol` wins when given, else an arbitrary-but-single row.
+    */
+  private[graft] def latestPerKey(updates: DataFrame, key: String,
+      seqCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val order = seqCol.map(c => col(c).desc).getOrElse(col(key).asc)
+    Relational.topKPerGroup(updates, Seq(col(key)), Seq(order), 1).drop("rn")
   }
 }

@@ -36,13 +36,13 @@ object HistoryReport {
     if (parsed.isEmpty) return "no parseable history entries"
     val latest = parsed.last
     val sf = latest.sf
-    val medians = Bench.historyMedians(History(parsed.init), sf = sf, cpus = latest.cpus)
+    val medians = Bench.historyMedians(History(parsed.init), sf = sf, cpus = Some(latest.cpus))
 
     val sb = new StringBuilder
     // the clean band is windowed to the 10 most recent clean entries: the
     // trail spans many trees, and an old contaminated total would stretch
     // it into a useless yardstick
-    val cleanTotals = Bench.cleanBandTotals(history, sf, cpus = latest.cpus)
+    val cleanTotals = Bench.cleanBandTotals(history, sf, cpus = Some(latest.cpus))
     if (cleanTotals.nonEmpty)
       sb ++= s"== clean band (sf=${sf.getOrElse("-")}, last ${cleanTotals.size} clean): " +
         fnum("%.1f-%.1f", cleanTotals.min, cleanTotals.max) + " s ==\n"

@@ -265,10 +265,8 @@ class BenchLoadSpec extends AnyFunSuite {
       cpus = Some("32"))("q_a") === 0.5)
     assert(Bench.cleanBandTotals(trail, sf = Some("/tmp/sf"),
       cpus = Some("32")) === Seq.fill(4)(0.5))
-    // lenient grandfather (deliberately weaker than the sf era clause —
-    // see cpusMatches): an entry with neither a cpus stamp nor load.cores
-    // keeps matching, and the legacy pool ages out by recency instead of
-    // orphaning the trail
+    // an entry with neither a cpus stamp nor load.cores reads as
+    // Bench.UnstampedCpus (32): it feeds the 32-core baseline...
     val mixed = Seq.fill(3)(cpusLine(0.5, None)) ++
       Seq.fill(2)(cpusLine(0.7, Some("32"))) ++
       Seq(cpusLine(1.2, Some("8")))
@@ -276,11 +274,12 @@ class BenchLoadSpec extends AnyFunSuite {
       cpus = Some("32"))("q_a") === 0.5)
     assert(Bench.cleanBandTotals(mixed, sf = Some("/tmp/sf"),
       cpus = Some("32")) === Seq(0.5, 0.5, 0.5, 0.7, 0.7))
-    // and an 8-core consumer sees only its own config + legacy
+    // ...and an 8-core consumer sees only its own config: one sample,
+    // under MinSamples, so no median at all rather than 32-core ones
     assert(Bench.historyMedians(mixed, sf = Some("/tmp/sf"),
-      cpus = Some("8"))("q_a") === 0.5)
+      cpus = Some("8")) === Map.empty[String, Double])
     assert(Bench.cleanBandTotals(mixed, sf = Some("/tmp/sf"),
-      cpus = Some("8")) === Seq(0.5, 0.5, 0.5, 1.2))
+      cpus = Some("8")) === Seq(1.2))
   }
 
   test("an unstamped entry's load.cores stands in for its cpus stamp") {
@@ -293,10 +292,10 @@ class BenchLoadSpec extends AnyFunSuite {
         s""""queries":{"q_a":$v},$load$stamp"sf":"/tmp/sf"}"""
     }
     def node(l: String) = mapper.readTree(l)
-    assert(Bench.entryCpus(node(line(1.0, Some("8"), Some(32)))) === Some("8"),
+    assert(Bench.entryCpus(node(line(1.0, Some("8"), Some(32)))) === "8",
       "the stamp wins over the host width")
-    assert(Bench.entryCpus(node(line(1.0, None, Some(32)))) === Some("32"))
-    assert(Bench.entryCpus(node(line(1.0, None, None))) === None)
+    assert(Bench.entryCpus(node(line(1.0, None, Some(4)))) === "4")
+    assert(Bench.entryCpus(node(line(1.0, None, None))) === Bench.UnstampedCpus)
     val trail = Seq.fill(3)(line(0.5, None, Some(32))) ++
       Seq.fill(3)(line(1.5, None, Some(4)))
     assert(Bench.historyMedians(trail, sf = Some("/tmp/sf"),
@@ -305,10 +304,12 @@ class BenchLoadSpec extends AnyFunSuite {
       cpus = Some("32"))("q_a") === 0.5)
     assert(Bench.cleanBandTotals(trail, sf = Some("/tmp/sf"),
       cpus = Some("4")) === Seq.fill(3)(1.5))
-    // an entry carrying neither keeps the lenient match
+    // an entry carrying neither is a 32-core entry, never a 4-core one
     val legacy = Seq.fill(3)(line(0.7, None, None))
     assert(Bench.historyMedians(legacy, sf = Some("/tmp/sf"),
-      cpus = Some("4"))("q_a") === 0.7)
+      cpus = Some("4")) === Map.empty[String, Double])
+    assert(Bench.historyMedians(legacy, sf = Some("/tmp/sf"),
+      cpus = Some("32"))("q_a") === 0.7)
     assert(Bench.cleanBandTotals(legacy, sf = Some("/tmp/sf"),
       cpus = Some("32")) === Seq.fill(3)(0.7))
   }

@@ -116,7 +116,7 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(e.queries === Some(Seq("q_a" -> 0.5, "q_b" -> -1.0)),
       "a non-numeric timing reads -1, which no median admits")
     assert(e.retimed === Map("q_a" -> 0.4) && e.querySteal === Map("q_a" -> 4.1))
-    assert(e.suspectQueries === Seq("q_a") && e.cpus === Some("32") && e.sf === Some("/tmp/sf"))
+    assert(e.suspectQueries === Seq("q_a") && e.cpus === "32" && e.sf === Some("/tmp/sf"))
     assert(e.smokeSec === None, "a bench entry carries no smoke duration")
     assert(entry("""{"metric":"streaming_smoke","value":27.5,"failed":0}""").get.smokeSec === Some(27.5))
     assert(entry("{truncated").isEmpty)

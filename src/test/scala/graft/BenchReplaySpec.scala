@@ -59,7 +59,7 @@ class BenchReplaySpec extends AnyFunSuite {
     val n = mapper.readTree(history(i))
     val prior = history.take(i)
     val sf = Option(n.get("sf")).map(_.asText())
-    val cpus = Bench.entryCpus(n)
+    val cpus = Some(Bench.entryCpus(n))
     val load = Option(n.get("load"))
     val cores = load.flatMap(l => Option(l.get("cores"))).map(_.asInt).getOrElse(0)
     val chunks = arr(load.map(_.get("chunk_load")).orNull).map(c =>
@@ -111,6 +111,20 @@ class BenchReplaySpec extends AnyFunSuite {
       if got != want
     } yield s"entry ${i + 1} $field: got $got, golden $want"
     if (diffs.nonEmpty) fail(diffs.mkString("\n"))
+  }
+
+  test("a 4-core judgement ignores r1-r7, which read as 32-core entries") {
+    val legacy = history.take(7)
+    val nodes = legacy.map(l => mapper.readTree(l))
+    assert(nodes.forall(n => n.get("cpus") == null && n.path("load").get("cores") == null),
+      "r1-r7 carry neither a cpus stamp nor load.cores")
+    assert(nodes.map(Bench.entryCpus).toSet === Set(Bench.UnstampedCpus))
+    val sf = Some("/root/testdata/sf0.1")
+    assert(Bench.historyMedians(legacy, sf = sf, cpus = Some("32")).nonEmpty)
+    assert(Bench.cleanBandTotals(legacy, sf = sf, cpus = Some("32")).size === 7)
+    // no 4-core entry is among the 66, so a 4-core run has no baseline
+    assert(Bench.historyMedians(history, sf = sf, cpus = Some("4")).isEmpty)
+    assert(Bench.cleanBandTotals(history, sf = sf, cpus = Some("4")).isEmpty)
   }
 
   test("the retry site and the verdict site agreed on every chunk") {

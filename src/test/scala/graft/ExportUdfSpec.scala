@@ -35,6 +35,14 @@ class ExportUdfSpec extends SparkTestBase {
     assert(content.contains("L2,,,"))
   }
 
+  test("S8: a non-string, non-bool column passes through the CSV encoding unchanged") {
+    val df = Seq(("L1", Some(3), Some("a\nb")), ("L2", None, Some("c"))).toDF("link", "age", "about_me")
+    val out = Export.encodeForCsv(df, Seq("link", "age", "missing", "about_me"), Set.empty)
+    assert(out.schema.map(_.dataType.typeName).distinct == Seq("string"))
+    assert(out.orderBy("link").collect().map(_.toSeq).toSeq ==
+      Seq(Seq("L1", "3", "", "a\\nb"), Seq("L2", "", "", "c")))
+  }
+
   test("§2.10: registered SQL functions match the Column DSL on quirk inputs") {
     Udfs.register(spark)
     val inputs = Seq("unknown", "maybe", "only", "Yes", "✗", "", "  ", "About Rex",

@@ -54,6 +54,24 @@ class PipelineSpec extends SparkTestBase {
     assert(links(table.read().get) == Seq("L1", "L2"))
   }
 
+  test("ingestBatch into a KeyedTable: stored rows kept whole, in at most 3 jobs") {
+    val table = new KeyedTable(spark, Files.createTempDirectory("graft-ingest-jobs").toString, "link")
+    table.publish(petsDf(Seq(pet("L1", "Rex", 7), pet("L2", "Mia", 3))))
+    val batch = petsDf(Seq(
+      pet("L1", "Other", 7),                    // stored link: row kept whole
+      pet("L2", "Full", 7),                     // stored link with fewer fields
+      pet("L3", "Max", 7), pet("L3", "Max", 7), // new, sent twice
+      pet("L4", "cat", 7)))                     // placeholder name
+    // the anti-join is folded into the merge join: no key-set broadcast
+    val (_, jobs) = jobsDuring(Pipeline.ingestBatch(table, batch, 0L))
+    assert(jobs.size <= 3, s"ingestBatch ran ${jobs.size} jobs")
+    val out = table.read().get
+    assert(out.orderBy("link").select("link", "name").as[(String, String)].collect().toSeq ==
+      Seq("L1" -> "Rex", "L2" -> "Mia", "L3" -> "Max"))
+    assert(out.filter(col("link") === "L2").select("breed").as[String].collect().toSeq ==
+      Seq(null), "a stored row keeps its own nulls, not the batch's values")
+  }
+
   test("compact: field-failure threshold with summary counts") {
     val df = petsDf(Seq(pet("L1", "Rex", 7), pet("L2", "Thin", 0)))
     val (survivors, summary) = Pipeline.compact(df)

@@ -46,6 +46,26 @@ class RelationalSpec extends SparkTestBase {
     }
   }
 
+  test("insertNew equals anti-join then upsertMerge: null keys, evolved and narrow columns") {
+    val rng = new Random(7)
+    def key(i: Int): String = if (i == 0) null else s"k$i"
+    for (_ <- 1 to 5) {
+      val existing = rng.shuffle((0 to 30).toList).take(12).map(i =>
+        (key(i), Option.when(rng.nextBoolean())(s"e$i"), Option.when(rng.nextBoolean())(i)))
+        .toDF("link", "name", "age")
+      // one row per key (nulls included); `extra` is update-only, `age` absent
+      val inserts = rng.shuffle((0 to 40).toList).take(15).map(i =>
+        (key(i), Option.when(rng.nextBoolean())(s"u$i"), Option.when(rng.nextBoolean())(i * 2L)))
+        .toDF("link", "name", "extra")
+      val got  = Relational.insertNew(existing, inserts, "link")
+      val want = Relational.upsertMerge(existing,
+        Relational.antiJoin(inserts, existing, "link"), "link")
+      assert(got.columns.toSeq == Seq("link", "name", "age", "extra"))
+      assert(got.schema == want.schema)
+      assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+    }
+  }
+
   test("upsertMerge: absent update columns preserve existing values (P3)") {
     val existing = Seq(("a", "Rex", 3), ("b", "Bella", 5)).toDF("link", "name", "age")
     val updates  = Seq(("a", "Max")).toDF("link", "name") // no age column

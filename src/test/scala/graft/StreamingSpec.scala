@@ -195,6 +195,63 @@ class StreamingSpec extends SparkTestBase {
     assert(table.read().get.select("link").as[String].collect().toSet == Set("a", "c"))
   }
 
+  // Each compaction case: the snapshot rows, the keep rule, (kept, dropped)
+  // and the surviving links. Every one runs as one Spark job, the observed
+  // survivor write: no cache build and no counting passes.
+  private val compactCases = Seq(
+    ("all rows kept", Seq("a" -> Some(1), "b" -> Some(2)), col("n") < 5, (2L, 0L), Set("a", "b")),
+    ("all rows dropped", Seq("a" -> Some(7), "b" -> Some(9)), col("n") < 5, (0L, 2L), Set.empty[String]),
+    ("a null keep counts as dropped", Seq("a" -> Some(1), "b" -> None, "c" -> Some(9)),
+      col("n") < 5, (1L, 2L), Set("a")),
+    ("an empty snapshot", Seq.empty[(String, Option[Int])], col("n") < 5, (0L, 0L), Set.empty[String]),
+    // a constant rule still reaches the counts: the filter above the
+    // observation is not folded away with them
+    ("a constant false keep", Seq("a" -> Some(1), "b" -> None), lit(false), (0L, 2L), Set.empty[String]))
+
+  compactCases.foreach { case (name, rows, keep, counts, survivors) =>
+    test(s"T7 compact in one job: $name") {
+      val table = new KeyedTable(spark, tmp("compact-case"), "link")
+      table.publish(rows.toDF("link", "n"))
+      val v = table.latestVersion().get
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
+      val (got, jobs) = jobsDuring(Ingest.compact(table, keep))
+      assert(got.contains(counts))
+      assert(jobs.size == 1, s"compact ran ${jobs.size} jobs")
+      assert(table.latestVersion().get == v + 1)
+      assert(table.read().get.select("link").as[String].collect().toSet == survivors)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached, "compact must cache nothing")
+    }
+  }
+
+  test("a resumed stream epoch compiles no code: the last epoch's classes are reused") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.streaming.Trigger
+    val srcDir, ckptDir, tableDir, qDir = tmp("codegen-reuse")
+    val table = new KeyedTable(spark, tableDir, "link")
+    // a stored snapshot first, so both epochs run the same merge plan
+    table.publish(Seq(("s", "Stored", 0L)).toDF("link", "name", "seq"))
+    def addFile(rows: (String, String, Long)*): Unit =
+      rows.toDF("link", "name", "seq").coalesce(1).write.mode("append").parquet(srcDir)
+    def epoch(): Unit = Ingest.start(
+      updates = spark.readStream.schema(schema).parquet(srcDir),
+      table = table,
+      checkpointDir = ckptDir,
+      valid = col("name").isNotNull && trim(col("name")) =!= "",
+      quarantineDir = Some(qDir),
+      seqCol = Some("seq"),
+      trigger = Trigger.AvailableNow()).awaitTermination()
+
+    addFile(("a", "Rex", 1L), ("x", "", 2L))
+    epoch()
+    addFile(("b", "Bella", 3L), ("y", "", 4L))
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    epoch()
+    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles
+    assert(recompiled == 0, s"the second epoch compiled $recompiled classes the first one had")
+    assert(table.read().get.select("link").as[String].collect().toSet == Set("s", "a", "b"))
+    assert(spark.read.parquet(qDir).select("link").as[String].collect().toSet == Set("x", "y"))
+  }
+
   test("streaming dedup drops replayed keys inside the watermark horizon") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
