@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.expressions.DotProductLong.dotLong
-import graft.streaming.{Fs, Layers}
+import graft.streaming.{Fs, Head, Layers}
 import graft.queries.{Dialect, SimilarityQueries => SQ}
 
 /** Persisted ANN indexes — the SERVED forms of the graded `q_ann_ivf`,
@@ -99,11 +99,10 @@ object AnnIndex {
       partCols: Seq[String], sweep: Boolean,
       minus: Option[DataFrame] = None,
       clusterBy: Option[(Int, String)] = None): Unit =
-    Layers.read(s, store).foreach { rows =>
+    Layers.fold(s, store, sweep, partCols: _*)(Layers.read(s, store).map { rows =>
       val cleaned = minusTombs(rows.dropDuplicates(), minus)
-      Layers.fold(clusterBy.fold(cleaned) { case (n, c) => cleaned.repartition(n, col(c)) },
-        store, sweep, partCols: _*)
-    }
+      clusterBy.fold(cleaned) { case (n, c) => cleaned.repartition(n, col(c)) }
+    })
 
   /** The index dir's compaction: fold EVERY store present under `indexDir`
     * against one tombstone snapshot, physically dropping the tombstoned
@@ -114,8 +113,12 @@ object AnnIndex {
     * and an unconditional clear would wipe tombstones that were never
     * folded into anything — resurrecting the deleted (takedown/GDPR)
     * vec_ids in the first subsequent build (ADVICE r11).
+    *
+    * Runs under the tombstone store's lock, so a delete cannot land between
+    * the tombstone read and the clear (lock order: tombstones, then each
+    * data store).
     */
-  def compact(s: SparkSession, indexDir: String): Unit = {
+  def compact(s: SparkSession, indexDir: String): Unit = Head.locked(s, tombsPath(indexDir)) {
     val t = tombstones(s, indexDir)
     compactStore(s, vectorsPath(indexDir), Seq("cid"), sweep = true, minus = t)
     compactStore(s, lshPath(indexDir), Seq("pb"), sweep = true, minus = t)
@@ -134,7 +137,7 @@ object AnnIndex {
   // dir. Search subtracts the tombstone set from the candidate rows (an
   // anti-join against a ≤ #deletes broadcast side), so a delete is VISIBLE
   // immediately without touching any data layer; [[compact]] later drops
-  // the rows physically and clears the tombstones (the applied pointer
+  // the rows physically and clears the tombstones (the head's applied id
   // survives, so replayed delete batch ids are still refused after the
   // clear).
   // Crash discipline: the fold writes the cleaned generation first; a crash
@@ -173,7 +176,7 @@ object AnnIndex {
   private def pqBookPath(dir: String)   = dir + "/_PQBOOK"
 
   private def publishBook(s: SparkSession, path: String, rows: Seq[Seq[Long]]): Unit =
-    Fs.publishString(s, path, rows.map(_.mkString(" ")).mkString("\n"), 0L)
+    Fs.publishString(s, path, rows.map(_.mkString(" ")).mkString("\n"))
 
   private def readBook(s: SparkSession, path: String): Option[Seq[Seq[Long]]] =
     Fs.readString(s, path).map(_.split('\n').toSeq.filter(_.nonEmpty)
@@ -207,11 +210,11 @@ object AnnIndex {
     probeRows.select(key).distinct().collect().map(_.get(0)).toSeq
 
   /** The pruned store scan: only the `key=` partitions in `touched` are
-    * listed and read.
+    * listed and read, with the store's schema (no inference job).
     */
   private[graft] def prunedScan(s: SparkSession, store: String, key: String,
       touched: Seq[Any]): DataFrame =
-    s.read.parquet(store).filter(col(key).isin(touched: _*))
+    Layers.scan(s, store).filter(col(key).isin(touched: _*))
 
   /** The search every store runs: `probeRows` (each probe expanded to the
     * `key` partitions it reaches) is persisted, because the [[touched]]
@@ -282,7 +285,7 @@ object AnnIndex {
   /** Full IVF build from an explicit embeddings-shaped frame under an
     * explicit codebook ([[SQ.trainCodebook]] trains the graded one) — also
     * the COMPACTION-to-exact for a store that has accumulated append layers
-    * (the rebuild replaces them and resets the applied pointer), and the
+    * (the rebuild replaces them and resets the applied id), and the
     * spec's honest rebuild-for-comparison path (append parity only holds
     * under the SAME codebook; a retrained codebook may re-list vectors).
     *
@@ -395,7 +398,7 @@ object AnnIndex {
     // empty, appends bucketize correctly); for a rebuild that CHANGES bits
     // the window shrinks to the instant before the overwrite's delete,
     // and a crashed rebuild's re-run restores consistency either way.
-    Fs.publishString(corpus.sparkSession, lshBitsPath(indexDir), bits.toString, 0L)
+    Fs.publishString(corpus.sparkSession, lshBitsPath(indexDir), bits.toString)
     Layers.rebuild(lshRows(corpus, bits), lshPath(indexDir), "pb")
   }
 

@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.functions.Scalars
 
@@ -20,9 +18,9 @@ import graft.functions.Scalars
   * fetcher — URL templating, partition-wise client reuse, XPath slot
   * extraction, URL normalization — is the real engine path either way.
   *
-  * Scale posture: fetches run `mapPartitions` on executors (one client init
-  * per partition, streamed rows — never through the driver); extraction and
-  * normalization are codegen'd built-ins. Combined with
+  * Scale posture: fetches run as one UDF column on executors (streamed rows
+  * — never through the driver); extraction and normalization are codegen'd
+  * built-ins. Combined with
   * [[graft.streaming.Ingest.pagedSource]] this is the reference's unbounded
   * ingest front end, distributed.
   */
@@ -59,19 +57,16 @@ object Fetch {
     s"<html><body><div>$anchors</div></body></html>"
   }
 
-  /** S2/S3: executor-side document fetch. One fetcher per partition (where a
-    * real client initializes its connection pool / browser context once),
-    * rows streamed — the distributed form of the reference's
-    * one-shared-browser loop (pet_scraper.py:604-613).
+  /** S2/S3: executor-side document fetch, one `html` column computed by
+    * `fetcher` — the distributed form of the reference's one-shared-browser
+    * loop (pet_scraper.py:604-613); a real fetcher initializes its client
+    * lazily, once per executor. The column is nondeterministic, so the
+    * optimizer keeps it in its own projection: every `xpath_string` of
+    * [[extractLinks]] / [[extractPetFields]] reads the one fetched page
+    * instead of inlining (and re-running) the fetch per call.
     */
-  def fetchPages(df: DataFrame, urlCol: String, fetcher: Fetcher): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("html", StringType))
-    val idx = df.schema.fieldIndex(urlCol)
-    df.mapPartitions { rows =>
-      // real fetcher: init client here; iterator wraps per-row fetch + retry
-      rows.map(r => Row.fromSeq(r.toSeq :+ fetcher(r.getString(idx))))
-    }(RowEncoder.encoderFor(outSchema))
-  }
+  def fetchPages(df: DataFrame, urlCol: String, fetcher: Fetcher): DataFrame =
+    df.withColumn("html", udf(fetcher).asNondeterministic()(col(urlCol)))
 
   /** P5: the 12 fixed positional slots, via `xpath_string` per slot (the
     * engine analog of link_scraper.py:100-113's hard-coded XPaths), blanks

@@ -7,9 +7,9 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Path-level filesystem helpers shared by the streaming stores
-  * (KeyedTable snapshots and pointer, the [[Layers]] stores) — one copy so
-  * a fix (stream closing, rename semantics) cannot silently diverge between
-  * call sites.
+  * (KeyedTable snapshots, the [[Layers]] stores, every store's [[Head]]) —
+  * one copy so a fix (stream closing, rename semantics) cannot silently
+  * diverge between call sites.
   *
   * Every operation resolves its path through `org.apache.hadoop.fs
   * .FileSystem` with the session's Hadoop configuration (VERDICT r7 #1):
@@ -105,6 +105,12 @@ private[graft] object Fs {
     * copy+delete — there the pointer protocol needs a stronger backend
     * (S3Guard-era stores, or HDFS/ABFS-class semantics), same caveat as
     * every rename-based commit protocol including Spark's.
+    *
+    * The swap is atomic for readers, not exclusive for writers: on the local
+    * FS, `rename` replaces its target and `create(p, overwrite = false)` is
+    * an `exists` check followed by a plain open, so neither can arbitrate
+    * between two writer processes. Writers of one store are serialized in
+    * one JVM by [[Head.locked]] (the single-writer-process contract).
     */
   def renameOverwrite(spark: SparkSession, src: String, dst: String): Unit = {
     val (fs, s) = resolve(spark, src)
@@ -115,12 +121,13 @@ private[graft] object Fs {
     }
   }
 
-  /** Atomic pointer publish: stage `content` at `<path>.tmp.<stage>`, then
-    * [[renameOverwrite]] it over `path` — KeyedTable's `_LATEST` swap and
-    * the layer stores' applied mark.
+  /** Atomic pointer publish: stage `content` at `<path>.tmp.<random uuid>`,
+    * then [[renameOverwrite]] it over `path` — every store's head
+    * ([[Head.publish]]) and the ANN codebook markers. The temp name is
+    * unique per call, so two writers never stage into one file.
     */
-  def publishString(spark: SparkSession, path: String, content: String, stage: Long): Unit = {
-    val tmp = s"$path.tmp.$stage"
+  def publishString(spark: SparkSession, path: String, content: String): Unit = {
+    val tmp = s"$path.tmp.${java.util.UUID.randomUUID()}"
     writeString(spark, tmp, content)
     renameOverwrite(spark, tmp, path)
   }

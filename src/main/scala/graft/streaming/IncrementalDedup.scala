@@ -132,15 +132,19 @@ object IncrementalDedup {
     * (An in-place overwrite of one fixed layer id would delete an old
     * partition before its replacement renames in — a crash window that
     * LOSES rows whose only copy was the previous compaction's output.)
+    * It runs inside the table's writer section, as every band write does,
+    * so it never sweeps a band layer whose signatures it did not read.
     */
-  def compactBands(table: KeyedTable): Unit =
+  def compactBands(table: KeyedTable): Unit = table.locked {
     table.read().foreach { sig =>
-      Layers.fold(withPb(DedupQueries.bandRows(sig)), bandsPath(table), sweep = true, "pb")
+      Layers.fold(table.session, bandsPath(table), sweep = true, "pb")(
+        Some(withPb(DedupQueries.bandRows(sig))))
       // the rebuild came from the post-delete signature table, so the
       // tombstones are folded in — clear their layers (a crash before this
       // leaves tombstones whose anti-join is a no-op over clean bands)
       Layers.clear(table.session, tombsPath(table))
     }
+  }
 
   /** Index `docs` (doc_id, text, ...) under `batchId` and return the near-dup
     * candidate pairs (a, b) this batch creates against the corpus-so-far
@@ -164,7 +168,9 @@ object IncrementalDedup {
     // merge below — persist it so the merge's publish reuses the computed
     // signatures instead of re-shingling the raw docs a second time
     val sig = sig0.persist()
-    try processBatchFrom(table, sig, batchId)
+    // the band append, the probe and the merge form one writer section of
+    // the table, so a compactBands cannot fold between them
+    try table.locked(processBatchFrom(table, sig, batchId))
     finally { sig.unpersist(); () }
   }
 

@@ -114,19 +114,24 @@ object Ingest {
     * One Spark job: the survivor write carries the (kept, total) counts as
     * observed metrics, so the snapshot is scanned once and never cached. A
     * row whose `keep` is null counts as dropped, as the filter drops it.
+    * The read and the publish form one writer section of the table, so a
+    * concurrent batch commit lands before or after the compaction, never
+    * under it.
     */
   def compact(table: KeyedTable, keep: org.apache.spark.sql.Column): Option[(Long, Long)] =
-    table.read().map { df =>
-      val obs    = Observation()
-      val marked = df.withColumn("__keep", keep)
-        .observe(obs, count(when(col("__keep"), 1)).as("kept"), count(lit(1)).as("total"))
-      // snapshot versions are the table's own counter — a compaction between
-      // micro-batches can never collide with the stream's batch ids
-      table.publish(marked.filter(col("__keep")).drop("__keep"))
-      // the metrics land when the write's execution ends; read them after
-      val counts = obs.get
-      val kept   = counts("kept").asInstanceOf[Long]
-      (kept, counts("total").asInstanceOf[Long] - kept)
+    table.locked {
+      table.read().map { df =>
+        val obs    = Observation()
+        val marked = df.withColumn("__keep", keep)
+          .observe(obs, count(when(col("__keep"), 1)).as("kept"), count(lit(1)).as("total"))
+        // snapshot versions are the table's own counter — a compaction between
+        // micro-batches can never collide with the stream's batch ids
+        table.publish(marked.filter(col("__keep")).drop("__keep"))
+        // the metrics land when the write's execution ends; read them after
+        val counts = obs.get
+        val kept   = counts("kept").asInstanceOf[Long]
+        (kept, counts("total").asInstanceOf[Long] - kept)
+      }
     }
 
   /** T7 outer loop, one turn: drain everything currently available from the

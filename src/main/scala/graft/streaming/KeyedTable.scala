@@ -9,21 +9,31 @@ import graft.operators.Relational
   * reference's single CSV rewritten via tmp + fsync + os.replace
   * (pet_scraper.py:468-498, server.py:299-307).
   *
-  * Layout: `dir/v<version>/` parquet snapshots plus a tiny `_LATEST` pointer
-  * file, itself published atomically (tmp + rename-overwrite — the same
-  * publish-then-swap the reference uses). The pointer carries BOTH the
-  * current snapshot version and the highest APPLIED STREAMING BATCH id, as
-  * one atomic unit: snapshot versions are a private monotonic counter
-  * (compactions and merges both bump it), batch ids belong to the streaming
-  * checkpoint — keeping them separate means a maintenance compaction between
-  * two micro-batches can never collide with (and silently swallow) the next
-  * batch's id. Readers resolve `_LATEST` and only ever see a fully-committed
-  * snapshot; a crash mid-write leaves an unreferenced `v*` directory that
-  * the next publish garbage-collects (the reference's orphan cleanup,
-  * server.py:245-252).
+  * Layout: `dir/v<version>/` parquet snapshots plus the table's [[Head]]
+  * (`_LATEST`), itself published atomically (tmp + rename-overwrite — the
+  * same publish-then-swap the reference uses). The head carries the
+  * current snapshot version, the highest APPLIED STREAMING BATCH id and
+  * the schema of every retained version, as one atomic unit: snapshot
+  * versions are a private monotonic counter (compactions and merges both
+  * bump it), batch ids belong to the streaming checkpoint — keeping them
+  * separate means a maintenance compaction between two micro-batches can
+  * never collide with (and silently swallow) the next batch's id. Readers
+  * resolve the head and only ever see a fully-committed snapshot, scanned
+  * with the head's schema (no inference job); a crash mid-write leaves an
+  * unreferenced `v*` directory that the next publish garbage-collects (the
+  * reference's orphan cleanup, server.py:245-252).
   *
   * Scale posture: snapshots are plain parquet directories written by the
-  * cluster; only the ~30-byte pointer file is written outside its tasks.
+  * cluster; only the small head file is written outside its tasks.
+  *
+  * Writers: every write — [[commit]], [[publish]], `Ingest.compact` — runs
+  * one locked section ([[Head.locked]]) that resolves the head, reads the
+  * snapshot, writes the next version and publishes, so a compaction and a
+  * stream's `foreachBatch` never fold against the same version. The
+  * co-located stores under `dir` (band index, tombstones, packs) write and
+  * compact inside this section. One writer PROCESS per table: the lock is
+  * in-JVM (the [[Head]] scaladoc says why the local filesystem cannot
+  * arbitrate between processes).
   *
   * Batch writes: [[commit]] is the one owner of the replay guard. Every
   * writer that records a streaming batch id (keyed [[merge]],
@@ -31,16 +41,6 @@ import graft.operators.Relational
   * pack and signature stores) folds its batch into the snapshot through
   * it. Only `IncrementalDedup.processBatch` also reads the applied id, to
   * return its typed empty result early.
-  *
-  * Schema slot: a plain parquet read infers its schema with one
-  * footer-reading job. Each instance keeps the `(version, schema)` of the
-  * newest snapshot it wrote or read; [[publish]] fills it from the frame it
-  * wrote, and a read of that version (the read-fold-publish loop of
-  * [[commit]], serving right after a commit) reads with the kept schema and
-  * runs no job. A version published by another instance misses the slot,
-  * is inferred once, and becomes the slot. With one writer a version
-  * directory is written once, before the pointer names it, so the slot
-  * never goes stale.
   */
 final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
 
@@ -50,11 +50,6 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
     */
   private[graft] def session: SparkSession = spark
 
-  // all paths below are STRINGS resolved through the Hadoop FileSystem API
-  // ([[Fs]]) — `file:`, `hdfs:`, or object-store paths all work (VERDICT
-  // r7 #1); java.nio would pin the store to the driver's local disk
-  private val pointer = dir + "/_LATEST"
-
   /** How many superseded snapshots survive each publish (in-flight readers
     * of the previous version keep working during the swap).
     */
@@ -62,83 +57,76 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
 
   Fs.mkdirs(spark, dir)
 
-  /** (snapshot version, last applied batch id); batch id −1 = none yet. */
-  private def pointerState(): Option[(Long, Long)] =
-    Fs.readString(spark, pointer).map { content =>
-      val parts = content.trim.split(" ")
-      (parts(0).toLong, if (parts.length > 1) parts(1).toLong else -1L)
-    }
+  private def head(): Option[Head.State] = Head.read(spark, dir)
 
-  def latestVersion(): Option[Long] = pointerState().map(_._1)
+  def latestVersion(): Option[Long] = head().map(_.version)
 
-  def read(): Option[DataFrame] = latestVersion().map(snapshot)
+  def read(): Option[DataFrame] = head().map(h => snapshot(h, h.version))
 
-  /** (version, schema) of the newest snapshot this instance wrote or read. */
-  @volatile private var schemaSlot: Option[(Long, StructType)] = None
-
-  /** Plain parquet scan of version `v`: with the slot's schema when it holds
-    * `v`, else inferred; an inferred version newer than the slot's fills it.
-    */
-  private def snapshot(v: Long): DataFrame = {
-    val path = s"$dir/v$v"
-    schemaSlot match {
-      case Some((`v`, schema)) => spark.read.schema(schema).parquet(path)
-      case held =>
-        val df = spark.read.parquet(path)
-        if (held.forall(_._1 < v)) schemaSlot = Some((v, df.schema))
-        df
-    }
+  /** Plain parquet scan of retained version `v` with its schema from `h`. */
+  private def snapshot(h: Head.State, v: Long): DataFrame = {
+    val schema = h.schemas.getOrElse(v,
+      throw new IllegalArgumentException(s"version $v of $dir is not retained"))
+    spark.read.schema(schema).parquet(s"$dir/v$v")
   }
 
   /** True iff streaming batch `batchId` has already been applied — a
     * foreachBatch replay after crash-resume (T3/T4). Writers leave this
     * check to [[commit]].
     */
-  def alreadyApplied(batchId: Long): Boolean =
-    pointerState().exists(_._2 >= batchId)
+  def alreadyApplied(batchId: Long): Boolean = head().exists(_.applied >= batchId)
 
-  /** The replay-guarded commit of streaming batch `batchId`: resolve
-    * `_LATEST` once; if the id is already applied (a foreachBatch replay)
-    * return without building anything; else hand `fold` the snapshot AT
-    * THAT VERSION (None before the first publish) and [[publish]] what it
-    * returns under the id. `fold` may write a sidecar first (a pack or
-    * tombstone layer, a quarantine directory): it runs after the guard and
-    * before the pointer swap, so a crash between the two replays onto the
-    * same sidecar. For a non-idempotent fold (addition) this guard is the
-    * exactly-once guarantee.
+  /** `body` inside the table's writer section — for the writers that
+    * read and publish outside [[commit]] (`Ingest.compact`) and the
+    * co-located stores' compactions.
     */
-  def commit(batchId: Long)(fold: Option[DataFrame] => DataFrame): Unit =
-    pointerState() match {
-      case Some((_, applied)) if applied >= batchId => ()
-      case state =>
-        publish(fold(state.map { case (v, _) => snapshot(v) }), Some(batchId))
-        ()
-    }
+  private[graft] def locked[T](body: => T): T = Head.locked(spark, dir)(body)
+
+  /** The replay-guarded commit of streaming batch `batchId`, one locked
+    * section: resolve the head once; if the id is already applied (a
+    * foreachBatch replay) return without building anything; else hand
+    * `fold` the snapshot AT THAT VERSION (None before the first publish)
+    * and publish what it returns under the id as the next version. `fold`
+    * may write a sidecar first (a pack or tombstone layer, a quarantine
+    * directory): it runs after the guard and before the head swap, so a
+    * crash between the two replays onto the same sidecar. For a
+    * non-idempotent fold (addition) this guard is the exactly-once
+    * guarantee.
+    */
+  def commit(batchId: Long)(fold: Option[DataFrame] => DataFrame): Unit = {
+    Head.guarded(spark, dir, batchId)(h =>
+      write(h, fold(h.map(s => snapshot(s, s.version))), Some(batchId)))
+    ()
+  }
 
   /** Write a full snapshot as the next version and atomically swing the
-    * pointer (recording `batchId` when the write came from a streaming
-    * batch). Parquet write is the cluster-side heavy path (Spark's commit
-    * protocol already publishes the directory all-or-nothing); the pointer
-    * swap is the reference's os.replace. The new version comes from this
-    * call's own pointer read, not from the one [[commit]] folded against.
-    * Superseded and orphaned snapshots beyond [[KeepSnapshots]] are deleted
-    * best-effort afterwards.
+    * head (recording `batchId` when the write came from a streaming batch),
+    * inside the table's writer section.
     */
-  def publish(df: DataFrame, batchId: Option[Long] = None): Long = {
-    val state   = pointerState()
-    val version = state.map(_._1 + 1).getOrElse(0L)
-    val applied = batchId.orElse(state.map(_._2)).getOrElse(-1L)
+  def publish(df: DataFrame, batchId: Option[Long] = None): Long =
+    locked(write(head(), df, batchId))
+
+  /** Write `df` as the version after `h`'s and publish the head. Parquet
+    * write is the cluster-side heavy path (Spark's commit protocol already
+    * publishes the directory all-or-nothing); the head swap is the
+    * reference's os.replace. Superseded and orphaned snapshots beyond
+    * [[KeepSnapshots]] are deleted best-effort afterwards, and their
+    * schemas leave the head.
+    */
+  private def write(h: Option[Head.State], df: DataFrame, batchId: Option[Long]): Long = {
+    val version = h.map(_.version + 1).getOrElse(0L)
+    val applied = batchId.orElse(h.map(_.applied)).getOrElse(-1L)
     df.write.mode("overwrite").parquet(s"$dir/v$version")
-    // the reference's os.replace, through the FileSystem abstraction
-    Fs.publishString(spark, pointer, s"$version $applied", version)
-    schemaSlot = Some((version, df.schema))
+    val retained = h.map(_.schemas).getOrElse(Map.empty[Long, StructType])
+      .filter { case (v, _) => v >= version - KeepSnapshots }
+    Head.publish(spark, dir, Head.State(version, applied, retained + (version -> df.schema)))
     gc(version)
     version
   }
 
   /** Best-effort removal of snapshot dirs older than `current - KeepSnapshots`
     * plus crash orphans NEWER than current (an interrupted publish that never
-    * swung the pointer). Keeps exactly [[KeepSnapshots]] superseded versions
+    * swung the head). Keeps exactly [[KeepSnapshots]] superseded versions
     * beside the current one — the documented window (the old `+ 1` variant
     * kept only one superseded snapshot, so two quick merges could delete a
     * version an in-flight reader resolved just before the first swap).
@@ -158,14 +146,15 @@ final class KeyedTable(spark: SparkSession, val dir: String, val key: String) {
     * COMMON to both versions null-safely, so an additively-evolved column
     * doesn't mark every old row changed). The publish-audit shape: both
     * sides are plain snapshot scans full-outer-joined on the key, so the
-    * diff distributes like the merge itself; each side is read like
-    * [[read]] reads it (slot or inference). Versions older than
-    * [[KeepSnapshots]] are GC'd — diff what you retain.
+    * diff distributes like the merge itself; each side is read with its
+    * own schema from the head. Versions older than [[KeepSnapshots]] are
+    * GC'd — diff what you retain.
     */
   def diff(vOld: Long, vNew: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, struct, to_json, when}
-    val o = snapshot(vOld).alias("o")
-    val n = snapshot(vNew).alias("n")
+    val h = head().getOrElse(throw new IllegalStateException(s"$dir has no snapshot"))
+    val o = snapshot(h, vOld).alias("o")
+    val n = snapshot(h, vNew).alias("n")
     val common = o.columns.toSet.intersect(n.columns.toSet) - key
     val cols   = common.toSeq.sorted
     val oState = to_json(struct(cols.map(c => col(s"o.$c").as(c)): _*))

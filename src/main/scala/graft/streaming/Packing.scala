@@ -102,10 +102,12 @@ object Packing {
     * the small-files control a long-running packer schedules between
     * streaming epochs. A crashed sweep's survivors are exact duplicates of
     * new-layer rows, which [[readPacked]]'s per-doc dropDuplicates makes
-    * read-equivalent. The offsets snapshot is untouched.
+    * read-equivalent. The offsets snapshot is untouched. Runs inside the
+    * table's writer section, where every pack layer is appended, so no
+    * layer lands between the fold's read and its sweep.
     */
   def compactPacks(spark: org.apache.spark.sql.SparkSession, table: KeyedTable): Unit =
-    readPacked(spark, table).foreach(Layers.fold(_, packsPath(table), sweep = true))
+    table.locked(Layers.fold(spark, packsPath(table), sweep = true)(readPacked(spark, table)))
 
   /** All pack assignments so far — the union of batch layers. The per-doc
     * dropDuplicates is exact (an assignment is immutable, so any cross-layer

@@ -4,23 +4,29 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col, sin}
 
 import graft.model.PetSchema
-import graft.streaming.{IncrementalDedup, Ingest, KeyedTable, Packing, Sketches}
+import graft.operators.AnnIndex
+import graft.queries.{SimilarityQueries => SQ}
+import graft.streaming.{Head, IncrementalDedup, Ingest, KeyedTable, Packing, Sketches}
 
 /** The replay guard of every batch writer, one table: each writer applies a
   * batch id, then a FRESH [[KeyedTable]] instance on the same directory
-  * (a restarted driver, whose schema slot is empty) is sent the same id
-  * again — the foreachBatch replay after crash-resume. The replay must run
-  * no Spark job (not even a snapshot's schema inference) and publish
-  * nothing: the table's `latestVersion` stays where it was. For the
-  * non-idempotent stores (CMS, DSIR, histogram, domain and hourly sums)
-  * this guard is the exactly-once guarantee.
+  * (a restarted driver) is sent the same id again — the foreachBatch
+  * replay after crash-resume. The replay must run no Spark job (not even a
+  * snapshot's schema inference) and publish nothing: the table's
+  * `latestVersion` stays where it was. For the non-idempotent stores (CMS,
+  * DSIR, histogram, domain and hourly sums) this guard is the exactly-once
+  * guarantee.
+  *
+  * The ANN index stores keep the same guard in their own heads
+  * (`Layers.appendOnce`): each of their writers is replayed the same way,
+  * and the store's head version must not move.
   */
 class CommitReplaySpec extends SparkTestBase {
 
-  import CommitReplaySpec.Writer
+  import CommitReplaySpec.{IndexWriter, Writer}
   import spark.implicits._
 
   private def tmp(tag: String): String =
@@ -103,6 +109,42 @@ class CommitReplaySpec extends SparkTestBase {
       assert(fresh.latestVersion() == before, "the replay published a new version")
     }
   }
+
+  /** Embeddings-shaped rows `from until until`, deterministic. */
+  private def vectors(from: Long, until: Long): DataFrame =
+    spark.range(from, until).select(col("id").as("vec_id"),
+      array((1 to SQ.Dim).map(d => sin(col("id") * d)): _*).as("embedding"))
+
+  private lazy val base   = AnnIndex.corpusOf(vectors(0, 200)).select("q")
+  private lazy val cents  = SQ.trainCodebookFrom(base)
+  private lazy val pqBook = SQ.trainPqFrom(base)
+
+  private val indexWriters: Seq[IndexWriter] = Seq(
+    IndexWriter("AnnIndex.deleteIds", "tombs", _ => (),
+      AnnIndex.deleteIds(spark, _, vectors(0, 10), 0L)),
+    IndexWriter("AnnIndex.appendBatch", "vectors",
+      AnnIndex.buildFrom(spark, vectors(0, 200), cents, _),
+      AnnIndex.appendBatch(spark, _, vectors(200, 260), 0L)),
+    IndexWriter("AnnIndex.appendBatchLsh", "lsh",
+      AnnIndex.buildLshFrom(vectors(0, 200), _),
+      AnnIndex.appendBatchLsh(spark, _, vectors(200, 260), 0L)),
+    IndexWriter("AnnIndex.appendBatchPq", "pqcodes",
+      AnnIndex.buildIvfPqFrom(spark, vectors(0, 200), cents, pqBook, _),
+      AnnIndex.appendBatchPq(spark, _, vectors(200, 260), 0L)))
+
+  indexWriters.foreach { w =>
+    test(s"${w.name}: a replayed id runs no job and publishes nothing") {
+      val dir = tmp(w.name)
+      w.build(dir)
+      assert(w.write(dir), "the first write of the id was refused")
+      def version = Head.read(spark, s"$dir/${w.store}").map(_.version)
+      val before = version
+      val (applied, jobs) = jobsDuring(w.write(dir))
+      assert(!applied, "the replay was applied")
+      assert(jobs.isEmpty, s"the replay ran ${jobs.size} Spark job(s)")
+      assert(version == before, "the replay published a new head")
+    }
+  }
 }
 
 object CommitReplaySpec {
@@ -112,4 +154,11 @@ object CommitReplaySpec {
     */
   final case class Writer(name: String, key: String,
       setup: KeyedTable => Unit, replay: KeyedTable => Unit)
+
+  /** An index-store writer: `build` prepares the index dir, `write` sends
+    * batch id 0 to the store under `<dir>/<store>` and returns whether it
+    * was applied.
+    */
+  final case class IndexWriter(name: String, store: String,
+      build: String => Unit, write: String => Boolean)
 }

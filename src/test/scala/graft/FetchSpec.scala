@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.sources.Fetch
 
 /** The S2/S3/S4 source path with the stub fetcher: URL templating, executor-
-  * side fetch, positional XPath slot extraction, blank-guard, and URL
-  * normalization — end-to-end over a (page, pet_type) enumeration.
+  * side fetch (once per page), positional XPath slot extraction,
+  * blank-guard, and URL normalization — end-to-end over a (page, pet_type)
+  * enumeration.
   */
 class FetchSpec extends SparkTestBase {
 
@@ -57,6 +58,24 @@ class FetchSpec extends SparkTestBase {
     assert(out.getAs[String]("about_me") == s"story of $id")
     // X6: site-relative image src normalized to absolute
     assert(out.getAs[String]("image") == s"https://www.petfinder.com/photos/$id.jpg")
+  }
+
+  test("each page is fetched once, however many slots or fields read it") {
+    val fetches = spark.sparkContext.longAccumulator("fetches")
+    def counting(f: Fetch.Fetcher): Fetch.Fetcher = url => { fetches.add(1); f(url) }
+
+    val pages = Seq((1, "dog"), (2, "cat"), (3, "dog")).toDF("page", "pet_type")
+    val links = Fetch.extractLinks(Fetch.fetchPages(Fetch.withSearchUrls(pages), "url",
+      counting(Fetch.stubSearchPageFetcher())), "html").collect()
+    assert(links.length == 3 * 11)
+    assert(fetches.value == 3, s"3 search pages fetched ${fetches.value} times for 12 slots")
+
+    fetches.reset()
+    val urls = (1 to 4).map(i => s"https://www.petfinder.com/pet/p$i").toDF("link")
+    val pets = Fetch.extractPetFields(Fetch.fetchPages(urls, "link",
+      counting(Fetch.stubPetPageFetcher())), "html").collect()
+    assert(pets.length == 4)
+    assert(fetches.value == 4, s"4 pet pages fetched ${fetches.value} times for 15 fields")
   }
 
   test("full reference pipeline: pages → links → pet fields → validate → merge → export") {

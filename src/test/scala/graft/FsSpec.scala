@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{Fs, KeyedTable, Layers}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import graft.streaming.{Fs, Head, KeyedTable, Layers}
 
 /** The Hadoop-FileSystem port of the store filesystem ops (VERDICT r7 #1):
   * every path resolves through `org.apache.hadoop.fs.FileSystem`, so the
@@ -24,6 +26,24 @@ class FsSpec extends SparkTestBase {
     assert(Layers.ids(spark, dir).sorted == Seq(-2L, 3L))
     assert(Layers.ids(spark, s"file:$dir").sorted == Seq(-2L, 3L))
     assert(Fs.isDirectory(spark, s"file:$dir/batch=3"))
+  }
+
+  test("both spellings of one store share its writer lock") {
+    val dir  = tmpDir()
+    val held = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val holder = new Thread(() =>
+      Head.locked(spark, s"file:$dir") { held.countDown(); done.await(5, TimeUnit.SECONDS); () })
+    holder.start()
+    assert(held.await(5, TimeUnit.SECONDS))
+    @volatile var entered = false
+    val other = new Thread(() => Head.locked(spark, dir) { entered = true })
+    other.start()
+    other.join(200)
+    assert(!entered, "the bare path took the lock the file: URI holds")
+    done.countDown()
+    holder.join(10000); other.join(10000)
+    assert(entered)
   }
 
   test("deleteRecursively removes a nested tree through the abstraction") {

@@ -72,6 +72,15 @@ class PipelineSpec extends SparkTestBase {
       Seq(null), "a stored row keeps its own nulls, not the batch's values")
   }
 
+  test("serve of a stored snapshot (GET /pets) runs at most 5 jobs") {
+    val table = new KeyedTable(spark, Files.createTempDirectory("graft-serve-jobs").toString, "link")
+    table.publish(petsDf((1 to 500).map(i => pet(f"L$i%04d", s"Pet$i", 7))))
+    // the lifecycle's serve: read the head's snapshot, rows as JSON to the client
+    val (out, jobs) = jobsDuring(Pipeline.serve(table.read().get).toJSON.collect())
+    assert(out.length == 500 && out.forall(_.startsWith("""{"total_count":500,""")))
+    assert(jobs.size <= 5, s"serve ran ${jobs.size} jobs: ${jobs.map(_.site).mkString("; ")}")
+  }
+
   test("compact: field-failure threshold with summary counts") {
     val df = petsDf(Seq(pet("L1", "Rex", 7), pet("L2", "Thin", 0)))
     val (survivors, summary) = Pipeline.compact(df)
