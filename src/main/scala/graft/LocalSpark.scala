@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.{NioLocalFileSystem, NioLocalFs}
+
 /** One builder for every local entry point (Verify, Bench, Explain, tests):
   * the flags that make results reproducible and oracle-comparable — UTC
   * session time zone, shuffle parallelism = cores, AQE on, the
@@ -9,8 +11,13 @@ import org.apache.spark.sql.SparkSession
   * engine's session extensions, so `dot_long` and the §2.10 scalar names are
   * SQL-visible in every entry point without a manual register call (a
   * cluster deployment gets the same via
-  * `--conf spark.sql.extensions=graft.GraftExtensions`), and one codegen
-  * class cache shared by every session (see the artifact-isolation line).
+  * `--conf spark.sql.extensions=graft.GraftExtensions`), one codegen
+  * class cache shared by every session (see the artifact-isolation line),
+  * and a local filesystem that forks no child process
+  * (`spark.hadoop.fs.file.impl` = [[graft.streaming.NioLocalFileSystem]],
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` =
+  * [[graft.streaming.NioLocalFs]]; see the filesystem lines): the stock
+  * one forked ~119 processes per perfbench `lifecycle` unit.
   */
 object LocalSpark {
   def session(cpus: String, appName: String = "graft"): SparkSession = {
@@ -48,6 +55,24 @@ object LocalSpark {
       // isolation protects nothing here. A cluster that runs
       // `Ingest.runEpoch` once per epoch wants the same `--conf`.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // The local filesystem, for both Hadoop APIs. On this classpath
+      // `hive-exec-2.3.10-core.jar` registers Hive's ProxyLocalFileSystem
+      // for `file:` and no native Hadoop library is present, so every local
+      // create forked `chmod` (file and `.crc`), every status read forked
+      // `ls -ld`, and every head publish fell through to
+      // `FileContext.rename(OVERWRITE)` (the proxy's `rename` returns false
+      // over an existing target), which forked `readlink` 4 times: ~119
+      // child processes per perfbench `lifecycle` unit, and 2.8–5.9 ms of
+      // JVM CPU per create and 8–10 ms (19 ms wall) per publish against
+      // 0.2 ms for `java.nio` (4-core VM). graft.streaming.NioLocalFs does
+      // each with one `java.nio` call, keeps the `.crc` files and their
+      // read verification, and its `rename` over an existing file is one
+      // rename(2) that returns true. Hadoop caches one `file:` FileSystem
+      // per JVM and user, so the first session's conf decides (FsSpec pins
+      // that a LocalSpark session resolves to it). HDFS and object stores
+      // are untouched.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // getOrCreate may return a pre-existing session the extensions config

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.expressions.XPathStrings
 import graft.functions.Scalars
 
 /** S2/S3/S4 source plumbing (SURVEY.md §2.1): the reference's HTTP HTML
@@ -61,27 +62,25 @@ object Fetch {
     * `fetcher` — the distributed form of the reference's one-shared-browser
     * loop (pet_scraper.py:604-613); a real fetcher initializes its client
     * lazily, once per executor. The column is nondeterministic, so the
-    * optimizer keeps it in its own projection: every `xpath_string` of
-    * [[extractLinks]] / [[extractPetFields]] reads the one fetched page
-    * instead of inlining (and re-running) the fetch per call.
+    * optimizer keeps it in its own projection: the [[XPathStrings]] column
+    * of [[extractLinks]] / [[extractPetFields]] reads the one fetched page
+    * instead of inlining (and re-running) the fetch.
     */
   def fetchPages(df: DataFrame, urlCol: String, fetcher: Fetcher): DataFrame =
     df.withColumn("html", udf(fetcher).asNondeterministic()(col(urlCol)))
 
-  /** P5: the 12 fixed positional slots, via `xpath_string` per slot (the
-    * engine analog of link_scraper.py:100-113's hard-coded XPaths), blanks
-    * dropped (F5), site-relative hrefs normalized (X6), position preserved.
+  /** P5: the 12 fixed positional slots (the engine analog of
+    * link_scraper.py:100-113's hard-coded XPaths), read from one parse of
+    * the page ([[XPathStrings]]), blanks dropped (F5), site-relative hrefs
+    * normalized (X6), position preserved.
     */
-  def extractLinks(df: DataFrame, htmlCol: String, slots: Int = 12): DataFrame = {
-    val slotExprs = (1 to slots).map(i =>
-      expr(s"xpath_string($htmlCol, '/html/body/div/a[$i]/@href')"))
+  def extractLinks(df: DataFrame, htmlCol: String, slots: Int = 12): DataFrame =
     df
-      .withColumn("__slots", array(slotExprs: _*))
-      .select(col("*"), posexplode(col("__slots")).as(Seq("slot", "href")))
+      .select(col("*"), posexplode(XPathStrings.xpathStrings(col(htmlCol),
+        (1 to slots).map(i => s"/html/body/div/a[$i]/@href"))).as(Seq("slot", "href")))
       .filter(col("href").isNotNull && length(trim(col("href"))) > 0)
       .withColumn("link", Scalars.normalizeUrl(col("href")))
-      .drop("__slots", "href")
-  }
+      .drop("href")
 
   /** The pet detail page's field layout in the stub (and test) documents:
     * h1 = "About {name}", six detail spans, six tri-state boolean spans, a
@@ -114,24 +113,28 @@ object Fetch {
   /** P4 + §2.6: extract the 15 pet fields from a detail page and run the
     * scalar cleaning layer — `get_text` per XPath (pet_scraper.py:135-161),
     * clean_text (X1), name-from-about (X3), tri-state parse_boolean (X2;
-    * xpath_string's "" for a missing node becomes null), URL normalization
+    * the "" of a missing node becomes null), URL normalization
     * (X6) for the image. Output columns = the pets schema minus link/pet_type
     * (stamped by the caller — P2, pet_scraper.py:633-634).
     */
   def extractPetFields(df: DataFrame, htmlCol: String): DataFrame = {
-    def span(i: Int) =
-      Scalars.cleanText(expr(s"xpath_string($htmlCol, '/html/body/div/span[$i]')"))
-    val detailCols = DetailCols.zipWithIndex.map { case (c, i) => span(i + 1).as(c) }
+    val spans = (1 to DetailCols.length + BoolCols.length).map(i => s"/html/body/div/span[$i]")
+    val paths = ("/html/body/div/h1" +: spans) ++ Seq("/html/body/div/p", "/html/body/div/img/@src")
+    // one column of all 15 strings, read by index below: the optimizer keeps
+    // it in its own projection (CollapseProject does not copy a non-cheap
+    // expression into its 15 readers), so each page is parsed once
+    val fields = col("__fields")
+    def field(i: Int) = Scalars.cleanText(fields.getItem(i))
+    val detailCols = DetailCols.zipWithIndex.map { case (c, i) => field(i + 1).as(c) }
     val boolCols = BoolCols.zipWithIndex.map { case (c, i) =>
-      Scalars.parseBoolean(span(DetailCols.length + i + 1)).as(c)
+      Scalars.parseBoolean(field(DetailCols.length + i + 1)).as(c)
     }
-    df.select(
-      col("*") +:
-        Scalars.extractNameFromAbout(
-          Scalars.cleanText(expr(s"xpath_string($htmlCol, '/html/body/div/h1')"))).as("name") +:
+    df.select(col("*"), XPathStrings.xpathStrings(col(htmlCol), paths).as("__fields"))
+      .select(col("*") +:
+        Scalars.extractNameFromAbout(field(0)).as("name") +:
         (detailCols ++ boolCols) :+
-        Scalars.cleanText(expr(s"xpath_string($htmlCol, '/html/body/div/p')")).as("about_me") :+
-        Scalars.normalizeUrl(
-          expr(s"xpath_string($htmlCol, '/html/body/div/img/@src')")).as("image"): _*)
+        field(paths.length - 2).as("about_me") :+
+        Scalars.normalizeUrl(fields.getItem(paths.length - 1)).as("image"): _*)
+      .drop("__fields")
   }
 }

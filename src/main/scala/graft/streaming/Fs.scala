@@ -94,13 +94,19 @@ private[graft] object Fs {
     * publish protocol routes through.
     *
     * Two-step strategy, atomic on both filesystems that matter:
-    *  - `FileSystem.rename` first — on the POSIX-backed local FS this is
-    *    `File.renameTo` = rename(2), an atomic overwrite; HDFS instead
-    *    returns FALSE when the destination exists (its FileSystem-API
-    *    rename never overwrites), falling through to
+    *  - `FileSystem.rename` first — on the local FS of a [[graft.LocalSpark]]
+    *    session ([[NioLocalFileSystem]]) this is `File.renameTo` =
+    *    rename(2), an atomic overwrite that returns true, then the same for
+    *    the `.crc`; HDFS instead returns FALSE when the destination exists
+    *    (its FileSystem-API rename never overwrites), falling through to
     *  - `FileContext.rename(..., Options.Rename.OVERWRITE)` — on HDFS a
     *    single atomic namenode op (the same call Spark's own
     *    FileContextBasedCheckpointFileManager relies on).
+    * Before sessions pinned [[NioLocalFs]], the first branch never
+    * succeeded over an existing head locally either: the classpath's Hive
+    * `ProxyLocalFileSystem` returns false when the target exists, so every
+    * local publish took the `FileContext` branch and forked `readlink` 4
+    * times (FsSpec pins the first branch now).
     * An object store without atomic rename (raw S3) degrades to
     * copy+delete — there the pointer protocol needs a stronger backend
     * (S3Guard-era stores, or HDFS/ABFS-class semantics), same caveat as

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.xml.{XPathEvaluator, XPathString}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.XPathStrings
 import graft.sources.Fetch
 
 /** The S2/S3/S4 source path with the stub fetcher: URL templating, executor-
@@ -104,5 +108,81 @@ class FetchSpec extends SparkTestBase {
       new java.io.File(s"$dir/csv").listFiles().filter(_.getName.endsWith(".csv")).head)
       .getLines().next()
     assert(header == PetSchema.columns.mkString(","))
+  }
+
+  private val petPaths = Seq("/html/body/div/h1") ++
+    (1 to 12).map(i => s"/html/body/div/span[$i]") ++
+    Seq("/html/body/div/p", "/html/body/div/img/@src")
+
+  /** `df` as a scanned (RDD) relation: a local relation's projections are
+    * evaluated by the optimizer, so its plan holds no expression to count.
+    */
+  private def scanned(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  /** (XPathStrings, xpath_string) calls in `df`'s optimized plan; an
+    * `xpath_string` is replaced by an invoke of its evaluator there.
+    */
+  private def xpathCalls(df: DataFrame): (Int, Int) = {
+    val exprs = df.queryExecution.optimizedPlan.collect { case p => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+    (exprs.count(_.isInstanceOf[XPathStrings]), exprs.count {
+      case _: XPathString => true
+      case Literal(v, _)  => v.isInstanceOf[XPathEvaluator]
+      case _              => false
+    })
+  }
+
+  test("XPathStrings equals xpath_string per path, a missing node included") {
+    val docs = Seq(
+      Fetch.stubPetPageFetcher()("https://www.petfinder.com/pet/p7"),
+      Fetch.stubSearchPageFetcher()("https://www.petfinder.com/search/dogs-for-adoption/?page=1"),
+      "<html><body><div><h1>About Solo</h1><span>only one</span></div></body></html>",
+      "<html xmlns=\"urn:x\"><body><div><h1>namespaced</h1></div></body></html>",
+      "", null).toDF("html")
+    val pages = scanned(docs)
+    val paths = petPaths ++ (1 to 12).map(i => s"/html/body/div/a[$i]/@href")
+    val perField = pages.select(array(paths.map(p => expr(s"xpath_string(html, '$p')")): _*).as("a"))
+    val once     = pages.select(XPathStrings.xpathStrings(col("html"), paths).as("a"))
+    assert(xpathCalls(perField) == (0, paths.length))
+    assert(xpathCalls(once) == (1, 0))
+    val want = perField.as[Seq[String]].collect().toSeq
+    val got  = once.as[Seq[String]].collect().toSeq
+    // null or empty input: null, where each xpath_string is null
+    assert(want.takeRight(2).forall(_.forall(_ == null)) && got.takeRight(2) == Seq(null, null))
+    assert(got.take(4) == want.take(4))
+    assert(got(2).count(_ == "") == paths.length - 2, "a missing node reads \"\"")
+
+    val bad = scanned(Seq("<html><body><div>").toDF("html"))
+    intercept[Exception](bad.select(expr("xpath_string(html, '/html')")).collect())
+    intercept[Exception](bad.select(XPathStrings.xpathStrings(col("html"), Seq("/html"))).collect())
+  }
+
+  test("XPathStrings does not expand an external entity") {
+    val secret = java.nio.file.Files.createTempFile("graft-xxe", ".txt")
+    java.nio.file.Files.write(secret, "SECRET-CONTENT".getBytes)
+    val page =
+      s"""<?xml version="1.0"?><!DOCTYPE html [<!ENTITY xxe SYSTEM "${secret.toUri}">]>""" +
+        "<html><body><div><h1>About &xxe;Rex</h1></div></body></html>"
+    val df  = scanned(Seq(page).toDF("html"))
+    val got = df.select(XPathStrings.xpathStrings(col("html"), Seq("/html/body/div/h1")))
+      .as[Seq[String]].head()
+    assert(got == Seq("About Rex"))
+    assert(got == Seq(df.select(expr("xpath_string(html, '/html/body/div/h1')")).as[String].head()))
+  }
+
+  test("each page is parsed once: one XPathStrings and no xpath_string per page in every plan") {
+    val pages = Fetch.fetchPages(Fetch.withSearchUrls(scanned(Seq((1, "dog")).toDF("page", "pet_type"))),
+      "url", Fetch.stubSearchPageFetcher())
+    val links = Fetch.extractLinks(pages, "html")
+    val pets  = Fetch.extractPetFields(
+      Fetch.fetchPages(links.select("link", "pet_type"), "link", Fetch.stubPetPageFetcher()), "html")
+    val alone = Fetch.extractPetFields(
+      Fetch.fetchPages(scanned(Seq("https://www.petfinder.com/pet/p1").toDF("link")), "link",
+        Fetch.stubPetPageFetcher()), "html")
+    assert(xpathCalls(links) == (1, 0))
+    assert(xpathCalls(alone) == (1, 0))
+    assert(xpathCalls(pets) == (2, 0), "a search page and a pet page")
+    assert(pets.count() == 11)
   }
 }
